@@ -2,8 +2,8 @@
 
 ``run.py`` runs this once per checkout, as a child process, when the
 archive is missing: a JVM started with ``-XX:ArchiveClassesAtExit`` runs
-every workload's loop at a tiny size, and dumps every class it loaded when
-it exits.
+every registered workload's loop at a tiny size, and dumps every class it
+loaded when it exits.
 
     python3 perfbench/jvm_archive.py
 """
@@ -24,8 +24,8 @@ def main() -> None:
     scratch = os.path.join(run.WORK, "runs", f"jvm-archive-{os.getpid()}")
     spark = run.start_session(f"-XX:ArchiveClassesAtExit={tmp}")
     try:
-        for cls in workloads.WORKLOADS.values():
-            wl = cls(run.WORK, seed=0, seconds=1, scale=0.02)
+        for name in run.registered_workloads():
+            wl = workloads.WORKLOADS[name](run.WORK, seed=0, seconds=1, scale=0.02)
             wl.make_inputs(spark)
             target = wl.create(spark, os.path.join(scratch, wl.name))
             wl.load(spark, target, BatchClock(None, wl.batch_span))

@@ -1,7 +1,7 @@
 """The engine's benchmark: one workload per run, in a fresh Python + JVM
 process at local[nproc], with every result checked against an oracle.
 
-    python3 perfbench/run.py --workload replay_bulk --seed 1 --seconds 12 --trace 0
+    python3 perfbench/run.py --workload replay_bulk --seed 1 --seconds 16 --trace 0
 
 Run it from the root of a checkout. ``--trace 0`` prints the end-to-end
 metrics; ``--trace 1`` runs the workload traced and prints the per-layer
@@ -34,8 +34,10 @@ WORK = os.path.join(ROOT, ".perfbench_work")
 SPARK_CONF = os.path.join(WORK, "jvm", "conf")
 CLASS_ARCHIVE = os.path.join(WORK, "jvm", "classes.jsa")
 
-N_SETUPS = 3
-N_READS = 3
+# full reads: at least N_READS of them and READ_MIN_S seconds in all, so a
+# small output (the curator's) is read often enough for a steady median
+N_READS = 4
+READ_MIN_S = 2.0
 
 END_TO_END = {
     "setup_s": "s",
@@ -114,6 +116,12 @@ def prepare_environment() -> None:
     sys.path.insert(0, ROOT)
 
 
+def registered_workloads() -> list[str]:
+    """The workloads BENCHMARK.json registers."""
+    with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
+        return [w["name"] for w in json.load(f)["workloads"]]
+
+
 def cores() -> int:
     return len(os.sched_getaffinity(0))
 
@@ -177,10 +185,10 @@ def stop_jvm(spark) -> None:
         proc.wait()
 
 
-def set_up(spark, wl, run_dir: str, i: int):
-    """The set-up every set-up sample repeats: the workload's empty target
-    created and read back through the session."""
-    target = wl.create(spark, os.path.join(run_dir, f"target-{i}"))
+def set_up(spark, wl, run_dir: str):
+    """The last step of set-up: the workload's empty target created and
+    read back through the session."""
+    target = wl.create(spark, os.path.join(run_dir, "target"))
     wl.read(target).count()
     return target
 
@@ -258,7 +266,9 @@ def layer_metrics(tr, wl, loaded, cuts, target, checked, eps_traced) -> dict:
         "operators.keys_per_event": cuts["keys"] / cuts["events"] if cuts["events"] else 0.0,
         "sources.merge_s": merge_s,
         "sources.merge_self_s": merge_s - cuts["to_reduce"],
-        "sources.jobs_per_merge": mean(merges, "jobs"),
+        # on the curator one Spark-thread job lands under a read_for_keys or
+        # a merge span depending on timing; jobs_per_apply counts it there
+        "sources.jobs_per_merge": 0.0 if is_curator else mean(merges, "jobs"),
         "sources.latest_calls": len(tr.named("sources.latest")),
         "sources.latest_s": tr.total("sources.latest"),
         "sources.snapshot_json_bytes": wl.snapshot_json_bytes(target),
@@ -295,23 +305,17 @@ def run(args, build_s: float) -> int:
     os.makedirs(run_dir)
     spark = start_session()
     try:
-        # Set-up 0 runs from process start: JVM launch, SparkContext, one
-        # warmup batch of the workload's loop, then the common set-up; the
-        # class-archive build and input generation are not part of it.
-        # Later set-ups each start a new session on the warm JVM.
+        # Set-up runs from process start to a warm target: JVM launch,
+        # SparkContext, one warmup batch of the workload's loop, then the
+        # empty target created and read back. The class-archive build (first
+        # run in a checkout only) is not part of it; input generation follows.
         wl.warmup(spark, os.path.join(run_dir, "warmup"))
+        target = set_up(spark, wl, run_dir)
+        setup_s = time.perf_counter() - PROCESS_START - build_s
+        log(f"set-up {setup_s:.2f}s")
         t = time.perf_counter()
         wl.make_inputs(spark)
-        input_s = time.perf_counter() - t
-        log(f"inputs ready in {input_s:.1f}s")
-        target = set_up(spark, wl, run_dir, 0)
-        setups = [time.perf_counter() - PROCESS_START - build_s - input_s]
-        for i in range(1, N_SETUPS):
-            t = time.perf_counter()
-            spark = spark.newSession()
-            target = set_up(spark, wl, run_dir, i)
-            setups.append(time.perf_counter() - t)
-        log("set-ups: " + ", ".join(f"{s:.2f}s" for s in setups))
+        log(f"inputs ready in {time.perf_counter() - t:.1f}s")
 
         tracer = None
         if args.trace:
@@ -329,17 +333,25 @@ def run(args, build_s: float) -> int:
         log("loop done")
         out_dir = os.path.join(run_dir, "output")
         wl.dump(target, out_dir)
-        # the dump and one unmeasured lookup go first, so the timed reads and
-        # lookups find their paths compiled, as the loop found its batch path
-        read_s = [] if args.trace else [tracing.noop_write_s(wl.read(target))
-                                        for _ in range(N_READS)]
-        wl.lookup(target, wl.keys[0]).collect()
-        lookup_s, looked_up = [], {}
-        for key in wl.keys:
-            t = time.perf_counter()
-            rows = wl.lookup(target, key).collect()
-            lookup_s.append(time.perf_counter() - t)
-            looked_up[key] = wl.lookup_value(rows)
+        # the dump goes first, so the timed reads find their path compiled,
+        # as the loop found its batch path
+        read_s, lookup_s, looked_up = [], [], {}
+        pending = list(wl.keys)
+
+        def reads_wanted() -> bool:
+            return not args.trace and (len(read_s) < N_READS or sum(read_s) < READ_MIN_S)
+
+        # reads and lookups alternate, so that both sample the same stretch
+        # of the run and a short change in host speed moves neither alone
+        while pending or reads_wanted():
+            if reads_wanted():
+                read_s.append(tracing.noop_write_s(wl.read(target)))
+            if pending:
+                key = pending.pop(0)
+                t = time.perf_counter()
+                rows = wl.lookup(target, key).collect()
+                lookup_s.append(time.perf_counter() - t)
+                looked_up[key] = wl.lookup_value(rows)
         rss = peak_rss_mb(spark)
         log("reads and lookups done")
         checked = wl.check(target, out_dir)
@@ -363,7 +375,7 @@ def run(args, build_s: float) -> int:
             units = PER_LAYER
         else:
             values = {
-                "setup_s": statistics.median(setups),
+                "setup_s": setup_s,
                 "events_per_s": eps,
                 "batch_s_p50": statistics.median(loaded["batch_s"]),
                 "read_s": statistics.median(read_s),

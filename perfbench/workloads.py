@@ -22,7 +22,7 @@ import inputs
 import oracle
 from spans import BatchClock
 
-N_LOOKUPS = 3
+N_LOOKUPS = 5
 SCRAPE_PERIOD_S = 0.5  # the monitor is scraped at 2 Hz
 WARMUP_EVENTS = 2000  # one warmup batch: 8 log partitions x 250 offsets
 
@@ -91,14 +91,15 @@ class _Workload:
 
 class ReplayBulk(_Workload):
     """Validated single-table ``replay()`` of a materialized log in a few
-    large batches; decode, the salted reduce and the bucket write dominate.
+    large batches; decode, the salted reduce and the bucket write take most
+    of a batch, and per-batch fixed cost about a third of it.
     Both replay workloads push batch metrics to a ReplayMonitor that one
     thread scrapes at 2 Hz."""
 
     name = "replay_bulk"
     events_unit = "events"
-    chunk = 3000  # offsets per log partition: 24k events per batch
-    batch_s_hint = 3.0
+    chunk = 9375  # offsets per log partition: 75k events per batch
+    batch_s_hint = 5.5
     poison_fraction = 0.0
 
     def __init__(self, work: str, seed: int, seconds: int, scale: float):
@@ -139,13 +140,16 @@ class ReplayBulk(_Workload):
         from sonic_etl_spark.streaming import ReplayMonitor
 
         log = spark.read.parquet(self.log_dir)
-        t = time.perf_counter()
         with ReplayMonitor(port=0) as mon, \
                 Scraper(f"http://127.0.0.1:{mon.port}/metrics") as scraper, \
                 clock.loop("streaming.replay"):
+            # only the replay call is timed: monitor and scraper start-up and
+            # shutdown belong to the harness
+            t = time.perf_counter()
             res = self._replay(log, target, self.chunk_size, clock, mon)
+            wall_s = time.perf_counter() - t
         self.scrape_latencies, self.scrape_failures = scraper.latencies, scraper.failures
-        return {"wall_s": time.perf_counter() - t, "batch_s": clock.batch_s,
+        return {"wall_s": wall_s, "batch_s": clock.batch_s,
                 "events": res.rows_seen, "planned": len(res.batch_metrics),
                 "committed": res.batches_applied,
                 "manifests": [b["manifest"] for b in res.batch_metrics
