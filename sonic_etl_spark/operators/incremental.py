@@ -55,6 +55,7 @@ from __future__ import annotations
 
 import json
 import os
+from collections.abc import Callable
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
@@ -276,9 +277,6 @@ class IncrementalCurator:
         }
 
     # ------------------------------------------------------------ CDC tail
-    def _frontier_path(self) -> str:
-        return os.path.join(self.path, "_src_frontier.json")
-
     def sync(
         self,
         src: TransactionalParquetTable,
@@ -295,29 +293,38 @@ class IncrementalCurator:
         compaction/expiry rewrite on the source raises inside read_changes
         (the documented boundary refusal) rather than replaying history.
         """
-        snap = src.latest()
-        if snap is None:
-            raise FileNotFoundError(f"source table {src.path} does not exist")
-        to_id = snap["snapshot_id"]
-        last = None
-        if os.path.exists(self._frontier_path()):
-            with open(self._frontier_path()) as f:
-                last = json.load(f)["snapshot_id"]
-        if last == to_id:
-            return {"status": "noop", "snapshot_id": to_id}
-        ch = src.read_changes(from_snapshot_id=last, to_snapshot_id=to_id)
-        res = self.apply(
-            ch.select(
-                F.col(id_col).alias("doc_id"),
-                F.col(text_col).alias("text"),
-                F.col(offset_col).alias("off"),
-            )
-        )
-        tmp = self._frontier_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"snapshot_id": to_id}, f)
-        os.rename(tmp, self._frontier_path())
-        return {**res, "snapshot_id": to_id}
+        return _sync_frontier(src, self.path, lambda ch: self.apply(ch.select(
+            F.col(id_col).alias("doc_id"),
+            F.col(text_col).alias("text"),
+            F.col(offset_col).alias("off"),
+        )))
+
+
+def _sync_frontier(
+    src: TransactionalParquetTable, state_dir: str, apply: Callable[[DataFrame], dict]
+) -> dict:
+    """One CDC tail step shared by the incremental consumers: ``apply`` the
+    source rows appended since the snapshot id persisted in
+    ``state_dir/_src_frontier.json``, then advance that frontier (tmp +
+    rename, so a reader never sees a torn file). No-op when the frontier is
+    already at the source's latest snapshot."""
+    snap = src.latest()
+    if snap is None:
+        raise FileNotFoundError(f"source table {src.path} does not exist")
+    to_id = snap["snapshot_id"]
+    fp = os.path.join(state_dir, "_src_frontier.json")
+    last = None
+    if os.path.exists(fp):
+        with open(fp) as f:
+            last = json.load(f)["snapshot_id"]
+    if last == to_id:
+        return {"status": "noop", "snapshot_id": to_id}
+    res = apply(src.read_changes(from_snapshot_id=last, to_snapshot_id=to_id))
+    tmp = fp + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump({"snapshot_id": to_id}, f)
+    os.rename(tmp, fp)
+    return {**res, "snapshot_id": to_id}
 
 
 class IncrementalIvfIndex:
@@ -333,9 +340,8 @@ class IncrementalIvfIndex:
     cosine, ``similarity.ivf_assign`` — no corpus shuffle), so the index
     after any batch sequence equals ``ivf_assign`` over the corpus
     (pytest + driver gate ``incremental_ivf``); a re-written vector's cell
-    follows the latest offset via LWW, and deletes ride ``op='delete'``
-    tombstones like any table. Per batch: O(batch × n_centroids) compute,
-    one O(batch) merge. Serving reads (:meth:`cells`) feed the same
+    follows the latest offset via LWW. Per batch: O(batch × n_centroids)
+    compute, one O(batch) merge. Serving reads (:meth:`cells`) feed the same
     multi-probe search shape as ``ann_topk_ivf``.
     """
 
@@ -408,30 +414,11 @@ class IncrementalIvfIndex:
     ) -> dict:
         """Tail a source table's CDC-out stream (same frontier/redelivery
         contract as IncrementalCurator.sync)."""
-        snap = src.latest()
-        if snap is None:
-            raise FileNotFoundError(f"source table {src.path} does not exist")
-        to_id = snap["snapshot_id"]
-        fp = os.path.join(self.path, "_src_frontier.json")
-        last = None
-        if os.path.exists(fp):
-            with open(fp) as f:
-                last = json.load(f)["snapshot_id"]
-        if last == to_id:
-            return {"status": "noop", "snapshot_id": to_id}
-        ch = src.read_changes(from_snapshot_id=last, to_snapshot_id=to_id)
-        res = self.apply(
-            ch.select(
-                F.col(id_col).alias("vec_id"),
-                F.col(vec_col).alias("embedding"),
-                F.col(offset_col).alias("off"),
-            )
-        )
-        tmp = fp + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"snapshot_id": to_id}, f)
-        os.rename(tmp, fp)
-        return {**res, "snapshot_id": to_id}
+        return _sync_frontier(src, self.path, lambda ch: self.apply(ch.select(
+            F.col(id_col).alias("vec_id"),
+            F.col(vec_col).alias("embedding"),
+            F.col(offset_col).alias("off"),
+        )))
 
     def cells(self) -> DataFrame:
         """Current postings state: (vec_id, centroid_id, centroid_cos) —

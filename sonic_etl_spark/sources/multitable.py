@@ -1,4 +1,4 @@
-"""Multi-table fan-out sink: N typed tables under ONE shared manifest commit.
+"""Transactional table sets: N merge-on-read tables under ONE snapshot log.
 
 The reference's core dataflow produces several typed tables from one
 extraction pass — ``PerBlockRecords`` carries 6 record vectors
@@ -12,10 +12,14 @@ snapshot pointer flip, so every (partition, offset-range) manifest entry is
 either applied to ALL tables or NONE — cross-table atomicity by
 construction, no reconciliation DAG needed.
 
-Layout mirrors :class:`~sonic_etl_spark.sources.table.TransactionalParquetTable`
-(same merge-on-read buckets, field-id schemas, idempotent manifest guard);
-the snapshot json simply carries a ``tables`` map instead of one table's
-metadata, and data files live under ``data/snap-N/<table>/_pb=K``.
+This is the one storage core: the single table
+(:class:`~sonic_etl_spark.sources.table.TransactionalParquetTable`) is a
+set of one. The snapshot JSON carries a ``tables`` map (per member: field-id
+schemas, key/order/bucket/stats columns, bucket → file entries) next to the
+shared ``n_buckets`` and ``manifests``; data files live under
+``data/snap-N/<member>/_pb=K``. See ``sources/table.py`` for the contract
+(snapshot log, merge-on-read buckets, idempotent manifests, field-id
+evolution, LWW semantics).
 
 At 100 TB: each entry of ``tables`` becomes its own Iceberg table and the
 shared snapshot becomes a multi-table transaction (Iceberg REST catalog
@@ -27,28 +31,41 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 import uuid
 from dataclasses import dataclass, field
-
-from pyspark.sql import DataFrame, SparkSession
+from functools import reduce
 
 import pyspark.sql.functions as F
+from pyspark.sql import DataFrame, SparkSession
 
-from sonic_etl_spark.sources.table import (
-    DATA_DIR,
-    LATEST,
-    SNAP_DIR,
-    CommitConflict,
-    _expire_snapshots_impl,
-    _lww_reduce,
-    read_buckets_projected,
-)
+LATEST = "_latest.json"
+SNAP_DIR = "_snapshots"
+DATA_DIR = "data"
+
+# lossless type promotions (Iceberg evolution rule): widening only — a
+# narrowing or int→float would corrupt order/key comparisons on old rows
+_TYPE_ALIASES = {"long": "bigint", "integer": "int", "real": "float"}
+_WIDEN_OK = {("int", "bigint"), ("float", "double")}
+
+# column types eligible for per-file zone-map stats (JSON-safe, totally
+# ordered; timestamps/strings are excluded to keep manifest stats portable)
+_STATS_TYPES = {"int", "bigint", "double", "float", "smallint", "tinyint"}
+
+
+def _norm_type(t: str) -> str:
+    t = t.strip().lower()
+    return _TYPE_ALIASES.get(t, t)
+
+
+class CommitConflict(Exception):
+    """Another writer advanced the table between our read and our commit."""
 
 
 @dataclass
 class TableSpec:
-    """Schema + merge identity of one fan-out table."""
+    """Schema + merge identity of one member table."""
 
     fields: list[tuple[str, str]]  # [(name, ddl_type)]
     key_cols: list[str]
@@ -57,13 +74,73 @@ class TableSpec:
     # co-located; quarantine-style append-mostly tables can bucket wider
     bucket_cols: list[str] = field(default_factory=list)
     # opt-in zone-map columns (numeric): per-file min/max in the manifest,
-    # consumed by read_changes(where_between=...) — same contract as
-    # TransactionalParquetTable.create(stats_cols=...)
+    # consumed by read_changes(where_between=...)
     stats_cols: list[str] = field(default_factory=list)
 
 
-class TransactionalTableSet:
-    """N merge-on-read tables sharing one snapshot log + manifest set."""
+def _bucket_expr(n_buckets: int, cols: list[str]) -> F.Column:
+    """Bucket id = xxhash64 of the member's bucket columns mod n_buckets.
+    Always fed the SNAPSHOT's (possibly renamed) columns and bucket count:
+    the writer and the point readers must hash the same way."""
+    return F.pmod(F.xxhash64(*[F.col(c) for c in cols]), F.lit(n_buckets)).cast("int")
+
+
+def _lww_reduce(df: DataFrame, key_cols: list[str], order_cols: list[str]) -> DataFrame:
+    """One winning row per key: max_by over the total order (map-side partial
+    aggregation; no row_number/full-sort shuffle)."""
+    payload = [c for c in df.columns if c not in key_cols]
+    return (
+        df.groupBy(*key_cols)
+        .agg(
+            F.max_by(
+                F.struct(*payload), F.struct(*[F.col(c) for c in order_cols])
+            ).alias("_r")
+        )
+        .select(*key_cols, "_r.*")
+    )
+
+
+def _live(df: DataFrame) -> DataFrame:
+    """Drop delete tombstones. Null-safe: a NULL op (producer lacked the
+    column; backfilled by the field-id projection) is NOT a tombstone."""
+    return df.filter(~F.col("op").eqNullSafe("delete")) if "op" in df.columns else df
+
+
+def _schema(tbl: dict, schema_id: int | None = None) -> dict:
+    """A member's schema by id (default: its current schema)."""
+    sid = tbl["current_schema_id"] if schema_id is None else schema_id
+    for s in tbl["schemas"]:
+        if s["schema_id"] == sid:
+            return s
+    raise KeyError(f"schema_id {sid} not found")
+
+
+def _files(tbl: dict) -> list[dict]:
+    return [f for ent in tbl["buckets"].values() for f in ent["files"]]
+
+
+def _validate_stats_cols(fields: list[tuple[str, str]], stats_cols: list[str]) -> None:
+    """stats_cols must name numeric columns of ``fields`` (zone-map rule)."""
+    types = dict(fields)
+    for c in stats_cols:
+        if c not in types:
+            raise KeyError(f"stats_cols: no column {c!r}")
+        if _norm_type(types[c]) not in _STATS_TYPES:
+            raise ValueError(
+                f"stats_cols: {c!r} is {types[c]} — only numeric columns "
+                f"carry zone-map stats ({sorted(_STATS_TYPES)})"
+            )
+
+
+class _TableSetCore:
+    """Snapshot log + bucketed merge-on-read files for named member tables.
+
+    Every lifecycle operation exists once, here. Member-addressed operations
+    are private and take the member name; :class:`TransactionalTableSet`
+    exposes them by name and ``TransactionalParquetTable`` for its single
+    member. Internal snapshot reads go through the public :meth:`latest`,
+    so each public call costs the same snapshot reads whichever class it
+    arrives through."""
 
     def __init__(self, spark: SparkSession, path: str, n_buckets: int = 32):
         self.spark = spark
@@ -82,17 +159,18 @@ class TransactionalTableSet:
             return None
         with open(p) as f:
             sid = json.load(f)["snapshot_id"]
-        with open(os.path.join(self.path, SNAP_DIR, f"snap-{sid}.json")) as f:
-            return json.load(f)
+        return self.snapshot(sid)
 
     def snapshot(self, snapshot_id: int) -> dict:
-        with open(
-            os.path.join(self.path, SNAP_DIR, f"snap-{snapshot_id}.json")
-        ) as f:
+        with open(os.path.join(self.path, SNAP_DIR, f"snap-{snapshot_id}.json")) as f:
             return json.load(f)
 
     def history(self) -> list[dict]:
-        """Retained snapshots, oldest first; stops at the expiry horizon."""
+        """Retained snapshots, oldest first — the lineage.
+
+        Stops at the expiry horizon: a parent pruned by
+        :meth:`expire_snapshots` ends the walk (parent_id stays recorded in
+        the oldest retained snapshot as provenance)."""
         out = []
         snap = self.latest()
         while snap is not None:
@@ -101,28 +179,11 @@ class TransactionalTableSet:
             try:
                 snap = self.snapshot(pid) if pid is not None else None
             except FileNotFoundError:
-                snap = None
+                snap = None  # expired beyond the retention horizon
         return list(reversed(out))
 
-    def expire_snapshots(
-        self, keep_last: int = 1, min_age_sec: float = 0.0
-    ) -> dict:
-        """Retention maintenance for the whole set — one call covers every
-        table because they share the snapshot log (see
-        TransactionalParquetTable.expire_snapshots for the contract)."""
-
-        def roots_of(snap):
-            for tbl in snap["tables"].values():
-                for ent in tbl["buckets"].values():
-                    for f in ent["files"]:
-                        # "data/snap-N/<table>/_pb=B" -> "snap-N"
-                        yield f["path"].split(os.sep)[1]
-
-        return _expire_snapshots_impl(
-            self.path, self.history(), roots_of, keep_last, min_age_sec
-        )
-
     def _commit_snapshot(self, snap: dict, expected_parent: int | None) -> None:
+        """Write snap json, then atomically flip the pointer (optimistic CC)."""
         cur = self.latest()
         cur_id = cur["snapshot_id"] if cur else None
         if cur_id != expected_parent:
@@ -137,25 +198,43 @@ class TransactionalTableSet:
             os.fsync(f.fileno())
         os.rename(tmp, self._latest_path())  # atomic on POSIX
 
-    # ---------------------------------------------------------------- create
-    def create(self, tables: dict[str, TableSpec]) -> dict:
+    def _commit_child(self, parent: dict, metrics: dict, **changes) -> dict:
+        """Commit the child of ``parent``: same layout, tables and manifests
+        unless ``changes`` replaces them."""
+        snap = {
+            **parent,
+            **changes,
+            "snapshot_id": parent["snapshot_id"] + 1,
+            "parent_id": parent["snapshot_id"],
+            "metrics": metrics,
+            "committed_at": time.time(),
+        }
+        self._commit_snapshot(snap, expected_parent=parent["snapshot_id"])
+        return snap
+
+    def _parent(self) -> dict:
+        parent = self.latest()
+        if parent is None:
+            raise FileNotFoundError(f"table {self.path} does not exist; create() first")
+        return parent
+
+    def _table(self, name: str, snap: dict | None = None) -> tuple[dict, dict]:
+        """(snapshot, member entry); the latest snapshot unless given."""
+        snap = snap or self.latest()
+        if snap is None or name not in snap["tables"]:
+            raise FileNotFoundError(f"table {name} not in {self.path}")
+        return snap, snap["tables"][name]
+
+    def _create(self, tables: dict[str, TableSpec]) -> dict:
+        """Create the set with an empty snapshot (no-op if it exists)."""
         if self.latest() is not None:
             return self.latest()
-        from sonic_etl_spark.sources.table import validate_stats_cols
-
         tbls = {}
         for name, spec in tables.items():
-            validate_stats_cols(spec.fields, spec.stats_cols)
+            _validate_stats_cols(spec.fields, spec.stats_cols)
+            fields = [{"id": i, "name": n, "type": t} for i, (n, t) in enumerate(spec.fields)]
             tbls[name] = {
-                "schemas": [
-                    {
-                        "schema_id": 0,
-                        "fields": [
-                            {"id": i, "name": n, "type": t}
-                            for i, (n, t) in enumerate(spec.fields)
-                        ],
-                    }
-                ],
+                "schemas": [{"schema_id": 0, "fields": fields}],
                 "current_schema_id": 0,
                 "key_cols": spec.key_cols,
                 "order_cols": spec.order_cols,
@@ -186,118 +265,104 @@ class TransactionalTableSet:
             return set()
         return {tuple(m) for m in snap["manifests"] if len(m) == 3}
 
-    def committed_marks(self) -> set[tuple]:
-        """Non-range idempotency entries (len != 3), e.g. retry tags."""
-        snap = self.latest()
-        if snap is None:
-            return set()
-        return {tuple(m) for m in snap["manifests"] if len(m) != 3}
-
     # ----------------------------------------------------------------- reads
-    def table_names(self) -> list[str]:
-        snap = self.latest()
-        return sorted(snap["tables"]) if snap else []
+    def _scan(self, tbl: dict, bucket_ids: list[str]) -> DataFrame:
+        """Raw (pre-LWW) rows of the given buckets projected to the current
+        schema by FIELD ID: every data file remembers the schema it was
+        written under; columns are renamed/backfilled by id (Iceberg
+        add/rename-safe reads)."""
+        cur = _schema(tbl)
+        by_schema: dict[int, list[str]] = {}
+        for b in bucket_ids:
+            for f in tbl["buckets"].get(b, {"files": []})["files"]:
+                path = os.path.join(self.path, f["path"])
+                by_schema.setdefault(f["schema_id"], []).append(path)
+        if not by_schema:
+            ddl = ", ".join(f"`{f['name']}` {f['type']}" for f in cur["fields"])
+            return self.spark.createDataFrame([], ddl)
+        parts = []
+        for schema_id, paths in by_schema.items():
+            raw = self.spark.read.parquet(*paths)
+            name_at_write = {f["id"]: f["name"] for f in _schema(tbl, schema_id)["fields"]}
+            cols = []
+            for f in cur["fields"]:
+                old = name_at_write.get(f["id"])
+                src = F.col(old) if old in raw.columns else F.lit(None)
+                cols.append(src.cast(f["type"]).alias(f["name"]))
+            parts.append(raw.select(*cols))
+        return reduce(DataFrame.unionByName, parts)
 
-    def read(
-        self,
-        name: str,
-        include_tombstones: bool = False,
-        snap: dict | None = None,
+    def _state(self, tbl: dict, bucket_ids: list[str]) -> DataFrame:
+        """LWW state (tombstones kept) of the given buckets of one member."""
+        return _lww_reduce(self._scan(tbl, bucket_ids), tbl["key_cols"], tbl["order_cols"])
+
+    def _read(
+        self, name: str, snap: dict | None = None, include_tombstones: bool = False
     ) -> DataFrame:
-        snap = snap or self.latest()
-        if snap is None or name not in snap["tables"]:
-            raise FileNotFoundError(f"table {name} not in set {self.path}")
-        tbl = snap["tables"][name]
-        df = read_buckets_projected(
-            self.spark, self.path, tbl, list(tbl["buckets"].keys())
-        )
-        df = _lww_reduce(df, tbl["key_cols"], tbl["order_cols"])
-        if not include_tombstones and "op" in df.columns:
-            df = df.filter(~F.col("op").eqNullSafe("delete"))
-        return df
+        """Converged state of one member: its base+delta files projected to
+        the current schema, LWW-reduced per key (merge-on-read)."""
+        _, tbl = self._table(name, snap)
+        df = self._state(tbl, list(tbl["buckets"]))
+        return df if include_tombstones else _live(df)
 
-    def read_asof(self, ts: float, name: str) -> DataFrame:
-        """Timestamp time travel for one table of the set: the state under
-        the latest retained snapshot committed at or before ``ts`` (the
-        SHARED log, so a multi-table consumer reading several names at the
-        same ts gets a CONSISTENT cross-table cut — the point of the
-        single-pointer design). Raises beyond the retention horizon."""
-        eligible = [
-            s for s in self.history() if s.get("committed_at", 0.0) <= ts
-        ]
+    def _read_asof(self, name: str, ts: float) -> DataFrame:
+        """Time travel by wall clock: the state as of the latest retained
+        snapshot committed at or before ``ts`` (epoch seconds; Iceberg's
+        ``as-of-timestamp``). The log is shared, so several members read at
+        the same ``ts`` form a CONSISTENT cross-table cut. Raises beyond the
+        retention horizon."""
+        eligible = [s for s in self.history() if s.get("committed_at", 0.0) <= ts]
         if not eligible:
             raise FileNotFoundError(
-                f"no retained snapshot at or before ts={ts}"
+                f"no retained snapshot at or before ts={ts} "
+                f"(retention horizon may have expired it)"
             )
-        return self.read(name, snap=eligible[-1])
+        return self._read(name, snap=eligible[-1])
 
-    def rollback(self, snapshot_id: int) -> dict:
-        """Restore the WHOLE set to a historical snapshot's state in one
-        commit (Iceberg rollback semantics, cross-table-atomic here: every
-        table's files and the shared manifest set revert together, so a
-        fan-out replay resumes from the restored frontier and re-applies
-        the undone batches to ALL tables under the same manifests)."""
-        parent = self.latest()
-        if parent is None:
-            raise FileNotFoundError(f"table set {self.path} does not exist")
-        if snapshot_id == parent["snapshot_id"]:
-            return {"status": "noop", "snapshot_id": snapshot_id}
-        target = self.snapshot(snapshot_id)  # FileNotFoundError if expired
-        snap = {
-            "snapshot_id": parent["snapshot_id"] + 1,
-            "parent_id": parent["snapshot_id"],
-            "n_buckets": target["n_buckets"],
-            "tables": target["tables"],
-            "manifests": target["manifests"],
-            "metrics": {"rollback": {"restored_snapshot_id": snapshot_id}},
-            "committed_at": time.time(),
-        }
-        self._commit_snapshot(snap, expected_parent=parent["snapshot_id"])
-        return {
-            "status": "rolled_back",
-            "snapshot_id": snap["snapshot_id"],
-            "restored_snapshot_id": snapshot_id,
-        }
-
-    def lookup(self, name: str, **key) -> DataFrame:
-        """Point read of one table in the set — the serving path: hash the
-        key by the table's BUCKET columns to its single bucket, read only
-        that bucket's files, filter to the full key, LWW-resolve,
-        tombstone-filter. Requires the key to include every bucket column
-        (bucket pruning is impossible otherwise — use read().where)."""
-        snap = self.latest()
-        if snap is None or name not in snap["tables"]:
-            raise FileNotFoundError(f"table {name} not in set {self.path}")
-        tbl = snap["tables"][name]
-        kc = tbl["key_cols"]
+    def _lookup(self, name: str, key: dict) -> DataFrame:
+        """Point read (the serving path): hash the key by the member's
+        bucket columns to its ONE bucket, read only that bucket's base+delta
+        chain — 1/n_buckets of the table, further bounded by compaction —
+        filter to the key and LWW-resolve. Pass the key by CURRENT column
+        names (post-rename names after evolve)."""
+        snap, tbl = self._table(name)
+        kc, bc = tbl["key_cols"], tbl["bucket_cols"]
         if sorted(key) != sorted(kc):
             raise KeyError(f"lookup needs exactly the key columns {kc}")
-        bcols = tbl["bucket_cols"]
-        missing = [c for c in bcols if c not in key]
-        if missing:
-            raise KeyError(f"key lacks bucket columns {missing}")
-        cur = next(
-            s for s in tbl["schemas"]
-            if s["schema_id"] == tbl["current_schema_id"]
+        types = {f["name"]: f["type"] for f in _schema(tbl)["fields"]}
+        one = self.spark.createDataFrame(
+            [tuple(key[c] for c in bc)], ", ".join(f"`{c}` {types[c]}" for c in bc)
         )
-        types = {f["name"]: f["type"] for f in cur["fields"]}
-        ddl = ", ".join(f"`{c}` {types[c]}" for c in bcols)
-        one = self.spark.createDataFrame([tuple(key[c] for c in bcols)], ddl)
-        bucket = one.select(
-            F.pmod(
-                F.xxhash64(*[F.col(c) for c in bcols]),
-                F.lit(snap["n_buckets"]),
-            ).cast("int").alias("b")
-        ).first()["b"]
-        df = read_buckets_projected(self.spark, self.path, tbl, [str(bucket)])
+        bucket = one.select(_bucket_expr(snap["n_buckets"], bc).alias("b")).first()["b"]
+        df = self._scan(tbl, [str(bucket)])
         for c in kc:
             df = df.where(F.col(c) == key[c])
-        df = _lww_reduce(df, kc, tbl["order_cols"])
-        if "op" in df.columns:
-            df = df.filter(~F.col("op").eqNullSafe("delete"))
-        return df
+        return _live(_lww_reduce(df, kc, tbl["order_cols"]))
 
-    def read_changes(
+    def _read_for_keys(self, name: str, keys: DataFrame) -> DataFrame:
+        """Batch point-read (the incremental-join primitive): LWW state
+        restricted to the storage buckets that could hold any key in
+        ``keys`` — a frame carrying the member's key columns (extra
+        columns ignored). Cost is (touched buckets / n_buckets) of the
+        table: a small batch joined against a 100 TB state table reads only
+        the buckets the batch's keys hash into, never the table. With
+        ``n_buckets`` sized ∝ corpus (rebucket() as it grows), per-batch
+        I/O stays ∝ batch, which is what makes incremental maintenance
+        (operators/incremental.py) O(new docs).
+
+        The bucket-id collect is O(distinct touched buckets) ≤ n_buckets —
+        control-plane, never data rows. Returns the same shape as a state
+        read (tombstones filtered); the caller joins the result against its
+        batch on the key columns."""
+        snap, tbl = self._table(name)
+        missing = [c for c in tbl["key_cols"] if c not in keys.columns]
+        if missing:
+            raise KeyError(f"read_for_keys: keys frame lacks key columns {missing}")
+        bucket = _bucket_expr(snap["n_buckets"], tbl["bucket_cols"]).alias("b")
+        bids = [str(r["b"]) for r in keys.select(bucket).distinct().collect()]
+        return _live(self._state(tbl, [b for b in bids if b in tbl["buckets"]]))
+
+    def _read_changes(
         self,
         name: str,
         from_snapshot_id: int | None = None,
@@ -305,32 +370,47 @@ class TransactionalTableSet:
         reduced: bool = False,
         where_between: tuple[str, float, float] | None = None,
     ) -> DataFrame:
-        """Incremental scan of ONE table in the set — same contract as
-        ``TransactionalParquetTable.read_changes`` (O(new data) for the
-        consumer; raises across a compaction/expiry boundary;
-        ``where_between`` prunes new files by zone-map stats when the spec
-        declared ``stats_cols``). A fan-out consumer tails e.g.
-        ``file_versions`` this way without rereading the table."""
-        to_snap = (
-            self.latest()
-            if to_snapshot_id is None
-            else self.snapshot(to_snapshot_id)
-        )
-        if to_snap is None or name not in to_snap["tables"]:
-            raise FileNotFoundError(f"table {name} not in set {self.path}")
-        to_tbl = to_snap["tables"][name]
+        """Incremental scan (Iceberg incremental-append-read analog): the
+        rows APPENDED to one member between two snapshots — the converged
+        table's own CDC-out stream for downstream consumers.
 
-        def fset(tbl):
-            return {
-                f["path"]
-                for ent in tbl["buckets"].values()
-                for f in ent["files"]
-            }
+        Diffing is by data-file identity, so an incremental consumer's cost
+        is O(new data), never O(table). ``from_snapshot_id=None`` reads
+        since creation; ``reduced=True`` LWW-reduces the changes to one row
+        per key (the latest state among the changed rows — what a
+        downstream MERGE wants).
 
+        Compaction/expiry rewrite files without changing state, so an
+        incremental read across such a boundary would replay old rows as
+        changes; that case is DETECTED (files present at ``from`` missing
+        at ``to``) and raises — the consumer re-syncs with a full read (the
+        same restriction Iceberg places on its incremental append scan).
+
+        ``where_between=(col, lo, hi)`` (inclusive): filter the changes to
+        a numeric range AND, when the member carries zone-map stats for
+        ``col`` (``stats_cols``), skip new files whose [min, max] cannot
+        overlap — they never reach Spark's file listing. Files without
+        stats for the column are conservatively kept. Sound here (the
+        change feed is append-shaped); the LWW state read never file-prunes
+        on stats.
+
+        ``reduced=True`` combined with ``where_between`` means **LWW among
+        the in-range changes only**: the range filter (row AND file level)
+        applies BEFORE the reduce, so a key whose newest change falls
+        outside the range reports its newest IN-RANGE change — NOT the
+        key's globally-latest state. That is the only semantic consistent
+        with zone-map file pruning (a pruned file by definition holds only
+        out-of-range rows, so pruning and the row filter agree); consumers
+        that need "latest state of keys touched in the range" must reduce
+        first themselves: ``read_changes(reduced=True)`` then filter.
+        """
+        to_snap = self.latest() if to_snapshot_id is None else self.snapshot(to_snapshot_id)
+        _, tbl = self._table(name, to_snap)
         from_files: set[str] = set()
         if from_snapshot_id is not None:
-            from_files = fset(self.snapshot(from_snapshot_id)["tables"][name])
-        rewritten = from_files - fset(to_tbl)
+            from_tbl = self.snapshot(from_snapshot_id)["tables"][name]
+            from_files = {f["path"] for f in _files(from_tbl)}
+        rewritten = from_files - {f["path"] for f in _files(tbl)}
         if rewritten:
             raise ValueError(
                 f"incremental read of {name!r} crosses a compaction/expiry "
@@ -340,103 +420,483 @@ class TransactionalTableSet:
         fid = None
         if where_between is not None:
             col, lo, hi = where_between
-            cur = next(
-                s for s in to_tbl["schemas"]
-                if s["schema_id"] == to_tbl["current_schema_id"]
-            )
-            hit = [f for f in cur["fields"] if f["name"] == col]
+            hit = [f for f in _schema(tbl)["fields"] if f["name"] == col]
             if not hit:
                 raise KeyError(f"where_between: no column {col!r} in {name}")
             fid = str(hit[0]["id"])
 
-        def _overlaps(fent: dict) -> bool:
-            if fid is None:
-                return True
+        def keep(fent: dict) -> bool:
+            if fent["path"] in from_files:
+                return False
             st = fent.get("stats", {}).get(fid)
-            if st is None or st[0] is None or st[1] is None:
-                return True  # no stats: conservatively keep
-            return st[1] >= lo and st[0] <= hi
+            # no stats for this column/file: conservatively keep
+            return st is None or None in st or (st[1] >= lo and st[0] <= hi)
 
         new_buckets = {}
-        for b, ent in to_tbl["buckets"].items():
-            nf = [
-                f for f in ent["files"]
-                if f["path"] not in from_files and _overlaps(f)
-            ]
+        for b, ent in tbl["buckets"].items():
+            nf = [f for f in ent["files"] if keep(f)]
             if nf:
                 new_buckets[b] = {"files": nf}
-        tbl = {**to_tbl, "buckets": new_buckets}
-        df = read_buckets_projected(
-            self.spark, self.path, tbl, list(new_buckets)
-        )
+        df = self._scan({**tbl, "buckets": new_buckets}, list(new_buckets))
         if where_between is not None:
             df = df.where(F.col(col).between(lo, hi))
-        if reduced:
-            df = _lww_reduce(df, to_tbl["key_cols"], to_tbl["order_cols"])
-        return df
+        return _lww_reduce(df, tbl["key_cols"], tbl["order_cols"]) if reduced else df
 
-    # ----------------------------------------------------------------- merge
-    def _collect_table_stats(
-        self, tbl: dict, rel: str, written: list[str]
-    ) -> dict[str, dict[str, list]]:
-        """Zone-map stats for one table's fresh files (field-id keyed);
-        same O(batch) collection as the single table's."""
-        from sonic_etl_spark.sources.table import collect_parquet_stats
+    def _files_per_bucket(self, name: str, snap: dict | None = None) -> dict[str, int]:
+        _, tbl = self._table(name, snap)
+        return {b: len(ent["files"]) for b, ent in tbl["buckets"].items()}
 
-        cols = tbl.get("stats_cols") or []
-        if not cols or not written:
-            return {}
-        cur = next(
-            s for s in tbl["schemas"] if s["schema_id"] == tbl["current_schema_id"]
-        )
-        ids = {f["name"]: f["id"] for f in cur["fields"]}
-        return collect_parquet_stats(
-            self.spark, os.path.join(self.path, rel), cols, ids
+    def metrics_history(self) -> DataFrame:
+        """Per-commit lineage + throughput as a queryable DataFrame (ST2/ST6:
+        the checkpoint carries metrics; this surfaces them). One row per
+        retained snapshot: ids, commit time, batch metrics recorded by the
+        writer (rows, apply_sec, events_per_sec, manifest, compaction...).
+        Driver-side O(retained snapshots) — bounded by expire_snapshots."""
+        rows = [
+            (
+                s["snapshot_id"],
+                s.get("parent_id"),
+                float(s.get("committed_at", 0.0)),
+                json.dumps(s.get("metrics", {}), sort_keys=True),
+                int(s["metrics"].get("rows", 0) or 0),
+                float(s["metrics"].get("apply_sec", 0.0) or 0.0),
+                float(s["metrics"].get("events_per_sec", 0.0) or 0.0),
+            )
+            for s in self.history()
+        ]
+        return self.spark.createDataFrame(
+            rows,
+            "snapshot_id bigint, parent_id bigint, committed_at double, "
+            "metrics_json string, rows bigint, apply_sec double, "
+            "events_per_sec double",
         )
 
-    def _write_table_files(
-        self, snap: dict, new_id: int, name: str, df: DataFrame
-    ) -> tuple[str, list[str]]:
-        tbl = snap["tables"][name]
-        n_buckets = snap["n_buckets"]
-        cur = next(
-            s for s in tbl["schemas"] if s["schema_id"] == tbl["current_schema_id"]
-        )
-        # schema-id-aware writer projection (mirror of
-        # TransactionalParquetTable._project_to_current): route producer
-        # columns to current names by FIELD ID, accepting historical
-        # (pre-rename) names; backfill columns unknown to the producer.
-        historical: dict[int, list[str]] = {}
+    # ---------------------------------------------------------------- writes
+    def _write(
+        self,
+        tbl: dict,
+        n_buckets: int,
+        snap_id: int,
+        name: str,
+        df: DataFrame,
+        n_partitions: int,
+    ) -> dict[str, dict]:
+        """Write ``df`` for one member under ``data/snap-N/<member>``,
+        bucket-partitioned; return each written bucket's file entry.
+
+        Writer projection by FIELD ID: producer columns route to the current
+        names, historical (pre-rename) names are accepted and columns the
+        producer lacks are backfilled with NULL. ``_pb`` is the partition
+        directory column only — parquet files hold exactly the schema
+        columns. ``n_buckets`` and the bucket columns are the SNAPSHOT's
+        (never the constructor's): a reopened table or a write after a
+        key-column rename must not rehash rows into foreign bucket ids.
+        Members with ``stats_cols`` record per-file min/max keyed by field
+        id — one column-pruned aggregate over the fresh files (O(batch))."""
+        cur = _schema(tbl)
+        names: dict[int, list[str]] = {}  # field id -> names, newest first
         for sch in sorted(tbl["schemas"], key=lambda s: -s["schema_id"]):
             for f in sch["fields"]:
-                historical.setdefault(f["id"], [])
-                if f["name"] not in historical[f["id"]]:
-                    historical[f["id"]].append(f["name"])
+                names.setdefault(f["id"], []).append(f["name"])
         proj = []
         for f in cur["fields"]:
-            src = next((n for n in historical[f["id"]] if n in df.columns), None)
-            if src is not None:
-                proj.append(F.col(src).cast(f["type"]).alias(f["name"]))
-            else:
-                proj.append(F.lit(None).cast(f["type"]).alias(f["name"]))
-        projected = df.select(*proj)
-        rel = os.path.join(DATA_DIR, f"snap-{new_id}", name)
+            src = next((n for n in names[f["id"]] if n in df.columns), None)
+            col = F.lit(None) if src is None else F.col(src)
+            proj.append(col.cast(f["type"]).alias(f["name"]))
+        rel = os.path.join(DATA_DIR, f"snap-{snap_id}", name)
         out_dir = os.path.join(self.path, rel)
-        bcols = [F.col(c) for c in tbl["bucket_cols"]]
         (
-            projected.withColumn(
-                "_pb",
-                F.pmod(F.xxhash64(*bcols), F.lit(n_buckets)).cast("int"),
-            )
-            .repartition(max(n_buckets, 1), F.col("_pb"))
+            df.select(*proj)
+            .withColumn("_pb", _bucket_expr(n_buckets, tbl["bucket_cols"]))
+            .repartition(max(n_partitions, 1), F.col("_pb"))
             .write.partitionBy("_pb")
             .mode("overwrite")
             .parquet(out_dir)
         )
-        written = [
-            n.split("=", 1)[1] for n in os.listdir(out_dir) if n.startswith("_pb=")
+        written = [n.split("=", 1)[1] for n in os.listdir(out_dir) if n.startswith("_pb=")]
+        entries = {
+            b: {"path": os.path.join(rel, f"_pb={b}"), "schema_id": cur["schema_id"]}
+            for b in written
+        }
+        cols = tbl["stats_cols"]
+        if cols and written:
+            ids = {f["name"]: f["id"] for f in cur["fields"]}
+            aggs = []
+            for c in cols:
+                aggs += [F.min(c).alias(f"_lo_{c}"), F.max(c).alias(f"_hi_{c}")]
+            for r in self.spark.read.parquet(out_dir).groupBy("_pb").agg(*aggs).collect():
+                entries[str(r["_pb"])]["stats"] = {
+                    str(ids[c]): [r[f"_lo_{c}"], r[f"_hi_{c}"]] for c in cols
+                }
+        return entries
+
+    def _merge_all(
+        self,
+        updates: dict[str, DataFrame],
+        manifest_entries: list[tuple],
+        metrics: dict | None = None,
+        pre_commit_check=None,
+    ) -> dict:
+        """MERGE INTO every member in ``updates`` with LWW ordering under one
+        idempotent manifest commit.
+
+        Each ``updates[name]`` must already be one-row-per-key for its
+        member (in-batch reduced by the caller; see
+        operators.merge.reduce_batch). Merge-on-read: appends one delta file
+        per affected bucket — O(batch) writes; the reader resolves LWW
+        across files. Skips (no-op) if every manifest entry is already
+        committed — the exactly-once guard (ST3 upgrade, SURVEY.md §2.8); on
+        partial overlap the whole batch re-applies (max-merge is
+        idempotent) and only the fresh entries are recorded. All members'
+        files land first (crash ⇒ orphan files, no state change), then ONE
+        pointer flip records every member's new files AND the entries.
+
+        ``pre_commit_check``: called after the writes, before the pointer
+        flip; raising aborts the commit, leaving only orphan files (the
+        observation-based fail-the-batch hook that rides the write job)."""
+        t0 = time.time()
+        parent = self._parent()
+        unknown = set(updates) - set(parent["tables"])
+        if unknown:
+            raise KeyError(f"unknown tables {sorted(unknown)}")
+        committed = {tuple(m) for m in parent["manifests"]}
+        fresh = [tuple(e) for e in manifest_entries if tuple(e) not in committed]
+        if not fresh:
+            return {"status": "skipped", "snapshot_id": parent["snapshot_id"]}
+
+        new_id = parent["snapshot_id"] + 1
+        n_buckets = parent["n_buckets"]
+        tables = dict(parent["tables"])
+        written = {}
+        for name, df in updates.items():
+            tbl = tables[name]
+            entries = self._write(tbl, n_buckets, new_id, name, df, n_buckets)
+            buckets = dict(tbl["buckets"])
+            for b, fent in entries.items():
+                buckets[b] = {"files": buckets.get(b, {"files": []})["files"] + [fent]}
+            tables[name] = {**tbl, "buckets": buckets}
+            written[name] = len(entries)
+        if pre_commit_check is not None:
+            pre_commit_check()  # raising here aborts: files orphan, no commit
+
+        # per-commit lineage + throughput (ST2/ST6: checkpoint carries metrics)
+        elapsed = time.time() - t0
+        m = {**(metrics or {}), "buckets_written": sum(written.values())}
+        m["apply_sec"] = round(elapsed, 3)
+        if "rows" in m:
+            m["events_per_sec"] = round(m["rows"] / elapsed, 1)
+        manifests = parent["manifests"] + [list(e) for e in fresh]
+        self._commit_child(parent, m, tables=tables, manifests=manifests)
+        return {"status": "committed", "snapshot_id": new_id, "buckets_written": written}
+
+    def _evolve(
+        self,
+        name: str,
+        add: list[tuple[str, str]] | None = None,
+        rename: dict[str, str] | None = None,
+        widen: dict[str, str] | None = None,
+        drop: list[str] | None = None,
+    ) -> dict:
+        """Schema-only snapshot for one member: add / rename / widen / drop
+        by field id. Existing data files are untouched; readers map them to
+        the new schema by field id (Iceberg semantics; the reference's
+        analog is manual proto field reservation,
+        schemas/proto/blocks.proto:144-146). Other members are unaffected.
+
+        ``widen``: {column: new_type} — only LOSSLESS promotions
+        (int→bigint, float→double, Iceberg's rule); old files cast up on
+        read via the field-id projection, new files are written wide.
+        ``drop``: columns disappear from reads and writes but the field id
+        is retired FOREVER — fresh ids come from the max across ALL
+        historical schemas, never just the current one, so a later add
+        reusing the name can never resurrect the dropped column's bytes
+        from old files (Iceberg's no-id-reuse rule). Key/order/bucket
+        columns cannot be dropped."""
+        parent, tbl = self._table(name)
+        cur = _schema(tbl)
+        fields = [dict(f) for f in cur["fields"]]
+
+        def column(op: str, cname: str) -> dict:
+            hit = [f for f in fields if f["name"] == cname]
+            if not hit:
+                raise KeyError(f"{op}: no column {cname!r} in {name}")
+            return hit[0]
+
+        protected = set(tbl["key_cols"]) | set(tbl["order_cols"]) | set(tbl["bucket_cols"])
+        for cname in drop or []:
+            f = column("drop", cname)
+            if cname in protected:
+                raise ValueError(f"drop: {cname!r} is a key/order/bucket column")
+            fields.remove(f)
+        for old, new in (rename or {}).items():
+            column("rename", old)["name"] = new
+        for cname, new_type in (widen or {}).items():
+            f = column("widen", cname)
+            if (_norm_type(f["type"]), _norm_type(new_type)) not in _WIDEN_OK:
+                raise ValueError(
+                    f"widen: {f['type']} -> {new_type} is not a "
+                    f"lossless promotion (allowed: {sorted(_WIDEN_OK)})"
+                )
+            f["type"] = new_type
+        # ids are retired forever: max over ALL schemas, never just current
+        next_id = max((f["id"] for s in tbl["schemas"] for f in s["fields"]), default=-1) + 1
+        for cname, typ in add or []:
+            if any(f["name"] == cname for f in fields):
+                raise KeyError(f"add: column {cname!r} exists in {name}")
+            fields.append({"id": next_id, "name": cname, "type": typ})
+            next_id += 1
+        new_schema = {"schema_id": cur["schema_id"] + 1, "fields": fields}
+        # renames can retitle key/order/bucket columns; keep them in sync by id
+        id_by_old = {f["name"]: f["id"] for f in cur["fields"]}
+        new_by_id = {f["id"]: f["name"] for f in fields}
+
+        def remap(cols):
+            return [new_by_id.get(id_by_old.get(c, -1), c) for c in cols]
+
+        evolved = {
+            **tbl,
+            "schemas": tbl["schemas"] + [new_schema],
+            "current_schema_id": new_schema["schema_id"],
+            "key_cols": remap(tbl["key_cols"]),
+            "order_cols": remap(tbl["order_cols"]),
+            "bucket_cols": remap(tbl["bucket_cols"]),
+            # stats_cols are droppable: a dropped column must leave the
+            # list, else every later merge fails collecting its min/max
+            "stats_cols": [
+                new_by_id[id_by_old[c]]
+                for c in tbl["stats_cols"]
+                if id_by_old.get(c) in new_by_id
+            ],
+        }
+        evolution = {
+            "table": name,
+            "add": add or [],
+            "rename": rename or {},
+            "widen": widen or {},
+            "drop": drop or [],
+        }
+        return self._commit_child(
+            parent, {"evolution": evolution}, tables={**parent["tables"], name: evolved}
+        )
+
+    # ----------------------------------------------------------- maintenance
+    def compact(self, max_files_per_bucket: int = 8, force: bool = False) -> dict:
+        """Fold buckets whose delta chains exceed ``max_files_per_bucket``
+        back to one file each, in every member, under one commit (Iceberg
+        rewrite_data_files analog). Tombstones are RETAINED so a
+        late-replayed lower-order upsert still loses after compaction.
+        Bounded read amplification: call every K batches from the replay
+        loop, or force=True for full maintenance."""
+        t0 = time.time()
+        parent = self._parent()
+        new_id = parent["snapshot_id"] + 1
+        tables = dict(parent["tables"])
+        n_victims = 0
+        for name, tbl in parent["tables"].items():
+            victims = [
+                b
+                for b, ent in tbl["buckets"].items()
+                if force or len(ent["files"]) > max_files_per_bucket
+            ]
+            if not victims:
+                continue
+            entries = self._write(
+                tbl, parent["n_buckets"], new_id, name,
+                self._state(tbl, victims), n_partitions=len(victims),
+            )
+            stray = set(entries) - set(victims)
+            if stray:
+                raise RuntimeError(
+                    f"{name}: compaction wrote bucket ids {sorted(stray)} outside "
+                    f"the victim set {sorted(victims)} — bucket layout corrupted"
+                )
+            # a fully-empty bucket stays absent
+            buckets = {b: ent for b, ent in tbl["buckets"].items() if b not in victims}
+            buckets.update({b: {"files": [fent]} for b, fent in entries.items()})
+            tables[name] = {**tbl, "buckets": buckets}
+            n_victims += len(victims)
+        if not n_victims:
+            return {"status": "noop", "snapshot_id": parent["snapshot_id"]}
+        compaction = {"buckets_compacted": n_victims, "compact_sec": round(time.time() - t0, 3)}
+        self._commit_child(parent, {"compaction": compaction}, tables=tables)
+        return {"status": "compacted", "snapshot_id": new_id, "buckets_compacted": n_victims}
+
+    def rebucket(self, n_buckets: int) -> dict:
+        """Partition evolution: rewrite EVERY member into a new bucket count
+        under one commit (Iceberg partition-spec evolution, done eagerly —
+        the bucket function is the merge/lookup routing, so old and new
+        layouts cannot coexist within one snapshot, and n_buckets is shared
+        across the set). One LWW-reduced full rewrite (tombstones retained,
+        as in compaction; zone-map stats recollected); manifests carry
+        over, so replay resumption and exactly-once are unaffected;
+        subsequent merges/lookups hash into the new layout via the
+        snapshot's n_buckets. Incremental readers crossing this snapshot
+        see the usual rewrite-boundary refusal (file identity changed)."""
+        if n_buckets <= 0:
+            raise ValueError(f"rebucket: n_buckets must be positive, got {n_buckets}")
+        parent = self._parent()
+        if parent["n_buckets"] == n_buckets:
+            return {"status": "noop", "snapshot_id": parent["snapshot_id"]}
+        t0 = time.time()
+        new_id = parent["snapshot_id"] + 1
+        tables = {}
+        for name, tbl in parent["tables"].items():
+            state = self._state(tbl, list(tbl["buckets"]))
+            entries = self._write(tbl, n_buckets, new_id, name, state, n_partitions=n_buckets)
+            buckets = {b: {"files": [fent]} for b, fent in entries.items()}
+            tables[name] = {**tbl, "buckets": buckets}
+        rebucket = {
+            "from": parent["n_buckets"],
+            "to": n_buckets,
+            "rebucket_sec": round(time.time() - t0, 3),
+        }
+        self._commit_child(parent, {"rebucket": rebucket}, n_buckets=n_buckets, tables=tables)
+        return {"status": "rebucketed", "snapshot_id": new_id, "n_buckets": n_buckets}
+
+    def rollback(self, snapshot_id: int) -> dict:
+        """Restore a historical snapshot's state by committing a NEW snapshot
+        that carries its layout, file lists and manifests (Iceberg rollback
+        semantics: history moves forward, bytes move back; every member
+        reverts together).
+
+        The rolled-back commits' manifest ranges leave the committed set,
+        so a replay resumes exactly from the restored frontier and
+        re-applies what was undone — rollback + replay converges to the
+        same state hash as never rolling back (pytest-asserted). The target
+        must still be retained (within the expiry horizon)."""
+        parent = self._parent()
+        if snapshot_id == parent["snapshot_id"]:
+            return {"status": "noop", "snapshot_id": snapshot_id}
+        target = self.snapshot(snapshot_id)  # FileNotFoundError if expired
+        snap = self._commit_child(
+            parent,
+            {"rollback": {"restored_snapshot_id": snapshot_id}},
+            **{k: target[k] for k in ("n_buckets", "tables", "manifests")},
+        )
+        return {
+            "status": "rolled_back",
+            "snapshot_id": snap["snapshot_id"],
+            "restored_snapshot_id": snapshot_id,
+        }
+
+    def expire_snapshots(self, keep_last: int = 1, min_age_sec: float = 0.0) -> dict:
+        """Retention maintenance: Iceberg ``expire_snapshots`` +
+        ``remove_orphan_files`` analog, one call for every member (they
+        share the log). Without it a long replay accumulates every
+        historical snapshot JSON and every superseded delta/compaction file
+        forever — at 10^10 events that is thousands of dead data roots.
+
+        Keeps the ``keep_last`` most recent snapshots (the latest always
+        survives) plus any snapshot younger than ``min_age_sec``; deletes
+        (a) the expired snapshot JSONs and (b) every on-disk data root no
+        retained snapshot references — which also sweeps stale roots from
+        crashed/aborted writers once the snapshot counter has passed their
+        id. Time travel to a retained snapshot keeps working; reading an
+        expired one raises FileNotFoundError.
+
+        Concurrency: an in-flight merge writes ``data/snap-{latest+1}``
+        before committing; only roots with snapshot id ≤ the current latest
+        are eligible for deletion, so active writers are never swept."""
+        hist = self.history()
+        if not hist:
+            raise FileNotFoundError(f"table {self.path} does not exist")
+        latest_id = hist[-1]["snapshot_id"]
+        keep_last = max(keep_last, 1)
+        now = time.time()
+        kept = [
+            s
+            for i, s in enumerate(hist)
+            if i >= len(hist) - keep_last or now - s.get("committed_at", 0.0) < min_age_sec
         ]
-        return rel, written
+        kept_ids = {s["snapshot_id"] for s in kept}
+        expired = [s for s in hist if s["snapshot_id"] not in kept_ids]
+        # "data/snap-N/<member>/_pb=B" -> "snap-N"
+        live_roots = {
+            f["path"].split(os.sep)[1]
+            for s in kept
+            for tbl in s["tables"].values()
+            for f in _files(tbl)
+        }
+
+        data_dir = os.path.join(self.path, DATA_DIR)
+        removed_roots, bytes_reclaimed = [], 0
+        for root in sorted(os.listdir(data_dir)):
+            if not root.startswith("snap-") or root in live_roots:
+                continue
+            try:
+                root_id = int(root.split("-", 1)[1])
+            except ValueError:
+                continue
+            if root_id > latest_id:  # possible in-flight writer
+                continue
+            full = os.path.join(data_dir, root)
+            for dirpath, _dirs, files in os.walk(full):
+                bytes_reclaimed += sum(
+                    os.path.getsize(os.path.join(dirpath, fn)) for fn in files
+                )
+            shutil.rmtree(full)
+            removed_roots.append(root)
+
+        for s in expired:
+            sp = os.path.join(self.path, SNAP_DIR, f"snap-{s['snapshot_id']}.json")
+            if os.path.exists(sp):
+                os.remove(sp)
+
+        return {
+            "snapshots_expired": len(expired),
+            "data_roots_removed": len(removed_roots),
+            "bytes_reclaimed": bytes_reclaimed,
+            "retained": sorted(kept_ids),
+        }
+
+
+class TransactionalTableSet(_TableSetCore):
+    """N merge-on-read tables sharing one snapshot log + manifest set."""
+
+    def create(self, tables: dict[str, TableSpec]) -> dict:
+        return self._create(tables)
+
+    def committed_marks(self) -> set[tuple]:
+        """Non-range idempotency entries (len != 3), e.g. retry tags."""
+        snap = self.latest()
+        if snap is None:
+            return set()
+        return {tuple(m) for m in snap["manifests"] if len(m) != 3}
+
+    def table_names(self) -> list[str]:
+        snap = self.latest()
+        return sorted(snap["tables"]) if snap else []
+
+    def read(
+        self, name: str, include_tombstones: bool = False, snap: dict | None = None
+    ) -> DataFrame:
+        return self._read(name, snap, include_tombstones)
+
+    def read_asof(self, ts: float, name: str) -> DataFrame:
+        return self._read_asof(name, ts)
+
+    def lookup(self, name: str, **key) -> DataFrame:
+        return self._lookup(name, key)
+
+    def read_for_keys(self, name: str, keys: DataFrame) -> DataFrame:
+        return self._read_for_keys(name, keys)
+
+    def read_changes(
+        self,
+        name: str,
+        from_snapshot_id: int | None = None,
+        to_snapshot_id: int | None = None,
+        reduced: bool = False,
+        where_between: tuple[str, float, float] | None = None,
+    ) -> DataFrame:
+        """A fan-out consumer tails e.g. ``file_versions`` this way without
+        rereading the table."""
+        return self._read_changes(
+            name, from_snapshot_id, to_snapshot_id, reduced, where_between
+        )
+
+    def files_per_bucket(self, name: str, snap: dict | None = None) -> dict[str, int]:
+        return self._files_per_bucket(name, snap)
 
     def merge_all(
         self,
@@ -445,75 +905,10 @@ class TransactionalTableSet:
         metrics: dict | None = None,
         pre_commit_check=None,
     ) -> dict:
-        """Apply one batch to every table atomically under one manifest.
+        """Apply one batch to every named table atomically under one
+        manifest (``buckets_written`` per table in the result)."""
+        return self._merge_all(updates, manifest_entries, metrics, pre_commit_check)
 
-        Each ``updates[name]`` must be one-row-per-key for its table (the
-        caller reduces; see streaming.fanout). All tables' delta files are
-        written first (crash ⇒ orphan files, no state change), then ONE
-        pointer flip records every table's new files AND the manifest entries
-        — the cross-table exactly-once guarantee.
-
-        ``pre_commit_check``: called after all writes, before the pointer
-        flip; raising aborts the whole multi-table commit (orphan files
-        only) — the observation-based fail-the-batch hook.
-        """
-        t0 = time.time()
-        parent = self.latest()
-        if parent is None:
-            raise FileNotFoundError(f"table set {self.path} missing; create() first")
-        unknown = set(updates) - set(parent["tables"])
-        if unknown:
-            raise KeyError(f"unknown tables {sorted(unknown)}")
-        committed = {tuple(m) for m in parent["manifests"]}
-        entries = [tuple(e) for e in manifest_entries]
-        fresh = [e for e in entries if e not in committed]
-        if not fresh:
-            return {"status": "skipped", "snapshot_id": parent["snapshot_id"]}
-
-        new_id = parent["snapshot_id"] + 1
-        tbls = {
-            name: {**tbl, "buckets": {b: dict(e) for b, e in tbl["buckets"].items()}}
-            for name, tbl in parent["tables"].items()
-        }
-        written_counts = {}
-        for name, df in updates.items():
-            rel, written = self._write_table_files(parent, new_id, name, df)
-            tbl = tbls[name]
-            file_stats = self._collect_table_stats(tbl, rel, written)
-            for b in written:
-                ent = tbl["buckets"].setdefault(b, {"files": []})
-                fent = {
-                    "path": os.path.join(rel, f"_pb={b}"),
-                    "schema_id": tbl["current_schema_id"],
-                }
-                if b in file_stats:
-                    fent["stats"] = file_stats[b]
-                ent["files"] = ent["files"] + [fent]
-            written_counts[name] = len(written)
-        if pre_commit_check is not None:
-            pre_commit_check()  # raising aborts: files orphan, no commit
-
-        snap = {
-            "snapshot_id": new_id,
-            "parent_id": parent["snapshot_id"],
-            "n_buckets": parent["n_buckets"],
-            "tables": tbls,
-            "manifests": parent["manifests"] + [list(e) for e in fresh],
-            "metrics": {
-                **(metrics or {}),
-                "buckets_written": written_counts,
-                "apply_sec": round(time.time() - t0, 3),
-            },
-            "committed_at": time.time(),
-        }
-        self._commit_snapshot(snap, expected_parent=parent["snapshot_id"])
-        return {
-            "status": "committed",
-            "snapshot_id": new_id,
-            "buckets_written": written_counts,
-        }
-
-    # ------------------------------------------------------------- evolution
     def evolve(
         self,
         name: str,
@@ -522,231 +917,4 @@ class TransactionalTableSet:
         widen: dict[str, str] | None = None,
         drop: list[str] | None = None,
     ) -> dict:
-        """Schema-only snapshot for ONE table of the set (field-id semantics
-        identical to TransactionalParquetTable.evolve, incl. lossless
-        ``widen`` and id-retiring ``drop``): existing files are untouched;
-        readers map them by field id. Other tables are unaffected — but the
-        commit is still one atomic pointer flip of the shared log.
-        """
-        from sonic_etl_spark.sources.table import _WIDEN_OK, _norm_type
-
-        parent = self.latest()
-        if parent is None or name not in parent["tables"]:
-            raise FileNotFoundError(f"table {name} not in set {self.path}")
-        tbls = {n: dict(t) for n, t in parent["tables"].items()}
-        tbl = dict(tbls[name])
-        cur = next(
-            s for s in tbl["schemas"] if s["schema_id"] == tbl["current_schema_id"]
-        )
-        fields = [dict(f) for f in cur["fields"]]
-        protected = (
-            set(tbl["key_cols"]) | set(tbl["order_cols"]) | set(tbl["bucket_cols"])
-        )
-        for cname in drop or []:
-            hit = [f for f in fields if f["name"] == cname]
-            if not hit:
-                raise KeyError(f"drop: no column {cname!r} in {name}")
-            if cname in protected:
-                raise ValueError(f"drop: {cname!r} is a key/order/bucket column")
-            fields.remove(hit[0])
-        for old, new in (rename or {}).items():
-            hit = [f for f in fields if f["name"] == old]
-            if not hit:
-                raise KeyError(f"rename: no column {old!r} in {name}")
-            hit[0]["name"] = new
-        for cname, new_type in (widen or {}).items():
-            hit = [f for f in fields if f["name"] == cname]
-            if not hit:
-                raise KeyError(f"widen: no column {cname!r} in {name}")
-            pair = (_norm_type(hit[0]["type"]), _norm_type(new_type))
-            if pair not in _WIDEN_OK:
-                raise ValueError(
-                    f"widen: {hit[0]['type']} -> {new_type} is not a "
-                    f"lossless promotion (allowed: {sorted(_WIDEN_OK)})"
-                )
-            hit[0]["type"] = new_type
-        # ids are retired forever: max over ALL schemas, never just current
-        all_ids = [f["id"] for sch in tbl["schemas"] for f in sch["fields"]]
-        next_id = max(all_ids, default=-1) + 1
-        for cname, typ in add or []:
-            if any(f["name"] == cname for f in fields):
-                raise KeyError(f"add: column {cname!r} exists in {name}")
-            fields.append({"id": next_id, "name": cname, "type": typ})
-            next_id += 1
-        new_schema = {"schema_id": cur["schema_id"] + 1, "fields": fields}
-        id_by_old = {f["name"]: f["id"] for f in cur["fields"]}
-        new_by_id = {f["id"]: f["name"] for f in fields}
-
-        def remap(cols):
-            return [new_by_id.get(id_by_old.get(c, -1), c) for c in cols]
-
-        def remap_surviving(cols):
-            # stats_cols are droppable: a dropped column must leave the
-            # list, else every later merge fails collecting its min/max
-            return [
-                new_by_id[id_by_old[c]]
-                for c in cols
-                if c in id_by_old and id_by_old[c] in new_by_id
-            ]
-
-        tbl["schemas"] = tbl["schemas"] + [new_schema]
-        tbl["current_schema_id"] = new_schema["schema_id"]
-        tbl["key_cols"] = remap(tbl["key_cols"])
-        tbl["order_cols"] = remap(tbl["order_cols"])
-        tbl["bucket_cols"] = remap(tbl["bucket_cols"])
-        tbl["stats_cols"] = remap_surviving(tbl.get("stats_cols", []))
-        tbls[name] = tbl
-        snap = {
-            "snapshot_id": parent["snapshot_id"] + 1,
-            "parent_id": parent["snapshot_id"],
-            "n_buckets": parent["n_buckets"],
-            "tables": tbls,
-            "manifests": parent["manifests"],
-            "metrics": {
-                "evolution": {
-                    "table": name,
-                    "add": add or [],
-                    "rename": rename or {},
-                    "widen": widen or {},
-                    "drop": drop or [],
-                }
-            },
-            "committed_at": time.time(),
-        }
-        self._commit_snapshot(snap, expected_parent=parent["snapshot_id"])
-        return snap
-
-    def rebucket(self, n_buckets: int) -> dict:
-        """Partition evolution for the WHOLE set: one LWW-reduced rewrite of
-        every table into the new bucket count under ONE commit (n_buckets is
-        shared across the set, so per-table rebucketing cannot exist).
-        Same contract as TransactionalParquetTable.rebucket: state hashes
-        preserved, tombstones retained, manifests carried (fan-out replay
-        resumption and exactly-once unaffected), zone-map stats recollected;
-        incremental readers get the rewrite-boundary refusal."""
-        if n_buckets <= 0:
-            raise ValueError(f"rebucket: n_buckets must be positive, got {n_buckets}")
-        parent = self.latest()
-        if parent is None:
-            raise FileNotFoundError(f"table set {self.path} does not exist")
-        if parent["n_buckets"] == n_buckets:
-            return {"status": "noop", "snapshot_id": parent["snapshot_id"]}
-        t0 = time.time()
-        new_id = parent["snapshot_id"] + 1
-        # the writer hashes by the PARENT snapshot's layout fields but must
-        # target the NEW bucket count: pass a shallow parent copy with the
-        # new n_buckets so _write_table_files routes into the new layout
-        parent_new_n = {**parent, "n_buckets": n_buckets}
-        tbls = {}
-        for name, tbl in parent["tables"].items():
-            state = _lww_reduce(
-                read_buckets_projected(
-                    self.spark, self.path, tbl, list(tbl["buckets"].keys())
-                ),
-                tbl["key_cols"],
-                tbl["order_cols"],
-            )
-            rel, written = self._write_table_files(
-                parent_new_n, new_id, name, state
-            )
-            new_tbl = {**tbl, "buckets": {}}
-            file_stats = self._collect_table_stats(new_tbl, rel, written)
-            for b in written:
-                fent = {
-                    "path": os.path.join(rel, f"_pb={b}"),
-                    "schema_id": tbl["current_schema_id"],
-                }
-                if b in file_stats:
-                    fent["stats"] = file_stats[b]
-                new_tbl["buckets"][b] = {"files": [fent]}
-            tbls[name] = new_tbl
-        snap = {
-            "snapshot_id": new_id,
-            "parent_id": parent["snapshot_id"],
-            "n_buckets": n_buckets,
-            "tables": tbls,
-            "manifests": parent["manifests"],
-            "metrics": {
-                "rebucket": {
-                    "from": parent["n_buckets"],
-                    "to": n_buckets,
-                    "rebucket_sec": round(time.time() - t0, 3),
-                }
-            },
-            "committed_at": time.time(),
-        }
-        self._commit_snapshot(snap, expected_parent=parent["snapshot_id"])
-        return {"status": "rebucketed", "snapshot_id": new_id, "n_buckets": n_buckets}
-
-    # ------------------------------------------------------------ compaction
-    def compact(self, max_files_per_bucket: int = 8, force: bool = False) -> dict:
-        """Fold long delta chains per table (merge-on-read maintenance).
-
-        One snapshot commit covers every table's compaction — same atomicity
-        as merge_all. Tombstones are retained (late lower-order upserts must
-        still lose after compaction).
-        """
-        t0 = time.time()
-        parent = self.latest()
-        if parent is None:
-            raise FileNotFoundError(f"table set {self.path} does not exist")
-        new_id = parent["snapshot_id"] + 1
-        tbls = {
-            name: {**tbl, "buckets": {b: dict(e) for b, e in tbl["buckets"].items()}}
-            for name, tbl in parent["tables"].items()
-        }
-        total_victims = 0
-        for name, tbl in tbls.items():
-            victims = [
-                b
-                for b, ent in tbl["buckets"].items()
-                if force or len(ent["files"]) > max_files_per_bucket
-            ]
-            if not victims:
-                continue
-            state = _lww_reduce(
-                read_buckets_projected(self.spark, self.path, tbl, victims),
-                tbl["key_cols"],
-                tbl["order_cols"],
-            )
-            rel, written = self._write_table_files(parent, new_id, name, state)
-            stray = set(written) - set(victims)
-            if stray:
-                raise RuntimeError(
-                    f"{name}: compaction wrote buckets {sorted(stray)} outside "
-                    f"victims {sorted(victims)}"
-                )
-            file_stats = self._collect_table_stats(tbl, rel, written)
-            for b in victims:
-                tbl["buckets"].pop(b, None)
-            for b in written:
-                fent = {
-                    "path": os.path.join(rel, f"_pb={b}"),
-                    "schema_id": tbl["current_schema_id"],
-                }
-                if b in file_stats:
-                    fent["stats"] = file_stats[b]
-                tbl["buckets"][b] = {"files": [fent]}
-            total_victims += len(victims)
-        if not total_victims:
-            return {"status": "noop", "snapshot_id": parent["snapshot_id"]}
-        snap = {
-            "snapshot_id": new_id,
-            "parent_id": parent["snapshot_id"],
-            "n_buckets": parent["n_buckets"],
-            "tables": tbls,
-            "manifests": parent["manifests"],
-            "metrics": {
-                "compaction": {
-                    "buckets_compacted": total_victims,
-                    "compact_sec": round(time.time() - t0, 3),
-                }
-            },
-            "committed_at": time.time(),
-        }
-        self._commit_snapshot(snap, expected_parent=parent["snapshot_id"])
-        return {
-            "status": "compacted",
-            "snapshot_id": new_id,
-            "buckets_compacted": total_victims,
-        }
+        return self._evolve(name, add, rename, widen, drop)

@@ -97,17 +97,12 @@ class TableSink:
     """Warehouse sink: transactional MERGE with the idempotent manifest
     guard (the Dataflow→BQ loader upgrade, S16)."""
 
-    def __init__(self, table, key_cols=None, order_cols=None,
-                 compact_threshold: int | None = 16):
+    def __init__(self, table, compact_threshold: int | None = 16):
         self.table = table
-        self.key_cols = key_cols
-        self.order_cols = order_cols
         self.compact_threshold = compact_threshold
 
     def publish_batch(self, updates: DataFrame, manifest_entries, metrics=None) -> dict:
-        status = self.table.merge(
-            updates, manifest_entries, self.key_cols, self.order_cols, metrics=metrics
-        )
+        status = self.table.merge(updates, manifest_entries, metrics=metrics)
         if status["status"] == "committed" and self.compact_threshold is not None:
             self.table.compact(max_files_per_bucket=self.compact_threshold)
         return status

@@ -45,282 +45,37 @@ delta files become Iceberg data files with sequence numbers, the snapshot
 json becomes the Iceberg metadata tree, the pointer flip becomes a catalog
 swap, and ``compact`` becomes rewrite_data_files. Nothing in the engine
 above this module would change.
+
+Implementation: one storage core, ``sources/multitable.py``. A single table
+is a table set of one: it runs on the same core as
+:class:`~sonic_etl_spark.sources.multitable.TransactionalTableSet`, with one
+member named ``t``. Its snapshot JSON carries ``tables["t"]`` next to the
+shared ``n_buckets`` and ``manifests``, and its files live under
+``data/snap-N/t/_pb=B``. This class only fixes the member name.
 """
 
 from __future__ import annotations
 
-import json
-import os
-import shutil
-import time
-import uuid
+from pyspark.sql import DataFrame
 
-import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from sonic_etl_spark.sources.multitable import CommitConflict, TableSpec, _TableSetCore
 
-LATEST = "_latest.json"
-SNAP_DIR = "_snapshots"
-DATA_DIR = "data"
+__all__ = ["CommitConflict", "TransactionalParquetTable"]
+
+MEMBER = "t"
 
 DEFAULT_KEY_COLS = ["repo", "path"]
 DEFAULT_ORDER_COLS = ["last_offset", "last_partition_id", "commit"]
 
 
-def _bucket_expr(
-    n_buckets: int, key_cols: list[str] | None = None
-) -> F.Column:
-    """Bucket id = xxhash64 of the KEY columns mod n_buckets. Parameterized
-    by the snapshot's (possibly renamed) key columns so bucketing survives
-    schema evolution — the writer and point-lookup reader must agree."""
-    cols = [F.col(c) for c in (key_cols or DEFAULT_KEY_COLS)]
-    return F.pmod(F.xxhash64(*cols), F.lit(n_buckets)).cast("int")
+class TransactionalParquetTable(_TableSetCore):
+    """One merge-on-read table: the storage core with a single member.
 
+    Inherits the log-wide operations (``latest``, ``snapshot``,
+    ``history``, ``committed_ranges``, ``compact``, ``rebucket``,
+    ``rollback``, ``expire_snapshots``, ``metrics_history``); the methods
+    below address the one member through the core's private operations."""
 
-def _lww_reduce(df: DataFrame, key_cols: list[str], order_cols: list[str]) -> DataFrame:
-    """One winning row per key: max_by over the total order (map-side partial
-    aggregation; no row_number/full-sort shuffle)."""
-    payload = [c for c in df.columns if c not in key_cols]
-    return (
-        df.groupBy(*key_cols)
-        .agg(
-            F.max_by(
-                F.struct(*payload), F.struct(*[F.col(c) for c in order_cols])
-            ).alias("_r")
-        )
-        .select(*key_cols, "_r.*")
-    )
-
-
-def _single_table_roots(snap: dict):
-    """Data roots ("snap-N") referenced by a single-table snapshot."""
-    for ent in snap["buckets"].values():
-        for f in ent["files"]:
-            yield f["path"].split(os.sep)[1]  # "data/snap-N/_pb=B" -> snap-N
-
-
-def _expire_snapshots_impl(
-    path: str, hist: list[dict], roots_of, keep_last: int, min_age_sec: float
-) -> dict:
-    """Shared retention core for table / table-set (see
-    ``TransactionalParquetTable.expire_snapshots`` for the contract)."""
-    if not hist:
-        raise FileNotFoundError(f"table {path} does not exist")
-    latest_id = hist[-1]["snapshot_id"]
-    keep_last = max(keep_last, 1)
-    now = time.time()
-    kept = [
-        s
-        for i, s in enumerate(hist)
-        if i >= len(hist) - keep_last
-        or now - s.get("committed_at", 0.0) < min_age_sec
-    ]
-    kept_ids = {s["snapshot_id"] for s in kept}
-    expired = [s for s in hist if s["snapshot_id"] not in kept_ids]
-
-    live_roots = set()
-    for s in kept:
-        live_roots.update(roots_of(s))
-
-    data_dir = os.path.join(path, DATA_DIR)
-    removed_roots, bytes_reclaimed = [], 0
-    for root in sorted(os.listdir(data_dir)):
-        if not root.startswith("snap-") or root in live_roots:
-            continue
-        try:
-            root_id = int(root.split("-", 1)[1])
-        except ValueError:
-            continue
-        if root_id > latest_id:  # possible in-flight writer
-            continue
-        full = os.path.join(data_dir, root)
-        for dirpath, _dirs, files in os.walk(full):
-            bytes_reclaimed += sum(
-                os.path.getsize(os.path.join(dirpath, fn)) for fn in files
-            )
-        shutil.rmtree(full)
-        removed_roots.append(root)
-
-    for s in expired:
-        sp = os.path.join(path, SNAP_DIR, f"snap-{s['snapshot_id']}.json")
-        if os.path.exists(sp):
-            os.remove(sp)
-
-    return {
-        "snapshots_expired": len(expired),
-        "data_roots_removed": len(removed_roots),
-        "bytes_reclaimed": bytes_reclaimed,
-        "retained": sorted(kept_ids),
-    }
-
-
-# lossless type promotions (Iceberg evolution rule): widening only — a
-# narrowing or int→float would corrupt order/key comparisons on old rows
-_TYPE_ALIASES = {"long": "bigint", "integer": "int", "real": "float"}
-
-
-def _norm_type(t: str) -> str:
-    t = t.strip().lower()
-    return _TYPE_ALIASES.get(t, t)
-
-
-_WIDEN_OK = {("int", "bigint"), ("float", "double")}
-
-# column types eligible for per-file zone-map stats (JSON-safe, totally
-# ordered; timestamps/strings are excluded to keep manifest stats portable)
-_STATS_TYPES = {"int", "bigint", "double", "float", "smallint", "tinyint"}
-
-
-def collect_parquet_stats(
-    spark: SparkSession, out_dir: str, cols: list[str], ids_by_name: dict[str, int]
-) -> dict[str, dict[str, list]]:
-    """Per-bucket-file min/max over a freshly-written ``_pb``-partitioned
-    dir, keyed by field id: {bucket_id: {field_id: [min, max]}}. One
-    column-pruned aggregate (O(batch)); shared by the single table and the
-    fan-out set."""
-    df = spark.read.parquet(out_dir)
-    aggs = []
-    for c in cols:
-        aggs += [F.min(c).alias(f"_lo_{c}"), F.max(c).alias(f"_hi_{c}")]
-    rows = df.groupBy("_pb").agg(*aggs).collect()
-    return {
-        str(r["_pb"]): {
-            str(ids_by_name[c]): [r[f"_lo_{c}"], r[f"_hi_{c}"]] for c in cols
-        }
-        for r in rows
-    }
-
-
-def validate_stats_cols(fields: list[tuple[str, str]], stats_cols: list[str]) -> None:
-    """stats_cols must name numeric columns of ``fields`` (zone-map rule)."""
-    types = {n: t for n, t in fields}
-    for c in stats_cols:
-        if c not in types:
-            raise KeyError(f"stats_cols: no column {c!r}")
-        if _norm_type(types[c]) not in _STATS_TYPES:
-            raise ValueError(
-                f"stats_cols: {c!r} is {types[c]} — only numeric columns "
-                f"carry zone-map stats ({sorted(_STATS_TYPES)})"
-            )
-
-
-class CommitConflict(Exception):
-    """Another writer advanced the table between our read and our commit."""
-
-
-def _schema_by_id(tbl: dict, schema_id: int) -> dict:
-    for s in tbl["schemas"]:
-        if s["schema_id"] == schema_id:
-            return s
-    raise KeyError(f"schema_id {schema_id} not found")
-
-
-def _empty_df_for(spark: SparkSession, tbl: dict) -> DataFrame:
-    cur = _schema_by_id(tbl, tbl["current_schema_id"])
-    ddl = ", ".join(f"`{f['name']}` {f['type']}" for f in cur["fields"])
-    return spark.createDataFrame([], ddl)
-
-
-def read_buckets_projected(
-    spark: SparkSession, base_path: str, tbl: dict, bucket_ids: list[str]
-) -> DataFrame:
-    """Raw (pre-LWW) rows of the given buckets projected to the current
-    schema by FIELD ID: every data file remembers the schema it was written
-    under; columns are renamed/backfilled by id (Iceberg add/rename-safe
-    reads). ``tbl`` is a table-shaped dict: {schemas, current_schema_id,
-    buckets} — either a single-table snapshot or one entry of a
-    TransactionalTableSet snapshot."""
-    cur = _schema_by_id(tbl, tbl["current_schema_id"])
-    cur_names = [f["name"] for f in cur["fields"]]
-    if not bucket_ids:
-        return _empty_df_for(spark, tbl)
-    by_schema: dict[int, list[str]] = {}
-    for b in bucket_ids:
-        ent = tbl["buckets"].get(str(b))
-        if ent is None:
-            continue
-        for fent in ent["files"]:
-            by_schema.setdefault(fent["schema_id"], []).append(fent["path"])
-    parts = []
-    for schema_id, rels in by_schema.items():
-        if not rels:
-            continue
-        raw = spark.read.parquet(*[os.path.join(base_path, r) for r in rels])
-        written = _schema_by_id(tbl, schema_id)
-        name_at_write = {f["id"]: f["name"] for f in written["fields"]}
-        cols = []
-        for f in cur["fields"]:
-            old = name_at_write.get(f["id"])
-            if old is not None and old in raw.columns:
-                cols.append(F.col(old).cast(f["type"]).alias(f["name"]))
-            else:
-                cols.append(F.lit(None).cast(f["type"]).alias(f["name"]))
-        parts.append(raw.select(*cols))
-    if not parts:
-        return _empty_df_for(spark, tbl)
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out.select(*cur_names)
-
-
-class TransactionalParquetTable:
-    def __init__(self, spark: SparkSession, path: str, n_buckets: int = 32):
-        self.spark = spark
-        self.path = path
-        self.n_buckets = n_buckets
-        os.makedirs(os.path.join(path, SNAP_DIR), exist_ok=True)
-        os.makedirs(os.path.join(path, DATA_DIR), exist_ok=True)
-
-    # ------------------------------------------------------------- snapshots
-    def _latest_path(self) -> str:
-        return os.path.join(self.path, LATEST)
-
-    def latest(self) -> dict | None:
-        p = self._latest_path()
-        if not os.path.exists(p):
-            return None
-        with open(p) as f:
-            sid = json.load(f)["snapshot_id"]
-        return self.snapshot(sid)
-
-    def snapshot(self, snapshot_id: int) -> dict:
-        with open(os.path.join(self.path, SNAP_DIR, f"snap-{snapshot_id}.json")) as f:
-            return json.load(f)
-
-    def history(self) -> list[dict]:
-        """Retained snapshots, oldest first — the table's lineage.
-
-        Stops at the expiry horizon: a parent pruned by
-        :meth:`expire_snapshots` ends the walk (parent_id stays recorded in
-        the oldest retained snapshot as provenance)."""
-        out = []
-        snap = self.latest()
-        while snap is not None:
-            out.append(snap)
-            pid = snap.get("parent_id")
-            try:
-                snap = self.snapshot(pid) if pid is not None else None
-            except FileNotFoundError:
-                snap = None  # expired beyond the retention horizon
-        return list(reversed(out))
-
-    def _commit_snapshot(self, snap: dict, expected_parent: int | None) -> None:
-        """Write snap json, then atomically flip the pointer (optimistic CC)."""
-        cur = self.latest()
-        cur_id = cur["snapshot_id"] if cur else None
-        if cur_id != expected_parent:
-            raise CommitConflict(f"expected parent {expected_parent}, found {cur_id}")
-        sp = os.path.join(self.path, SNAP_DIR, f"snap-{snap['snapshot_id']}.json")
-        with open(sp, "w") as f:
-            json.dump(snap, f)
-        tmp = self._latest_path() + f".tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            json.dump({"snapshot_id": snap["snapshot_id"]}, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.rename(tmp, self._latest_path())  # atomic on POSIX
-
-    # ---------------------------------------------------------------- create
     def create(
         self,
         fields: list[tuple[str, str]],
@@ -345,232 +100,33 @@ class TransactionalParquetTable:
         never file-prune on stats — dropping a delta file from an LWW merge
         could resurrect a stale winner.
         """
-        if self.latest() is not None:
-            return self.latest()
-        validate_stats_cols(fields, stats_cols or [])
-        schema = {
-            "schema_id": 0,
-            "fields": [
-                {"id": i, "name": n, "type": t} for i, (n, t) in enumerate(fields)
-            ],
-        }
-        snap = {
-            "snapshot_id": 1,
-            "parent_id": None,
-            "schemas": [schema],
-            "current_schema_id": 0,
-            "n_buckets": self.n_buckets,
-            "key_cols": key_cols or DEFAULT_KEY_COLS,
-            "order_cols": order_cols or DEFAULT_ORDER_COLS,
-            "stats_cols": stats_cols or [],
-            "buckets": {},
-            "manifests": [],
-            "metrics": {},
-            "committed_at": time.time(),
-        }
-        self._commit_snapshot(snap, expected_parent=None)
-        return snap
-
-    def _collect_file_stats(
-        self, snap: dict, rel: str, written: list[str]
-    ) -> dict[str, dict[str, list]]:
-        """Per-bucket-file min/max of the snapshot's stats_cols, keyed by
-        field id: {bucket_id: {field_id: [min, max]}}. One column-pruned
-        aggregate over the just-written files (O(batch))."""
-        cols = snap.get("stats_cols") or []
-        if not cols or not written:
-            return {}
-        cur = self._schema_by_id(snap, snap["current_schema_id"])
-        ids = {f["name"]: f["id"] for f in cur["fields"]}
-        return collect_parquet_stats(
-            self.spark, os.path.join(self.path, rel), cols, ids
+        spec = TableSpec(
+            fields,
+            key_cols or DEFAULT_KEY_COLS,
+            order_cols or DEFAULT_ORDER_COLS,
+            stats_cols=stats_cols or [],
         )
-
-    # ----------------------------------------------------------------- reads
-    def _schema_by_id(self, snap: dict, schema_id: int) -> dict:
-        for s in snap["schemas"]:
-            if s["schema_id"] == schema_id:
-                return s
-        raise KeyError(f"schema_id {schema_id} not in snapshot {snap['snapshot_id']}")
-
-    def _current_schema(self, snap: dict) -> dict:
-        return self._schema_by_id(snap, snap["current_schema_id"])
-
-    def _empty_df(self, snap: dict) -> DataFrame:
-        cur = self._current_schema(snap)
-        ddl = ", ".join(f"`{f['name']}` {f['type']}" for f in cur["fields"])
-        return self.spark.createDataFrame([], ddl)
+        return self._create({MEMBER: spec})
 
     def read(self, snap: dict | None = None, include_tombstones: bool = False) -> DataFrame:
-        """Current converged state: union of base+delta files projected to the
-        current schema (field-id aware), LWW-reduced per key (merge-on-read).
-        """
-        snap = snap or self.latest()
-        if snap is None:
-            raise FileNotFoundError(f"table {self.path} does not exist")
-        df = self._read_buckets(snap, list(snap["buckets"].keys()))
-        df = _lww_reduce(df, snap["key_cols"], snap["order_cols"])
-        if not include_tombstones and "op" in df.columns:
-            # null-safe: a NULL op (producer lacked the column; backfilled by
-            # the field-id projection) is NOT a tombstone and must survive
-            df = df.filter(~F.col("op").eqNullSafe("delete"))
-        return df
-
-    def _read_buckets(self, snap: dict, bucket_ids: list[str]) -> DataFrame:
-        """Raw (pre-LWW) rows of the given buckets under the current schema."""
-        return read_buckets_projected(self.spark, self.path, snap, bucket_ids)
-
-    def metrics_history(self) -> DataFrame:
-        """Per-commit lineage + throughput as a queryable DataFrame (ST2/ST6:
-        the checkpoint carries metrics; this surfaces them). One row per
-        retained snapshot: ids, commit time, batch metrics recorded by the
-        writer (rows, apply_sec, events_per_sec, manifest, compaction...).
-        Driver-side O(retained snapshots) — bounded by expire_snapshots."""
-        rows = [
-            (
-                s["snapshot_id"],
-                s.get("parent_id"),
-                float(s.get("committed_at", 0.0)),
-                json.dumps(s.get("metrics", {}), sort_keys=True),
-                int(s["metrics"].get("rows", 0) or 0),
-                float(s["metrics"].get("apply_sec", 0.0) or 0.0),
-                float(s["metrics"].get("events_per_sec", 0.0) or 0.0),
-            )
-            for s in self.history()
-        ]
-        return self.spark.createDataFrame(
-            rows,
-            "snapshot_id bigint, parent_id bigint, committed_at double, "
-            "metrics_json string, rows bigint, apply_sec double, "
-            "events_per_sec double",
-        )
-
-    def lookup(self, **key) -> DataFrame:
-        """Point read (the serving path): hash the key to its ONE bucket,
-        read only that bucket's base+delta chain — 1/n_buckets of the
-        table, further bounded by compaction — filter to the key and
-        LWW-resolve. A key fetch on a 100 TB table touches one bucket's
-        files, not the table. Pass the key by CURRENT column names:
-        ``lookup(repo="r", path="p")`` (post-rename names after evolve).
-        """
-        snap = self.latest()
-        if snap is None:
-            raise FileNotFoundError(f"table {self.path} does not exist")
-        kc = snap["key_cols"]
-        if sorted(key) != sorted(kc):
-            raise KeyError(f"lookup needs exactly the key columns {kc}")
-        n_buckets = snap.get("n_buckets", self.n_buckets)
-        cur = self._current_schema(snap)
-        types = {f["name"]: f["type"] for f in cur["fields"]}
-        ddl = ", ".join(f"`{c}` {types[c]}" for c in kc)
-        one = self.spark.createDataFrame([tuple(key[c] for c in kc)], ddl)
-        bucket = one.select(
-            _bucket_expr(n_buckets, kc).alias("b")
-        ).first()["b"]
-        df = self._read_buckets(snap, [str(bucket)])
-        for c in kc:
-            df = df.where(F.col(c) == key[c])
-        df = _lww_reduce(df, kc, snap["order_cols"])
-        if "op" in df.columns:
-            df = df.filter(~F.col("op").eqNullSafe("delete"))
-        return df
-
-    def read_for_keys(self, keys: DataFrame) -> DataFrame:
-        """Batch point-read (the incremental-join primitive): LWW state
-        restricted to the storage buckets that could hold any key in
-        ``keys`` — a frame carrying the table's key columns (extra columns
-        ignored). Cost is (touched buckets / n_buckets) of the table: a
-        small batch joined against a 100 TB state table reads only the
-        buckets the batch's keys hash into, never the table. With
-        ``n_buckets`` sized ∝ corpus (rebucket() as it grows), per-batch
-        I/O stays ∝ batch, which is what makes incremental maintenance
-        (operators/incremental.py) O(new docs).
-
-        The bucket-id collect is O(distinct touched buckets) ≤ n_buckets —
-        control-plane, never data rows. Returns the same shape as
-        :meth:`read` (tombstones filtered); the caller joins the result
-        against its batch on the key columns.
-        """
-        snap = self.latest()
-        if snap is None:
-            raise FileNotFoundError(f"table {self.path} does not exist")
-        kc = snap["key_cols"]
-        missing = [c for c in kc if c not in keys.columns]
-        if missing:
-            raise KeyError(
-                f"read_for_keys: keys frame lacks key columns {missing}"
-            )
-        n_buckets = snap.get("n_buckets", self.n_buckets)
-        bids = [
-            str(r["b"])
-            for r in keys.select(_bucket_expr(n_buckets, kc).alias("b"))
-            .distinct()
-            .collect()
-        ]
-        bids = [b for b in bids if b in snap["buckets"]]
-        df = _lww_reduce(self._read_buckets(snap, bids), kc, snap["order_cols"])
-        if "op" in df.columns:
-            df = df.filter(~F.col("op").eqNullSafe("delete"))
-        return df
+        """Current converged state (or ``snap``'s): LWW-reduced per key,
+        tombstones filtered unless asked for."""
+        return self._read(MEMBER, snap, include_tombstones)
 
     def read_asof(self, ts: float) -> DataFrame:
-        """Time travel by wall clock: the converged state as of the latest
-        snapshot committed at or before ``ts`` (epoch seconds). Bounded by
-        the retention horizon (:meth:`expire_snapshots`); raises if no
-        retained snapshot is old enough. Snapshot-id time travel is
-        ``read(snapshot(id))`` — this is the timestamp spelling (Iceberg's
-        ``as-of-timestamp``)."""
-        eligible = [
-            s for s in self.history() if s.get("committed_at", 0.0) <= ts
-        ]
-        if not eligible:
-            raise FileNotFoundError(
-                f"no retained snapshot at or before ts={ts} "
-                f"(retention horizon may have expired it)"
-            )
-        return self.read(eligible[-1])
+        """State as of the latest retained snapshot committed at or before
+        ``ts``; snapshot-id time travel is ``read(snapshot(id))``."""
+        return self._read_asof(MEMBER, ts)
 
-    def rollback(self, snapshot_id: int) -> dict:
-        """Restore the table to a historical snapshot's state by committing
-        a NEW snapshot that carries the old file/manifest lists (Iceberg
-        rollback semantics: history moves forward, bytes move back).
+    def lookup(self, **key) -> DataFrame:
+        """Point read of one key by CURRENT column names:
+        ``lookup(repo="r", path="p")``; reads only the key's bucket."""
+        return self._lookup(MEMBER, key)
 
-        The rolled-back commits' manifest ranges leave the committed set,
-        so a replay resumes exactly from the restored frontier and
-        re-applies what was undone — rollback + replay converges to the
-        same state hash as never rolling back (pytest-asserted). The target
-        must still be retained (within the expiry horizon)."""
-        parent = self.latest()
-        if parent is None:
-            raise FileNotFoundError(f"table {self.path} does not exist")
-        if snapshot_id == parent["snapshot_id"]:
-            return {"status": "noop", "snapshot_id": snapshot_id}
-        target = self.snapshot(snapshot_id)  # FileNotFoundError if expired
-        snap = {
-            **{k: target[k] for k in (
-                "schemas", "current_schema_id", "n_buckets",
-                "key_cols", "order_cols", "buckets", "manifests",
-            )},
-            "stats_cols": target.get("stats_cols", []),
-            "snapshot_id": parent["snapshot_id"] + 1,
-            "parent_id": parent["snapshot_id"],
-            "metrics": {"rollback": {"restored_snapshot_id": snapshot_id}},
-            "committed_at": time.time(),
-        }
-        self._commit_snapshot(snap, expected_parent=parent["snapshot_id"])
-        return {
-            "status": "rolled_back",
-            "snapshot_id": snap["snapshot_id"],
-            "restored_snapshot_id": snapshot_id,
-        }
-
-    @staticmethod
-    def _file_set(snap: dict) -> dict[str, int]:
-        return {
-            f["path"]: f["schema_id"]
-            for ent in snap["buckets"].values()
-            for f in ent["files"]
-        }
+    def read_for_keys(self, keys: DataFrame) -> DataFrame:
+        """LWW state of the buckets that ``keys`` (a frame carrying the key
+        columns) hash into — the incremental-join primitive."""
+        return self._read_for_keys(MEMBER, keys)
 
     def read_changes(
         self,
@@ -579,430 +135,34 @@ class TransactionalParquetTable:
         reduced: bool = False,
         where_between: tuple[str, float, float] | None = None,
     ) -> DataFrame:
-        """Incremental scan (Iceberg incremental-append-read analog): the
-        rows APPENDED between two snapshots — the converged table's own
-        CDC-out stream for downstream consumers.
-
-        Diffing is by data-file identity, so an incremental consumer's cost
-        is O(new data), never O(table). ``from_snapshot_id=None`` reads
-        since creation; ``reduced=True`` LWW-reduces the changes to one row
-        per key (the latest state among the changed rows — what a
-        downstream MERGE wants).
-
-        Compaction/expiry rewrite files without changing state, so an
-        incremental read across such a boundary would replay old rows as
-        changes; that case is DETECTED (files present at ``from`` missing
-        at ``to``) and raises — the consumer re-syncs with a full
-        :meth:`read` (the same restriction Iceberg places on its
-        incremental append scan).
-
-        ``where_between=(col, lo, hi)`` (inclusive): filter the changes to
-        a numeric range AND, when the table carries zone-map stats for
-        ``col`` (``create(stats_cols=...)``), skip new files whose
-        [min, max] cannot overlap — they never reach Spark's file listing.
-        Files without stats for the column are conservatively kept. Sound
-        here (the change feed is append-shaped); the LWW state read never
-        file-prunes on stats.
-
-        ``reduced=True`` combined with ``where_between`` means **LWW among
-        the in-range changes only**: the range filter (row AND file level)
-        applies BEFORE the reduce, so a key whose newest change falls
-        outside the range reports its newest IN-RANGE change — NOT the
-        key's globally-latest state. That is the only semantic consistent
-        with zone-map file pruning (a pruned file by definition holds only
-        out-of-range rows, so pruning and the row filter agree); consumers
-        that need "latest state of keys touched in the range" must reduce
-        first themselves: ``read_changes(reduced=True)`` then filter.
-        """
-        to_snap = (
-            self.latest()
-            if to_snapshot_id is None
-            else self.snapshot(to_snapshot_id)
+        """Rows appended between two snapshots (the table's CDC-out
+        stream); raises across a compaction/expiry rewrite."""
+        return self._read_changes(
+            MEMBER, from_snapshot_id, to_snapshot_id, reduced, where_between
         )
-        if to_snap is None:
-            raise FileNotFoundError(f"table {self.path} does not exist")
-        from_files: dict[str, int] = {}
-        if from_snapshot_id is not None:
-            from_files = self._file_set(self.snapshot(from_snapshot_id))
-        to_files = self._file_set(to_snap)
-        rewritten = set(from_files) - set(to_files)
-        if rewritten:
-            raise ValueError(
-                f"incremental read crosses a compaction/expiry boundary "
-                f"({len(rewritten)} base files rewritten between snapshots); "
-                "re-sync with a full read()"
-            )
-        fid = None
-        if where_between is not None:
-            col, lo, hi = where_between
-            cur = self._schema_by_id(to_snap, to_snap["current_schema_id"])
-            hit = [f for f in cur["fields"] if f["name"] == col]
-            if not hit:
-                raise KeyError(f"where_between: no column {col!r}")
-            fid = str(hit[0]["id"])
 
-        def _overlaps(fent: dict) -> bool:
-            if fid is None:
-                return True
-            st = fent.get("stats", {}).get(fid)
-            if st is None or st[0] is None or st[1] is None:
-                return True  # no stats for this column/file: keep
-            return st[1] >= lo and st[0] <= hi
-
-        new_buckets = {}
-        for b, ent in to_snap["buckets"].items():
-            nf = [
-                f for f in ent["files"]
-                if f["path"] not in from_files and _overlaps(f)
-            ]
-            if nf:
-                new_buckets[b] = {"files": nf}
-        tbl = {**to_snap, "buckets": new_buckets}
-        df = read_buckets_projected(
-            self.spark, self.path, tbl, list(new_buckets)
-        )
-        if where_between is not None:
-            df = df.where(F.col(col).between(lo, hi))
-        if reduced:
-            df = _lww_reduce(df, to_snap["key_cols"], to_snap["order_cols"])
-        return df
-
-    # ------------------------------------------------------------- manifests
-    def committed_ranges(self) -> set[tuple[int, int, int]]:
-        snap = self.latest()
-        if snap is None:
-            return set()
-        return {tuple(m) for m in snap["manifests"]}
+    def files_per_bucket(self, snap: dict | None = None) -> dict[str, int]:
+        return self._files_per_bucket(MEMBER, snap)
 
     def is_committed(self, partition_id: int, start: int, end: int) -> bool:
         return (partition_id, start, end) in self.committed_ranges()
 
-    # ------------------------------------------------------------ projection
-    def _project_to_current(self, snap: dict, updates: DataFrame) -> DataFrame:
-        """Schema-id-aware writer projection: route the producer's columns to
-        the current schema by field id, accepting historical (pre-rename)
-        names and backfilling unknown-to-producer columns (north rule:
-        added/renamed columns replayed mid-stream must route correctly)."""
-        cur = self._current_schema(snap)
-        historical: dict[int, list[str]] = {}
-        for sch in sorted(snap["schemas"], key=lambda s: -s["schema_id"]):
-            for f in sch["fields"]:
-                historical.setdefault(f["id"], [])
-                if f["name"] not in historical[f["id"]]:
-                    historical[f["id"]].append(f["name"])
-        proj = []
-        for f in cur["fields"]:
-            src = next((n for n in historical[f["id"]] if n in updates.columns), None)
-            if src is not None:
-                proj.append(F.col(src).cast(f["type"]).alias(f["name"]))
-            else:
-                proj.append(F.lit(None).cast(f["type"]).alias(f["name"]))
-        return updates.select(*proj)
-
-    def _write_bucket_files(
-        self, snap_id: int, df: DataFrame, n_partitions: int,
-        n_buckets: int | None = None, key_cols: list[str] | None = None,
-    ) -> tuple[str, list[str]]:
-        """Write df (already projected) bucket-partitioned under data/snap-N.
-
-        Returns (rel_dir, bucket_ids_written). ``_pb`` is the partition
-        directory column only — parquet files contain exactly the schema
-        columns. ``n_buckets``/``key_cols`` must be the SNAPSHOT's values
-        (not the constructor's / defaults): reopening a table with a
-        different constructor value, or writing after a key-column rename,
-        must not rehash rows into foreign bucket ids.
-        """
-        rel = os.path.join(DATA_DIR, f"snap-{snap_id}")
-        out_dir = os.path.join(self.path, rel)
-        (
-            df.withColumn(
-                "_pb", _bucket_expr(n_buckets or self.n_buckets, key_cols)
-            )
-            .repartition(n_partitions, F.col("_pb"))
-            .write.partitionBy("_pb")
-            .mode("overwrite")
-            .parquet(out_dir)
-        )
-        written = [
-            name.split("=", 1)[1]
-            for name in os.listdir(out_dir)
-            if name.startswith("_pb=")
-        ]
-        return rel, written
-
-    # ----------------------------------------------------------------- merge
     def merge(
         self,
         updates: DataFrame,
         manifest_entries: list[tuple[int, int, int]],
-        key_cols: list[str] | None = None,
-        order_cols: list[str] | None = None,
         metrics: dict | None = None,
         pre_commit_check=None,
     ) -> dict:
-        """MERGE INTO with LWW ordering and an idempotent manifest commit.
+        """MERGE INTO with LWW ordering and an idempotent manifest commit
+        (contract: ``_TableSetCore._merge_all``). ``updates`` must be
+        one-row-per-key; returns a status dict whose ``buckets_written`` is
+        this table's count."""
+        res = self._merge_all({MEMBER: updates}, manifest_entries, metrics, pre_commit_check)
+        if "buckets_written" in res:
+            res["buckets_written"] = res["buckets_written"][MEMBER]
+        return res
 
-        ``updates`` must already be one-row-per-key (in-batch reduced by the
-        caller; see operators.merge.reduce_batch). Merge-on-read: appends one
-        delta file per affected bucket — O(batch) writes; the reader resolves
-        LWW across files. Returns a status dict. Skips (no-op) if every
-        manifest entry is already committed — the exactly-once guard (ST3
-        upgrade, SURVEY.md §2.8).
-
-        ``pre_commit_check``: optional callable invoked AFTER the data files
-        are written but BEFORE the snapshot pointer flips — raising aborts
-        the commit, leaving only orphan files (used for observation-based
-        fail-the-batch validation that rides the write job for free).
-        """
-        t0 = time.time()
-        parent = self.latest()
-        if parent is None:
-            raise FileNotFoundError(f"table {self.path} does not exist; create() first")
-        # caller-provided key/order overrides must exist under the CURRENT
-        # schema: storing a stale (pre-rename) name would poison every later
-        # LWW read with an unresolvable column — fail at the write instead
-        cur_names = {
-            f["name"]
-            for f in self._schema_by_id(parent, parent["current_schema_id"])["fields"]
-        }
-        stale = [c for c in (key_cols or []) + (order_cols or []) if c not in cur_names]
-        if stale:
-            raise KeyError(
-                f"merge: key/order columns {stale} not in the current schema "
-                f"(renamed? pass current names or None to keep the snapshot's)"
-            )
-        committed = {tuple(m) for m in parent["manifests"]}
-        entries = [tuple(e) for e in manifest_entries]
-        fresh = [e for e in entries if e not in committed]
-        if not fresh:
-            return {"status": "skipped", "snapshot_id": parent["snapshot_id"]}
-        # partial overlap: re-applying the whole batch is still correct
-        # (max-merge is idempotent); only the fresh ranges are recorded.
-
-        new_id = parent["snapshot_id"] + 1
-        # adopt the snapshot's bucket count: a reopened table with a different
-        # constructor n_buckets must keep hashing rows into the recorded layout
-        n_buckets = parent.get("n_buckets", self.n_buckets)
-        projected = self._project_to_current(parent, updates)
-        rel, written = self._write_bucket_files(
-            new_id, projected, n_partitions=max(n_buckets, 1),
-            n_buckets=n_buckets, key_cols=parent["key_cols"],
-        )
-        if pre_commit_check is not None:
-            pre_commit_check()  # raising here aborts: files orphan, no commit
-
-        file_stats = self._collect_file_stats(parent, rel, written)
-        buckets = {b: dict(ent) for b, ent in parent["buckets"].items()}
-        for b in written:
-            ent = buckets.setdefault(b, {"files": []})
-            fent = {
-                "path": os.path.join(rel, f"_pb={b}"),
-                "schema_id": parent["current_schema_id"],
-            }
-            if b in file_stats:
-                fent["stats"] = file_stats[b]
-            ent["files"] = ent["files"] + [fent]
-
-        snap = {
-            "snapshot_id": new_id,
-            "parent_id": parent["snapshot_id"],
-            "schemas": parent["schemas"],
-            "current_schema_id": parent["current_schema_id"],
-            "n_buckets": n_buckets,
-            "key_cols": key_cols or parent["key_cols"],
-            "order_cols": order_cols or parent["order_cols"],
-            "stats_cols": parent.get("stats_cols", []),
-            "buckets": buckets,
-            "manifests": parent["manifests"] + [list(e) for e in fresh],
-            "metrics": {**(metrics or {}), "buckets_written": len(written)},
-            "committed_at": time.time(),
-        }
-        # per-commit lineage + throughput (ST2/ST6: checkpoint carries metrics)
-        elapsed = time.time() - t0
-        snap["metrics"]["apply_sec"] = round(elapsed, 3)
-        if snap["metrics"].get("rows"):
-            snap["metrics"]["events_per_sec"] = round(snap["metrics"]["rows"] / elapsed, 1)
-        self._commit_snapshot(snap, expected_parent=parent["snapshot_id"])
-        return {
-            "status": "committed",
-            "snapshot_id": new_id,
-            "buckets_written": len(written),
-        }
-
-    # ------------------------------------------------------------ compaction
-    def files_per_bucket(self, snap: dict | None = None) -> dict[str, int]:
-        snap = snap or self.latest()
-        return {b: len(ent["files"]) for b, ent in snap["buckets"].items()}
-
-    def compact(self, max_files_per_bucket: int = 8, force: bool = False) -> dict:
-        """Fold buckets whose delta chains exceed ``max_files_per_bucket``
-        back to one file each (Iceberg rewrite_data_files analog).
-
-        LWW-reduces the bucket contents; tombstones are RETAINED so a
-        late-replayed lower-order upsert still loses after compaction.
-        Bounded read amplification: call every K batches from the replay
-        loop, or force=True for full maintenance.
-        """
-        t0 = time.time()
-        parent = self.latest()
-        if parent is None:
-            raise FileNotFoundError(f"table {self.path} does not exist")
-        victims = [
-            b
-            for b, ent in parent["buckets"].items()
-            if force or len(ent["files"]) > max_files_per_bucket
-        ]
-        if not victims:
-            return {"status": "noop", "snapshot_id": parent["snapshot_id"]}
-
-        new_id = parent["snapshot_id"] + 1
-        # snapshot's bucket count, NOT the constructor's: compacting a
-        # reopened table with a mismatched self.n_buckets would rehash victim
-        # rows into non-victim bucket ids and silently drop those buckets'
-        # delta files when the entries are replaced below.
-        n_buckets = parent.get("n_buckets", self.n_buckets)
-        state = _lww_reduce(
-            self._read_buckets(parent, victims),
-            parent["key_cols"],
-            parent["order_cols"],
-        )
-        rel, written = self._write_bucket_files(
-            new_id, state, n_partitions=max(len(victims), 1),
-            n_buckets=n_buckets, key_cols=parent["key_cols"],
-        )
-        stray = set(written) - set(victims)
-        if stray:
-            raise RuntimeError(
-                f"compaction wrote bucket ids {sorted(stray)} outside the "
-                f"victim set {sorted(victims)} — bucket layout corrupted"
-            )
-
-        file_stats = self._collect_file_stats(parent, rel, written)
-        buckets = {b: dict(ent) for b, ent in parent["buckets"].items()}
-        for b in victims:
-            buckets.pop(b, None)  # a fully-empty bucket stays absent
-        for b in written:
-            fent = {
-                "path": os.path.join(rel, f"_pb={b}"),
-                "schema_id": parent["current_schema_id"],
-            }
-            if b in file_stats:
-                fent["stats"] = file_stats[b]
-            buckets[b] = {"files": [fent]}
-        snap = {
-            "snapshot_id": new_id,
-            "parent_id": parent["snapshot_id"],
-            "schemas": parent["schemas"],
-            "current_schema_id": parent["current_schema_id"],
-            "n_buckets": n_buckets,
-            "key_cols": parent["key_cols"],
-            "order_cols": parent["order_cols"],
-            "stats_cols": parent.get("stats_cols", []),
-            "buckets": buckets,
-            "manifests": parent["manifests"],
-            "metrics": {
-                "compaction": {
-                    "buckets_compacted": len(victims),
-                    "compact_sec": round(time.time() - t0, 3),
-                }
-            },
-            "committed_at": time.time(),
-        }
-        self._commit_snapshot(snap, expected_parent=parent["snapshot_id"])
-        return {
-            "status": "compacted",
-            "snapshot_id": new_id,
-            "buckets_compacted": len(victims),
-        }
-
-    def rebucket(self, n_buckets: int) -> dict:
-        """Partition evolution: rewrite the WHOLE table into a new bucket
-        count (Iceberg partition-spec evolution, done eagerly — the bucket
-        function is the merge/lookup routing, so old and new layouts cannot
-        coexist within one snapshot). One LWW-reduced full rewrite
-        (tombstones retained, same as compaction); manifests carry over, so
-        replay resumption and exactly-once are unaffected; subsequent
-        merges/lookups hash into the new layout via the snapshot's
-        n_buckets. Incremental readers crossing this snapshot see the usual
-        compaction-boundary refusal (file identity changed)."""
-        if n_buckets <= 0:
-            raise ValueError(f"rebucket: n_buckets must be positive, got {n_buckets}")
-        parent = self.latest()
-        if parent is None:
-            raise FileNotFoundError(f"table {self.path} does not exist")
-        if parent.get("n_buckets", self.n_buckets) == n_buckets:
-            return {"status": "noop", "snapshot_id": parent["snapshot_id"]}
-        t0 = time.time()
-        new_id = parent["snapshot_id"] + 1
-        state = _lww_reduce(
-            self._read_buckets(parent, list(parent["buckets"].keys())),
-            parent["key_cols"],
-            parent["order_cols"],
-        )
-        rel, written = self._write_bucket_files(
-            new_id, state, n_partitions=max(n_buckets, 1),
-            n_buckets=n_buckets, key_cols=parent["key_cols"],
-        )
-        file_stats = self._collect_file_stats(parent, rel, written)
-        buckets = {}
-        for b in written:
-            fent = {
-                "path": os.path.join(rel, f"_pb={b}"),
-                "schema_id": parent["current_schema_id"],
-            }
-            if b in file_stats:
-                fent["stats"] = file_stats[b]
-            buckets[b] = {"files": [fent]}
-        snap = {
-            "snapshot_id": new_id,
-            "parent_id": parent["snapshot_id"],
-            "schemas": parent["schemas"],
-            "current_schema_id": parent["current_schema_id"],
-            "n_buckets": n_buckets,
-            "key_cols": parent["key_cols"],
-            "order_cols": parent["order_cols"],
-            "stats_cols": parent.get("stats_cols", []),
-            "buckets": buckets,
-            "manifests": parent["manifests"],
-            "metrics": {
-                "rebucket": {
-                    "from": parent.get("n_buckets", self.n_buckets),
-                    "to": n_buckets,
-                    "rebucket_sec": round(time.time() - t0, 3),
-                }
-            },
-            "committed_at": time.time(),
-        }
-        self._commit_snapshot(snap, expected_parent=parent["snapshot_id"])
-        return {"status": "rebucketed", "snapshot_id": new_id, "n_buckets": n_buckets}
-
-    # ------------------------------------------------------------- retention
-    def expire_snapshots(
-        self, keep_last: int = 1, min_age_sec: float = 0.0
-    ) -> dict:
-        """Retention maintenance: Iceberg ``expire_snapshots`` +
-        ``remove_orphan_files`` analog. Without it a long replay accumulates
-        every historical snapshot JSON and every superseded delta/compaction
-        file forever — at 10^10 events that is thousands of dead data roots.
-
-        Keeps the ``keep_last`` most recent snapshots (the latest always
-        survives) plus any snapshot younger than ``min_age_sec``; deletes
-        (a) the expired snapshot JSONs and (b) every on-disk data root no
-        retained snapshot references — which also sweeps stale roots from
-        crashed/aborted writers once the snapshot counter has passed their
-        id. Time travel to a retained snapshot keeps working; reading an
-        expired one raises FileNotFoundError.
-
-        Concurrency: an in-flight merge writes ``data/snap-{latest+1}``
-        before committing; only roots with snapshot id ≤ the current latest
-        are eligible for deletion, so active writers are never swept.
-        """
-        return _expire_snapshots_impl(
-            self.path, self.history(), _single_table_roots, keep_last,
-            min_age_sec,
-        )
-
-    # ------------------------------------------------------------- evolution
     def evolve(
         self,
         add: list[tuple[str, str]] | None = None,
@@ -1010,95 +170,5 @@ class TransactionalParquetTable:
         widen: dict[str, str] | None = None,
         drop: list[str] | None = None,
     ) -> dict:
-        """Schema-only snapshot: add / rename / widen / drop by field id.
-
-        Existing data files are untouched; the reader maps them to the new
-        schema by field id (Iceberg semantics). The reference's analog is
-        manual proto field reservation (schemas/proto/blocks.proto:144-146).
-
-        ``widen``: {column: new_type} — only LOSSLESS promotions
-        (int→bigint, float→double, Iceberg's rule); old files cast up on
-        read via the field-id projection, new files are written wide.
-        ``drop``: columns disappear from reads and writes but the field id
-        is retired FOREVER — fresh ids come from the max across ALL
-        historical schemas, never just the current one, so a later add
-        reusing the name can never resurrect the dropped column's bytes
-        from old files (Iceberg's no-id-reuse rule). Key/order columns
-        cannot be dropped.
-        """
-        parent = self.latest()
-        cur = self._current_schema(parent)
-        fields = [dict(f) for f in cur["fields"]]
-        protected = set(parent["key_cols"]) | set(parent["order_cols"])
-        for name in drop or []:
-            hit = [f for f in fields if f["name"] == name]
-            if not hit:
-                raise KeyError(f"drop: no column {name!r}")
-            if name in protected:
-                raise ValueError(f"drop: {name!r} is a key/order column")
-            fields.remove(hit[0])
-        for old, new in (rename or {}).items():
-            hit = [f for f in fields if f["name"] == old]
-            if not hit:
-                raise KeyError(f"rename: no column {old!r}")
-            hit[0]["name"] = new
-        for name, new_type in (widen or {}).items():
-            hit = [f for f in fields if f["name"] == name]
-            if not hit:
-                raise KeyError(f"widen: no column {name!r}")
-            pair = (_norm_type(hit[0]["type"]), _norm_type(new_type))
-            if pair not in _WIDEN_OK:
-                raise ValueError(
-                    f"widen: {hit[0]['type']} -> {new_type} is not a "
-                    f"lossless promotion (allowed: {sorted(_WIDEN_OK)})"
-                )
-            hit[0]["type"] = new_type
-        # fresh ids come from ALL schemas ever committed: after a drop the
-        # current max can shrink, and reusing a retired id would resurrect
-        # the dropped column's data from old files
-        all_ids = [
-            f["id"] for sch in parent["schemas"] for f in sch["fields"]
-        ]
-        next_id = max(all_ids) + 1 if all_ids else 0
-        for name, typ in add or []:
-            if any(f["name"] == name for f in fields):
-                raise KeyError(f"add: column {name!r} exists")
-            fields.append({"id": next_id, "name": name, "type": typ})
-            next_id += 1
-        new_schema = {"schema_id": cur["schema_id"] + 1, "fields": fields}
-        # renames can retitle key/order columns; keep them in sync by id
-        id_by_old = {f["name"]: f["id"] for f in cur["fields"]}
-        new_by_id = {f["id"]: f["name"] for f in fields}
-        remap = lambda cols: [new_by_id.get(id_by_old.get(c, -1), c) for c in cols]
-        # stats_cols are droppable (unlike key/order): a dropped stats
-        # column must leave the list too, or every later merge would try to
-        # collect min/max of a column that no longer resolves. Keep only
-        # names whose field id survives in the new schema.
-        remap_surviving = lambda cols: [
-            new_by_id[id_by_old[c]]
-            for c in cols
-            if c in id_by_old and id_by_old[c] in new_by_id
-        ]
-        snap = {
-            "snapshot_id": parent["snapshot_id"] + 1,
-            "parent_id": parent["snapshot_id"],
-            "schemas": parent["schemas"] + [new_schema],
-            "current_schema_id": new_schema["schema_id"],
-            "n_buckets": parent.get("n_buckets", self.n_buckets),
-            "key_cols": remap(parent["key_cols"]),
-            "order_cols": remap(parent["order_cols"]),
-            "stats_cols": remap_surviving(parent.get("stats_cols", [])),
-            "buckets": parent["buckets"],
-            "manifests": parent["manifests"],
-            "metrics": {
-                "evolution": {
-                    "add": add or [],
-                    "rename": rename or {},
-                    "widen": widen or {},
-                    "drop": drop or [],
-                }
-            },
-            "committed_at": time.time(),
-        }
-        self._commit_snapshot(snap, expected_parent=parent["snapshot_id"])
-        return snap
+        """Schema-only snapshot: add / rename / widen / drop by field id."""
+        return self._evolve(MEMBER, add, rename, widen, drop)

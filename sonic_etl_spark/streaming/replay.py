@@ -114,10 +114,7 @@ def replay(
             "manifest": [list(m) for m in manifest],
             "rows": n_rows,
         }
-        status = table.merge(
-            updates, manifest, KEY_COLS, ORDER_COLS, metrics=bm,
-            pre_commit_check=check,
-        )
+        status = table.merge(updates, manifest, metrics=bm, pre_commit_check=check)
         bm["elapsed_sec"] = round(time.time() - bt0, 3)
         bm["events_per_sec"] = round(n_rows / max(bm["elapsed_sec"], 1e-9), 1)
         bm["status"] = status["status"]
@@ -180,10 +177,7 @@ def repair_gaps(
             n_rows = e - s + 1  # dense log
             updates = reduce_batch(typed, salt_buckets=salt_buckets)
             bm = {"repair": True, "manifest": [list(m) for m in manifest], "rows": n_rows}
-            status = table.merge(
-                updates, manifest, KEY_COLS, ORDER_COLS, metrics=bm,
-                pre_commit_check=check,
-            )
+            status = table.merge(updates, manifest, metrics=bm, pre_commit_check=check)
             bm["elapsed_sec"] = round(time.time() - bt0, 3)
             bm["events_per_sec"] = round(n_rows / max(bm["elapsed_sec"], 1e-9), 1)
             bm["status"] = status["status"]

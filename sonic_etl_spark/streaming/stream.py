@@ -104,7 +104,7 @@ def stream_replay(
 
     if isinstance(table, TransactionalParquetTable):
         table.create(SOURCE_CODE_FIELDS, KEY_COLS, ORDER_COLS)
-        sink = TableSink(table, KEY_COLS, ORDER_COLS, compact_threshold)
+        sink = TableSink(table, compact_threshold)
     else:
         sink = table
 

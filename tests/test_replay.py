@@ -128,3 +128,43 @@ def test_replay_with_inline_retention_converges_and_resumes(
     # and a fresh re-replay still no-ops
     res = replay(log_df, tab, chunk_size=200, expire_keep=2)
     assert res.batches_applied == 0
+
+
+def test_table_is_a_set_of_one(spark, tmp_path, log_df, oracle_hash):
+    """The single table is the storage core with one member: one log
+    replayed into a TransactionalParquetTable and, batch for batch, into a
+    one-member TransactionalTableSet built from the same spec gives the same
+    state, file layout and manifests; the set's read_for_keys returns the
+    LWW state of exactly the keys' buckets and reads no other bucket."""
+    from sonic_etl_spark.plans.planner import filter_to_manifests, log_heads, plan_batches
+    from sonic_etl_spark.sources.multitable import TransactionalTableSet
+    from sonic_etl_spark.streaming.fanout import FANOUT_SPECS
+
+    tab = TransactionalParquetTable(spark, str(tmp_path / "one"), n_buckets=8)
+    replay(log_df, tab, chunk_size=500)
+    ts = TransactionalTableSet(spark, str(tmp_path / "set"), n_buckets=8)
+    ts.create({"source_code": FANOUT_SPECS["source_code"]})
+    for manifest in plan_batches(log_heads(log_df), set(), 500):
+        updates = reduce_batch(decode_change_events(filter_to_manifests(log_df, manifest)))
+        assert ts.merge_all({"source_code": updates}, manifest)["status"] == "committed"
+
+    assert _state_hash(ts.read("source_code")) == _state_hash(tab.read()) == oracle_hash
+    assert ts.files_per_bucket("source_code") == tab.files_per_bucket()
+    assert ts.committed_ranges() == tab.committed_ranges()
+
+    def bucket(df):
+        return df.withColumn("_b", F.pmod(F.xxhash64("repo", "path"), F.lit(8)).cast("string"))
+
+    state = ts.read("source_code")
+    keys = state.select("repo", "path").orderBy("repo", "path").limit(3)
+    key_buckets = {r["_b"] for r in bucket(keys).select("_b").distinct().collect()}
+    assert 0 < len(key_buckets) < 8
+    got = ts.read_for_keys("source_code", keys)
+    semi = ["repo", "path"]
+    assert _state_hash(got.join(keys, semi, "left_semi")) == _state_hash(
+        state.join(keys, semi, "left_semi")
+    )
+    in_buckets = bucket(state).where(F.col("_b").isin(*key_buckets)).drop("_b")
+    assert _state_hash(got) == _state_hash(in_buckets)
+    files = got.inputFiles()
+    assert files and {f.split("_pb=")[1].split("/")[0] for f in files} <= key_buckets

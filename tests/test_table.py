@@ -17,8 +17,6 @@ FIELDS = [
     ("last_offset", "bigint"),
     ("last_partition_id", "int"),
 ]
-KEYS = ["repo", "path"]
-ORDER = ["last_offset", "last_partition_id", "commit"]
 SCHEMA = (
     "repo string, path string, commit string, content string, op string,"
     " last_offset bigint, last_partition_id int"
@@ -42,18 +40,18 @@ def test_merge_lww_and_idempotency(spark, tmp_path):
 
     u1 = _df(spark, [("r", "a", "c1" * 20, "v1", "upsert", 1, 0),
                      ("r", "b", "c2" * 20, "w1", "upsert", 2, 0)])
-    assert tab.merge(u1, [(0, 0, 9)], KEYS, ORDER)["status"] == "committed"
+    assert tab.merge(u1, [(0, 0, 9)])["status"] == "committed"
     assert _state(tab)[("r", "a")][1] == "v1"
 
     # newer offset wins; older offset loses even if applied later
     u2 = _df(spark, [("r", "a", "c3" * 20, "v2", "upsert", 5, 0)])
-    tab.merge(u2, [(0, 10, 19)], KEYS, ORDER)
+    tab.merge(u2, [(0, 10, 19)])
     u3 = _df(spark, [("r", "a", "c4" * 20, "v0-late", "upsert", 3, 0)])
-    tab.merge(u3, [(0, 20, 29)], KEYS, ORDER)
+    tab.merge(u3, [(0, 20, 29)])
     assert _state(tab)[("r", "a")] == ("c3" * 20, "v2", 5)
 
     # idempotent: re-applying a committed range is a no-op
-    res = tab.merge(u1, [(0, 0, 9)], KEYS, ORDER)
+    res = tab.merge(u1, [(0, 0, 9)])
     assert res["status"] == "skipped"
     assert _state(tab)[("r", "a")] == ("c3" * 20, "v2", 5)
 
@@ -61,12 +59,12 @@ def test_merge_lww_and_idempotency(spark, tmp_path):
 def test_tombstone_delete(spark, tmp_path):
     tab = TransactionalParquetTable(spark, str(tmp_path / "t"), n_buckets=4)
     tab.create(FIELDS)
-    tab.merge(_df(spark, [("r", "a", "c1" * 20, "v1", "upsert", 1, 0)]), [(0, 0, 0)], KEYS, ORDER)
-    tab.merge(_df(spark, [("r", "a", "c2" * 20, None, "delete", 2, 0)]), [(0, 1, 1)], KEYS, ORDER)
+    tab.merge(_df(spark, [("r", "a", "c1" * 20, "v1", "upsert", 1, 0)]), [(0, 0, 0)])
+    tab.merge(_df(spark, [("r", "a", "c2" * 20, None, "delete", 2, 0)]), [(0, 1, 1)])
     assert ("r", "a") not in _state(tab)
     # tombstone retained so an older replayed upsert cannot resurrect the key
     assert tab.read(include_tombstones=True).filter("op = 'delete'").count() == 1
-    tab.merge(_df(spark, [("r", "a", "c1" * 20, "v1", "upsert", 1, 0)]), [(0, 2, 2)], KEYS, ORDER)
+    tab.merge(_df(spark, [("r", "a", "c1" * 20, "v1", "upsert", 1, 0)]), [(0, 2, 2)])
     assert ("r", "a") not in _state(tab)
 
 
@@ -79,10 +77,10 @@ def test_merge_on_read_delta_granularity(spark, tmp_path):
         spark,
         [("r%d" % i, "p%d" % i, ("c%038d" % i)[:40], "v", "upsert", i, 0) for i in range(200)],
     )
-    tab.merge(many, [(0, 0, 199)], KEYS, ORDER)
-    assert len(tab.latest()["buckets"]) == 8
+    tab.merge(many, [(0, 0, 199)])
+    assert len(tab.latest()["tables"]["t"]["buckets"]) == 8
     one = _df(spark, [("r7", "p7", "d" * 40, "v2", "upsert", 1000, 0)])
-    res = tab.merge(one, [(0, 200, 200)], KEYS, ORDER)
+    res = tab.merge(one, [(0, 200, 200)])
     assert res["buckets_written"] == 1
     assert tab.read().count() == 200
     assert _state(tab)[("r7", "p7")][1] == "v2"
@@ -98,8 +96,6 @@ def test_compaction_folds_deltas_and_preserves_state(spark, tmp_path):
         tab.merge(
             _df(spark, [("r", "a", ("c%038d" % i)[:40], f"v{i}", "upsert", i, 0)]),
             [(0, i, i)],
-            KEYS,
-            ORDER,
         )
     assert max(tab.files_per_bucket().values()) == 5
     before = _state(tab)
@@ -110,12 +106,12 @@ def test_compaction_folds_deltas_and_preserves_state(spark, tmp_path):
     assert _state(tab)[("r", "a")][1] == "v4"
     # tombstones survive compaction so late lower-order upserts stay dead
     tab.merge(
-        _df(spark, [("r", "a", "e" * 40, None, "delete", 99, 0)]), [(0, 99, 99)], KEYS, ORDER
+        _df(spark, [("r", "a", "e" * 40, None, "delete", 99, 0)]), [(0, 99, 99)]
     )
     tab.compact(force=True)
     assert ("r", "a") not in _state(tab)
     tab.merge(
-        _df(spark, [("r", "a", "f" * 40, "old", "upsert", 50, 0)]), [(0, 100, 100)], KEYS, ORDER
+        _df(spark, [("r", "a", "f" * 40, "old", "upsert", 50, 0)]), [(0, 100, 100)]
     )
     assert ("r", "a") not in _state(tab)
 
@@ -123,7 +119,7 @@ def test_compaction_folds_deltas_and_preserves_state(spark, tmp_path):
 def test_schema_evolution_add_and_rename(spark, tmp_path):
     tab = TransactionalParquetTable(spark, str(tmp_path / "t"), n_buckets=4)
     tab.create(FIELDS)
-    tab.merge(_df(spark, [("r", "a", "c1" * 20, "v1", "upsert", 1, 0)]), [(0, 0, 0)], KEYS, ORDER)
+    tab.merge(_df(spark, [("r", "a", "c1" * 20, "v1", "upsert", 1, 0)]), [(0, 0, 0)])
 
     tab.evolve(add=[("branch", "string")], rename={"content": "body"})
     # old files (written pre-evolution) read under the new schema by field id
@@ -132,7 +128,7 @@ def test_schema_evolution_add_and_rename(spark, tmp_path):
 
     # writer still emitting the pre-rename name routes by field id
     newer = _df(spark, [("r", "a", "c2" * 20, "v2", "upsert", 9, 0)])
-    tab.merge(newer, [(0, 1, 1)], KEYS, ORDER)
+    tab.merge(newer, [(0, 1, 1)])
     row = tab.read().first()
     assert row["body"] == "v2" and row["branch"] is None
 
@@ -142,7 +138,7 @@ def test_schema_evolution_add_and_rename(spark, tmp_path):
         "repo string, path string, commit string, body string, op string,"
         " last_offset bigint, last_partition_id int, branch string",
     )
-    tab.merge(evolved, [(0, 2, 2)], KEYS, ORDER)
+    tab.merge(evolved, [(0, 2, 2)])
     row = tab.read().first()
     assert row["body"] == "v3" and row["branch"] == "main"
     # lineage: 5 snapshots (create, 2 merges, evolve, merge)
@@ -162,7 +158,7 @@ def test_crash_before_pointer_flip_is_invisible(spark, tmp_path):
     """Orphan snapshot json without the pointer flip must not change reads."""
     tab = TransactionalParquetTable(spark, str(tmp_path / "t"), n_buckets=2)
     tab.create(FIELDS)
-    tab.merge(_df(spark, [("r", "a", "c1" * 20, "v1", "upsert", 1, 0)]), [(0, 0, 0)], KEYS, ORDER)
+    tab.merge(_df(spark, [("r", "a", "c1" * 20, "v1", "upsert", 1, 0)]), [(0, 0, 0)])
     latest_before = tab.latest()["snapshot_id"]
     # simulate: crash wrote snap json but never flipped _latest.json
     orphan = dict(tab.latest(), snapshot_id=latest_before + 1, parent_id=latest_before)
@@ -181,14 +177,14 @@ def test_reopen_with_different_n_buckets_is_safe(spark, tmp_path):
     tab.create(FIELDS)
     rows = [(f"r{i}", f"p{i}", f"c{i:02d}" * 10, f"v{i}", "upsert", i, 0) for i in range(40)]
     for i in range(0, 40, 10):
-        tab.merge(_df(spark, rows[i : i + 10]), [(0, i, i + 9)], KEYS, ORDER)
+        tab.merge(_df(spark, rows[i : i + 10]), [(0, i, i + 9)])
     before = _state(tab)
     assert len(before) == 40
 
     # reopen with a MISMATCHED constructor value; merge + forced compaction
     reopened = TransactionalParquetTable(spark, path, n_buckets=3)
     extra = [("rX", "pX", "cX" * 10, "vX", "upsert", 99, 0)]
-    reopened.merge(_df(spark, extra), [(0, 99, 99)], KEYS, ORDER)
+    reopened.merge(_df(spark, extra), [(0, 99, 99)])
     reopened.compact(force=True)
     assert reopened.latest()["n_buckets"] == 8  # snapshot layout preserved
     after = _state(reopened)
@@ -206,7 +202,7 @@ def test_null_op_rows_survive_read(spark, tmp_path):
         "repo string, path string, commit string, content string,"
         " last_offset bigint, last_partition_id int",
     )  # no op column at all -> projected to NULL
-    tab.merge(df, [(0, 0, 0)], KEYS, ORDER)
+    tab.merge(df, [(0, 0, 0)])
     assert tab.read().count() == 1
 
 
@@ -219,7 +215,7 @@ def test_expire_snapshots_reclaims_and_preserves_state(spark, tmp_path):
     tab.create(FIELDS)
     for i in range(4):
         u = _df(spark, [("r", f"p{i}", f"c{i}" * 20, f"v{i}", "upsert", i, 0)])
-        tab.merge(u, [(0, i * 10, i * 10 + 9)], KEYS, ORDER)
+        tab.merge(u, [(0, i * 10, i * 10 + 9)])
     tab.compact(force=True)  # supersedes every delta root
     before = _state(tab)
     n_roots_before = len(os.listdir(str(tmp_path / "t" / "data")))
@@ -250,7 +246,7 @@ def test_expire_snapshots_reclaims_and_preserves_state(spark, tmp_path):
     assert tab.is_committed(0, 0, 9)  # manifest set preserved in retained snap
     re = tab.merge(
         _df(spark, [("r", "p0", "cX" * 20, "dup", "upsert", 0, 0)]),
-        [(0, 0, 9)], KEYS, ORDER,
+        [(0, 0, 9)],
     )
     assert re["status"] == "skipped"  # exactly-once guard intact
 
@@ -273,13 +269,13 @@ def test_read_changes_incremental_scan(spark, tmp_path):
     tab = TransactionalParquetTable(spark, str(tmp_path / "t"), n_buckets=4)
     tab.create(FIELDS)
     tab.merge(_df(spark, [("r", "a", "c1" * 20, "v1", "upsert", 1, 0)]),
-              [(0, 0, 9)], KEYS, ORDER)
+              [(0, 0, 9)])
     anchor = tab.latest()["snapshot_id"]
     tab.merge(_df(spark, [("r", "a", "c2" * 20, "v2", "upsert", 2, 0),
                           ("r", "b", "c3" * 20, "w1", "upsert", 3, 0)]),
-              [(0, 10, 19)], KEYS, ORDER)
+              [(0, 10, 19)])
     tab.merge(_df(spark, [("r", "a", "c4" * 20, "v3", "upsert", 4, 0)]),
-              [(0, 20, 29)], KEYS, ORDER)
+              [(0, 20, 29)])
 
     # raw changes since anchor: the 3 appended rows, not the base row
     raw = tab.read_changes(from_snapshot_id=anchor)
@@ -305,7 +301,7 @@ def test_read_changes_incremental_scan(spark, tmp_path):
     # re-anchored consumer works again
     new_anchor = tab.latest()["snapshot_id"]
     tab.merge(_df(spark, [("r", "c", "c5" * 20, "x1", "upsert", 5, 0)]),
-              [(0, 30, 39)], KEYS, ORDER)
+              [(0, 30, 39)])
     assert tab.read_changes(from_snapshot_id=new_anchor).count() == 1
 
 
@@ -320,7 +316,7 @@ def test_lookup_reads_single_bucket(spark, tmp_path):
         [(f"r{i}", f"p{i}", (f"c{i:038d}")[:40], f"v{i}", "upsert", i, 0)
          for i in range(200)],
     )
-    tab.merge(many, [(0, 0, 199)], KEYS, ORDER)
+    tab.merge(many, [(0, 0, 199)])
 
     hit = tab.lookup(repo="r7", path="p7")
     rows = hit.collect()
@@ -332,12 +328,12 @@ def test_lookup_reads_single_bucket(spark, tmp_path):
 
     # LWW: newer offset wins in the same bucket
     tab.merge(_df(spark, [("r7", "p7", "d" * 40, "v7b", "upsert", 999, 0)]),
-              [(0, 200, 200)], KEYS, ORDER)
+              [(0, 200, 200)])
     assert tab.lookup(repo="r7", path="p7").first()["content"] == "v7b"
 
     # tombstone: lookup of a deleted key is empty
     tab.merge(_df(spark, [("r8", "p8", "e" * 40, None, "delete", 1000, 0)]),
-              [(0, 201, 201)], KEYS, ORDER)
+              [(0, 201, 201)])
     assert tab.lookup(repo="r8", path="p8").count() == 0
 
     # wrong key set is an explicit error
@@ -358,7 +354,7 @@ def test_metrics_history_surfaces_lineage(spark, tmp_path):
     for i in range(3):
         tab.merge(
             _df(spark, [("r", f"p{i}", f"c{i}" * 20, "v", "upsert", i, 0)]),
-            [(0, i * 10, i * 10 + 9)], KEYS, ORDER,
+            [(0, i * 10, i * 10 + 9)],
             metrics={"rows": 10},
         )
     mh = tab.metrics_history()
@@ -428,7 +424,7 @@ def test_schema_evolution_widen_and_drop(spark, tmp_path):
     tab = TransactionalParquetTable(spark, str(tmp_path / "t"), n_buckets=4)
     tab.create(FIELDS)
     tab.merge(_df(spark, [("r", "a", "c1" * 20, "v1", "upsert", 1, 0)]),
-              [(0, 0, 0)], KEYS, ORDER)
+              [(0, 0, 0)])
 
     # widen int -> bigint: old files cast up on read, new writer goes wide
     tab.evolve(widen={"last_partition_id": "bigint"})
@@ -438,7 +434,7 @@ def test_schema_evolution_widen_and_drop(spark, tmp_path):
         "repo string, path string, commit string, content string, op string,"
         " last_offset bigint, last_partition_id bigint",
     )
-    tab.merge(wide, [(0, 1, 1)], KEYS, ORDER)
+    tab.merge(wide, [(0, 1, 1)])
     row = tab.read().first()
     assert row["last_partition_id"] == 1 << 40 and row["content"] == "v2"
 
@@ -452,14 +448,14 @@ def test_schema_evolution_widen_and_drop(spark, tmp_path):
 
     # drop then re-add the same NAME: fresh field id, old data stays dead
     old_id = next(
-        f["id"] for f in tab.latest()["schemas"][-1]["fields"]
+        f["id"] for f in tab.latest()["tables"]["t"]["schemas"][-1]["fields"]
         if f["name"] == "content"
     )
     tab.evolve(drop=["content"])
     assert "content" not in tab.read().columns
     tab.evolve(add=[("content", "string")])
     new_id = next(
-        f["id"] for f in tab.latest()["schemas"][-1]["fields"]
+        f["id"] for f in tab.latest()["tables"]["t"]["schemas"][-1]["fields"]
         if f["name"] == "content"
     )
     assert new_id != old_id  # retired id never reused
@@ -469,7 +465,7 @@ def test_schema_evolution_widen_and_drop(spark, tmp_path):
 
     # a post-re-add writer fills the new column for new winners only
     tab.merge(_df(spark, [("r", "a", "c3" * 20, "v3", "upsert", 9, 0)]),
-              [(0, 2, 2)], KEYS, ORDER)
+              [(0, 2, 2)])
     assert tab.read().first()["content"] == "v3"
 
 
@@ -483,12 +479,12 @@ def test_rollback_and_read_asof(spark, tmp_path):
     tab.create(FIELDS)
     u1 = _df(spark, [("r", "a", "c1" * 20, "v1", "upsert", 1, 0)])
     u2 = _df(spark, [("r", "a", "c2" * 20, "v2", "upsert", 5, 0)])
-    tab.merge(u1, [(0, 0, 9)], KEYS, ORDER)
+    tab.merge(u1, [(0, 0, 9)])
     sid1 = tab.latest()["snapshot_id"]
     s1 = _state(tab)
     t1 = _time.time()
     _time.sleep(0.05)
-    tab.merge(u2, [(0, 10, 19)], KEYS, ORDER)
+    tab.merge(u2, [(0, 10, 19)])
     s2 = _state(tab)
     assert s1 != s2
 
@@ -508,7 +504,7 @@ def test_rollback_and_read_asof(spark, tmp_path):
     assert tab.rollback(tab.latest()["snapshot_id"])["status"] == "noop"
 
     # replaying the undone batch reconverges to the original final state
-    tab.merge(u2, [(0, 10, 19)], KEYS, ORDER)
+    tab.merge(u2, [(0, 10, 19)])
     assert _state(tab) == s2
 
     # beyond the retention horizon both spellings refuse
@@ -534,10 +530,10 @@ def test_zone_map_stats_prune_incremental_reads(spark, tmp_path):
         return _df(spark, rows)
 
     for lo in (0, 100, 200):
-        tab.merge(batch(lo), [(0, lo, lo + 9)], KEYS, ORDER)
+        tab.merge(batch(lo), [(0, lo, lo + 9)])
 
     # every new file entry carries [min, max] for the stats column
-    snap = tab.latest()
+    snap = tab.latest()["tables"]["t"]
     fid = str(next(f["id"] for f in snap["schemas"][-1]["fields"]
                    if f["name"] == "last_offset"))
     ents = [f for ent in snap["buckets"].values() for f in ent["files"]]
@@ -556,14 +552,7 @@ def test_zone_map_stats_prune_incremental_reads(spark, tmp_path):
     # rename keeps stats working: they are keyed by field id, and
     # stats_cols follows the rename
     tab.evolve(rename={"last_offset": "off"})
-    assert tab.latest()["stats_cols"] == ["off"]
-    # stale (pre-rename) order names are refused at the write, not
-    # discovered as an unresolvable column at read time
-    with pytest.raises(KeyError, match="current schema"):
-        tab.merge(
-            _df(spark, [("rX", "pX", "cX" * 10, "vX", "upsert", 300, 0)]),
-            [(0, 300, 300)], KEYS, ORDER,
-        )
+    assert tab.latest()["tables"]["t"]["stats_cols"] == ["off"]
     tab.merge(
         _df(spark, [("rX", "pX", "cX" * 10, "vX", "upsert", 300, 0)]),
         [(0, 300, 300)],  # snapshot's remapped key/order cols apply
@@ -587,7 +576,7 @@ def test_rebucket_partition_evolution(spark, tmp_path):
     rows = [(f"r{i}", f"p{i}", f"c{i:02d}" * 10, f"v{i}", "upsert", i, 0)
             for i in range(40)]
     for i in range(0, 40, 10):
-        tab.merge(_df(spark, rows[i:i + 10]), [(0, i, i + 9)], KEYS, ORDER)
+        tab.merge(_df(spark, rows[i:i + 10]), [(0, i, i + 9)])
     pre_id = tab.latest()["snapshot_id"]
     before = _state(tab)
 
@@ -595,14 +584,14 @@ def test_rebucket_partition_evolution(spark, tmp_path):
     assert res["status"] == "rebucketed"
     assert tab.latest()["n_buckets"] == 16
     assert _state(tab) == before
-    assert max(int(b) for b in tab.latest()["buckets"]) < 16
+    assert max(int(b) for b in tab.latest()["tables"]["t"]["buckets"]) < 16
     # manifests preserved: re-applying an old range is still a no-op
-    assert tab.merge(_df(spark, rows[:10]), [(0, 0, 9)], KEYS, ORDER)["status"] == "skipped"
+    assert tab.merge(_df(spark, rows[:10]), [(0, 0, 9)])["status"] == "skipped"
     # point lookup routes through the NEW layout (single bucket read)
     hit = tab.lookup(repo="r7", path="p7")
     assert hit.count() == 1 and hit.first()["content"] == "v7"
     # rewritten files keep zone-map stats
-    ents = [f for e in tab.latest()["buckets"].values() for f in e["files"]]
+    ents = [f for e in tab.latest()["tables"]["t"]["buckets"].values() for f in e["files"]]
     assert all("stats" in f for f in ents)
     # incremental read across the rewrite refuses (file-identity boundary)
     with pytest.raises(ValueError, match="boundary"):
@@ -612,7 +601,7 @@ def test_rebucket_partition_evolution(spark, tmp_path):
         tab.rebucket(0)
     # a post-rebucket merge keeps converging under the new layout
     tab.merge(_df(spark, [("r7", "p7", "cZ" * 10, "v7b", "upsert", 99, 0)]),
-              [(0, 99, 99)], KEYS, ORDER)
+              [(0, 99, 99)])
     assert tab.lookup(repo="r7", path="p7").first()["content"] == "v7b"
 
 
@@ -683,7 +672,7 @@ def test_random_lifecycle_with_rollback_rebucket_matches_model(spark, tmp_path):
                 model = dict(saved_model)
                 content_col = saved_col
                 # schema epoch may have reverted past the widen
-                latest_snap = tab.latest()
+                latest_snap = tab.latest()["tables"]["t"]
                 cur = next(
                     s for s in latest_snap["schemas"]
                     if s["schema_id"] == latest_snap["current_schema_id"]
@@ -716,7 +705,7 @@ def test_evolve_drop_stats_col_keeps_merges_working(spark, tmp_path):
 
     tab.merge(b(0), [(0, 0, 9)])
     tab.evolve(drop=["score"])
-    assert tab.latest()["stats_cols"] == ["off"]  # retired name left the list
+    assert tab.latest()["tables"]["t"]["stats_cols"] == ["off"]  # retired name left the list
     upd = spark.createDataFrame(
         [(f"k{10 + i}", 10 + i) for i in range(3)], "k string, off bigint"
     )
@@ -737,9 +726,9 @@ def test_read_changes_reduced_with_range_is_lww_among_in_range(spark, tmp_path):
     tab.create(FIELDS)
     base = tab.latest()["snapshot_id"]
     tab.merge(_df(spark, [("r", "a", "c1" * 20, "v1", "upsert", 1, 0)]),
-              [(0, 0, 9)], KEYS, ORDER)
+              [(0, 0, 9)])
     tab.merge(_df(spark, [("r", "a", "c2" * 20, "v2", "upsert", 100, 0)]),
-              [(0, 10, 19)], KEYS, ORDER)
+              [(0, 10, 19)])
     got = tab.read_changes(
         base, reduced=True, where_between=("last_offset", 0, 50)
     ).collect()
@@ -756,7 +745,7 @@ def test_read_for_keys_prunes_to_touched_buckets(spark, tmp_path):
     tab.create(FIELDS)
     rows = [(f"r{i}", f"p{i}", f"c{i:02d}" * 10, f"v{i}", "upsert", i, 0)
             for i in range(64)]
-    tab.merge(_df(spark, rows), [(0, 0, 63)], KEYS, ORDER)
+    tab.merge(_df(spark, rows), [(0, 0, 63)])
 
     keys = spark.createDataFrame([("r7", "p7"), ("r9", "p9")],
                                  "repo string, path string")
@@ -768,7 +757,7 @@ def test_read_for_keys_prunes_to_touched_buckets(spark, tmp_path):
     assert 0 < len(hit.inputFiles()) < len(tab.read().inputFiles())
     # LWW semantics preserved inside the touched bucket
     tab.merge(_df(spark, [("r7", "p7", "cZ" * 10, "v7b", "upsert", 99, 0)]),
-              [(0, 99, 99)], KEYS, ORDER)
+              [(0, 99, 99)])
     again = tab.read_for_keys(keys)
     assert {r["content"] for r in again.where("repo = 'r7'").collect()} == {"v7b"}
     # missing key columns refused

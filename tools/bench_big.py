@@ -57,6 +57,7 @@ def main() -> None:
         SOURCE_CODE_FIELDS,
     )
     from sonic_etl_spark.sources import TransactionalParquetTable
+    from sonic_etl_spark.sources.table import MEMBER
     from sonic_etl_spark.streaming import replay
     from sonic_etl_spark.streaming.monitor import ReplayMonitor
 
@@ -129,7 +130,7 @@ def main() -> None:
     mon.stop()
 
     snap = tab.latest()
-    files_per_bucket = [len(e["files"]) for e in snap["buckets"].values()]
+    files_per_bucket = list(tab.files_per_bucket(snap).values())
     # compaction count from the retained metrics history (bounded by
     # expire_keep, so this undercounts total compactions — the files/bucket
     # numbers are the real evidence the maintenance kept up)
@@ -138,7 +139,7 @@ def main() -> None:
     converged = tab.read().count()
     stats_files = sum(
         1
-        for e in snap["buckets"].values()
+        for e in snap["tables"][MEMBER]["buckets"].values()
         for f in e["files"]
         if f.get("stats")
     )
