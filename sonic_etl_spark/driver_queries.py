@@ -2131,9 +2131,12 @@ QUERIES: dict[str, tuple[QueryFn, str | None]] = {
     "group_percentiles": (q_group_percentiles, SQL_GROUP_PERCENTILES),
     "redact_pii": (q_redact_pii, SQL_REDACT_PII),
     "ngram_containment": (q_ngram_containment, SQL_NGRAM_CONTAINMENT),
-    # ---- position 51+ (outside the driver's 50-query window): every entry
-    # below has an in-window sibling verifying the same operator and was
-    # triple-green in CORRECTNESS_r04; crosscheck.py keeps them honest
+    # ---- position 51+ (outside the driver's 50-query window); crosscheck.py
+    # keeps every entry below honest. All but asof_enrich_fwd have an
+    # in-window sibling verifying the same operator and were triple-green in
+    # CORRECTNESS_r04. asof_enrich_fwd (forward as-of; in-window asof_enrich
+    # covers the backward direction) has its own oracle, SQL_ASOF_ENRICH_FWD,
+    # and appears in neither CORRECTNESS_r04 nor CORRECTNESS_r05
     "dup_clusters_star": (q_dup_clusters_star, _dup_clusters_sql()),
     "asof_enrich_bucketed": (q_asof_enrich_bucketed, SQL_ASOF_ENRICH),
     "asof_enrich_fwd": (q_asof_enrich_fwd, SQL_ASOF_ENRICH_FWD),

@@ -88,13 +88,7 @@ def salted_lww(
     return _lww(phase1, key_cols, order_cols)
 
 
-def reduce_batch(
-    typed: DataFrame,
-    *,
-    salt_buckets: int = 16,
-    key_cols: list[str] = KEY_COLS,
-    order_cols: list[str] = ORDER_COLS,
-) -> DataFrame:
+def reduce_batch(typed: DataFrame, *, salt_buckets: int = 16) -> DataFrame:
     """Typed decoded events → one winning row per (repo, path).
 
     Phase 0: project to the table schema (offset → last_offset etc.).
@@ -121,11 +115,7 @@ def reduce_batch(
         F.col("partition_id").alias("last_partition_id"),
     )
     return salted_lww(
-        projected,
-        key_cols,
-        order_cols,
-        salt_col="commit",
-        salt_buckets=salt_buckets,
+        projected, KEY_COLS, ORDER_COLS, salt_col="commit", salt_buckets=salt_buckets
     )
 
 

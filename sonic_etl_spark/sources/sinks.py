@@ -86,26 +86,13 @@ def write_json_record_files(
 # Abstract batch-sink interface (S11-S14): the reference selects one of six
 # publisher implementations behind a single trait (src/output/publish.rs:
 # 14-26 — Pub/Sub, GCS, JSONL, JSON, Kafka, RabbitMQ×2). The engine's analog
-# is one ``publish_batch(updates, manifest_entries, metrics)`` contract with
-# concrete sinks below; the streaming driver (streaming/stream.py) takes any
-# of them. Exactly-once is the SINK's duty in both designs: the table sink
-# uses the snapshot manifest guard, the file sink uses deterministic
-# manifest-named directories (gcs.rs's file-per-offset-range naming).
-
-
-class TableSink:
-    """Warehouse sink: transactional MERGE with the idempotent manifest
-    guard (the Dataflow→BQ loader upgrade, S16)."""
-
-    def __init__(self, table, compact_threshold: int | None = 16):
-        self.table = table
-        self.compact_threshold = compact_threshold
-
-    def publish_batch(self, updates: DataFrame, manifest_entries, metrics=None) -> dict:
-        status = self.table.merge(updates, manifest_entries, metrics=metrics)
-        if status["status"] == "committed" and self.compact_threshold is not None:
-            self.table.compact(max_files_per_bucket=self.compact_threshold)
-        return status
+# is one ``publish_batch(updates, manifest_entries, metrics) -> status dict``
+# contract for the transport sinks below; ``streaming.stream.stream_replay``
+# takes any of them or a TransactionalParquetTable, which it merges through
+# the same batch function and loop as ``replay()`` (no adapter class).
+# Exactly-once is the target's duty in both designs: the table uses the
+# snapshot manifest guard, the transport sinks a span ledger with
+# deterministic manifest-named output (gcs.rs's file-per-offset-range naming).
 
 
 class SpanLedger:

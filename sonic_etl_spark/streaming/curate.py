@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 from sonic_etl_spark.operators.incremental import IncrementalCurator
+from sonic_etl_spark.streaming.stream import log_stream, start_query
 
 DOC_ARRIVAL_DDL = "doc_id bigint, text string, off bigint"
 
@@ -39,18 +40,10 @@ def stream_curate(
     directory and stops — the scheduled-job spelling; ``False`` tails
     forever."""
     curator.create()
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .parquet(docs_dir)
-    )
+    stream = log_stream(spark, docs_dir, max_files_per_trigger, schema)
 
     def apply_batch(batch: DataFrame, batch_id: int) -> None:
         curator.apply(batch.select("doc_id", "text", "off"))
 
-    writer = stream.writeStream.foreachBatch(apply_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        return writer.trigger(availableNow=True).start()
-    return writer.start()
+    return start_query(stream.writeStream.foreachBatch(apply_batch),
+                       checkpoint_dir, available_now)

@@ -31,11 +31,16 @@ Scale shape per batch: one parquet scan with pushed-down range predicates,
 one Arrow decode stage, then three INDEPENDENT narrow projections + salted
 LWW shuffles (each shuffles only its own key set; the quarantine projection
 carries no content payload). Writes stay O(batch) via merge-on-read deltas.
+
+One batch function, :func:`merge_fanout_batch`, applies a decoded batch to
+the set; :func:`replay_fanout` runs it in the shared batch loop of
+streaming/replay.py and :func:`stream_fanout` from foreachBatch
+(streaming/stream.py). The three-table updates dict is built in one place,
+:func:`_fanout_updates`, which :func:`retry_quarantine` uses too.
 """
 
 from __future__ import annotations
 
-import time
 from collections.abc import Callable
 
 import pyspark.sql.functions as F
@@ -52,7 +57,8 @@ from sonic_etl_spark.operators.merge import (
 )
 from sonic_etl_spark.plans.planner import filter_to_manifests, log_heads, plan_batches
 from sonic_etl_spark.sources.multitable import TableSpec, TransactionalTableSet
-from sonic_etl_spark.streaming.replay import ReplayResult
+from sonic_etl_spark.streaming.replay import Manifest, ReplayResult, _run_batches
+from sonic_etl_spark.streaming.stream import stream_batches
 
 FILE_VERSION_FIELDS: list[tuple[str, str]] = [
     ("repo", "string"),
@@ -144,6 +150,51 @@ def project_quarantine(typed: DataFrame) -> DataFrame:
     )
 
 
+def _fanout_updates(clean: DataFrame, quarantine: DataFrame, salt_buckets: int) -> dict:
+    """The three-table updates dict: converged state and version history
+    from the decodable rows, plus the given quarantine rows."""
+    return {
+        "source_code": reduce_batch(clean, salt_buckets=salt_buckets),
+        "file_versions": project_file_versions(clean, salt_buckets),
+        "quarantine": quarantine,
+    }
+
+
+def merge_fanout_batch(
+    tables: TransactionalTableSet,
+    raw: DataFrame,
+    manifest: Manifest,
+    metrics: dict,
+    *,
+    on_error: str,
+    salt_buckets: int = 16,
+) -> dict:
+    """One fan-out batch: decode → on_error split → three projections →
+    one atomic ``merge_all`` under ``manifest``."""
+    typed = decode_change_events(raw)
+    check = None
+    if on_error == "fail":
+        # fail-the-batch without an extra decode pass: the error counts
+        # ride the source_code write job and abort the multi-table
+        # commit before the pointer flip
+        typed, check = observe_decode_errors(typed)
+        clean = typed
+        # fresh empty frame, NOT typed.limit(0): an empty action over the
+        # observed lineage could satisfy the Observation with zero counts
+        quarantined = typed.sparkSession.createDataFrame(
+            [], ", ".join(f"{n} {t}" for n, t in QUARANTINE_FIELDS)
+        )
+    else:
+        clean = typed.filter(F.col("decode_error").isNull())
+        quarantined = project_quarantine(typed)
+    return tables.merge_all(
+        _fanout_updates(clean, quarantined, salt_buckets),
+        manifest,
+        metrics=metrics,
+        pre_commit_check=check,
+    )
+
+
 def retry_quarantine(
     change_log: DataFrame,
     tables: TransactionalTableSet,
@@ -188,11 +239,7 @@ def retry_quarantine(
         F.lit(tag).alias("attempt"),
     )
     return tables.merge_all(
-        {
-            "source_code": reduce_batch(clean, salt_buckets=salt_buckets),
-            "file_versions": project_file_versions(clean, salt_buckets),
-            "quarantine": tombstones,
-        },
+        _fanout_updates(clean, tombstones, salt_buckets),
         [("retry", tag)],
         metrics={"retry_tag": tag},
     )
@@ -211,56 +258,23 @@ def stream_fanout(
     available_now: bool = True,
 ):
     """Structured-Streaming variant of :func:`replay_fanout`: tail the log
-    directory, fan each micro-batch out to the three tables under one
-    atomic manifest commit (foreachBatch + merge_all). Manifests are the
+    directory and apply each micro-batch with :func:`merge_fanout_batch`
+    (three tables, one atomic manifest commit). Manifests are the
     per-partition observed spans (see streaming.stream.observed_manifests)
     — a restarted query that redelivers a processed batch no-ops."""
-    from sonic_etl_spark.streaming.stream import CHANGE_LOG_DDL, observed_manifests
-
     if on_error not in ("fail", "quarantine"):
         raise ValueError(f"on_error must be 'fail' or 'quarantine', got {on_error!r}")
     tables.create(FANOUT_SPECS)
-    stream = (
-        spark.readStream.schema(CHANGE_LOG_DDL)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .parquet(log_dir)
-    )
 
-    def apply_batch(batch: DataFrame, batch_id: int) -> None:
-        manifests = observed_manifests(batch)
-        if not manifests:
-            return
-        typed = decode_change_events(batch)
-        check = None
-        if on_error == "fail":
-            typed, check = observe_decode_errors(typed)
-            clean = typed
-            quarantined = typed.sparkSession.createDataFrame(
-                [], ", ".join(f"{n} {t}" for n, t in QUARANTINE_FIELDS)
-            )
-        else:
-            clean = typed.filter(F.col("decode_error").isNull())
-            quarantined = project_quarantine(typed)
-        status = tables.merge_all(
-            {
-                "source_code": reduce_batch(clean, salt_buckets=salt_buckets),
-                "file_versions": project_file_versions(clean, salt_buckets),
-                "quarantine": quarantined,
-            },
-            manifests,
-            metrics={"stream_batch_id": batch_id,
-                     "manifest": [list(m) for m in manifests]},
-            pre_commit_check=check,
-        )
-        if status["status"] == "committed" and compact_threshold is not None:
-            tables.compact(max_files_per_bucket=compact_threshold)
+    def commit(batch: DataFrame, manifest: Manifest, metrics: dict) -> dict:
+        return merge_fanout_batch(tables, batch, manifest, metrics,
+                                  on_error=on_error, salt_buckets=salt_buckets)
 
-    writer = stream.writeStream.foreachBatch(apply_batch).option(
-        "checkpointLocation", checkpoint_dir
+    return stream_batches(
+        spark, log_dir, commit, tables, checkpoint_dir=checkpoint_dir,
+        max_files_per_trigger=max_files_per_trigger,
+        compact_threshold=compact_threshold, available_now=available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def replay_fanout(
@@ -285,74 +299,24 @@ def replay_fanout(
     SAME atomic commit, so a poison row neither wedges its partition nor
     escapes the manifest's exactly-once accounting.
 
-    ``expire_keep``: inline retention, as in ``replay()`` — one call per
-    committed batch covers every table of the set (shared snapshot log).
-
-    ``monitor``: optional ReplayMonitor — per-batch metrics push + liveness
-    refresh, as in ``replay()``.
+    The batch loop, its hooks and maintenance are ``replay()``'s
+    (``stop_requested``, ``crash_after_batches``, ``compact_threshold``,
+    ``monitor``); ``expire_keep`` is one call per committed batch that
+    covers every table of the set (shared snapshot log).
     """
     if on_error not in ("fail", "quarantine"):
         raise ValueError(f"on_error must be 'fail' or 'quarantine', got {on_error!r}")
     tables.create(FANOUT_SPECS)
-    heads = log_heads(change_log)
-    batches = plan_batches(heads, tables.committed_ranges(), chunk_size)
-    if max_batches is not None:
-        batches = batches[:max_batches]
+    batches = plan_batches(log_heads(change_log), tables.committed_ranges(), chunk_size)
 
-    res = ReplayResult()
-    t0 = time.time()
-    for i, manifest in enumerate(batches):
-        if stop_requested is not None and stop_requested():
-            break
-        if crash_after_batches is not None and res.batches_applied >= crash_after_batches:
-            raise RuntimeError("injected crash (test hook)")
-        bt0 = time.time()
+    def commit(manifest: Manifest, bm: dict) -> dict:
         raw = filter_to_manifests(change_log, manifest)
-        typed = decode_change_events(raw)
-        check = None
-        n_rows = sum(e - s + 1 for (_p, s, e) in manifest)  # dense log
-        if on_error == "fail":
-            # fail-the-batch without an extra decode pass: the error counts
-            # ride the source_code write job and abort the multi-table
-            # commit before the pointer flip
-            typed, check = observe_decode_errors(typed)
-            clean = typed
-            # fresh empty frame, NOT typed.limit(0): an empty action over the
-            # observed lineage could satisfy the Observation with zero counts
-            quarantined = typed.sparkSession.createDataFrame(
-                [], ", ".join(f"{n} {t}" for n, t in QUARANTINE_FIELDS)
-            )
-        else:
-            clean = typed.filter(F.col("decode_error").isNull())
-            quarantined = project_quarantine(typed)
-        updates = {
-            "source_code": reduce_batch(clean, salt_buckets=salt_buckets),
-            "file_versions": project_file_versions(clean, salt_buckets),
-            "quarantine": quarantined,
-        }
-        bm = {
-            "batch_index": i,
-            "manifest": [list(m) for m in manifest],
-            "rows": n_rows,
-        }
-        status = tables.merge_all(
-            updates, manifest, metrics=bm, pre_commit_check=check
-        )
-        bm["elapsed_sec"] = round(time.time() - bt0, 3)
-        bm["events_per_sec"] = round(n_rows / max(bm["elapsed_sec"], 1e-9), 1)
-        bm["status"] = status["status"]
-        res.batch_metrics.append(bm)
-        if monitor is not None:
-            monitor.record_batch(bm)
-        if status["status"] == "committed":
-            res.batches_applied += 1
-            res.rows_seen += n_rows
-            if compact_threshold is not None:
-                tables.compact(max_files_per_bucket=compact_threshold)
-            if expire_keep is not None:
-                tables.expire_snapshots(keep_last=expire_keep)
-        else:
-            res.batches_skipped += 1
-    res.elapsed_sec = round(time.time() - t0, 3)
-    res.events_per_sec = round(res.rows_seen / max(res.elapsed_sec, 1e-9), 1)
-    return res
+        return merge_fanout_batch(tables, raw, manifest, bm,
+                                  on_error=on_error, salt_buckets=salt_buckets)
+
+    return _run_batches(
+        batches[:max_batches], commit, tables, stop_requested=stop_requested,
+        crash_after_batches=crash_after_batches,
+        compact_threshold=compact_threshold, expire_keep=expire_keep,
+        monitor=monitor,
+    )

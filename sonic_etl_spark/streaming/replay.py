@@ -1,4 +1,4 @@
-"""Resumable micro-batch replay driver.
+"""Resumable micro-batch replay driver: one batch loop for every target.
 
 The analog of the reference's worker loop (src/sonic_config/mod.rs:54-170):
 pull a range, extract+transform every offset, publish, ack — except that here
@@ -7,6 +7,16 @@ table state and the (partition, offset-range) manifest, so a crash anywhere
 leaves either a fully-applied batch or an untouched table. Resumption
 (pick_up_from_previous_run, publish_ranges.py:148-203; ./indexed_blocks/
 scan, src/main.rs:187-241) is just: plan ranges not in the committed set.
+
+Like the reference, which drives every output table from that one loop, the
+per-batch lifecycle lives once, in :func:`_run_batches`: stop check, crash
+hook, commit, batch metrics, monitor push, compaction/expiry on commit and
+``ReplayResult`` accounting. :func:`replay` and :func:`repair_gaps` (this
+module) and ``streaming.fanout.replay_fanout`` only plan their manifests and
+hand the loop a per-target commit: :func:`merge_batch` here for the single
+table, ``streaming.fanout.merge_fanout_batch`` for the table set. The
+Structured-Streaming twins (streaming/stream.py) call the same two batch
+functions from foreachBatch.
 
 Graceful shutdown (mod.rs:70-98 SIGTERM flag checked between messages) maps to
 ``stop_requested()`` checked between micro-batches; state is always resumable
@@ -28,6 +38,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 
 from sonic_etl_spark.functions.codec import decode_change_events
+from sonic_etl_spark.operators.audit import manifest_gap_audit
 from sonic_etl_spark.operators.merge import (
     KEY_COLS,
     ORDER_COLS,
@@ -35,8 +46,10 @@ from sonic_etl_spark.operators.merge import (
     observe_decode_errors,
     reduce_batch,
 )
-from sonic_etl_spark.plans.planner import filter_to_manifests, log_heads, plan_batches
+from sonic_etl_spark.plans.planner import chunk_range, filter_to_manifests, log_heads, plan_batches
 from sonic_etl_spark.sources.table import TransactionalParquetTable
+
+Manifest = list[tuple[int, int, int]]
 
 
 @dataclass
@@ -47,6 +60,94 @@ class ReplayResult:
     elapsed_sec: float = 0.0
     events_per_sec: float = 0.0
     batch_metrics: list[dict] = field(default_factory=list)
+
+
+def merge_batch(
+    table: TransactionalParquetTable,
+    raw: DataFrame,
+    manifest: Manifest,
+    metrics: dict,
+    *,
+    validate: bool = True,
+    salt_buckets: int = 16,
+) -> dict:
+    """One single-table batch: decode → (validate) → reduce → merge.
+
+    ``validate`` fails the batch WITHOUT a second decode pass: the error
+    counts are observed during the merge's own write job, checked after the
+    files land but before the snapshot commit."""
+    typed = decode_change_events(raw)
+    check = None
+    if validate:
+        typed, check = observe_decode_errors(typed)
+    updates = reduce_batch(typed, salt_buckets=salt_buckets)
+    return table.merge(updates, manifest, metrics=metrics, pre_commit_check=check)
+
+
+def _table_commit(change_log: DataFrame, table: TransactionalParquetTable,
+                  validate: bool, salt_buckets: int) -> Callable[[Manifest, dict], dict]:
+    def commit(manifest: Manifest, bm: dict) -> dict:
+        raw = filter_to_manifests(change_log, manifest)
+        return merge_batch(table, raw, manifest, bm, validate=validate,
+                           salt_buckets=salt_buckets)
+
+    return commit
+
+
+def maintain_after_commit(target, status: dict, compact_threshold: int | None,
+                          expire_keep: int | None = None) -> bool:
+    """After a committed batch, fold long delta chains and expire old
+    snapshots (either step disabled by None). Returns whether it committed."""
+    if status["status"] != "committed":
+        return False
+    if compact_threshold is not None:
+        target.compact(max_files_per_bucket=compact_threshold)
+    if expire_keep is not None:
+        target.expire_snapshots(keep_last=expire_keep)
+    return True
+
+
+def _run_batches(
+    manifests: list[Manifest],
+    commit: Callable[[Manifest, dict], dict],
+    target,
+    *,
+    repair: bool = False,
+    stop_requested: Callable[[], bool] | None = None,
+    crash_after_batches: int | None = None,
+    compact_threshold: int | None = None,
+    expire_keep: int | None = None,
+    monitor=None,
+) -> ReplayResult:
+    """The batch loop shared by every replay driver. ``commit(manifest,
+    metrics)`` applies one batch to ``target`` and returns its merge status;
+    ``stop_requested`` runs exactly once before each batch."""
+    res = ReplayResult()
+    t0 = time.time()
+    for i, manifest in enumerate(manifests):
+        if stop_requested is not None and stop_requested():
+            break
+        if crash_after_batches is not None and res.batches_applied >= crash_after_batches:
+            raise RuntimeError("injected crash (test hook)")
+        bt0 = time.time()
+        n_rows = sum(e - s + 1 for (_p, s, e) in manifest)  # dense log
+        bm = {"repair": True} if repair else {"batch_index": i}
+        bm.update(manifest=[list(m) for m in manifest], rows=n_rows)
+        status = commit(manifest, bm)
+        bm["elapsed_sec"] = round(time.time() - bt0, 3)
+        bm["events_per_sec"] = round(n_rows / max(bm["elapsed_sec"], 1e-9), 1)
+        bm["status"] = status["status"]
+        res.batch_metrics.append(bm)
+        if monitor is not None:
+            monitor.record_batch(bm)
+        if maintain_after_commit(target, status, compact_threshold, expire_keep):
+            res.batches_applied += 1
+            res.rows_seen += n_rows
+        else:
+            res.batches_skipped += 1
+    res.elapsed_sec = round(time.time() - t0, 3)
+    res.events_per_sec = round(res.rows_seen / max(res.elapsed_sec, 1e-9), 1)
+    return res
 
 
 def replay(
@@ -86,53 +187,14 @@ def replay(
     anchored to old snapshots).
     """
     table.create(SOURCE_CODE_FIELDS, KEY_COLS, ORDER_COLS)
-    heads = log_heads(change_log)
-    batches = plan_batches(heads, table.committed_ranges(), chunk_size)
-    if max_batches is not None:
-        batches = batches[:max_batches]
-
-    res = ReplayResult()
-    t0 = time.time()
-    for i, manifest in enumerate(batches):
-        if stop_requested is not None and stop_requested():
-            break
-        if crash_after_batches is not None and res.batches_applied >= crash_after_batches:
-            raise RuntimeError("injected crash (test hook)")
-        bt0 = time.time()
-        raw = filter_to_manifests(change_log, manifest)
-        typed = decode_change_events(raw)
-        check = None
-        if validate:
-            # fail-the-batch WITHOUT a second decode pass: the error counts
-            # are observed during the merge's own write job, checked after
-            # the files land but before the snapshot commit
-            typed, check = observe_decode_errors(typed)
-        n_rows = sum(e - s + 1 for (_p, s, e) in manifest)  # dense log
-        updates = reduce_batch(typed, salt_buckets=salt_buckets)
-        bm = {
-            "batch_index": i,
-            "manifest": [list(m) for m in manifest],
-            "rows": n_rows,
-        }
-        status = table.merge(updates, manifest, metrics=bm, pre_commit_check=check)
-        bm["elapsed_sec"] = round(time.time() - bt0, 3)
-        bm["events_per_sec"] = round(n_rows / max(bm["elapsed_sec"], 1e-9), 1)
-        bm["status"] = status["status"]
-        res.batch_metrics.append(bm)
-        if monitor is not None:
-            monitor.record_batch(bm)
-        if status["status"] == "committed":
-            res.batches_applied += 1
-            res.rows_seen += n_rows
-            if compact_threshold is not None:
-                table.compact(max_files_per_bucket=compact_threshold)
-            if expire_keep is not None:
-                table.expire_snapshots(keep_last=expire_keep)
-        else:
-            res.batches_skipped += 1
-    res.elapsed_sec = round(time.time() - t0, 3)
-    res.events_per_sec = round(res.rows_seen / max(res.elapsed_sec, 1e-9), 1)
-    return res
+    batches = plan_batches(log_heads(change_log), table.committed_ranges(), chunk_size)
+    commit = _table_commit(change_log, table, validate, salt_buckets)
+    return _run_batches(
+        batches[:max_batches], commit, table, stop_requested=stop_requested,
+        crash_after_batches=crash_after_batches,
+        compact_threshold=compact_threshold, expire_keep=expire_keep,
+        monitor=monitor,
+    )
 
 
 def repair_gaps(
@@ -150,45 +212,13 @@ def repair_gaps(
     The forward planner can't leave gaps by construction, but operational
     reality can (manual manifest surgery, a retired partition re-appearing,
     replaying a pruned table). Each gap run becomes its own micro-batch
-    through the normal decode→reduce→merge path; LWW max-merge makes
-    re-application of any overlapping rows harmless.
-
-    Mirrors :func:`replay`'s merge-on-read maintenance and metrics: a large
-    backfill would otherwise grow unbounded delta chains until the next
-    forward replay, and its batch metrics would lack status/elapsed lineage.
+    through the same batch loop and merge as :func:`replay` (so the same
+    merge-on-read compaction and status/elapsed batch metrics); LWW
+    max-merge makes re-application of any overlapping rows harmless.
     """
-    from sonic_etl_spark.operators.audit import manifest_gap_audit
-    from sonic_etl_spark.plans.planner import chunk_range
-
     gaps = manifest_gap_audit(None, table.committed_ranges())
-    res = ReplayResult()
-    t0 = time.time()
-    for pid, lo, hi in gaps:
-        for s, e in chunk_range(lo, hi, chunk_size):
-            bt0 = time.time()
-            manifest = [(pid, s, e)]
-            raw = filter_to_manifests(change_log, manifest)
-            typed = decode_change_events(raw)
-            check = None
-            if validate:
-                # same fail-the-batch path as replay(): error counts ride
-                # the merge's own write job (no second decode pass)
-                typed, check = observe_decode_errors(typed)
-            n_rows = e - s + 1  # dense log
-            updates = reduce_batch(typed, salt_buckets=salt_buckets)
-            bm = {"repair": True, "manifest": [list(m) for m in manifest], "rows": n_rows}
-            status = table.merge(updates, manifest, metrics=bm, pre_commit_check=check)
-            bm["elapsed_sec"] = round(time.time() - bt0, 3)
-            bm["events_per_sec"] = round(n_rows / max(bm["elapsed_sec"], 1e-9), 1)
-            bm["status"] = status["status"]
-            res.batch_metrics.append(bm)
-            if status["status"] == "committed":
-                res.batches_applied += 1
-                res.rows_seen += n_rows
-                if compact_threshold is not None:
-                    table.compact(max_files_per_bucket=compact_threshold)
-            else:
-                res.batches_skipped += 1
-    res.elapsed_sec = round(time.time() - t0, 3)
-    res.events_per_sec = round(res.rows_seen / max(res.elapsed_sec, 1e-9), 1)
-    return res
+    batches = [[(pid, s, e)] for pid, lo, hi in gaps
+               for s, e in chunk_range(lo, hi, chunk_size)]
+    commit = _table_commit(change_log, table, validate, salt_buckets)
+    return _run_batches(batches, commit, table, repair=True,
+                        compact_threshold=compact_threshold)

@@ -19,7 +19,7 @@ watermarks) but that a production tail of the same log would use:
   in-process running counters (event_count, common.rs:346; trace histograms,
   common.rs:618-645) lifted to fault-tolerant keyed state.
 
-Both read the same change-log directory stream as stream.py.
+All three read the change log through stream.py's ``log_stream``.
 """
 
 from __future__ import annotations
@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from sonic_etl_spark.streaming.stream import CHANGE_LOG_DDL
+from sonic_etl_spark.streaming.stream import log_stream, start_query
 
 PROGRESS_OUTPUT_DDL = (
     "repo string, change_count bigint, max_offset bigint, path_cardinality bigint"
@@ -44,14 +44,6 @@ PROGRESS_STATE_DDL = "change_count bigint, max_offset bigint, path_hashes array<
 # above, the estimator (k-1)·2^64/kth_min has ~1/sqrt(k-2) relative error
 # (~3% at k=1024). Deterministic — no RNG, same input → same estimate.
 PROGRESS_SKETCH_K = 1024
-
-
-def _log_stream(spark: SparkSession, log_dir: str, max_files_per_trigger: int):
-    return (
-        spark.readStream.schema(CHANGE_LOG_DDL)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .parquet(log_dir)
-    )
 
 
 def stream_activity_windows(
@@ -73,7 +65,7 @@ def stream_activity_windows(
     Results land in an in-memory sink table named ``queryName``.
     """
     agg = (
-        _log_stream(spark, log_dir, max_files_per_trigger)
+        log_stream(spark, log_dir, max_files_per_trigger)
         .withWatermark("ts", watermark)
         .groupBy(F.window("ts", window).alias("w"), "repo")
         .agg(
@@ -87,15 +79,8 @@ def stream_activity_windows(
             "n_deletes",
         )
     )
-    writer = (
-        agg.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(queryName)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    writer = agg.writeStream.outputMode("append").format("memory").queryName(queryName)
+    return start_query(writer, checkpoint_dir, available_now)
 
 
 def stream_session_windows(
@@ -124,7 +109,7 @@ def stream_session_windows(
     Results land in an in-memory sink table named ``queryName``.
     """
     agg = (
-        _log_stream(spark, log_dir, max_files_per_trigger)
+        log_stream(spark, log_dir, max_files_per_trigger)
         .withWatermark("ts", watermark)
         .groupBy(F.session_window("ts", gap).alias("w"), "repo")
         .agg(
@@ -138,15 +123,8 @@ def stream_session_windows(
             "n_changes",
         )
     )
-    writer = (
-        agg.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(queryName)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    writer = agg.writeStream.outputMode("append").format("memory").queryName(queryName)
+    return start_query(writer, checkpoint_dir, available_now)
 
 
 def _progress_fn(
@@ -205,7 +183,7 @@ def stream_repo_progress(
 ) -> StreamingQuery:
     """Custom stateful operator: running per-repo ingest progress."""
     prog = (
-        _log_stream(spark, log_dir, max_files_per_trigger)
+        log_stream(spark, log_dir, max_files_per_trigger)
         .groupBy("repo")
         .applyInPandasWithState(
             _progress_fn,
@@ -215,12 +193,5 @@ def stream_repo_progress(
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-    writer = (
-        prog.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(queryName)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    writer = prog.writeStream.outputMode("update").format("memory").queryName(queryName)
+    return start_query(writer, checkpoint_dir, available_now)

@@ -6,9 +6,19 @@ import json
 import time
 import urllib.request
 
+import pytest
+
 from sonic_etl_spark.log import synthesize_change_events
 from sonic_etl_spark.sources import TransactionalParquetTable
+from sonic_etl_spark.sources.multitable import TransactionalTableSet
 from sonic_etl_spark.streaming import ReplayMonitor, replay
+from sonic_etl_spark.streaming.fanout import replay_fanout
+
+# each replay driver with the target it writes
+DRIVERS = {
+    "replay": (TransactionalParquetTable, replay),
+    "replay_fanout": (TransactionalTableSet, replay_fanout),
+}
 
 
 def _get(port: int, route: str):
@@ -21,9 +31,11 @@ def _get(port: int, route: str):
         return e.code, json.loads(e.read())
 
 
-def test_monitor_serves_health_and_metrics_during_replay(spark, tmp_path):
+@pytest.mark.parametrize("driver", sorted(DRIVERS))
+def test_monitor_serves_health_and_metrics_during_replay(spark, tmp_path, driver):
+    make, drive = DRIVERS[driver]
     ev = synthesize_change_events(spark, 3000)
-    tab = TransactionalParquetTable(spark, str(tmp_path / "tab"), n_buckets=4)
+    tab = make(spark, str(tmp_path / "tab"), n_buckets=4)
     mid_flight = []
 
     with ReplayMonitor(port=0, stale_after_sec=300) as mon:
@@ -38,7 +50,7 @@ def test_monitor_serves_health_and_metrics_during_replay(spark, tmp_path):
 
         # 3000 events over 8 log partitions = 375 offsets each; chunk 125
         # → 3 micro-batches, so the mid-loop probe fires 3 times
-        res = replay(
+        res = drive(
             ev, tab, chunk_size=125, stop_requested=probe_mid_loop,
             monitor=mon,
         )

@@ -9,7 +9,9 @@ from sonic_etl_spark.functions import decode_change_events
 from sonic_etl_spark.log import synthesize_change_events
 from sonic_etl_spark.operators import reduce_batch
 from sonic_etl_spark.sources import TransactionalParquetTable
+from sonic_etl_spark.sources.multitable import TransactionalTableSet
 from sonic_etl_spark.streaming import replay
+from sonic_etl_spark.streaming.fanout import replay_fanout
 
 N = 4000
 
@@ -86,13 +88,22 @@ def test_checkpoint_carries_lineage_and_throughput(spark, tmp_path, log_df):
         assert s["parent_id"] is not None
 
 
-def test_graceful_stop_between_batches(spark, tmp_path, log_df, oracle_hash):
-    tab = TransactionalParquetTable(spark, str(tmp_path / "t6"), n_buckets=8)
+# each replay driver with its target and the read of its converged state
+DRIVERS = {
+    "replay": (TransactionalParquetTable, replay, lambda t: t.read()),
+    "replay_fanout": (TransactionalTableSet, replay_fanout, lambda t: t.read("source_code")),
+}
+
+
+@pytest.mark.parametrize("driver", sorted(DRIVERS))
+def test_graceful_stop_between_batches(spark, tmp_path, log_df, oracle_hash, driver):
+    make, drive, read = DRIVERS[driver]
+    tab = make(spark, str(tmp_path / "t6"), n_buckets=8)
     calls = iter([False, False, True, True, True, True, True, True, True, True])
-    res = replay(log_df, tab, chunk_size=200, stop_requested=lambda: next(calls))
+    res = drive(log_df, tab, chunk_size=200, stop_requested=lambda: next(calls))
     assert res.batches_applied == 2  # stopped cleanly after 2 batches
-    res2 = replay(log_df, tab, chunk_size=200)
-    assert _state_hash(tab.read()) == oracle_hash
+    drive(log_df, tab, chunk_size=200)
+    assert _state_hash(read(tab)) == oracle_hash
 
 
 def test_inline_validation_fails_batch_without_committing(spark, tmp_path):

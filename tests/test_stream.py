@@ -77,3 +77,19 @@ def test_stream_redelivery_is_idempotent(spark, tmp_path, log_dir):
     q2.awaitTermination()
     assert tab.latest()["snapshot_id"] == sid  # skipped, no snapshot
     assert _state_hash(tab.read()) == h
+
+
+def test_stream_into_table_fails_poisoned_batch_before_commit(spark, tmp_path):
+    """A table target gets replay()'s validated batch: an undecodable row
+    fails the micro-batch before the snapshot commit, so the query stops and
+    no range of the poisoned batch is committed."""
+    d = str(tmp_path / "poisoned_log")
+    synthesize_change_events(spark, 500, poison_fraction=0.1, num_slices=4).write.parquet(d)
+    tab = TransactionalParquetTable(spark, str(tmp_path / "tp"), n_buckets=4)
+    q = stream_replay(
+        spark, d, tab, checkpoint_dir=str(tmp_path / "cp"), max_files_per_trigger=100,
+    )
+    with pytest.raises(Exception, match="decode failed"):
+        q.awaitTermination()
+    assert tab.committed_ranges() == set()
+    assert tab.read().count() == 0
