@@ -1093,7 +1093,7 @@ flags AS (
                / greatest(length(text), 1), 4) AS punct_ratio
   FROM d),
 qp AS (SELECT doc_id, text, off FROM flags
-       WHERE n_words >= {min_words} AND punct_ratio <= {max_punct}),
+       WHERE coalesce(n_words >= {min_words} AND punct_ratio <= {max_punct}, false)),
 fp AS (SELECT doc_id, off,
               sha256(regexp_replace(lower(trim(text)), ' +', ' ', 'g')) AS f
        FROM qp),
@@ -1118,7 +1118,8 @@ nd AS (SELECT bt.doc_id, max(CASE WHEN bmin.bm < bt.off THEN 1 ELSE 0 END) AS ne
        WHERE bt.band = bmin.band AND bt.bucket = bmin.bucket
        GROUP BY 1)
 SELECT flags.doc_id, CAST(flags.off AS BIGINT) AS off,
-       CASE WHEN NOT (n_words >= {min_words} AND punct_ratio <= {max_punct})
+       CASE WHEN NOT coalesce(n_words >= {min_words} AND punct_ratio <= {max_punct},
+                              false)
               THEN 'quality'
             WHEN canon.doc_id IS NULL THEN 'exact_dup'
             WHEN coalesce(nd.near, 0) = 1 THEN 'near_dup'

@@ -36,14 +36,21 @@ driver gate replays the global rule in DuckDB).
 
 ## Scale shape
 
-Per batch: narrow quality/fingerprint maps, one MinHash aggregation over
-the batch (output-∝ repartition inside), and TWO bucket-pruned state joins
-via ``TransactionalParquetTable.read_for_keys`` — each reads only the
-storage buckets the batch's keys hash into ((touched buckets / n_buckets)
-of the state, O(batch) with n_buckets ∝ corpus). State updates are three
-O(batch) LWW merges; the minima tables keep per-key MINIMUM rank under the
-engine's max-by LWW by storing negated rank as the order columns. Nothing
-reads O(corpus).
+Per batch: one narrow pass over the text materializes the per-doc facts
+``(doc_id, off, q_pass, fp_sha256)``, and one MinHash aggregation over the
+quality survivors (output-∝ repartition inside) materializes their LSH
+bands ``(doc_id, band, bucket)``; after the ``hash_minima`` join, the exact
+stage ``(doc_id, off, is_exact_canon)`` is materialized too. All three are
+``localCheckpoint``-ed, so the span aggregate, the TWO bucket-pruned state
+joins via ``TransactionalParquetTable.read_for_keys`` and the three merges
+read these frames instead of re-running quality, sha256 and MinHash over
+the batch's text once per action. None of them carries ``text``: wide
+string frames are never persisted. Each state join reads only the storage
+buckets the batch's keys hash into ((touched buckets / n_buckets) of the
+state, O(batch) with n_buckets ∝ corpus). State updates are three O(batch)
+LWW merges; the minima tables keep per-key MINIMUM rank under the engine's
+max-by LWW by storing negated rank as the order columns. Nothing reads
+O(corpus).
 
 Crash contract: merges are ordered minima-first, verdicts last, each
 manifest-idempotent; a crashed batch is simply redelivered (the same
@@ -74,6 +81,17 @@ _MINIMA_FIELDS_TAIL = [
 
 def _rank(off_col: str = "off", id_col: str = "doc_id") -> F.Column:
     return F.struct(F.col(off_col), F.col(id_col))
+
+
+def _quality_pass(min_words: int, max_punct_ratio: float) -> F.Column:
+    """Rule step 1 over the ``text`` column. NULL text fails it: a NULL
+    ``q_pass`` would fall through every verdict branch to ``kept``."""
+    t = F.col("text")
+    return F.coalesce(
+        (text_ops.word_count(t) >= min_words)
+        & (text_ops.punct_ratio(t) <= max_punct_ratio),
+        F.lit(False),
+    )
 
 
 class IncrementalCurator:
@@ -155,7 +173,14 @@ class IncrementalCurator:
             F.col("text").alias("text"),
             F.col("off").cast("long").alias("off"),
         )
-        span = b.agg(
+        q_pass = _quality_pass(self.min_words, self.max_punct_ratio)
+        # every later action reads these materialized narrow frames, so only
+        # the two materializations (facts, bands) read the batch's text
+        facts = b.select(
+            "doc_id", "off", q_pass.alias("q_pass"),
+            F.sha2(text_ops.normalized(F.col("text")), 256).alias("fp_sha256"),
+        ).localCheckpoint(eager=True)
+        span = facts.agg(
             F.min("off").alias("lo"), F.max("off").alias("hi"),
             F.count("*").alias("n"),
         ).first()
@@ -163,20 +188,14 @@ class IncrementalCurator:
             return {"status": "no_data"}
         manifest = [(0, int(span["lo"]), int(span["hi"]))]
 
-        q = text_ops.quality_features(b.select("doc_id", "text"))
-        flags = b.join(
-            q.select("doc_id", "n_words", "punct_ratio"), "doc_id"
-        ).withColumn(
-            "q_pass",
-            (F.col("n_words") >= self.min_words)
-            & (F.col("punct_ratio") <= self.max_punct_ratio),
-        )
-        qpass = flags.where("q_pass").select("doc_id", "text", "off")
-        cand = qpass.join(
-            text_ops.fingerprint(qpass).select("doc_id", "fp_sha256"), "doc_id"
-        )
+        # MinHash is per doc, so banding every quality survivor and joining
+        # the exact-canon filter afterwards gives the canonicals' bands
+        bands = dedup_ops.lsh_band_buckets(
+            dedup_ops.minhash_signatures(b.where(q_pass))
+        ).localCheckpoint(eager=True)
 
         # exact stage: min rank per sha across (persisted state ∪ batch)
+        cand = facts.where("q_pass").select("doc_id", "off", "fp_sha256")
         prior_h = self.hash_minima.read_for_keys(
             cand.select("fp_sha256")
         ).select(
@@ -189,35 +208,38 @@ class IncrementalCurator:
         exact = (
             cand.join(batch_h, "fp_sha256")
             .join(prior_h, "fp_sha256", "left")
-            .withColumn(
+            .select(
+                "doc_id",
+                "off",
                 # <= not <: after a crash between the minima merge and the
                 # verdict merge, the redelivered batch sees ITSELF in prior
                 # state (prior == own rank) and must still be canonical
-                "is_exact_canon",
-                (_rank() == F.col("_batch_min"))
-                & (
-                    F.col("_prior_rank").isNull()
-                    | (_rank() <= F.col("_prior_rank"))
-                ),
+                (
+                    (_rank() == F.col("_batch_min"))
+                    & (
+                        F.col("_prior_rank").isNull()
+                        | (_rank() <= F.col("_prior_rank"))
+                    )
+                ).alias("is_exact_canon"),
             )
+            .localCheckpoint(eager=True)
         )
-        canon = exact.where("is_exact_canon").select("doc_id", "text", "off")
 
         # near stage: bucket occupancy among exact canonicals
-        bands = dedup_ops.lsh_band_buckets(
-            dedup_ops.minhash_signatures(canon)
-        ).join(canon.select("doc_id", "off"), "doc_id")
+        canon_bands = bands.join(
+            exact.where("is_exact_canon").select("doc_id", "off"), "doc_id"
+        )
         prior_b = self.bucket_minima.read_for_keys(
-            bands.select("band", "bucket")
+            canon_bands.select("band", "bucket")
         ).select(
             "band", "bucket",
             F.struct(F.col("off"), F.col("doc_id")).alias("_prior_rank"),
         )
-        batch_b = bands.groupBy("band", "bucket").agg(
+        batch_b = canon_bands.groupBy("band", "bucket").agg(
             F.min(_rank()).alias("_batch_min")
         )
         near_drop = (
-            bands.join(batch_b, ["band", "bucket"])
+            canon_bands.join(batch_b, ["band", "bucket"])
             .join(prior_b, ["band", "bucket"], "left")
             .withColumn(
                 "_dominated",
@@ -232,7 +254,7 @@ class IncrementalCurator:
         )
 
         verdicts = (
-            flags.select("doc_id", "off", "q_pass")
+            facts.select("doc_id", "off", "q_pass")
             .join(
                 exact.select("doc_id", "is_exact_canon"), "doc_id", "left"
             )
@@ -434,14 +456,7 @@ def curate_full(
     """One-shot global recompute of the incremental rule over (doc_id,
     text, off) — the convergence oracle the incremental path is tested
     against (and the shape the DuckDB driver gate mirrors in SQL)."""
-    q = text_ops.quality_features(docs.select("doc_id", "text"))
-    flags = docs.join(
-        q.select("doc_id", "n_words", "punct_ratio"), "doc_id"
-    ).withColumn(
-        "q_pass",
-        (F.col("n_words") >= min_words)
-        & (F.col("punct_ratio") <= max_punct_ratio),
-    )
+    flags = docs.withColumn("q_pass", _quality_pass(min_words, max_punct_ratio))
     qpass = flags.where("q_pass").select("doc_id", "text", "off")
     cand = qpass.join(
         text_ops.fingerprint(qpass).select("doc_id", "fp_sha256"), "doc_id"

@@ -63,6 +63,11 @@ def avg_word_len(col: Column) -> Column:
     return F.round(chars / F.greatest(word_count(col), F.lit(1)), 4)
 
 
+def normalized(col: Column) -> Column:
+    """Lower-cased, trimmed, single-spaced text: the form fingerprints hash."""
+    return F.regexp_replace(F.lower(F.trim(col)), " +", " ")
+
+
 def punct_ratio(col: Column) -> Column:
     """Fraction of characters that are not alphanumeric/space, 4dp."""
     n_punct = F.length(F.regexp_replace(col, "[a-zA-Z0-9 ]", ""))
@@ -123,7 +128,7 @@ def fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
     The content-hash invariant of the engine (BASELINE.json input_hint:
     per-row content sha256 equality) applied to the documents table.
     """
-    norm = F.regexp_replace(F.lower(F.trim(F.col(text_col))), " +", " ")
+    norm = normalized(F.col(text_col))
     return df.select(
         "doc_id",
         F.sha2(norm, 256).alias("fp_sha256"),
@@ -149,7 +154,7 @@ def winnow_fingerprints(
     """
     from sonic_etl_spark.operators.dedup import _fanout
 
-    norm = F.regexp_replace(F.lower(F.trim(F.col(text_col))), " +", " ")
+    norm = normalized(F.col(text_col))
     n_kgrams = F.length(norm) - (k - 1)
     # STAGED: the k-gram hash array is materialized by its own projection so
     # the window pass slices a bound column. Referencing the transform

@@ -318,3 +318,48 @@ def test_incremental_random_corpora_and_batchings_converge(spark, tmp_path):
         got = _verdict_map(cur.verdicts.read())
         want = _verdict_map(curate_full(_df(spark, rows)))
         assert got == want, trial
+
+
+def test_null_text_fails_quality_on_every_side(spark, tmp_path):
+    """A NULL-text doc fails the quality step on every side: apply(), the
+    curate_full oracle and the driver gate's DuckDB SQL all say ``quality``."""
+    import duckdb
+
+    from sonic_etl_spark.driver_queries import _incr_curation_sql
+
+    rows = [(1, f"{BASE} variant 1", 1), (2, None, 2), (3, "tiny", 3)]
+    want = {1: "kept", 2: "quality", 3: "quality"}
+    cur = IncrementalCurator(spark, str(tmp_path / "cn"), n_buckets=2).create()
+    cur.apply(_df(spark, rows))
+    assert {k: v[2] for k, v in _verdict_map(cur.verdicts.read()).items()} == want
+    full = _verdict_map(curate_full(_df(spark, rows)))
+    assert {k: v[2] for k, v in full.items()} == want
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?, ?)", [r[:2] for r in rows])
+    assert {r[0]: r[2] for r in con.execute(_incr_curation_sql()).fetchall()} == want
+
+
+# Succeeded Spark jobs of the warm apply below, on this suite's local[4]
+# session: 97-98 when every read_for_keys collect and merge re-ran the
+# batch's text pipeline (quality, sha256, MinHash); 41 with the narrow
+# per-doc facts materialized once.
+WARM_APPLY_MAX_JOBS = 64
+
+
+def test_warm_apply_computes_batch_facts_once(spark, tmp_path):
+    rows = sorted(_corpus(), key=lambda r: r[2])
+    cur = IncrementalCurator(spark, str(tmp_path / "cw"), n_buckets=4).create()
+    cur.apply(_df(spark, rows[:20]))
+    sc = spark.sparkContext
+    group = f"warm-apply-{tmp_path.name}"
+    sc.setJobGroup(group, "warm apply")
+    try:
+        assert cur.apply(_df(spark, rows[20:]))["status"] == "committed"
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    st = sc.statusTracker()
+    infos = [st.getJobInfo(j) for j in st.getJobIdsForGroup(group)]
+    n_jobs = sum(i is not None and i.status == "SUCCEEDED" for i in infos)
+    assert n_jobs <= WARM_APPLY_MAX_JOBS, n_jobs
