@@ -8,7 +8,7 @@ arrival — each invocation curates only the rows appended to the source
 table since the last run, against persisted hash/bucket minima state, and
 appends final per-doc verdicts (kept / quality / exact_dup / near_dup).
 Cost per run is O(new docs): the state joins are bucket-pruned point-reads
-(TransactionalParquetTable.read_for_keys), never corpus scans.
+(TransactionalTableSet.read_for_keys), never corpus scans.
 
     cd /root/repo && python tools/package.py /tmp/sonic_etl_spark.zip
     spark-submit --py-files /tmp/sonic_etl_spark.zip \
@@ -16,10 +16,10 @@ Cost per run is O(new docs): the state joins are bucket-pruned point-reads
         --source /data/documents_table --state /data/curation_state \
         --id-col doc_id --text-col text --offset-col last_offset
 
-Re-running after a crash is safe: the curator's merges are
-manifest-idempotent and the source frontier only advances after a
-successful apply, so a failed run is simply redelivered. Prints one JSON
-line with the run's counts and the verdict totals.
+Re-running after a crash is safe: each apply is one manifest-idempotent
+commit of the curator's state set and the source frontier only advances
+after a successful apply, so a failed run is simply redelivered. Prints one
+JSON line with the run's counts and the verdict totals.
 """
 
 from __future__ import annotations

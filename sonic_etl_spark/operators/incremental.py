@@ -41,21 +41,18 @@ Per batch: one narrow pass over the text materializes the per-doc facts
 quality survivors (output-∝ repartition inside) materializes their LSH
 bands ``(doc_id, band, bucket)``; after the ``hash_minima`` join, the exact
 stage ``(doc_id, off, is_exact_canon)`` is materialized too. All three are
-``localCheckpoint``-ed, so the span aggregate, the TWO bucket-pruned state
-joins via ``TransactionalParquetTable.read_for_keys`` and the three merges
-read these frames instead of re-running quality, sha256 and MinHash over
-the batch's text once per action. None of them carries ``text``: wide
-string frames are never persisted. Each state join reads only the storage
-buckets the batch's keys hash into ((touched buckets / n_buckets) of the
-state, O(batch) with n_buckets ∝ corpus). State updates are three O(batch)
-LWW merges; the minima tables keep per-key MINIMUM rank under the engine's
-max-by LWW by storing negated rank as the order columns. Nothing reads
-O(corpus).
-
-Crash contract: merges are ordered minima-first, verdicts last, each
-manifest-idempotent; a crashed batch is simply redelivered (the same
-resume-and-redeliver contract as streaming/replay) and every merge either
-applies or no-ops.
+``localCheckpoint``-ed (facts by its first action, the span aggregate), so
+the TWO bucket-pruned state joins via ``TransactionalTableSet.read_for_keys``
+and the one commit read these frames instead of re-running quality, sha256
+and MinHash over the batch's text once per action. None of them carries
+``text``: wide string frames are never persisted. Each state join reads
+only the storage buckets the batch's keys hash into ((touched buckets /
+n_buckets) of the state, O(batch) with n_buckets ∝ corpus). The state is
+ONE table set; a batch updates its three members with O(batch) LWW writes
+under one manifest-keyed ``merge_all`` commit, so a crashed apply leaves no
+state change and is simply redelivered. The minima members keep per-key
+MINIMUM rank under the engine's max-by LWW by storing negated rank as the
+order columns. Nothing reads O(corpus).
 """
 
 from __future__ import annotations
@@ -65,10 +62,11 @@ import os
 from collections.abc import Callable
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 
 from sonic_etl_spark.operators import dedup as dedup_ops
 from sonic_etl_spark.operators import text as text_ops
+from sonic_etl_spark.sources.multitable import TableSpec, TransactionalTableSet
 from sonic_etl_spark.sources.table import TransactionalParquetTable
 
 _MINIMA_FIELDS_TAIL = [
@@ -77,6 +75,30 @@ _MINIMA_FIELDS_TAIL = [
     ("neg_off", "bigint"),
     ("neg_id", "bigint"),
 ]
+
+
+def _minima(*key: tuple[str, str]) -> TableSpec:
+    """A minima member: key → min rank, kept under the engine's max-by LWW
+    by ordering on the negated rank."""
+    return TableSpec(
+        [*key, *_MINIMA_FIELDS_TAIL], [k for k, _ in key], ["neg_off", "neg_id"]
+    )
+
+
+_STATE = {
+    "hash_minima": _minima(("fp_sha256", "string")),
+    "bucket_minima": _minima(("band", "int"), ("bucket", "string")),
+    "verdicts": TableSpec(
+        [
+            ("doc_id", "bigint"),
+            ("off", "bigint"),
+            ("kept", "boolean"),
+            ("reason", "string"),
+        ],
+        key_cols=["doc_id"],
+        order_cols=["off"],
+    ),
+}
 
 
 def _rank(off_col: str = "off", id_col: str = "doc_id") -> F.Column:
@@ -94,13 +116,35 @@ def _quality_pass(min_words: int, max_punct_ratio: float) -> F.Column:
     )
 
 
+class _Member:
+    """Read view of one member of the curator's state set."""
+
+    def __init__(self, state: TransactionalTableSet, name: str):
+        self._state = state
+        self._name = name
+
+    def latest(self) -> dict | None:
+        return self._state.latest()
+
+    def read(self) -> DataFrame:
+        return self._state.read(self._name)
+
+    def lookup(self, **key) -> DataFrame:
+        return self._state.lookup(self._name, **key)
+
+    def files_per_bucket(self) -> dict[str, int]:
+        return self._state.files_per_bucket(self._name)
+
+
 class IncrementalCurator:
     """Persisted incremental curation state + the per-batch apply step.
 
-    ``path`` holds three transactional tables: ``hash_minima`` (sha256 →
-    min rank), ``bucket_minima`` ((band, bucket) → min exact-canonical
-    rank) and ``verdicts`` (doc_id → kept/reason — the curated-corpus
-    membership fact stream downstream consumers tail).
+    ``path`` holds ONE transactional table set (snapshot log
+    ``path/_snapshots``, member files ``path/data/snap-N/<member>``) with
+    three members: ``hash_minima`` (sha256 → min rank), ``bucket_minima``
+    ((band, bucket) → min exact-canonical rank) and ``verdicts`` (doc_id →
+    kept/reason — the curated-corpus membership fact stream downstream
+    consumers tail). ``cur.hash_minima`` etc. are read views of the members.
     """
 
     def __init__(
@@ -115,37 +159,13 @@ class IncrementalCurator:
         self.path = path
         self.min_words = min_words
         self.max_punct_ratio = max_punct_ratio
-        self.hash_minima = TransactionalParquetTable(
-            spark, os.path.join(path, "hash_minima"), n_buckets
-        )
-        self.bucket_minima = TransactionalParquetTable(
-            spark, os.path.join(path, "bucket_minima"), n_buckets
-        )
-        self.verdicts = TransactionalParquetTable(
-            spark, os.path.join(path, "verdicts"), n_buckets
-        )
+        self.state = TransactionalTableSet(spark, path, n_buckets)
+        self.hash_minima = _Member(self.state, "hash_minima")
+        self.bucket_minima = _Member(self.state, "bucket_minima")
+        self.verdicts = _Member(self.state, "verdicts")
 
     def create(self) -> "IncrementalCurator":
-        self.hash_minima.create(
-            [("fp_sha256", "string"), *_MINIMA_FIELDS_TAIL],
-            key_cols=["fp_sha256"],
-            order_cols=["neg_off", "neg_id"],
-        )
-        self.bucket_minima.create(
-            [("band", "int"), ("bucket", "string"), *_MINIMA_FIELDS_TAIL],
-            key_cols=["band", "bucket"],
-            order_cols=["neg_off", "neg_id"],
-        )
-        self.verdicts.create(
-            [
-                ("doc_id", "bigint"),
-                ("off", "bigint"),
-                ("kept", "boolean"),
-                ("reason", "string"),
-            ],
-            key_cols=["doc_id"],
-            order_cols=["off"],
-        )
+        self.state.create(_STATE)
         return self
 
     # ------------------------------------------------------------- per batch
@@ -155,18 +175,23 @@ class IncrementalCurator:
         change log's monotone order — :meth:`sync` guarantees it; direct
         callers must too, or ranks stop being stable facts).
 
-        Idempotent per batch via the tables' (0, off_lo, off_hi) manifest
-        range — a redelivered batch re-derives identical verdicts (the rule
-        only ever compares against SMALLER ranks, and a partially-merged
-        redelivery sees its own rows in state, which the min-union makes a
-        no-op) and every merge skips or completes.
+        Commits once: all three members' rows land under one
+        ``merge_all`` keyed by the batch's (0, off_lo, off_hi) manifest
+        range, so an apply either commits whole or leaves the state as it
+        was, and a redelivered batch skips. A RE-BATCHED redelivery (new
+        range) re-derives identical verdicts: the rule only ever compares
+        against SMALLER ranks, and its own rows in state are a no-op under
+        the min-union.
 
+        A batch holds one row per doc_id (two raise ``ValueError``).
         Documents are treated as immutable facts keyed by (doc_id, off): if
-        a CDC update RE-WRITES a doc_id with new text at a higher offset,
-        the verdicts table keeps the latest offset's verdict (its LWW order
-        is ``off``) while the minima tables retain BOTH versions' signature
-        occupancy (occupancy is append-only — a retracted text's buckets
-        are not vacated, the conservative choice for dedup).
+        a CDC update RE-WRITES a doc_id with new text at a higher offset in
+        a LATER batch, the verdicts member keeps the latest offset's verdict
+        (its LWW order is ``off``) while the minima members retain BOTH
+        versions' signature occupancy (occupancy is append-only across
+        batches — a retracted text's buckets are not vacated, the
+        conservative choice for dedup). Within one :meth:`sync` window only
+        the latest version is curated: the delta is LWW-reduced per key.
         """
         b = batch.select(
             F.col("doc_id").cast("long").alias("doc_id"),
@@ -175,15 +200,18 @@ class IncrementalCurator:
         )
         q_pass = _quality_pass(self.min_words, self.max_punct_ratio)
         # every later action reads these materialized narrow frames, so only
-        # the two materializations (facts, bands) read the batch's text
+        # the two materializations (facts, bands) read the batch's text;
+        # facts is filled by its first action, the span aggregate, rather
+        # than by a count job of its own
         facts = b.select(
             "doc_id", "off", q_pass.alias("q_pass"),
             F.sha2(text_ops.normalized(F.col("text")), 256).alias("fp_sha256"),
-        ).localCheckpoint(eager=True)
+        ).localCheckpoint(eager=False)
         span = facts.agg(
             F.min("off").alias("lo"), F.max("off").alias("hi"),
-            F.count("*").alias("n"),
+            F.count("*").alias("n"), F.countDistinct("doc_id").alias("ids"),
         ).first()
+        _one_row_per_id(span, "doc_id")
         if span["n"] == 0:
             return {"status": "no_data"}
         manifest = [(0, int(span["lo"]), int(span["hi"]))]
@@ -196,12 +224,9 @@ class IncrementalCurator:
 
         # exact stage: min rank per sha across (persisted state ∪ batch)
         cand = facts.where("q_pass").select("doc_id", "off", "fp_sha256")
-        prior_h = self.hash_minima.read_for_keys(
-            cand.select("fp_sha256")
-        ).select(
-            "fp_sha256",
-            F.struct(F.col("off"), F.col("doc_id")).alias("_prior_rank"),
-        )
+        prior_h = self.state.read_for_keys(
+            "hash_minima", cand.select("fp_sha256")
+        ).select("fp_sha256", _rank().alias("_prior_rank"))
         batch_h = cand.groupBy("fp_sha256").agg(
             F.min(_rank()).alias("_batch_min")
         )
@@ -211,9 +236,11 @@ class IncrementalCurator:
             .select(
                 "doc_id",
                 "off",
-                # <= not <: after a crash between the minima merge and the
-                # verdict merge, the redelivered batch sees ITSELF in prior
-                # state (prior == own rank) and must still be canonical
+                # <= not <: a re-batched redelivery (a stream restarted on
+                # a fresh checkpoint, or a sync whose delta grew after a
+                # crash before its frontier write) commits under a NEW
+                # manifest range, so it sees ITSELF in prior state (prior ==
+                # own rank) and must still be canonical
                 (
                     (_rank() == F.col("_batch_min"))
                     & (
@@ -229,12 +256,9 @@ class IncrementalCurator:
         canon_bands = bands.join(
             exact.where("is_exact_canon").select("doc_id", "off"), "doc_id"
         )
-        prior_b = self.bucket_minima.read_for_keys(
-            canon_bands.select("band", "bucket")
-        ).select(
-            "band", "bucket",
-            F.struct(F.col("off"), F.col("doc_id")).alias("_prior_rank"),
-        )
+        prior_b = self.state.read_for_keys(
+            "bucket_minima", canon_bands.select("band", "bucket")
+        ).select("band", "bucket", _rank().alias("_prior_rank"))
         batch_b = canon_bands.groupBy("band", "bucket").agg(
             F.min(_rank()).alias("_batch_min")
         )
@@ -272,30 +296,24 @@ class IncrementalCurator:
             .select("doc_id", "off", "kept", "reason")
         )
 
-        # minima first, verdicts last: a crash mid-apply is healed by
-        # redelivering the batch (manifest-idempotent merges)
-        h_rows = batch_h.select(
-            "fp_sha256",
+        minima = [
             F.col("_batch_min.off").alias("off"),
             F.col("_batch_min.doc_id").alias("doc_id"),
             (-F.col("_batch_min.off")).alias("neg_off"),
             (-F.col("_batch_min.doc_id")).alias("neg_id"),
+        ]
+        res = self.state.merge_all(
+            {
+                "hash_minima": batch_h.select("fp_sha256", *minima),
+                "bucket_minima": batch_b.select("band", "bucket", *minima),
+                "verdicts": verdicts,
+            },
+            manifest,
         )
-        b_rows = batch_b.select(
-            "band", "bucket",
-            F.col("_batch_min.off").alias("off"),
-            F.col("_batch_min.doc_id").alias("doc_id"),
-            (-F.col("_batch_min.off")).alias("neg_off"),
-            (-F.col("_batch_min.doc_id")).alias("neg_id"),
-        )
-        r1 = self.hash_minima.merge(h_rows, manifest)
-        r2 = self.bucket_minima.merge(b_rows, manifest)
-        r3 = self.verdicts.merge(verdicts, manifest)
         return {
-            "status": r3["status"],
+            "status": res["status"],
             "n_docs": int(span["n"]),
             "off_range": (int(span["lo"]), int(span["hi"])),
-            "merges": (r1["status"], r2["status"], r3["status"]),
         }
 
     # ------------------------------------------------------------ CDC tail
@@ -311,7 +329,8 @@ class IncrementalCurator:
         diff) as one arrival batch, then advance the persisted frontier.
 
         Crash between apply and the frontier write → next sync redelivers
-        the same delta and every merge no-ops (manifest idempotence). A
+        the same delta and the commit no-ops (manifest idempotence); a
+        delta that grew meanwhile re-applies as a re-batched redelivery. A
         compaction/expiry rewrite on the source raises inside read_changes
         (the documented boundary refusal) rather than replaying history.
         """
@@ -320,6 +339,17 @@ class IncrementalCurator:
             F.col(text_col).alias("text"),
             F.col(offset_col).alias("off"),
         )))
+
+
+def _one_row_per_id(span: Row, id_col: str) -> None:
+    """Refuse a batch carrying two rows of one id (or a NULL id): the
+    per-batch joins key on the id alone, so two versions would fan them out
+    and tie the LWW order of their writes."""
+    if span["ids"] != span["n"]:
+        raise ValueError(
+            f"batch has {span['n']} rows but {span['ids']} distinct non-NULL "
+            f"{id_col}s; apply takes one row per {id_col}"
+        )
 
 
 def _sync_frontier(
@@ -341,7 +371,9 @@ def _sync_frontier(
             last = json.load(f)["snapshot_id"]
     if last == to_id:
         return {"status": "noop", "snapshot_id": to_id}
-    res = apply(src.read_changes(from_snapshot_id=last, to_snapshot_id=to_id))
+    res = apply(
+        src.read_changes(from_snapshot_id=last, to_snapshot_id=to_id, reduced=True)
+    )
     tmp = fp + ".tmp"
     with open(tmp, "w") as f:
         json.dump({"snapshot_id": to_id}, f)
@@ -398,9 +430,9 @@ class IncrementalIvfIndex:
         return self.spark.read.parquet(self._cent_path)
 
     def apply(self, batch: DataFrame) -> dict:
-        """Assign one arrival batch of (vec_id, embedding, off) rows to
-        cells and merge into postings (manifest-idempotent, same monotone
-        offset contract as IncrementalCurator.apply)."""
+        """Assign one arrival batch of (vec_id, embedding, off) rows, one
+        per vec_id, to cells and merge into postings (manifest-idempotent,
+        same monotone offset contract as IncrementalCurator.apply)."""
         from sonic_etl_spark.operators import similarity as sim_ops
 
         b = batch.select(
@@ -410,8 +442,9 @@ class IncrementalIvfIndex:
         )
         span = b.agg(
             F.min("off").alias("lo"), F.max("off").alias("hi"),
-            F.count("*").alias("n"),
+            F.count("*").alias("n"), F.countDistinct("vec_id").alias("ids"),
         ).first()
+        _one_row_per_id(span, "vec_id")
         if span["n"] == 0:
             return {"status": "no_data"}
         assign = sim_ops.ivf_assign(

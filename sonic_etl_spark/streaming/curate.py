@@ -3,10 +3,11 @@ of document-arrival parquet and maintain the verdict/minima state per
 micro-batch (foreachBatch → IncrementalCurator.apply).
 
 Same surface shape as streaming.fanout.stream_fanout. Exactly-once story:
-every apply() is manifest-keyed by the batch's offset span, and — stronger
-— the curation rule is idempotent by VALUE (minima are min-merges, verdict
-recomputation against state containing the batch's own rows is a fixpoint;
-see operators/incremental.py), so even a RE-BATCHED redelivery after a
+every apply() is one commit of the curator's state set, keyed by the
+batch's offset span, and — stronger — the curation rule is idempotent by
+VALUE (minima are min-merges, verdict recomputation against state
+containing the batch's own rows is a fixpoint; see
+operators/incremental.py), so even a RE-BATCHED redelivery after a
 checkpoint loss converges to the identical verdict stream (pytest-proven).
 
 Ordering contract: the producer must write arrival files in offset order

@@ -1,8 +1,8 @@
 """Incremental curation (operators/incremental.py): the 3-batch arrival
 sequence must converge to the SAME per-doc verdicts as one global recompute
 of the order-independent rule (hash equality), stay idempotent under
-redelivery, heal a crash between the minima and verdict merges, and tail a
-source table's CDC-out stream through read_changes."""
+redelivery, heal a crash inside its one commit, and tail a source table's
+CDC-out stream through read_changes."""
 
 import pyspark.sql.functions as F
 import pytest
@@ -73,33 +73,64 @@ def test_incremental_redelivery_is_noop(spark, tmp_path, full):
     cur.apply(_df(spark, b2))
     sid = cur.verdicts.latest()["snapshot_id"]
     res = cur.apply(_df(spark, b2))  # full redelivery
-    assert res["merges"] == ("skipped", "skipped", "skipped")
+    assert res["status"] == "skipped"
     assert cur.verdicts.latest()["snapshot_id"] == sid
     assert _verdict_map(cur.verdicts.read()) == full
 
 
-def test_incremental_heals_crash_between_merges(spark, tmp_path, full):
-    """Crash after the minima merges but before the verdict merge: the
-    redelivered batch sees ITSELF in prior state and must produce identical
-    verdicts (the <= self-rank rule)."""
+def test_incremental_heals_crash_inside_the_commit(
+    spark, tmp_path, monkeypatch, full
+):
+    """A crash while the batch's files are written (here: the verdicts
+    member's write) commits nothing — not even the minima written before it
+    — and the redelivered batch commits and converges to the full
+    recompute."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
     rows = sorted(_corpus(), key=lambda r: r[2])
     b1, b2 = rows[:20], rows[20:]
     cur = IncrementalCurator(spark, str(tmp_path / "c3"), n_buckets=4).create()
     cur.apply(_df(spark, b1))
+    sid = cur.hash_minima.latest()["snapshot_id"]
 
-    orig = cur.verdicts.merge
-    boom = RuntimeError("injected crash before verdict merge")
+    orig = DataFrameWriter.parquet
 
-    def failing(*a, **kw):
-        raise boom
+    def failing(self, path, *a, **kw):
+        if "verdicts" in path:
+            raise RuntimeError("injected crash writing verdicts")
+        return orig(self, path, *a, **kw)
 
-    cur.verdicts.merge = failing
+    monkeypatch.setattr(DataFrameWriter, "parquet", failing)
     with pytest.raises(RuntimeError, match="injected"):
         cur.apply(_df(spark, b2))
-    cur.verdicts.merge = orig
+    assert cur.hash_minima.latest()["snapshot_id"] == sid
+    monkeypatch.undo()
     res = cur.apply(_df(spark, b2))  # redelivery heals
-    assert res["merges"] == ("skipped", "skipped", "committed")
+    assert res["status"] == "committed"
     assert _verdict_map(cur.verdicts.read()) == full
+
+
+def test_curator_state_is_one_table_set(spark, tmp_path):
+    """One snapshot log for all three members: the root holds exactly one
+    ``_latest.json`` and every committed apply advances it by exactly 1."""
+    import os
+
+    rows = sorted(_corpus(), key=lambda r: r[2])
+    root = tmp_path / "c7"
+    cur = IncrementalCurator(spark, str(root), n_buckets=4).create()
+    sid = cur.verdicts.latest()["snapshot_id"]
+    for b in (rows[:12], rows[12:25], rows[25:]):
+        assert cur.apply(_df(spark, b))["status"] == "committed"
+        sid += 1
+        for member in (cur.hash_minima, cur.bucket_minima, cur.verdicts):
+            assert member.latest()["snapshot_id"] == sid
+    assert cur.apply(_df(spark, rows[25:]))["status"] == "skipped"
+    assert cur.verdicts.latest()["snapshot_id"] == sid
+    pointers = [d for d, _, files in os.walk(root) if "_latest.json" in files]
+    assert pointers == [str(root)]
+    assert sorted(cur.verdicts.latest()["tables"]) == [
+        "bucket_minima", "hash_minima", "verdicts"
+    ]
 
 
 def test_sync_tails_source_table_cdc_out(spark, tmp_path, full):
@@ -125,6 +156,40 @@ def test_sync_tails_source_table_cdc_out(spark, tmp_path, full):
         assert res["status"] == "committed"
     assert cur.sync(src)["status"] == "noop"  # frontier caught up
     assert _verdict_map(cur.verdicts.read()) == full
+
+
+def test_apply_refuses_two_versions_of_one_doc(spark, tmp_path):
+    """The per-batch joins key on doc_id alone: a batch with two rows of one
+    doc_id is refused before anything is written."""
+    cur = IncrementalCurator(spark, str(tmp_path / "c8"), n_buckets=2).create()
+    sid = cur.verdicts.latest()["snapshot_id"]
+    two = _df(spark, [(1, f"{BASE} variant 1", 10), (1, f"{BASE} variant 2", 11)])
+    with pytest.raises(ValueError, match="doc_id"):
+        cur.apply(two)
+    assert cur.verdicts.latest()["snapshot_id"] == sid
+
+
+def test_sync_curates_latest_version_in_window(spark, tmp_path):
+    """A doc re-written twice between two syncs reaches apply once, as its
+    latest version (the sync delta is LWW-reduced per key)."""
+    from sonic_etl_spark.sources.table import TransactionalParquetTable
+
+    src = TransactionalParquetTable(spark, str(tmp_path / "src"), n_buckets=2)
+    src.create(
+        [("doc_id", "bigint"), ("text", "string"), ("last_offset", "bigint")],
+        key_cols=["doc_id"],
+        order_cols=["last_offset"],
+    )
+    ddl = "doc_id long, text string, last_offset long"
+    src.merge(spark.createDataFrame(
+        [(1, f"{BASE} variant 1", 10), (2, "tiny", 11)], ddl), [(0, 10, 11)])
+    other = "completely unique text with many plain words here ok"
+    src.merge(spark.createDataFrame([(2, other, 20)], ddl), [(0, 20, 20)])
+    cur = IncrementalCurator(spark, str(tmp_path / "c9"), n_buckets=2).create()
+    assert cur.sync(src)["status"] == "committed"
+    assert _verdict_map(cur.verdicts.read()) == {
+        1: (10, True, "kept"), 2: (20, True, "kept")
+    }
 
 
 def test_apply_empty_batch_and_all_quality_fail(spark, tmp_path):
@@ -274,6 +339,21 @@ def test_incremental_ivf_sync_frontier(spark, tmp_path):
     assert idx.sync(src)["status"] == "committed"
     assert idx.sync(src)["status"] == "noop"
     assert idx.cells().count() == 40
+
+
+def test_incremental_ivf_refuses_two_versions_of_one_vector(spark, tmp_path):
+    from sonic_etl_spark.operators.incremental import IncrementalIvfIndex
+    from sonic_etl_spark.operators.similarity import seed_centroids
+
+    emb = spark.createDataFrame(
+        [(1, [1.0, 0.0], 10), (1, [0.0, 1.0], 11), (2, [1.0, 1.0], 12)],
+        "vec_id long, embedding array<double>, off long",
+    )
+    idx = IncrementalIvfIndex(spark, str(tmp_path / "ivf3"), n_buckets=2).create(
+        seed_centroids(emb, 2)
+    )
+    with pytest.raises(ValueError, match="vec_id"):
+        idx.apply(emb)
 
 
 def test_incremental_random_corpora_and_batchings_converge(spark, tmp_path):

@@ -13,6 +13,7 @@ does real work. Prints one JSON line:
      "full_recompute_sec": {corpus_size: sec, ...},
      "flatness": max/min of the incremental column}
 
+Runs at the host's core count (local[$SPARK_GRAFT_CPUS], else local[*]).
 Host noise is ±50% (BENCH.md); the signal is the SHAPE — incremental flat,
 full recompute growing — not the absolute seconds. Artifact:
 SPARK_GRAFT_BENCH_OUT=bench_runs/r5_incremental.json python tools/bench_incremental.py
@@ -77,11 +78,7 @@ def main() -> None:
     from sonic_etl_spark.operators.incremental import IncrementalCurator, curate_full
     from sonic_etl_spark.session import get_spark
 
-    cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = get_spark(
-        "bench-incremental", master=f"local[{cores}]",
-        shuffle_partitions=max(cores, 32),
-    )
+    spark = get_spark("bench-incremental")
     spark.sparkContext.setLogLevel("ERROR")
 
     inc_sec: dict[str, float] = {}
