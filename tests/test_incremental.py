@@ -170,7 +170,7 @@ def test_apply_refuses_two_versions_of_one_doc(spark, tmp_path):
 
 
 def test_sync_curates_latest_version_in_window(spark, tmp_path):
-    """A doc re-written twice between two syncs reaches apply once, as its
+    """A doc written twice within one sync window reaches apply once, as its
     latest version (the sync delta is LWW-reduced per key)."""
     from sonic_etl_spark.sources.table import TransactionalParquetTable
 
