@@ -1,87 +1,122 @@
-"""Benchmark harness: headline CDC replay throughput + query timings.
+"""Benchmark harness: headline CDC replay throughput + query timings, and the
+incremental-vs-full curation crossover.
 
-Prints ONE JSON line:
+``python bench.py`` prints ONE JSON line:
 
     {"metric": "...", "value": <sec>, "unit": "sec",
      "queries": {name: sec, ...}, "sf": <sf>,
-     "replay": {"events": N, "peak_cores": 32,
-                "peak": {"wall_sec": ..., "events_per_sec": ...},
+     "replay": {"events": N, "peak_cores": P,
+                "peak": {"wall_sec": ..., "events_per_sec": ..., "monitor": ...},
+                "fanout": {"wall_sec": ..., "events_per_sec": ..., "tables": ...},
                 "n_cores": 1,
                 "low":  {"wall_sec": ..., "events_per_sec": ...},
                 "high": {"wall_sec": ..., "events_per_sec": ...},
                 "scaling_efficiency": E}}
 
 The replay block is the BASELINE.json north-rule evidence: the same job on
-the same materialized change-log parquet at two parallelism levels
-(local[N] vs local[4N] cores — the sandbox stand-in for N vs 4N executors;
-default N=1, see BENCH.md for the full 1/2/4/8/16/32 matrix and why high
-core counts are noise-dominated on this shared host);
-``scaling_efficiency`` = (throughput_4N / throughput_N) / 4, target ≥ 0.8.
-A peak-parallelism run (local[32]) is also reported for absolute throughput.
+the same materialized change-log parquet at local[1] vs local[4], the
+one-machine stand-in for N vs 4N executors; ``scaling_efficiency`` =
+(throughput_4N / throughput_N) / 4, target ≥ 0.8. The query pass, peak and
+fan-out legs run at the host's core count (get_spark's default:
+$SPARK_GRAFT_CPUS, else all cores). Every leg runs in a fresh interpreter,
+hence a fresh JVM, so no idle JVM holds memory while another leg runs.
 
-Env knobs: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-SPARK_GRAFT_CPUS (query-run parallelism, default 32),
-SPARK_GRAFT_BENCH_EVENTS (replay size, default 10_000_000 — matches the
-N_EVENTS default below; don't shrink it, efficiency dilutes at 2M),
-SPARK_GRAFT_BENCH_SKIP_SCALING=1 (skip the second replay run).
+``python bench.py incremental`` prints ONE JSON line: one fixed 2k-doc
+``IncrementalCurator.apply`` timed against persisted corpora of each size
+(``incremental_apply_sec``) next to the ``curate_full`` recompute it
+replaces (``full_recompute_sec``). The signal is the shape, not the seconds.
+
+Env: SPARK_GRAFT_SF_DIR (query data, default the sf0.1 test set),
+SPARK_GRAFT_BENCH_EVENTS (replay size, default 10_000_000: efficiency
+dilutes from fixed costs at 2M), SPARK_GRAFT_INCR_SIZES (corpus sizes,
+default 10000,40000,80000), SPARK_GRAFT_BENCH_OUT (tee the line to a file).
 """
 
 from __future__ import annotations
 
+import contextlib
 import json
+import multiprocessing
 import os
 import shutil
-import subprocess
 import sys
 import tempfile
+import threading
 import time
+import urllib.request
+from concurrent.futures import ProcessPoolExecutor
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-# 10M events: large enough that input splits + per-core work amortize fixed
-# costs — the size where the ≥0.8 N→4N efficiency is demonstrated (BENCH.md;
-# at 2M the same job measures ~0.67 purely from fixed-cost dilution).
 N_EVENTS = int(os.environ.get("SPARK_GRAFT_BENCH_EVENTS", "10000000"))
 LOG_DIR = f"/tmp/bench_change_log_{N_EVENTS}"
+CHUNK = max(N_EVENTS // 16, 1)
+# best-of-N: host I/O noise is ±50% run to run, and peak throughput is
+# the capability number the scaling rule compares
+ATTEMPTS = 2
+LOW_CORES = 1  # the north rule's N; the high leg runs 4N
+INCR_SIZES = [int(s) for s in os.environ.get(
+    "SPARK_GRAFT_INCR_SIZES", "10000,40000,80000").split(",")]
+INCR_BATCH = 2000
 
 BENCH_QUERIES = [
-    "lww_converge",
-    "gap_missing",
-    "seg_nation_revenue",
-    "time_buckets_30m",
-    "topk_per_group",
-    "typed_transform_dual",
-    "doc_quality",
-    "minhash_lsh_buckets",
-    "simhash16",
-    "emb_cosine_topk",
-    "ann_lsh_buckets",
-    "near_dup_pairs",
-    "distinct_sketch",
-    "dataset_split",
-    "stratified_sample",
-    "pack_sequences",
-    "pack_stats",
-    "dup_clusters_star",
-    "asof_enrich",
-    "session_stats",
-    "key_skew",
-    "group_percentiles",
-    "redact_pii",
-    "ngram_containment",
-    "scd2_intervals",
-    "corpus_mix",
-    "incremental_curation",
+    "lww_converge", "gap_missing", "seg_nation_revenue", "time_buckets_30m",
+    "topk_per_group", "typed_transform_dual", "doc_quality",
+    "minhash_lsh_buckets", "simhash16", "emb_cosine_topk", "ann_lsh_buckets",
+    "near_dup_pairs", "distinct_sketch", "dataset_split", "stratified_sample",
+    "pack_sequences", "pack_stats", "dup_clusters_star", "asof_enrich",
+    "session_stats", "key_skew", "group_percentiles", "redact_pii",
+    "ngram_containment", "scd2_intervals", "corpus_mix",
+    "incremental_curation"
 ]
+
+
+def _session(name: str, cores: int | None = None):
+    from sonic_etl_spark.session import get_spark
+
+    spark = get_spark(f"bench-{name}", master=f"local[{cores}]" if cores else None)
+    spark.sparkContext.setLogLevel("ERROR")
+    return spark
+
+
+def in_fresh_jvm(leg, *args):
+    """``leg(*args)`` in a new interpreter, so its session starts a new JVM
+    at the leg's own core count."""
+    spawn = multiprocessing.get_context("spawn")
+    with ProcessPoolExecutor(max_workers=1, mp_context=spawn) as pool:
+        return pool.submit(leg, *args).result()
+
+
+def best_of(attempts: int, leg, *args) -> dict:
+    runs = [in_fresh_jvm(leg, *args) for _ in range(attempts)]
+    best = max(runs, key=lambda r: r["events_per_sec"])
+    best["attempts"] = [r["events_per_sec"] for r in runs]
+    return best
+
+
+def query_leg() -> tuple[dict[str, float], int]:
+    """Time the query pass and materialize the replay log at the host's core
+    count; returns the timings and that core count."""
+    from sonic_etl_spark.driver_queries import QUERIES
+
+    spark = _session("queries")
+    qtimes = {}
+    for name in BENCH_QUERIES:
+        fn, _ = QUERIES[name]
+        # the timer wraps CONSTRUCTION too: iterative operators (connected
+        # components) run their propagation rounds eagerly inside fn()
+        t0 = time.time()
+        # noop sink forces every column (count() would let Catalyst prune)
+        fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
+        qtimes[name] = round(time.time() - t0, 3)
+    ensure_log(spark)
+    return qtimes, spark.sparkContext.defaultParallelism
 
 
 def ensure_log(spark) -> None:
     """Materialize the deterministic change log once; reused across runs.
-
-    num_slices is pinned so the parquet layout is identical regardless of the
-    session's parallelism — both scaling runs read byte-identical input.
-    """
+    num_slices is pinned so every leg reads byte-identical input."""
     if os.path.exists(os.path.join(LOG_DIR, "_SUCCESS")):
         return
     from sonic_etl_spark.log import synthesize_change_events
@@ -92,216 +127,177 @@ def ensure_log(spark) -> None:
     ).parquet(LOG_DIR)
 
 
-def run_replay(cores: int, with_monitor: bool = False) -> dict:
-    """One replay of the materialized log in a fresh JVM at local[cores].
+def _warm_session(name: str, cores: int):
+    """A local[cores] session whose merge path has run once: codegen JIT and
+    the Python worker pool are costs a long-lived cluster amortizes away."""
+    from sonic_etl_spark.log import synthesize_change_events
+    from sonic_etl_spark.sources import TransactionalParquetTable
+    from sonic_etl_spark.streaming import replay
 
-    A small warmup batch runs before the timed region (codegen JIT + Python
-    worker pool spin-up — costs a long-lived cluster amortizes away).
-
-    ``with_monitor`` runs the replay with the health/metrics HTTP surface
-    attached and a scraper thread hitting /healthz + /metrics twice a
-    second THROUGHOUT the timed region — the k8s-probe-under-load evidence
-    (every mid-run probe must answer 200-live), measured inside the
-    headline number so its cost is included, not estimated.
-    """
-    out = tempfile.mktemp(prefix="bench_replay_")
-    mon_setup = mon_kw = mon_post = mon_field = ""
-    if with_monitor:
-        mon_setup = """
-import threading, urllib.request
-from sonic_etl_spark.streaming.monitor import ReplayMonitor
-mon = ReplayMonitor(port=0).start()
-scrapes = {"n": 0, "live": True, "stop": False}
-def _scrape():
-    while not scrapes["stop"]:
-        try:
-            with urllib.request.urlopen(
-                f"http://127.0.0.1:{mon.port}/healthz", timeout=2) as r:
-                h = json.load(r)
-            with urllib.request.urlopen(
-                f"http://127.0.0.1:{mon.port}/metrics", timeout=2) as r:
-                json.load(r)
-            scrapes["n"] += 1
-            scrapes["live"] = scrapes["live"] and (r.status == 200) and h["live"]
-        except Exception:
-            scrapes["live"] = False
-        time.sleep(0.5)
-_t = threading.Thread(target=_scrape, daemon=True); _t.start()
-"""
-        mon_kw = "monitor=mon,"
-        mon_post = """
-scrapes["stop"] = True; _t.join(timeout=3); mon.stop()
-"""
-        mon_field = (
-            '"monitor": {"scrapes": scrapes["n"],'
-            ' "all_probes_live": scrapes["live"]},'
-        )
-    code = f"""
-import json, shutil, sys, tempfile, time
-sys.path.insert(0, {os.path.dirname(os.path.abspath(__file__))!r})
-from sonic_etl_spark.session import get_spark
-from sonic_etl_spark.sources import TransactionalParquetTable
-from sonic_etl_spark.streaming import replay
-from sonic_etl_spark.log import synthesize_change_events
-spark = get_spark("bench-replay", master="local[{cores}]",
-                  shuffle_partitions={max(cores, 32)})
-spark.sparkContext.setLogLevel("ERROR")
-warm = synthesize_change_events(spark, 20000, num_slices={cores})
-wtab = TransactionalParquetTable(spark, tempfile.mkdtemp(prefix="warm_tab_"),
-                                 n_buckets=8)
-replay(warm, wtab, chunk_size=10000, validate=False)  # JITs the merge path too
-log = spark.read.parquet({LOG_DIR!r})
-tdir = tempfile.mkdtemp(prefix="bench_tab_")
-tab = TransactionalParquetTable(spark, tdir, n_buckets=64)
-{mon_setup}
-t0 = time.time()
-# validate=True is ~free since the Observation-based inline check (error
-# counts ride the merge write job); the benchmarked path is the full
-# fail-the-batch-validated replay.
-res = replay(log, tab, chunk_size={max(N_EVENTS // 16, 1)}, validate=True,
-             {mon_kw} salt_buckets=32)
-wall = time.time() - t0
-{mon_post}
-n = tab.read().count()
-shutil.rmtree(tdir, ignore_errors=True)
-json.dump({{"wall_sec": round(wall, 2),
-           "events_per_sec": round(res.rows_seen / wall, 1),
-           "rows": res.rows_seen, "batches": res.batches_applied,
-           {mon_field}
-           "converged_rows": n}}, open({out!r}, "w"))
-"""
-    subprocess.run(
-        [sys.executable, "-c", code],
-        check=True,
-        stdout=subprocess.DEVNULL,
-        stderr=subprocess.DEVNULL,
-    )
-    with open(out) as f:
-        return json.load(f)
+    spark = _session(name, cores)
+    wdir = tempfile.mkdtemp(prefix="warm_tab_")
+    warm = synthesize_change_events(spark, 20000, num_slices=cores)
+    replay(warm, TransactionalParquetTable(spark, wdir, n_buckets=8),
+           chunk_size=10000, validate=False)
+    shutil.rmtree(wdir, ignore_errors=True)
+    return spark
 
 
-def run_fanout(cores: int) -> dict:
-    """One fan-out replay (3 tables, one atomic commit per batch) of the
-    same materialized log — quantifies the multi-table cost factor vs the
-    single-table headline."""
-    out = tempfile.mktemp(prefix="bench_fanout_")
-    code = f"""
-import json, shutil, sys, tempfile, time
-sys.path.insert(0, {os.path.dirname(os.path.abspath(__file__))!r})
-from sonic_etl_spark.session import get_spark
-from sonic_etl_spark.sources.multitable import TransactionalTableSet
-from sonic_etl_spark.streaming.fanout import replay_fanout
-from sonic_etl_spark.log import synthesize_change_events
-from sonic_etl_spark.sources import TransactionalParquetTable
-from sonic_etl_spark.streaming import replay
-spark = get_spark("bench-fanout", master="local[{cores}]",
-                  shuffle_partitions={max(cores, 32)})
-spark.sparkContext.setLogLevel("ERROR")
-warm = synthesize_change_events(spark, 20000, num_slices={cores})
-wtab = TransactionalParquetTable(spark, tempfile.mkdtemp(prefix="warm_tab_"),
-                                 n_buckets=8)
-replay(warm, wtab, chunk_size=10000, validate=False)
-log = spark.read.parquet({LOG_DIR!r})
-tdir = tempfile.mkdtemp(prefix="bench_fanout_tab_")
-ts = TransactionalTableSet(spark, tdir, n_buckets=64)
-t0 = time.time()
-res = replay_fanout(log, ts, chunk_size={max(N_EVENTS // 16, 1)},
-                    on_error="fail", salt_buckets=32)
-wall = time.time() - t0
-counts = {{n: ts.read(n).count() for n in ("source_code", "file_versions")}}
-shutil.rmtree(tdir, ignore_errors=True)
-json.dump({{"wall_sec": round(wall, 2),
-           "events_per_sec": round(res.rows_seen / wall, 1),
-           "rows": res.rows_seen, "tables": counts}}, open({out!r}, "w"))
-"""
-    subprocess.run(
-        [sys.executable, "-c", code],
-        check=True,
-        stdout=subprocess.DEVNULL,
-        stderr=subprocess.DEVNULL,
-    )
-    with open(out) as f:
-        return json.load(f)
+def _rate(res, wall: float) -> dict:
+    return {"wall_sec": round(wall, 2),
+            "events_per_sec": round(res.rows_seen / wall, 1),
+            "rows": res.rows_seen}
 
 
-def best_replay(cores: int, attempts: int, with_monitor: bool = False) -> dict:
-    """Best-of-N replay (sandbox I/O noise is ±50% run-to-run; peak
-    throughput is the capability number the scaling rule compares)."""
-    runs = [run_replay(cores, with_monitor=with_monitor) for _ in range(attempts)]
-    best = max(runs, key=lambda r: r["events_per_sec"])
-    best["attempts"] = [r["events_per_sec"] for r in runs]
-    return best
+@contextlib.contextmanager
+def _probed(scrapes: dict):
+    """Yield a live ReplayMonitor that a thread scrapes (/healthz + /metrics)
+    twice a second until exit: every probe must answer 200-live."""
+    from sonic_etl_spark.streaming.monitor import ReplayMonitor
+
+    mon = ReplayMonitor(port=0).start()
+    scrapes.update(scrapes=0, all_probes_live=True)
+    stop = threading.Event()
+
+    def scrape():
+        url = f"http://127.0.0.1:{mon.port}"
+        while not stop.is_set():
+            try:
+                with urllib.request.urlopen(f"{url}/healthz", timeout=2) as r:
+                    health = json.load(r)
+                with urllib.request.urlopen(f"{url}/metrics", timeout=2) as r:
+                    json.load(r)
+                scrapes["scrapes"] += 1
+                scrapes["all_probes_live"] &= r.status == 200 and health["live"]
+            except Exception:
+                scrapes["all_probes_live"] = False
+            stop.wait(0.5)
+
+    t = threading.Thread(target=scrape, daemon=True)
+    t.start()
+    try:
+        yield mon
+    finally:
+        stop.set()
+        t.join(timeout=3)
+        mon.stop()
 
 
-def best_fanout(cores: int, attempts: int) -> dict:
-    """Best-of-N for the fan-out leg too — same ±50% host-noise treatment
-    as the peak leg, so the 3-table number of record is stable."""
-    runs = [run_fanout(cores) for _ in range(attempts)]
-    best = max(runs, key=lambda r: r["events_per_sec"])
-    best["attempts"] = [r["events_per_sec"] for r in runs]
-    return best
+def replay_leg(cores: int, monitor: bool = False) -> dict:
+    """Validated single-table replay of the materialized log at
+    local[cores]; with ``monitor`` the health/metrics surface is attached
+    and scraped throughout the timed region, so its cost is in the number."""
+    from sonic_etl_spark.sources import TransactionalParquetTable
+    from sonic_etl_spark.streaming import replay
+
+    spark = _warm_session("replay", cores)
+    tdir = tempfile.mkdtemp(prefix="bench_tab_")
+    tab = TransactionalParquetTable(spark, tdir, n_buckets=64)
+    scrapes = {}
+    with _probed(scrapes) if monitor else contextlib.nullcontext() as mon:
+        t0 = time.time()
+        res = replay(spark.read.parquet(LOG_DIR), tab, chunk_size=CHUNK,
+                     validate=True, monitor=mon, salt_buckets=32)
+        out = _rate(res, time.time() - t0)
+    out["batches"] = res.batches_applied
+    if monitor:
+        out["monitor"] = scrapes
+    out["converged_rows"] = tab.read().count()
+    shutil.rmtree(tdir, ignore_errors=True)
+    return out
+
+
+def fanout_leg(cores: int) -> dict:
+    """The same log fanned out to 3 tables under one atomic commit per
+    batch: the multi-table cost factor vs the single-table headline."""
+    from sonic_etl_spark.sources.multitable import TransactionalTableSet
+    from sonic_etl_spark.streaming.fanout import replay_fanout
+
+    spark = _warm_session("fanout", cores)
+    tdir = tempfile.mkdtemp(prefix="bench_fanout_tab_")
+    ts = TransactionalTableSet(spark, tdir, n_buckets=64)
+    t0 = time.time()
+    res = replay_fanout(spark.read.parquet(LOG_DIR), ts, chunk_size=CHUNK,
+                        on_error="fail", salt_buckets=32)
+    out = _rate(res, time.time() - t0)
+    out["tables"] = {n: ts.read(n).count() for n in ("source_code", "file_versions")}
+    shutil.rmtree(tdir, ignore_errors=True)
+    return out
+
+
+def headline() -> dict:
+    qtimes, peak = in_fresh_jvm(query_leg)
+    r_peak = best_of(ATTEMPTS, replay_leg, peak, True)
+    r_fanout = best_of(ATTEMPTS, fanout_leg, peak)
+    r_high = best_of(ATTEMPTS, replay_leg, 4 * LOW_CORES)
+    r_low = best_of(1, replay_leg, LOW_CORES)  # long and low-variance
+    eff = (r_high["events_per_sec"] / r_low["events_per_sec"]) / 4.0
+    sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
+    return {"metric": f"cdc_replay_{N_EVENTS}_events_wall_sec_local{peak}",
+            "value": r_peak["wall_sec"], "unit": "sec", "queries": qtimes,
+            "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+            "replay": {"events": N_EVENTS, "peak_cores": peak, "peak": r_peak,
+                       "fanout": r_fanout, "n_cores": LOW_CORES, "low": r_low,
+                       "high": r_high, "scaling_efficiency": round(eff, 3)}}
+
+
+def _doc_frame(spark, lo: int, n: int):
+    """n synthetic ~60-word docs with ids/offsets in [lo, lo+n); ~3% exact
+    dups and ~3% near dups of earlier docs, deterministic."""
+    import pyspark.sql.functions as F
+
+    def words(doc):
+        return F.concat_ws(" ", *[
+            F.concat(F.lit(f"w{j}tok"), ((doc * (j + 7)) % 1000).cast("string"))
+            for j in range(60)
+        ])
+
+    doc_id = F.col("id")
+    dup = words(doc_id - 17)  # exact dup; near dup adds one token
+    has_src = doc_id >= lo + 17
+    text = (F.when((doc_id % 31 == 0) & has_src, dup)
+            .when((doc_id % 37 == 0) & has_src, F.concat_ws(" ", dup, F.lit("extratail")))
+            .otherwise(words(doc_id)))
+    return spark.range(lo, lo + n).select(
+        doc_id.alias("doc_id"), text.alias("text"), doc_id.alias("off"))
+
+
+def incremental() -> dict:
+    from sonic_etl_spark.operators.incremental import IncrementalCurator, curate_full
+
+    spark = _session("incremental")
+    inc_sec: dict[str, float] = {}
+    full_sec: dict[str, float] = {}
+    for size in INCR_SIZES:
+        root = tempfile.mkdtemp(prefix=f"incr_bench_{size}_")
+        cur = IncrementalCurator(spark, root, n_buckets=64).create()
+        # seed the corpus state (not timed): a few big arrival batches
+        seed_chunk = max(size // 4, 1)
+        for lo in range(0, size, seed_chunk):
+            cur.apply(_doc_frame(spark, lo, min(seed_chunk, size - lo)))
+        batch = _doc_frame(spark, size, INCR_BATCH)
+        batch.count()  # materialize the lazy generator outside the timer
+        t0 = time.time()
+        cur.apply(batch)
+        inc_sec[str(size)] = round(time.time() - t0, 2)
+        t0 = time.time()
+        curate_full(_doc_frame(spark, 0, size + INCR_BATCH)).write.format(
+            "noop").mode("overwrite").save()
+        full_sec[str(size)] = round(time.time() - t0, 2)
+        shutil.rmtree(root, ignore_errors=True)
+
+    vals = list(inc_sec.values())
+    return {"metric": "incremental_curation_fixed_batch_apply_sec",
+            "batch_docs": INCR_BATCH, "corpus_sizes": INCR_SIZES,
+            "incremental_apply_sec": inc_sec, "full_recompute_sec": full_sec,
+            "incremental_flatness_max_over_min": round(max(vals) / min(vals), 2)}
 
 
 def main() -> None:
-    from sonic_etl_spark.driver_queries import QUERIES
-    from sonic_etl_spark.session import get_spark
-
-    sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
-    spark = get_spark("bench")
-    spark.sparkContext.setLogLevel("ERROR")
-
-    qtimes: dict[str, float] = {}
-    for name in BENCH_QUERIES:
-        fn, _ = QUERIES[name]
-        # the timer wraps CONSTRUCTION too: iterative operators (connected
-        # components) run their propagation rounds eagerly inside fn() —
-        # timing only the final write would hide their real cost (for the
-        # lazy majority, construction adds only plan-building microseconds)
-        t0 = time.time()
-        df = fn(spark, SF_DIR)
-        # noop sink forces full evaluation of every column (count() alone
-        # would let Catalyst prune the computed projections away)
-        df.write.format("noop").mode("overwrite").save()
-        qtimes[name] = round(time.time() - t0, 3)
-
-    ensure_log(spark)
-    spark.stop()
-
-    attempts = int(os.environ.get("SPARK_GRAFT_BENCH_ATTEMPTS", "2"))
-    low = int(os.environ.get("SPARK_GRAFT_BENCH_CORES_LOW", "1"))
-    high = 4 * low  # the north rule's N vs 4N pair
-    peak = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    # best-of-N for the peak too: a single attempt can read 30% under
-    # capability on this ±50%-noise host (memory/sandbox-perf-traps);
-    # the peak leg carries the live health/metrics scraper so the headline
-    # includes (and evidences) the monitored-replay configuration
-    replay_peak = best_replay(peak, attempts, with_monitor=True)
-    result: dict = {"events": N_EVENTS, "peak_cores": peak, "peak": replay_peak}
-    if os.environ.get("SPARK_GRAFT_BENCH_FANOUT", "1") != "0":
-        result["fanout"] = best_fanout(peak, attempts)
-    if os.environ.get("SPARK_GRAFT_BENCH_SKIP_SCALING") != "1":
-        r_high = best_replay(high, attempts)
-        # the low-parallelism run is long and low-variance; one attempt
-        r_low = best_replay(low, max(attempts - 1, 1))
-        result["n_cores"] = low
-        result["low"] = r_low
-        result["high"] = r_high
-        result["scaling_efficiency"] = round(
-            (r_high["events_per_sec"] / r_low["events_per_sec"]) / 4.0, 3
-        )
-
-    line = json.dumps(
-        {
-            "metric": f"cdc_replay_{N_EVENTS}_events_wall_sec_local{peak}",
-            "value": replay_peak["wall_sec"],
-            "unit": "sec",
-            "queries": qtimes,
-            "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-            "replay": result,
-        }
-    )
+    if sys.argv[1:] not in ([], ["incremental"]):
+        sys.exit("usage: python bench.py [incremental]")
+    line = json.dumps(incremental() if sys.argv[1:] else headline())
     print(line)
-    # auditable evidence trail: tee the artifact behind BENCH.md's headline
     out = os.environ.get("SPARK_GRAFT_BENCH_OUT")
     if out:
         with open(out, "w") as f:

@@ -1577,9 +1577,9 @@ def q_asof_enrich_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SAME point-in-time join through the hot-key physical plan
     (``bucket_sec``: parallel prefix scan over day buckets) — value-gated
     against the identical DuckDB ASOF oracle, so BOTH plans are
-    driver-verified, not just pytest-equal. tools/bench_asof_skew.py
-    measures the regime this plan exists for (2.5-7.3× on a single hot
-    key, linear-vs-flat divergence)."""
+    driver-verified, not just pytest-equal. BENCH.md records the regime
+    this plan exists for (2.5-7.3× on a single hot key, linear-vs-flat
+    divergence)."""
     ev = _t(spark, sf_dir, "events")
     clicks = ev.where(F.col("event_type") == "click").select(
         "user_id", "event_id", "ts", "value"

@@ -23,6 +23,8 @@ rows to the driver.
 
 from __future__ import annotations
 
+import warnings
+
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
@@ -248,6 +250,12 @@ def pack_sequences(
     if n_groups is None:
         par = df.sparkSession.sparkContext.defaultParallelism
         n_groups = max(2 * par, 64)
+        warnings.warn(
+            f"pack_sequences: derived n_groups={n_groups} from defaultParallelism="
+            f"{par}; pack assignment then depends on cluster size, so pass "
+            "n_groups explicitly for packs that match across clusters",
+            stacklevel=2,
+        )
     if n_groups <= 0:
         raise ValueError(f"pack_sequences: n_groups must be positive, got {n_groups}")
     toks = (

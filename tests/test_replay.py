@@ -141,6 +141,21 @@ def test_replay_with_inline_retention_converges_and_resumes(
     assert res.batches_applied == 0
 
 
+def test_long_chain_compaction_bounds_files_per_bucket(
+    spark, tmp_path, log_df, oracle_hash
+):
+    """A replay long enough for compact_threshold to fire repeatedly
+    mid-replay (13 batches at threshold 3) keeps every bucket's delta chain
+    at or under the threshold and still converges to the one-shot LWW."""
+    tab = TransactionalParquetTable(spark, str(tmp_path / "long"), n_buckets=8)
+    res = replay(log_df, tab, chunk_size=40, compact_threshold=3)
+    assert res.batches_applied == 13
+    fired = [s for s in tab.history() if "compaction" in s.get("metrics", {})]
+    assert len(fired) >= 2
+    assert max(tab.files_per_bucket().values()) <= 3
+    assert _state_hash(tab.read()) == oracle_hash
+
+
 def test_table_is_a_set_of_one(spark, tmp_path, log_df, oracle_hash):
     """The single table is the storage core with one member: one log
     replayed into a TransactionalParquetTable and, batch for batch, into a

@@ -339,7 +339,7 @@ def test_pack_stats_rejects_bad_budget(spark):
 
     docs = spark.createDataFrame([(1, "a b")], "doc_id bigint, text string")
     with pytest.raises(ValueError, match="positive"):
-        pack_stats(pack_sequences(docs, budget=8), budget=0)
+        pack_stats(pack_sequences(docs, budget=8, n_groups=8), budget=0)
 
 
 def test_sample_stratified_rates_and_determinism(spark):
@@ -438,23 +438,31 @@ def test_ngram_containment_bounds(spark):
 
 def test_pack_sequences_auto_n_groups_scales_with_parallelism(spark):
     """Default n_groups derives from defaultParallelism (≥ 64 floor) so the
-    per-group pandas frame shrinks as the cluster grows; explicit n_groups
-    keeps the pure-(seed,id) assignment contract byte-identical."""
+    per-group pandas frame shrinks as the cluster grows, and warns that the
+    assignment then depends on cluster size; explicit n_groups keeps the
+    pure-(seed,id) assignment contract byte-identical and stays silent."""
+    import warnings
+
+    import pytest as _p
+
     from sonic_etl_spark.operators.curation import pack_sequences
 
     docs = spark.createDataFrame(
         [(i, "w " * 10) for i in range(300)], "doc_id long, text string"
     )
-    auto = pack_sequences(docs, budget=64)
+    with _p.warns(UserWarning, match="n_groups"):
+        auto = pack_sequences(docs, budget=64)
     par = spark.sparkContext.defaultParallelism
     expect = max(2 * par, 64)
     groups = {r["pack_group"] for r in auto.select("pack_group").distinct().collect()}
     assert groups <= set(range(expect))
     assert max(groups) >= 8  # spread across many groups, not collapsed
     # explicit n_groups: assignment unchanged vs itself under repartition
-    a = pack_sequences(docs, budget=64, n_groups=8).collect()
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        pinned = pack_sequences(docs, budget=64, n_groups=8)
+    a = pinned.collect()
     b = pack_sequences(docs.repartition(13), budget=64, n_groups=8).collect()
     assert {tuple(r) for r in a} == {tuple(r) for r in b}
-    import pytest as _p
     with _p.raises(ValueError, match="n_groups"):
         pack_sequences(docs, budget=64, n_groups=0)
