@@ -65,7 +65,7 @@ BENCH_QUERIES = [
     "topk_per_group", "typed_transform_dual", "doc_quality",
     "minhash_lsh_buckets", "simhash16", "emb_cosine_topk", "ann_lsh_buckets",
     "near_dup_pairs", "distinct_sketch", "dataset_split", "stratified_sample",
-    "pack_sequences", "pack_stats", "dup_clusters_star", "asof_enrich",
+    "pack_sequences", "pack_stats", "dup_clusters", "asof_enrich",
     "session_stats", "key_skew", "group_percentiles", "redact_pii",
     "ngram_containment", "scd2_intervals", "corpus_mix",
     "incremental_curation"
@@ -138,7 +138,7 @@ def _warm_session(name: str, cores: int):
     wdir = tempfile.mkdtemp(prefix="warm_tab_")
     warm = synthesize_change_events(spark, 20000, num_slices=cores)
     replay(warm, TransactionalParquetTable(spark, wdir, n_buckets=8),
-           chunk_size=10000, validate=False)
+           chunk_size=10000)
     shutil.rmtree(wdir, ignore_errors=True)
     return spark
 
@@ -197,7 +197,7 @@ def replay_leg(cores: int, monitor: bool = False) -> dict:
     with _probed(scrapes) if monitor else contextlib.nullcontext() as mon:
         t0 = time.time()
         res = replay(spark.read.parquet(LOG_DIR), tab, chunk_size=CHUNK,
-                     validate=True, monitor=mon, salt_buckets=32)
+                     monitor=mon, salt_buckets=32)
         out = _rate(res, time.time() - t0)
     out["batches"] = res.batches_applied
     if monitor:

@@ -46,8 +46,6 @@ def main() -> None:
     ap.add_argument("--salt-buckets", type=int, default=32)
     ap.add_argument("--n-buckets", type=int, default=64)
     ap.add_argument("--max-batches", type=int, default=None)
-    ap.add_argument("--no-validate", action="store_true",
-                    help="skip fail-the-batch decode validation")
     ap.add_argument("--stop-file", default=None,
                     help="graceful shutdown: stop after current batch if this file exists")
     ap.add_argument("--fanout", action="store_true",
@@ -105,7 +103,6 @@ def main() -> None:
             chunk_size=args.chunk_size,
             salt_buckets=args.salt_buckets,
             max_batches=args.max_batches,
-            validate=not args.no_validate,
             stop_requested=stop,
             monitor=monitor,
         )

@@ -1132,7 +1132,7 @@ LEFT JOIN nd ON nd.doc_id = flags.doc_id
 
 def q_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pairs → clusters (the dedup last mile): connected components over the
-    LSH near-dup pairs via hash-min label propagation
+    LSH near-dup pairs via large-star/small-star contraction
     (operators/dedup.duplicate_clusters); cluster_id = smallest member.
     The oracle recomputes components independently with a recursive CTE
     (min label reachable from each node)."""
@@ -1140,17 +1140,6 @@ def q_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         _t(spark, sf_dir, "embeddings"), threshold=0.2
     )
     return dedup_ops.duplicate_clusters(pairs)
-
-
-def q_dup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same pairs → clusters contract, via the diameter-independent
-    large-star/small-star contraction (algorithm='star', O(log²n) rounds —
-    the 100 TB path for deep components). Must match the SAME recursive-CTE
-    oracle as the hash-min gate: both emit min-member labels."""
-    pairs = sim_ops.near_dup_pairs(
-        _t(spark, sf_dir, "embeddings"), threshold=0.2
-    )
-    return dedup_ops.duplicate_clusters(pairs, algorithm="star")
 
 
 def _dup_clusters_sql() -> str:
@@ -1944,7 +1933,7 @@ def q_cdc_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     tbl = TransactionalParquetTable(
         spark, tempfile.mkdtemp(prefix="cdc_replay_"), n_buckets=8
     )
-    replay(log, tbl, chunk_size=2000, validate=False)
+    replay(log, tbl, chunk_size=2000)
     return tbl.read().select(
         "repo", "path", "commit", "lang", "content_sha256", "size_bytes",
         "last_offset", "last_partition_id",
@@ -2097,7 +2086,6 @@ QUERIES: dict[str, tuple[QueryFn, str | None]] = {
     "typed_transform_dual": (q_typed_transform, SQL_TYPED),
     "numeric_checked": (q_numeric_checked, SQL_NUMERIC_CHECKED),
     "uint256_dual_decode": (q_uint256_dual, SQL_UINT256_DUAL),
-    "json_props_decode": (q_json_props, SQL_JSON),
     "user_activity": (q_user_activity, SQL_USER_ACTIVITY),
     "struct_array_transform": (q_struct_array_transform, SQL_STRUCT_ARRAY),
     # text analysis
@@ -2124,6 +2112,7 @@ QUERIES: dict[str, tuple[QueryFn, str | None]] = {
     "ann_topk_lsh": (q_ann_topk_lsh, _ann_topk_lsh_sql()),
     # temporal / profiling
     "asof_enrich": (q_asof_enrich, SQL_ASOF_ENRICH),
+    "asof_enrich_fwd": (q_asof_enrich_fwd, SQL_ASOF_ENRICH_FWD),
     "session_stats": (q_session_stats, SQL_SESSION_STATS),
     "scd2_intervals": (q_scd2_intervals, SQL_SCD2_INTERVALS),
     "sample_k_per_lang": (q_sample_k_per_lang, SQL_SAMPLE_K),
@@ -2133,14 +2122,12 @@ QUERIES: dict[str, tuple[QueryFn, str | None]] = {
     "redact_pii": (q_redact_pii, SQL_REDACT_PII),
     "ngram_containment": (q_ngram_containment, SQL_NGRAM_CONTAINMENT),
     # ---- position 51+ (outside the driver's 50-query window); crosscheck.py
-    # keeps every entry below honest. All but asof_enrich_fwd have an
-    # in-window sibling verifying the same operator and were triple-green in
-    # CORRECTNESS_r04. asof_enrich_fwd (forward as-of; in-window asof_enrich
-    # covers the backward direction) has its own oracle, SQL_ASOF_ENRICH_FWD,
-    # and appears in neither CORRECTNESS_r04 nor CORRECTNESS_r05
-    "dup_clusters_star": (q_dup_clusters_star, _dup_clusters_sql()),
+    # keeps every entry below honest. Each has an in-window sibling verifying
+    # the same operator and was triple-green in CORRECTNESS_r04.
+    # json_props_decode's get_json_object decode of events.props runs
+    # in-window inside catalog_args_json (the same U4 family)
+    "json_props_decode": (q_json_props, SQL_JSON),
     "asof_enrich_bucketed": (q_asof_enrich_bucketed, SQL_ASOF_ENRICH),
-    "asof_enrich_fwd": (q_asof_enrich_fwd, SQL_ASOF_ENRICH_FWD),
     "pack_stats": (q_pack_stats, SQL_PACK_STATS),
     "kmv_overlap": (q_kmv_overlap, SQL_KMV_OVERLAP),
     "emb_top_pairs": (q_emb_top_pairs, SQL_EMB_PAIRS),

@@ -243,9 +243,7 @@ def simhash16(df: DataFrame, text_col: str = "text") -> DataFrame:
 
 
 def duplicate_clusters(
-    pairs: DataFrame, a_col: str = "vec_a", b_col: str = "vec_b",
-    max_iter: int = 20, on_max_iter: str = "raise",
-    algorithm: str = "hashmin",
+    pairs: DataFrame, a_col: str = "vec_a", b_col: str = "vec_b"
 ) -> DataFrame:
     """Near-duplicate PAIRS → duplicate CLUSTERS: connected components with
     cluster_id = the smallest member id (deterministic canonical label).
@@ -253,132 +251,44 @@ def duplicate_clusters(
     The last mile of content dedup: pair finders (near_dup_pairs,
     ngram_jaccard, minhash buckets) emit edges; keeping one doc per
     connected component — not per pair — is what actually dedupes A~B~C
-    chains. Hash-min label propagation, the standard Spark CC recipe: every
-    iteration each node adopts min(own label, neighbours' labels); converges
-    in O(component diameter) rounds (near-dup clusters are small and dense,
-    so typically 2-4). Per round: one equi-join + one groupBy-min, both
-    shuffles on uniform node ids. Each round's labels are
-    ``localCheckpoint``-ed, not merely cached: caching avoids recomputation
-    but the LOGICAL plan still doubles per round (labels feeds both the
-    union and the join), which OOMs the driver's plan tree past ~15 rounds —
-    the checkpoint truncates lineage to a materialized scan so the plan
-    stays O(1) at any iteration count. Superseded checkpoint blocks are
-    dropped by Spark's ContextCleaner once the previous round's frame goes
-    out of scope.
+    chains. Components come from alternating large-star / small-star
+    contraction (:func:`_cc_star`): O(log²n) rounds independent of
+    component diameter, so a 400-node path converges as fast as a pair.
+
+    The caller's pair lineage (often a similarity self-join) is evaluated
+    ONCE: the ids are cast to ``(src, dst)`` and that frame is
+    ``localCheckpoint``-ed before anything reads it, so the null check, the
+    node set and the seed edge set all scan the materialized pairs.
 
     Output: (member_id, cluster_id) for every node that appears in a pair.
     Singletons never enter the edge list — see :func:`dedup_keep_canonical`
     for whole-corpus assignment.
 
-    Failure modes surfaced, never silent:
-
-    - ids must be numeric (the long cast is what makes min() the canonical
-      label and lets the DuckDB oracle replay it); a non-castable id would
-      become NULL and downstream ``dedup_keep_canonical`` would then keep
-      every document — so any null src/dst after the cast raises.
-    - components with diameter > ``max_iter`` exit the loop with non-minimal
-      labels (under-merged clusters). ``on_max_iter='raise'`` (default)
-      raises; ``'warn'`` emits a warning and returns the partial labels for
-      callers that prefer progress over exactness.
-
-    ``algorithm='star'`` switches to alternating large-star / small-star
-    contraction (the two-phase MapReduce CC algorithm, Kiveris et al. 2014):
-    O(log²n) rounds INDEPENDENT of component diameter — path-400 converges
-    in ~10 rounds where hash-min needs 400. The right choice when components
-    may be deep (transitive text chains, link graphs); hash-min stays the
-    default because near-dup clusters are shallow and its per-round work is
-    lighter. Identical output on any input (both emit min-member labels);
-    ``max_iter``/``on_max_iter`` apply only to hash-min — star has an
-    internal 64-round safety cap far above its worst case.
+    ids must be numeric (the long cast is what makes min() the canonical
+    label and lets the DuckDB oracle replay it); a non-castable id would
+    become NULL and downstream ``dedup_keep_canonical`` would then keep
+    every document — so any null src/dst after the cast raises ValueError.
     """
-    if on_max_iter not in ("raise", "warn"):
-        raise ValueError(f"on_max_iter must be 'raise' or 'warn', got {on_max_iter!r}")
-    if algorithm not in ("hashmin", "star"):
-        raise ValueError(f"algorithm must be 'hashmin' or 'star', got {algorithm!r}")
     half = pairs.select(
         F.col(a_col).try_cast("long").alias("src"),
         F.col(b_col).try_cast("long").alias("dst"),
-    )
-    if algorithm == "star":
-        n_null = half.where(
-            F.col("src").isNull() | F.col("dst").isNull()
-        ).count()
-        if n_null:
-            raise ValueError(
-                f"duplicate_clusters: {n_null} pair(s) have null/non-numeric "
-                f"ids after cast to long ({a_col}/{b_col}); numeric doc ids "
-                "are required for min-label canonicalization"
-            )
-        return _cc_star(half)
-    edges = (
-        half.union(
-            half.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        .distinct()
-        .cache()
-    )
-    n_null = edges.where(
-        F.col("src").isNull() | F.col("dst").isNull()
-    ).count()  # same cached pass that seeds labels below — no extra scan of pairs
+    ).localCheckpoint(eager=True)
+    n_null = half.where(F.col("src").isNull() | F.col("dst").isNull()).count()
     if n_null:
-        edges.unpersist()
         raise ValueError(
-            f"duplicate_clusters: {n_null} edge(s) have null/non-numeric ids "
-            f"after cast to long ({a_col}/{b_col}); numeric doc ids are "
-            "required for min-label canonicalization"
+            f"duplicate_clusters: {n_null} pair(s) have null/non-numeric "
+            f"ids after cast to long ({a_col}/{b_col}); numeric doc ids "
+            "are required for min-label canonicalization"
         )
-    labels = (
-        edges.select(F.col("src").alias("id"))
-        .distinct()
-        .select("id", F.col("id").alias("label"))
-        .localCheckpoint(eager=True)
-    )
-    changed = 0
-    for _ in range(max_iter):
-        neighbour = edges.join(
-            labels.withColumnRenamed("id", "src"), "src"
-        ).select(F.col("dst").alias("id"), "label")
-        new_labels = (
-            labels.union(neighbour)
-            .groupBy("id")
-            .agg(F.min("label").alias("label"))
-            .localCheckpoint(eager=True)
-        )
-        changed = (
-            new_labels.withColumnRenamed("label", "new_label")
-            .join(labels, "id")
-            .where(F.col("new_label") != F.col("label"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    edges.unpersist()
-    if changed:
-        msg = (
-            f"duplicate_clusters did not converge in max_iter={max_iter} "
-            f"rounds ({changed} label(s) still changing): some component has "
-            f"diameter > {max_iter} and its labels are not yet minimal "
-            "(under-merged clusters). Raise max_iter (rounds needed = "
-            "component diameter), or use algorithm='star' whose round count "
-            "is O(log^2 n) regardless of diameter."
-        )
-        if on_max_iter == "raise":
-            raise RuntimeError(msg)
-        import warnings
-
-        warnings.warn(msg, RuntimeWarning, stacklevel=2)
-    return labels.select(
-        F.col("id").alias("member_id"), F.col("label").alias("cluster_id")
-    )
+    return _cc_star(half)
 
 
 def _cc_star(half: DataFrame, safety_cap: int = 64) -> DataFrame:
     """Alternating large-star / small-star contraction (Kiveris, Lattanzi,
     Mirrokni, Rastogi, Vassilvitskii, "Connected Components in MapReduce and
-    Beyond", SoCC 2014): each round reattaches nodes to their neighborhood
-    minimum, halving component height — O(log²n) rounds w.h.p. regardless of
-    diameter, vs O(diameter) for hash-min propagation.
+    Beyond", SoCC 2014) over a materialized ``(src, dst)`` frame: each round
+    reattaches nodes to their neighborhood minimum, halving component
+    height — O(log²n) rounds w.h.p. regardless of diameter.
 
     Per round (both stars are one groupBy-min + one equi-join on node id):
 
@@ -389,20 +299,20 @@ def _cc_star(half: DataFrame, safety_cap: int = 64) -> DataFrame:
 
     Edges stay max→min oriented by construction after a round, components
     shrink toward stars centered on their minimum; convergence = edge set
-    unchanged (cheap (count, sum-of-hash) signature per round, confirmed
+    unchanged (cheap (count, xor-of-hash) signature per round, confirmed
     with an exact exceptAll check before exiting). Each round's edge set is
-    ``localCheckpoint``-ed for the same O(1)-plan reason as hash-min.
+    ``localCheckpoint``-ed, not merely cached: caching avoids recomputation
+    but the LOGICAL plan still grows per round and OOMs the driver's plan
+    tree past ~15 rounds; the checkpoint keeps the plan O(1). Superseded
+    checkpoint blocks are dropped by Spark's ContextCleaner once the
+    previous round's frame goes out of scope. ``safety_cap`` rounds is far
+    above the O(log²n) bound; reaching it raises.
 
     Labels: in a converged forest of stars every member edge points at its
-    component minimum; the original node set is unioned back with self
-    labels so no node can drop out of the answer.
+    component minimum; every endpoint of ``half`` is unioned back with a
+    self label so no node can drop out of the answer (self-loop-only nodes
+    included).
     """
-    nodes = (
-        half.select(F.col("src").alias("id"))
-        .union(half.select(F.col("dst").alias("id")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
     edges = (
         half.where(F.col("src") != F.col("dst"))
         .select(
@@ -466,7 +376,8 @@ def _cc_star(half: DataFrame, safety_cap: int = 64) -> DataFrame:
         )
     labels = (
         edges.select(F.col("u").alias("id"), F.col("v").alias("label"))
-        .union(nodes.select("id", F.col("id").alias("label")))
+        .union(half.select(F.col("src").alias("id"), F.col("src").alias("label")))
+        .union(half.select(F.col("dst").alias("id"), F.col("dst").alias("label")))
         .groupBy("id")
         .agg(F.min("label").alias("label"))
     )
@@ -478,21 +389,16 @@ def _cc_star(half: DataFrame, safety_cap: int = 64) -> DataFrame:
 def dedup_keep_canonical(
     df: DataFrame, pairs: DataFrame, id_col: str = "doc_id",
     a_col: str = "vec_a", b_col: str = "vec_b",
-    broadcast: bool = True,
 ) -> DataFrame:
     """Whole-corpus dedup: keep exactly one representative per duplicate
     cluster (the smallest id), pass singletons through untouched.
 
-    One left join of the corpus against the (usually small — only docs
-    that appear in a pair) cluster map; a doc survives iff its id IS its
-    cluster id (or it has no cluster). The dropped set is exactly
-    "non-canonical members of some cluster". ``broadcast=False`` falls
-    back to a shuffle join for the pathological regime where a large
-    fraction of the corpus is in some duplicate pair (cluster map too big
-    to broadcast)."""
-    clusters = duplicate_clusters(pairs, a_col, b_col)
-    if broadcast:
-        clusters = F.broadcast(clusters)
+    One left join of the corpus against the cluster map, which is
+    broadcast: it holds only docs that appear in some pair, so it is small
+    next to the corpus and the corpus is never shuffled for the join. A doc
+    survives iff its id IS its cluster id (or it has no cluster). The
+    dropped set is exactly "non-canonical members of some cluster"."""
+    clusters = F.broadcast(duplicate_clusters(pairs, a_col, b_col))
     joined = df.join(
         clusters,
         df[id_col] == clusters["member_id"],

@@ -25,6 +25,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from sonic_etl_spark.sources.multitable import _lww_reduce
+
 # converged source_code table schema (FIXTURES.md §2): merge keys, payload,
 # sha256 invariant, checked-cast + capped/lossless duals, LWW evidence cols.
 SOURCE_CODE_FIELDS: list[tuple[str, str]] = [
@@ -46,19 +48,6 @@ SOURCE_CODE_FIELDS: list[tuple[str, str]] = [
 
 KEY_COLS = ["repo", "path"]
 ORDER_COLS = ["last_offset", "last_partition_id", "commit"]
-
-
-def _lww(df: DataFrame, key_cols: list[str], order_cols: list[str]) -> DataFrame:
-    payload = [c for c in df.columns if c not in key_cols]
-    return (
-        df.groupBy(*key_cols)
-        .agg(
-            F.max_by(
-                F.struct(*payload), F.struct(*[F.col(c) for c in order_cols])
-            ).alias("_r")
-        )
-        .select(*key_cols, "_r.*")
-    )
 
 
 def salted_lww(
@@ -84,8 +73,8 @@ def salted_lww(
         "_salt",
         F.pmod(F.xxhash64(F.col(salt_col or order_cols[0])), F.lit(salt_buckets)),
     )
-    phase1 = _lww(salted, key_cols + ["_salt"], order_cols).drop("_salt")
-    return _lww(phase1, key_cols, order_cols)
+    phase1 = _lww_reduce(salted, key_cols + ["_salt"], order_cols).drop("_salt")
+    return _lww_reduce(phase1, key_cols, order_cols)
 
 
 def reduce_batch(typed: DataFrame, *, salt_buckets: int = 16) -> DataFrame:
@@ -119,36 +108,18 @@ def reduce_batch(typed: DataFrame, *, salt_buckets: int = 16) -> DataFrame:
     )
 
 
-def assert_no_decode_errors(typed: DataFrame) -> int:
-    """Fail-the-batch semantics (transformation/err.rs:1-31): any row with a
-    decode error aborts the batch (which is then retried upstream), instead of
-    silently dropping rows. Returns the clean row count.
-
-    NOTE: this is a standalone action — it evaluates the decode a second
-    time. The replay hot path uses :func:`observe_decode_errors` instead,
-    which rides the merge write job for free."""
-    agg = typed.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.count("decode_error").alias("bad"),
-        F.first("decode_error", ignorenulls=True).alias("example"),
-    ).first()
-    if agg["bad"]:
-        raise ValueError(
-            f"decode failed for {agg['bad']}/{agg['n']} rows in batch; "
-            f"first error: {agg['example']}"
-        )
-    return agg["n"]
-
-
 def observe_decode_errors(typed: DataFrame):
-    """Attach a zero-cost decode-error observation to the batch.
+    """Fail-the-batch semantics (transformation/err.rs:1-31) at zero cost:
+    any row with a decode error aborts the batch (which is then retried
+    upstream), instead of silently dropping or merging rows.
 
-    Returns (typed', check) where ``check()`` raises the same fail-the-batch
-    ValueError as :func:`assert_no_decode_errors` — but the metrics are
-    collected DURING whatever action consumes ``typed'`` (the merge's file
-    write), not by an extra pass. Call ``check()`` after the write and
-    before the snapshot commit: on failure the written files stay orphaned
-    and the table state is untouched (same crash-safety as any abort).
+    Returns (typed', check) where ``check()`` raises ValueError naming the
+    bad/total row counts and the first error, or returns the row count. The
+    counts are collected DURING whatever action consumes ``typed'`` (the
+    merge's file write), not by an extra pass. Call ``check()`` after the
+    write and before the snapshot commit: on failure the written files stay
+    orphaned and the table state is untouched (same crash-safety as any
+    abort).
     """
     from pyspark.sql import Observation
 

@@ -87,7 +87,9 @@ def _bucket_expr(n_buckets: int, cols: list[str]) -> F.Column:
 
 def _lww_reduce(df: DataFrame, key_cols: list[str], order_cols: list[str]) -> DataFrame:
     """One winning row per key: max_by over the total order (map-side partial
-    aggregation; no row_number/full-sort shuffle)."""
+    aggregation; no row_number/full-sort shuffle). Read-time resolution and
+    the batch reduce (``operators.merge.salted_lww``, both phases) share
+    this one definition, so both pick the same winner."""
     payload = [c for c in df.columns if c not in key_cols]
     return (
         df.groupBy(*key_cols)

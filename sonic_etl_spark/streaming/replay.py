@@ -68,28 +68,23 @@ def merge_batch(
     manifest: Manifest,
     metrics: dict,
     *,
-    validate: bool = True,
     salt_buckets: int = 16,
 ) -> dict:
-    """One single-table batch: decode → (validate) → reduce → merge.
+    """One single-table batch: decode → validate → reduce → merge.
 
-    ``validate`` fails the batch WITHOUT a second decode pass: the error
+    Validation fails the batch WITHOUT a second decode pass: the error
     counts are observed during the merge's own write job, checked after the
     files land but before the snapshot commit."""
-    typed = decode_change_events(raw)
-    check = None
-    if validate:
-        typed, check = observe_decode_errors(typed)
+    typed, check = observe_decode_errors(decode_change_events(raw))
     updates = reduce_batch(typed, salt_buckets=salt_buckets)
     return table.merge(updates, manifest, metrics=metrics, pre_commit_check=check)
 
 
 def _table_commit(change_log: DataFrame, table: TransactionalParquetTable,
-                  validate: bool, salt_buckets: int) -> Callable[[Manifest, dict], dict]:
+                  salt_buckets: int) -> Callable[[Manifest, dict], dict]:
     def commit(manifest: Manifest, bm: dict) -> dict:
         raw = filter_to_manifests(change_log, manifest)
-        return merge_batch(table, raw, manifest, bm, validate=validate,
-                           salt_buckets=salt_buckets)
+        return merge_batch(table, raw, manifest, bm, salt_buckets=salt_buckets)
 
     return commit
 
@@ -166,6 +161,10 @@ def replay(
 ) -> ReplayResult:
     """Replay all uncommitted offset ranges of ``change_log`` into ``table``.
 
+    Every batch is validated: a row that fails to decode fails its batch
+    before the snapshot commit (:func:`merge_batch`). ``validate`` is kept
+    only so callers that pass ``validate=True`` still run; False raises.
+
     ``monitor``: an optional :class:`~sonic_etl_spark.streaming.monitor.
     ReplayMonitor` — each batch's metrics dict is pushed to its /metrics
     tail and refreshes its /healthz liveness (ST6; ref main.rs:317-355's
@@ -186,9 +185,11 @@ def replay(
     (keep full history — e.g. when downstream incremental readers are
     anchored to old snapshots).
     """
+    if not validate:
+        raise ValueError("replay always validates decode errors; validate=False is not supported")
     table.create(SOURCE_CODE_FIELDS, KEY_COLS, ORDER_COLS)
     batches = plan_batches(log_heads(change_log), table.committed_ranges(), chunk_size)
-    commit = _table_commit(change_log, table, validate, salt_buckets)
+    commit = _table_commit(change_log, table, salt_buckets)
     return _run_batches(
         batches[:max_batches], commit, table, stop_requested=stop_requested,
         crash_after_batches=crash_after_batches,
@@ -203,7 +204,6 @@ def repair_gaps(
     *,
     chunk_size: int = 100_000,
     salt_buckets: int = 16,
-    validate: bool = True,
     compact_threshold: int | None = 16,
 ) -> ReplayResult:
     """Backfill offset gaps inside the committed manifest set (ST5 analog of
@@ -219,6 +219,6 @@ def repair_gaps(
     gaps = manifest_gap_audit(None, table.committed_ranges())
     batches = [[(pid, s, e)] for pid, lo, hi in gaps
                for s, e in chunk_range(lo, hi, chunk_size)]
-    commit = _table_commit(change_log, table, validate, salt_buckets)
+    commit = _table_commit(change_log, table, salt_buckets)
     return _run_batches(batches, commit, table, repair=True,
                         compact_threshold=compact_threshold)

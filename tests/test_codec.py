@@ -103,14 +103,22 @@ def test_field_attributed_errors(spark):
 
 
 def test_fail_the_batch(spark):
-    from sonic_etl_spark.operators.merge import assert_no_decode_errors
+    """The observed check counts rows during the action that consumes the
+    batch and raises fail-the-batch on any decode error."""
+    from sonic_etl_spark.operators.merge import observe_decode_errors
     import pytest
 
-    ok = decode_change_events(_event(spark, _raw_row("fine")))
-    assert assert_no_decode_errors(ok) == 1
-    bad = decode_change_events(_event(spark, "{not json"))
-    with pytest.raises(ValueError, match="malformed json"):
-        assert_no_decode_errors(bad)
+    ok, check = observe_decode_errors(
+        decode_change_events(_event(spark, _raw_row("fine")))
+    )
+    ok.collect()
+    assert check() == 1
+    bad, check = observe_decode_errors(
+        decode_change_events(_event(spark, "{not json"))
+    )
+    bad.collect()
+    with pytest.raises(ValueError, match=r"decode failed for 1/1 rows.*malformed json"):
+        check()
 
 
 def test_numeric_checked_range_and_validity(spark):

@@ -1,4 +1,5 @@
-"""Dedup operator unit tests (exact, shingles, Jaccard, MinHash, SimHash)."""
+"""Dedup operator unit tests (exact, shingles, Jaccard, MinHash, SimHash,
+duplicate clusters)."""
 
 import pyspark.sql.functions as F
 
@@ -128,44 +129,16 @@ def test_dedup_keep_canonical_drops_non_representatives(spark):
     assert kept == [0, 1, 2, 4]
 
 
-def test_duplicate_clusters_raises_past_max_iter(spark):
-    """A 26-node path graph has diameter 25: at max_iter=20 labels are still
-    moving, which must RAISE (silent partial labels under-dedup); warn mode
-    returns the partial labels with a RuntimeWarning; a big-enough max_iter
-    converges to one component labeled 0."""
-    import warnings
-
-    import pytest
-
-    path = spark.createDataFrame(
-        [(i, i + 1) for i in range(25)], "vec_a bigint, vec_b bigint"
-    )
-    with pytest.raises(RuntimeError, match="did not converge"):
-        dedup_ops.duplicate_clusters(path, max_iter=20)
-    with warnings.catch_warnings(record=True) as caught:
-        warnings.simplefilter("always")
-        partial = dedup_ops.duplicate_clusters(
-            path, max_iter=20, on_max_iter="warn"
-        ).collect()
-    assert any("did not converge" in str(w.message) for w in caught)
-    assert len(partial) == 26  # every node labeled, just not minimally
-    got = {
-        r["member_id"]: r["cluster_id"]
-        for r in dedup_ops.duplicate_clusters(path, max_iter=30).collect()
-    }
-    assert got == {i: 0 for i in range(26)}
-
-
 def test_duplicate_clusters_rejects_non_numeric_ids(spark):
-    """String ids that don't cast to long must raise, not silently become
-    NULL edges (which would make dedup_keep_canonical keep everything)."""
+    """String ids that don't cast to long, and NULL ids, must raise, not
+    silently become NULL edges (which would make dedup_keep_canonical keep
+    everything)."""
     import pytest
 
-    pairs = spark.createDataFrame(
-        [("docA", "docB")], "vec_a string, vec_b string"
-    )
-    with pytest.raises(ValueError, match="non-numeric"):
-        dedup_ops.duplicate_clusters(pairs)
+    for bad in ([("docA", "docB")], [("1", None)]):
+        pairs = spark.createDataFrame(bad, "vec_a string, vec_b string")
+        with pytest.raises(ValueError, match="non-numeric"):
+            dedup_ops.duplicate_clusters(pairs)
     # numeric strings are fine — the cast is exact
     ok = spark.createDataFrame([("1", "2")], "vec_a string, vec_b string")
     got = {
@@ -175,44 +148,72 @@ def test_duplicate_clusters_rejects_non_numeric_ids(spark):
     assert got == {1: 1, 2: 1}
 
 
-def test_star_contraction_matches_hashmin_and_handles_deep_chains(spark):
-    """algorithm='star' (large-star/small-star contraction) must produce
-    exactly the hash-min labels on arbitrary graphs, and converge on a
-    diameter-400 path in its O(log^2 n) rounds — where hash-min would need
-    max_iter=400."""
+def _union_find_labels(edges):
+    """Reference components: each node -> smallest id in its component
+    (union by smaller root keeps every root its component's minimum)."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in list(parent)}
+
+
+def test_duplicate_clusters_matches_union_find_and_handles_deep_chains(spark):
+    """Labels equal a pure-Python union-find on seeded random graphs with
+    self-loops and repeated (also reversed) edges, and on 26- and 400-node
+    paths, whose diameter is far past any per-round propagation budget.
+    Every graph lives in its own id block, so one call checks them all."""
     import random
 
-    rng = random.Random(7)
-    nodes = list(range(0, 120, 3))
-    raw = [
-        (rng.choice(nodes), rng.choice(nodes)) for _ in range(150)
-    ]
-    pairs = spark.createDataFrame(raw, "vec_a bigint, vec_b bigint")
-    hashmin = {
-        (r["member_id"], r["cluster_id"])
-        for r in dedup_ops.duplicate_clusters(pairs, max_iter=60).collect()
-    }
-    star = {
-        (r["member_id"], r["cluster_id"])
-        for r in dedup_ops.duplicate_clusters(pairs, algorithm="star").collect()
-    }
-    assert star == hashmin
-
-    path = spark.createDataFrame(
-        [(i, i + 1) for i in range(400)], "vec_a bigint, vec_b bigint"
-    )
+    edges = []
+    for seed in range(3):
+        rng = random.Random(seed)
+        base = seed * 1000
+        nodes = [base + i for i in range(0, 120, 3)]
+        g = [(rng.choice(nodes), rng.choice(nodes)) for _ in range(150)]
+        g += [(n, n) for n in rng.sample(nodes, 5)]  # self-loops
+        g += [(b, a) for a, b in rng.sample(g, 20)] + rng.sample(g, 20)
+        edges += g
+    edges += [(5000 + i, 5000 + i + 1) for i in range(25)]  # path-26
+    path400 = [(6000 + i, 6000 + i + 1) for i in range(400)]
+    edges += path400[::2] + path400[1::2]  # path-400, interleaved order
+    edges.append((9999, 9999))  # a node whose only pair is a self-loop
+    pairs = spark.createDataFrame(edges, "vec_a bigint, vec_b bigint")
     got = {
         r["member_id"]: r["cluster_id"]
-        for r in dedup_ops.duplicate_clusters(path, algorithm="star").collect()
+        for r in dedup_ops.duplicate_clusters(pairs).collect()
     }
-    assert got == {i: 0 for i in range(401)}
+    assert got == _union_find_labels(edges)
+    assert all(got[5000 + i] == 5000 for i in range(26))
+    assert all(got[6000 + i] == 6000 for i in range(401))
+    assert got[9999] == 9999
 
 
-def test_star_contraction_rejects_non_numeric_ids(spark):
-    import pytest
+def test_duplicate_clusters_reads_pairs_once(spark):
+    """The caller's pair lineage (a similarity self-join in production) is
+    evaluated exactly once: a Python UDF inside ``pairs`` counts the rows it
+    sees, and after clustering and collecting the labels it has seen each
+    pair once."""
+    from pyspark.sql.types import LongType
 
-    pairs = spark.createDataFrame(
-        [("docA", "docB")], "vec_a string, vec_b string"
+    seen = spark.sparkContext.accumulator(0)
+
+    def tap(x):
+        seen.add(1)
+        return x
+
+    raw = [(i, i + 1) for i in range(0, 40, 2)] + [(1, 3), (7, 7)]
+    pairs = spark.createDataFrame(raw, "a bigint, b bigint").select(
+        F.udf(tap, LongType())("a").alias("vec_a"), F.col("b").alias("vec_b")
     )
-    with pytest.raises(ValueError, match="non-numeric"):
-        dedup_ops.duplicate_clusters(pairs, algorithm="star")
+    got = dedup_ops.duplicate_clusters(pairs).collect()
+    assert len(got) == 40
+    assert seen.value == len(raw)

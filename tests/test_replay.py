@@ -107,13 +107,16 @@ def test_graceful_stop_between_batches(spark, tmp_path, log_df, oracle_hash, dri
 
 
 def test_inline_validation_fails_batch_without_committing(spark, tmp_path):
-    """validate=True rides the merge write job (Observation, no second
-    decode pass) and still aborts BEFORE the snapshot commit: a poison log
-    raises fail-the-batch and the table advances nothing."""
+    """Replay always validates: the check rides the merge write job
+    (Observation, no second decode pass) and still aborts BEFORE the
+    snapshot commit, so a poison log raises fail-the-batch and the table
+    advances nothing. Asking for no validation is refused."""
     poisoned = synthesize_change_events(spark, 500, poison_fraction=0.1)
     tab = TransactionalParquetTable(spark, str(tmp_path / "tv"), n_buckets=4)
+    with pytest.raises(ValueError, match="always validates"):
+        replay(poisoned, tab, validate=False)
     with pytest.raises(ValueError, match="decode failed"):
-        replay(poisoned, tab, chunk_size=1000, validate=True)
+        replay(poisoned, tab, chunk_size=1000)
     assert tab.committed_ranges() == set()
     assert tab.read().count() == 0
 
