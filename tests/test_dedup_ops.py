@@ -148,6 +148,76 @@ def test_duplicate_clusters_rejects_non_numeric_ids(spark):
     assert got == {1: 1, 2: 1}
 
 
+def test_duplicate_clusters_raises_past_max_iter(spark):
+    """The contraction loop's round cap is a hard stop: a 26-node path
+    cannot contract to a star in one round, so a cap of 1 RAISES (partial
+    labels would silently under-dedup); the default cap converges to one
+    component labeled 0."""
+    import pytest
+
+    half = spark.createDataFrame(
+        [(i, i + 1) for i in range(25)], "src bigint, dst bigint"
+    )
+    with pytest.raises(RuntimeError, match="did not converge in 1 rounds"):
+        dedup_ops._cc_star(half, safety_cap=1)
+    got = {
+        r["member_id"]: r["cluster_id"]
+        for r in dedup_ops._cc_star(half).collect()
+    }
+    assert got == {i: 0 for i in range(26)}
+
+
+def test_star_contraction_rejects_non_numeric_ids(spark):
+    """One non-castable id among many valid pairs still raises before any
+    contraction round runs, and the message counts the bad pairs."""
+    import pytest
+
+    pairs = spark.createDataFrame(
+        [(str(i), str(i + 1)) for i in range(30)] + [("7", "docB")],
+        "vec_a string, vec_b string",
+    )
+    with pytest.raises(ValueError, match=r"1 pair\(s\) have null/non-num"):
+        dedup_ops.duplicate_clusters(pairs)
+
+
+def _hashmin_labels(edges):
+    """Reference hash-min label propagation: every node starts as its own
+    label and takes the smallest label among its neighbors until no label
+    moves (one round per hop, so a path needs its diameter in rounds)."""
+    label = {x: x for e in edges for x in e}
+    moved = True
+    while moved:
+        moved = False
+        for a, b in edges:
+            m = min(label[a], label[b])
+            for x in (a, b):
+                if label[x] != m:
+                    label[x], moved = m, True
+    return label
+
+
+def test_star_contraction_matches_hashmin_and_handles_deep_chains(spark):
+    """Star contraction gives exactly the hash-min labels on a random graph
+    and on a 400-node path whose ids are shuffled along the path, so every
+    hop's neighbor minimum points a different way. Both graphs live in
+    their own id blocks and are clustered in one call."""
+    import random
+
+    rng = random.Random(7)
+    nodes = list(range(0, 120, 3))
+    edges = [(rng.choice(nodes), rng.choice(nodes)) for _ in range(150)]
+    order = [10_000 + i for i in range(401)]
+    rng.shuffle(order)
+    edges += list(zip(order, order[1:]))
+    pairs = spark.createDataFrame(edges, "vec_a bigint, vec_b bigint")
+    got = {
+        r["member_id"]: r["cluster_id"]
+        for r in dedup_ops.duplicate_clusters(pairs).collect()
+    }
+    assert got == _hashmin_labels(edges)
+    assert all(got[10_000 + i] == 10_000 for i in range(401))
+
+
 def _union_find_labels(edges):
     """Reference components: each node -> smallest id in its component
     (union by smaller root keeps every root its component's minimum)."""
