@@ -30,6 +30,7 @@ project N ways, one atomic commit — is unchanged.
 from __future__ import annotations
 
 import json
+import operator
 import os
 import shutil
 import time
@@ -37,8 +38,13 @@ import uuid
 from dataclasses import dataclass, field
 from functools import reduce
 
+import pyarrow as pa
+import pyarrow.dataset as ds
 import pyspark.sql.functions as F
+from py4j.java_gateway import JavaClass
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 LATEST = "_latest.json"
 SNAP_DIR = "_snapshots"
@@ -85,6 +91,35 @@ def _bucket_expr(n_buckets: int, cols: list[str]) -> F.Column:
     return F.pmod(F.xxhash64(*[F.col(c) for c in cols]), F.lit(n_buckets)).cast("int")
 
 
+def _driver_bucket(
+    spark: SparkSession, n_buckets: int, typed: list[tuple[str, object]]
+) -> int | None:
+    """The bucket :func:`_bucket_expr` gives a row holding these
+    ``(ddl_type, value)`` pairs, computed on the driver by the JVM's own
+    ``XXH64`` (no Spark job). ``xxhash64`` chains the columns: each one's
+    hash seeds the next, from 42. Over py4j the static ``hashInt``/
+    ``hashLong`` overloads are unreachable (instance methods share the
+    names), so ints go through an instance seeded with the running hash.
+    Python's ``%`` is ``pmod`` for a positive modulus. ``None`` when a
+    type or value is outside int/bigint/string. The classes are named by
+    their full names, which costs no py4j round trip (walking
+    ``spark._jvm.org...`` costs one per package)."""
+    client = spark._jvm._gateway_client
+    xxh = JavaClass("org.apache.spark.sql.catalyst.expressions.XXH64", client)
+    utf8 = JavaClass("org.apache.spark.unsafe.types.UTF8String", client)
+    h = 42
+    for ddl_type, v in typed:
+        t = _norm_type(ddl_type)
+        bits = {"int": 32, "bigint": 64}.get(t)
+        if bits and type(v) is int and -(1 << bits - 1) <= v < 1 << bits - 1:
+            h = xxh(h).hashInt(v) if bits == 32 else xxh(h).hashLong(v)
+        elif t == "string" and isinstance(v, str):
+            h = xxh.hashUTF8String(utf8.fromString(v), h)
+        else:
+            return None
+    return h % n_buckets
+
+
 def _lww_reduce(df: DataFrame, key_cols: list[str], order_cols: list[str]) -> DataFrame:
     """One winning row per key: max_by over the total order (map-side partial
     aggregation; no row_number/full-sort shuffle). Read-time resolution and
@@ -115,6 +150,10 @@ def _schema(tbl: dict, schema_id: int | None = None) -> dict:
         if s["schema_id"] == sid:
             return s
     raise KeyError(f"schema_id {sid} not found")
+
+
+def _ddl(schema: dict) -> str:
+    return ", ".join(f"`{f['name']}` {f['type']}" for f in schema["fields"])
 
 
 def _files(tbl: dict) -> list[dict]:
@@ -280,8 +319,7 @@ class _TableSetCore:
                 path = os.path.join(self.path, f["path"])
                 by_schema.setdefault(f["schema_id"], []).append(path)
         if not by_schema:
-            ddl = ", ".join(f"`{f['name']}` {f['type']}" for f in cur["fields"])
-            return self.spark.createDataFrame([], ddl)
+            return self.spark.createDataFrame([], _ddl(cur))
         parts = []
         for schema_id, paths in by_schema.items():
             raw = self.spark.read.parquet(*paths)
@@ -322,15 +360,70 @@ class _TableSetCore:
         return self._read(name, snap=eligible[-1])
 
     def _lookup(self, name: str, key: dict) -> DataFrame:
-        """Point read (the serving path): hash the key by the member's
-        bucket columns to its ONE bucket, read only that bucket's base+delta
-        chain — 1/n_buckets of the table, further bounded by compaction —
-        filter to the key and LWW-resolve. Pass the key by CURRENT column
-        names (post-rename names after evolve)."""
+        """Point read (the serving path), served on the driver with no Spark
+        job. Pass the key by CURRENT column names (post-rename names after
+        evolve).
+
+        The key hashes to its ONE bucket by the JVM's own XXH64 over the
+        member's bucket columns, mod the SNAPSHOT's ``n_buckets``
+        (:func:`_driver_bucket`, equal to :func:`_bucket_expr`); pyarrow
+        reads that bucket's files filtered on the key's own equality, one
+        row group at a time, each projected by field id from its
+        ``schema_id`` as :meth:`_scan` does; the candidates resolve by
+        ``_lww_reduce``'s order (ascending struct order, NULLs first) and a
+        tombstone winner reads as absent (:func:`_live`). The result is an
+        Arrow-backed local relation, so collecting it runs no job either.
+        Files are never pruned by zone-map stats here (a pruned delta file
+        can hide the LWW winner). A NULL key part matches nothing. Key
+        types other than int, bigint and string take the Spark path,
+        :meth:`_lookup_spark`."""
         snap, tbl = self._table(name)
-        kc, bc = tbl["key_cols"], tbl["bucket_cols"]
+        kc = tbl["key_cols"]
         if sorted(key) != sorted(kc):
             raise KeyError(f"lookup needs exactly the key columns {kc}")
+        cur = _schema(tbl)
+        schema = StructType.fromDDL(_ddl(cur))
+        target = to_arrow_schema(schema)
+        if any(key[c] is None for c in kc):
+            return self.spark.createDataFrame(target.empty_table(), schema)
+        types = {f["name"]: f["type"] for f in cur["fields"]}
+        bucket = _driver_bucket(
+            self.spark, snap["n_buckets"], [(types[c], key[c]) for c in tbl["bucket_cols"]]
+        )
+        if bucket is None:
+            return self._lookup_spark(name, key, snap)
+        ids = {f["name"]: f["id"] for f in cur["fields"]}
+        parts = [target.empty_table()]
+        for fent in tbl["buckets"].get(str(bucket), {"files": []})["files"]:
+            at_write = {f["id"]: f["name"] for f in _schema(tbl, fent["schema_id"])["fields"]}
+            match = reduce(operator.and_, [ds.field(at_write[ids[c]]) == key[c] for c in kc])
+            raw = ds.dataset(os.path.join(self.path, fent["path"]), format="parquet")
+            raw = raw.to_table(filter=match)
+            cols = []
+            for f, tf in zip(cur["fields"], target):
+                old = at_write.get(f["id"])
+                col = raw[old] if old in raw.column_names else pa.nulls(raw.num_rows)
+                cols.append(col.cast(tf.type))
+            parts.append(pa.Table.from_arrays(cols, schema=target))
+        rows = pa.concat_tables(parts)
+        if rows.num_rows:
+            order = rows.select(tbl["order_cols"]).to_pylist()
+            best = max(
+                range(len(order)),
+                key=lambda i: [(v is not None, v) for v in order[i].values()],
+            )
+            rows = rows.slice(best, 1)
+            if "op" in rows.column_names and rows["op"][0].as_py() == "delete":
+                rows = rows.slice(0, 0)
+        return self.spark.createDataFrame(rows, schema)
+
+    def _lookup_spark(self, name: str, key: dict, snap: dict | None = None) -> DataFrame:
+        """The point read as Spark jobs: a one-row job for the bucket id,
+        then that bucket's scan filtered to the key and LWW-resolved. The
+        fallback for key types the driver hash does not cover, and the
+        reference the driver path is tested against."""
+        snap, tbl = self._table(name, snap)
+        kc, bc = tbl["key_cols"], tbl["bucket_cols"]
         types = {f["name"]: f["type"] for f in _schema(tbl)["fields"]}
         one = self.spark.createDataFrame(
             [tuple(key[c] for c in bc)], ", ".join(f"`{c}` {types[c]}" for c in bc)

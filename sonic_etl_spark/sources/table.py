@@ -120,7 +120,10 @@ class TransactionalParquetTable(_TableSetCore):
 
     def lookup(self, **key) -> DataFrame:
         """Point read of one key by CURRENT column names:
-        ``lookup(repo="r", path="p")``; reads only the key's bucket."""
+        ``lookup(repo="r", path="p")``. Served on the driver with no Spark
+        job: reads only the key's bucket with pyarrow and returns a local
+        relation (int/bigint/string keys; other key types take the Spark
+        path). See ``_TableSetCore._lookup``."""
         return self._lookup(MEMBER, key)
 
     def read_for_keys(self, keys: DataFrame) -> DataFrame:

@@ -282,21 +282,35 @@ def test_tableset_read_changes_incremental(spark, tmp_path, log_df):
     assert inc.count() > 0
 
 
-def test_tableset_lookup_single_bucket(spark, tmp_path, log_df):
+def test_tableset_lookup_single_bucket(
+    spark, tmp_path, log_df, spark_jobs, opened_paths
+):
     """Serving-path point reads on fan-out tables: only the key's bucket is
-    scanned; file_versions (bucketed by a PREFIX of its key) still prunes."""
+    scanned, with no Spark job; file_versions (bucketed by a PREFIX of its
+    key) still prunes; each equals the Spark reference path."""
     ts = TransactionalTableSet(spark, str(tmp_path / "f11"), n_buckets=8)
     replay_fanout(log_df, ts, chunk_size=1000, on_error="quarantine")
-    row = ts.read("source_code").select("repo", "path").first()
-    hit = ts.lookup("source_code", repo=row["repo"], path=row["path"])
-    assert hit.count() == 1
-    assert len({f.split("_pb=")[1].split("/")[0] for f in hit.inputFiles()}) == 1
 
+    def bucket_ids(paths):
+        return {p.split("_pb=")[1].split("/")[0] for p in paths}
+
+    row = ts.read("source_code").select("repo", "path").first()
     v = ts.read("file_versions").select("repo", "path", "commit").first()
-    vhit = ts.lookup(
-        "file_versions", repo=v["repo"], path=v["path"], commit=v["commit"]
-    )
-    assert vhit.count() == 1
+    q = ts.read("quarantine").select("partition_id", "offset").first()
+    for name, key in (
+        ("source_code", row.asDict()),
+        ("file_versions", v.asDict()),
+        ("quarantine", q.asDict()),
+    ):
+        opened_paths.clear()
+        rows, jobs = spark_jobs(lambda: ts.lookup(name, **key).collect())
+        assert len(rows) == 1 and jobs == []
+        total_files = sum(ts.files_per_bucket(name).values())
+        assert 0 < len(opened_paths) < total_files
+        assert len(bucket_ids(opened_paths)) == 1
+        ref = ts._lookup_spark(name, key)
+        assert ref.collect() == rows
+        assert bucket_ids(ref.inputFiles()) == bucket_ids(opened_paths)
 
     import pytest as _pytest
     with _pytest.raises(KeyError, match="key columns"):

@@ -49,7 +49,7 @@ def full(spark):
     return _verdict_map(curate_full(_df(spark, _corpus())))
 
 
-def test_incremental_matches_full_recompute(spark, tmp_path, full):
+def test_incremental_matches_full_recompute(spark, tmp_path, full, spark_jobs):
     rows = sorted(_corpus(), key=lambda r: r[2])  # arrival order
     batches = [rows[:12], rows[12:25], rows[25:]]
     cur = IncrementalCurator(spark, str(tmp_path / "c1"), n_buckets=4).create()
@@ -63,6 +63,21 @@ def test_incremental_matches_full_recompute(spark, tmp_path, full):
     assert reasons == {"kept", "exact_dup", "near_dup", "quality"}
     # earliest ARRIVAL is canonical, not smallest doc_id
     assert got[45][2] == "kept" and got[46][2] == "exact_dup"
+
+    # point reads of the state run no Spark job and match the Spark path:
+    # every verdict (bigint key) plus an absent id, then one row of each
+    # minima member (string key; int + string key)
+    looked, jobs = spark_jobs(
+        lambda: {d: _verdict_map(cur.verdicts.lookup(doc_id=d)) for d in [*full, 999]}
+    )
+    assert jobs == []
+    assert looked == {**{d: {d: v} for d, v in full.items()}, 999: {}}
+    for name in ("hash_minima", "bucket_minima"):
+        kc = cur.state.latest()["tables"][name]["key_cols"]
+        key = cur.state.read(name).select(*kc).first().asDict()
+        hit, jobs = spark_jobs(lambda: cur.state.lookup(name, **key).collect())
+        assert len(hit) == 1 and jobs == []
+        assert hit == cur.state._lookup_spark(name, key).collect()
 
 
 def test_incremental_redelivery_is_noop(spark, tmp_path, full):

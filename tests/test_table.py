@@ -305,10 +305,64 @@ def test_read_changes_incremental_scan(spark, tmp_path):
     assert tab.read_changes(from_snapshot_id=new_anchor).count() == 1
 
 
-def test_lookup_reads_single_bucket(spark, tmp_path):
+def _bucket_ids(paths):
+    return {p.split("_pb=")[1].split("/")[0] for p in paths}
+
+
+def test_driver_bucket_equals_bucket_expr(spark):
+    """The driver-side bucket id (py4j XXH64 chain) equals the writer's
+    ``pmod(xxhash64(...), n)`` over random and edge int, bigint and string
+    values, single- and multi-column keys, the fan-out ``file_versions``
+    prefix bucket columns and several bucket counts."""
+    import random
+
+    from sonic_etl_spark.sources.multitable import _bucket_expr, _driver_bucket
+    from sonic_etl_spark.streaming.fanout import FANOUT_SPECS
+
+    rng = random.Random(2024)
+    ints = [0, -1, 1, 2**31 - 1, -(2**31)] + [
+        rng.randint(-(2**31), 2**31 - 1) for _ in range(20)
+    ]
+    longs = [0, -1, 2**63 - 1, -(2**63), 2**31] + [
+        rng.randint(-(2**63), 2**63 - 1) for _ in range(20)
+    ]
+    alphabet = "az09 -_/é日本語\U0001f600\x00"
+    strs = ["", "a", "é", "日本語", "\U0001f600", "a\x00b"] + [
+        "".join(rng.choice(alphabet) for _ in range(rng.randint(0, 12))) for _ in range(19)
+    ]
+    rows = [
+        (ints[i], longs[i], strs[i], strs[-1 - i], strs[(7 * i) % len(strs)])
+        for i in range(len(ints))
+    ]
+    types = {"i": "int", "b": "bigint", "repo": "string", "path": "string", "commit": "string"}
+    df = spark.createDataFrame(rows, ", ".join(f"{c} {t}" for c, t in types.items()))
+    prefix = FANOUT_SPECS["file_versions"].bucket_cols
+    assert prefix == ["repo", "path"] != FANOUT_SPECS["file_versions"].key_cols
+    col_sets = [["i"], ["b"], ["repo"], prefix, ["b", "i"], ["commit", "b", "i", "path"]]
+    n_sizes = [1, 2, 7, 8, 32, 1009]
+    exprs = [
+        _bucket_expr(n, cols).alias(f"h{j}_{n}")
+        for j, cols in enumerate(col_sets)
+        for n in n_sizes
+    ]
+    got = df.select("*", *exprs).collect()
+    for r in got:
+        for j, cols in enumerate(col_sets):
+            for n in n_sizes:
+                typed = [(types[c], r[c]) for c in cols]
+                assert _driver_bucket(spark, n, typed) == r[f"h{j}_{n}"], (cols, n, r)
+    # values the JVM hash does not cover by type or range: no bucket
+    assert _driver_bucket(spark, 8, [("double", 1.5)]) is None
+    assert _driver_bucket(spark, 8, [("int", 2**31)]) is None
+    assert _driver_bucket(spark, 8, [("bigint", "7")]) is None
+    assert _driver_bucket(spark, 8, [("bigint", True)]) is None
+
+
+def test_lookup_reads_single_bucket(spark, tmp_path, spark_jobs, opened_paths):
     """Point reads touch only the key's bucket (1/n_buckets of the files),
-    respect LWW and tombstones, and survive a key-column rename (bucketing
-    follows the snapshot's key columns, not hardcoded names)."""
+    launch no Spark job, respect LWW and tombstones, and survive a
+    key-column rename (bucketing follows the snapshot's key columns, not
+    hardcoded names)."""
     tab = TransactionalParquetTable(spark, str(tmp_path / "t"), n_buckets=8)
     tab.create(FIELDS)
     many = _df(
@@ -318,13 +372,17 @@ def test_lookup_reads_single_bucket(spark, tmp_path):
     )
     tab.merge(many, [(0, 0, 199)])
 
-    hit = tab.lookup(repo="r7", path="p7")
-    rows = hit.collect()
+    rows, jobs = spark_jobs(lambda: tab.lookup(repo="r7", path="p7").collect())
     assert len(rows) == 1 and rows[0]["content"] == "v7"
+    assert jobs == []
     total_files = sum(tab.files_per_bucket().values())
-    touched = hit.inputFiles()
-    assert 0 < len(touched) < total_files
-    assert len({f.split("_pb=")[1].split("/")[0] for f in touched}) == 1
+    assert 0 < len(opened_paths) < total_files
+    assert len(_bucket_ids(opened_paths)) == 1
+    # the Spark reference path scans the same single bucket
+    ref = tab._lookup_spark("t", {"repo": "r7", "path": "p7"})
+    assert ref.collect() == rows
+    assert 0 < len(ref.inputFiles()) < total_files
+    assert _bucket_ids(ref.inputFiles()) == _bucket_ids(opened_paths)
 
     # LWW: newer offset wins in the same bucket
     tab.merge(_df(spark, [("r7", "p7", "d" * 40, "v7b", "upsert", 999, 0)]),
@@ -605,15 +663,19 @@ def test_rebucket_partition_evolution(spark, tmp_path):
     assert tab.lookup(repo="r7", path="p7").first()["content"] == "v7b"
 
 
-def test_random_lifecycle_with_rollback_rebucket_matches_model(spark, tmp_path):
+def test_random_lifecycle_with_rollback_rebucket_matches_model(spark, tmp_path, spark_jobs):
     """Model-based check over the FULL lifecycle vocabulary: merge /
     compact / expire / rename-evolve / widen / rebucket / rollback in a
     seeded random interleaving must track a plain-dict LWW model — with
     rollback restoring both the model state AND the schema epoch (a
-    rollback across a rename reverts the column name too)."""
+    rollback across a rename reverts the column name too). After every
+    step the driver-side ``lookup`` of a sampled live, deleted and absent
+    key equals the model and the Spark reference path, and a NULL key part
+    reads empty."""
     import random
 
     rng = random.Random(4321)
+    pick = random.Random(99)  # key sampling; keeps rng's step sequence
     tab = TransactionalParquetTable(spark, str(tmp_path / "t"), n_buckets=4)
     tab.create(FIELDS)
     model: dict[tuple, tuple] = {}
@@ -682,6 +744,16 @@ def test_random_lifecycle_with_rollback_rebucket_matches_model(spark, tmp_path):
                     for f in cur["fields"]
                 )
         snaps[tab.latest()["snapshot_id"]] = (dict(model), content_col)
+
+        live = [k for k, (_, _, kind) in model.items() if kind != "delete"]
+        deleted = [k for k, (_, _, kind) in model.items() if kind == "delete"]
+        for k in [pick.choice(ks) for ks in (live, deleted) if ks] + [("r9", "p9")]:
+            key = {"repo": k[0], "path": k[1]}
+            fast = [r.asDict() for r in tab.lookup(**key).collect()]
+            assert fast == [r.asDict() for r in tab._lookup_spark("t", key).collect()]
+            want_v = [model[k][1]] if k in live else []
+            assert [r[content_col] for r in fast] == want_v, (step, op, k)
+        assert spark_jobs(lambda: tab.lookup(repo="r0", path=None).collect()) == ([], [])
 
     got = {(r["repo"], r["path"]): r[content_col] for r in tab.read().collect()}
     want = {k: v for k, (o, v, kind) in model.items() if kind != "delete"}

@@ -39,7 +39,15 @@ def fmt(df) -> str:
     return buf.getvalue()
 
 
+def mask_ids(plan: str) -> str:
+    """Plan text without Spark's per-session expression and plan ids, so a
+    regenerated EXPLAIN.md differs only where a plan did."""
+    return re.sub(r"plan_id=\d+", "plan_id=N", re.sub(r"#\d+", "#N", plan))
+
+
 def check(name: str, plan: str, must: list[str], must_not: list[str] = ()) -> list[str]:
+    """PASS/FAIL lines for the patterns, matched against the raw plan, then
+    the plan with its ids masked."""
     lines = [f"## {name}\n"]
     ok = True
     for pat in must:
@@ -50,7 +58,7 @@ def check(name: str, plan: str, must: list[str], must_not: list[str] = ()) -> li
         hit = re.search(pat, plan) is not None
         ok &= not hit
         lines.append(f"- {'PASS' if not hit else 'FAIL'} forbids `{pat}`")
-    lines.append("\n```\n" + plan[:4000] + "\n```\n")
+    lines.append("\n```\n" + mask_ids(plan)[:4000] + "\n```\n")
     print(f"{'OK ' if ok else 'BAD'} {name}")
     return lines
 
