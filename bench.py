@@ -197,7 +197,7 @@ def replay_leg(cores: int, monitor: bool = False) -> dict:
     with _probed(scrapes) if monitor else contextlib.nullcontext() as mon:
         t0 = time.time()
         res = replay(spark.read.parquet(LOG_DIR), tab, chunk_size=CHUNK,
-                     monitor=mon, salt_buckets=32)
+                     monitor=mon)
         out = _rate(res, time.time() - t0)
     out["batches"] = res.batches_applied
     if monitor:
@@ -218,7 +218,7 @@ def fanout_leg(cores: int) -> dict:
     ts = TransactionalTableSet(spark, tdir, n_buckets=64)
     t0 = time.time()
     res = replay_fanout(spark.read.parquet(LOG_DIR), ts, chunk_size=CHUNK,
-                        on_error="fail", salt_buckets=32)
+                        on_error="fail")
     out = _rate(res, time.time() - t0)
     out["tables"] = {n: ts.read(n).count() for n in ("source_code", "file_versions")}
     shutil.rmtree(tdir, ignore_errors=True)

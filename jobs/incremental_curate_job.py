@@ -17,8 +17,8 @@ Cost per run is O(new docs): the state joins are bucket-pruned point-reads
         --id-col doc_id --text-col text --offset-col last_offset
 
 Re-running after a crash is safe: each apply is one manifest-idempotent
-commit of the curator's state set and the source frontier only advances
-after a successful apply, so a failed run is simply redelivered. Prints one
+commit of the curator's state set that also records the source frontier,
+so a failed run commits neither and is simply redelivered. Prints one
 JSON line with the run's counts and the verdict totals.
 """
 

@@ -7,7 +7,7 @@ Packaging (north rule: "packaged for spark-submit --py-files"):
     spark-submit --py-files /tmp/sonic_etl_spark.zip jobs/replay_job.py \
         --log /path/to/change_events_parquet \
         --table /path/to/converged_table \
-        --chunk-size 100000 --salt-buckets 32 --n-buckets 64
+        --chunk-size 100000 --n-buckets 64
 
 On a real cluster the same invocation gains ``--master yarn``/``--deploy-mode
 cluster`` etc.; the job itself is master-agnostic (SparkSession comes from
@@ -38,12 +38,11 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
-def main() -> None:
+def main(argv: list[str] | None = None) -> dict:
     ap = argparse.ArgumentParser(description=__doc__)
     ap.add_argument("--log", required=True, help="change_events parquet path")
     ap.add_argument("--table", required=True, help="converged table directory")
     ap.add_argument("--chunk-size", type=int, default=100_000)
-    ap.add_argument("--salt-buckets", type=int, default=32)
     ap.add_argument("--n-buckets", type=int, default=64)
     ap.add_argument("--max-batches", type=int, default=None)
     ap.add_argument("--stop-file", default=None,
@@ -54,14 +53,14 @@ def main() -> None:
     ap.add_argument("--on-error", choices=["fail", "quarantine"], default="fail",
                     help="(--fanout only) poison-row policy")
     ap.add_argument("--expire-keep", type=int, default=None,
-                    help="after replay, expire snapshots keeping the N most "
-                         "recent (retention maintenance; delta roots already "
-                         "superseded by compaction are reclaimed)")
+                    help="after each committed batch, expire snapshots keeping "
+                         "the N most recent (retention maintenance; delta roots "
+                         "already superseded by compaction are reclaimed)")
     ap.add_argument("--metrics-port", type=int, default=None,
                     help="serve GET /healthz (liveness, 503 when stale) and "
                          "GET /metrics (totals + per-batch tail) on this "
                          "port for the duration of the replay")
-    args = ap.parse_args()
+    args = ap.parse_args(argv)
 
     from sonic_etl_spark.session import get_spark
 
@@ -85,10 +84,10 @@ def main() -> None:
             log,
             tables,
             chunk_size=args.chunk_size,
-            salt_buckets=args.salt_buckets,
             max_batches=args.max_batches,
             on_error=args.on_error,
             stop_requested=stop,
+            expire_keep=args.expire_keep,
             monitor=monitor,
         )
         snapshot = tables.latest()["snapshot_id"]
@@ -101,9 +100,9 @@ def main() -> None:
             log,
             table,
             chunk_size=args.chunk_size,
-            salt_buckets=args.salt_buckets,
             max_batches=args.max_batches,
             stop_requested=stop,
+            expire_keep=args.expire_keep,
             monitor=monitor,
         )
         snapshot = table.latest()["snapshot_id"]
@@ -115,12 +114,10 @@ def main() -> None:
         "events_per_sec": res.events_per_sec,
         "snapshot": snapshot,
     }
-    if args.expire_keep is not None:
-        target = tables if args.fanout else table
-        out["retention"] = target.expire_snapshots(keep_last=args.expire_keep)
     if monitor is not None:
         monitor.stop()
     print(json.dumps(out))
+    return out
 
 
 if __name__ == "__main__":

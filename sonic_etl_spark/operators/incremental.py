@@ -57,7 +57,6 @@ order columns. Nothing reads O(corpus).
 
 from __future__ import annotations
 
-import json
 import os
 from collections.abc import Callable
 
@@ -193,6 +192,11 @@ class IncrementalCurator:
         conservative choice for dedup). Within one :meth:`sync` window only
         the latest version is curated: the delta is LWW-reduced per key.
         """
+        return self._apply(batch, [])
+
+    def _apply(self, batch: DataFrame, marks: list[tuple]) -> dict:
+        """:meth:`apply`, with ``marks`` (the sync frontier) committed
+        alongside the batch's range."""
         b = batch.select(
             F.col("doc_id").cast("long").alias("doc_id"),
             F.col("text").alias("text"),
@@ -214,7 +218,7 @@ class IncrementalCurator:
         _one_row_per_id(span, "doc_id")
         if span["n"] == 0:
             return {"status": "no_data"}
-        manifest = [(0, int(span["lo"]), int(span["hi"]))]
+        manifest = [(0, int(span["lo"]), int(span["hi"])), *marks]
 
         # MinHash is per doc, so banding every quality survivor and joining
         # the exact-canon filter afterwards gives the canonicals' bands
@@ -237,10 +241,9 @@ class IncrementalCurator:
                 "doc_id",
                 "off",
                 # <= not <: a re-batched redelivery (a stream restarted on
-                # a fresh checkpoint, or a sync whose delta grew after a
-                # crash before its frontier write) commits under a NEW
-                # manifest range, so it sees ITSELF in prior state (prior ==
-                # own rank) and must still be canonical
+                # a fresh checkpoint) commits under a NEW manifest range,
+                # so it sees ITSELF in prior state (prior == own rank) and
+                # must still be canonical
                 (
                     (_rank() == F.col("_batch_min"))
                     & (
@@ -326,19 +329,19 @@ class IncrementalCurator:
     ) -> dict:
         """Tail a source table's CDC-out stream: apply the rows appended
         since the last sync (``read_changes`` — O(new data) by file-identity
-        diff) as one arrival batch, then advance the persisted frontier.
+        diff) as one arrival batch, committing the new frontier with it.
 
-        Crash between apply and the frontier write → next sync redelivers
-        the same delta and the commit no-ops (manifest idempotence); a
-        delta that grew meanwhile re-applies as a re-batched redelivery. A
-        compaction/expiry rewrite on the source raises inside read_changes
-        (the documented boundary refusal) rather than replaying history.
+        The frontier is state: a crashed sync commits neither, and a
+        ``state.rollback`` takes the frontier back with the rows, so the
+        next sync re-applies what the rollback undid. A compaction/expiry
+        rewrite on the source raises inside read_changes (the documented
+        boundary refusal) rather than replaying history.
         """
-        return _sync_frontier(src, self.path, lambda ch: self.apply(ch.select(
+        return _sync_frontier(src, self.state, lambda ch, mark: self._apply(ch.select(
             F.col(id_col).alias("doc_id"),
             F.col(text_col).alias("text"),
             F.col(offset_col).alias("off"),
-        )))
+        ), mark))
 
 
 def _one_row_per_id(span: Row, id_col: str) -> None:
@@ -353,31 +356,30 @@ def _one_row_per_id(span: Row, id_col: str) -> None:
 
 
 def _sync_frontier(
-    src: TransactionalParquetTable, state_dir: str, apply: Callable[[DataFrame], dict]
+    src: TransactionalParquetTable,
+    state: TransactionalTableSet | TransactionalParquetTable,
+    apply: Callable[[DataFrame, list[tuple]], dict],
 ) -> dict:
     """One CDC tail step shared by the incremental consumers: ``apply`` the
-    source rows appended since the snapshot id persisted in
-    ``state_dir/_src_frontier.json``, then advance that frontier (tmp +
-    rename, so a reader never sees a torn file). No-op when the frontier is
-    already at the source's latest snapshot."""
+    source rows appended since the consumer's frontier together with the
+    new frontier mark ``("src", snapshot_id)``, which ``apply`` commits to
+    ``state`` in the same commit as the rows (an empty delta commits the
+    mark alone). The frontier is the highest such mark in ``state``'s
+    committed manifests. No-op when it is already the source's latest
+    snapshot."""
     snap = src.latest()
     if snap is None:
         raise FileNotFoundError(f"source table {src.path} does not exist")
     to_id = snap["snapshot_id"]
-    fp = os.path.join(state_dir, "_src_frontier.json")
-    last = None
-    if os.path.exists(fp):
-        with open(fp) as f:
-            last = json.load(f)["snapshot_id"]
+    last = max((m[1] for m in state.committed_marks() if m[0] == "src"), default=None)
     if last == to_id:
         return {"status": "noop", "snapshot_id": to_id}
+    mark = [("src", to_id)]
     res = apply(
-        src.read_changes(from_snapshot_id=last, to_snapshot_id=to_id, reduced=True)
+        src.read_changes(from_snapshot_id=last, to_snapshot_id=to_id, reduced=True), mark
     )
-    tmp = fp + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump({"snapshot_id": to_id}, f)
-    os.rename(tmp, fp)
+    if res["status"] == "no_data":
+        state._merge_all({}, mark)
     return {**res, "snapshot_id": to_id}
 
 
@@ -433,6 +435,9 @@ class IncrementalIvfIndex:
         """Assign one arrival batch of (vec_id, embedding, off) rows, one
         per vec_id, to cells and merge into postings (manifest-idempotent,
         same monotone offset contract as IncrementalCurator.apply)."""
+        return self._apply(batch, [])
+
+    def _apply(self, batch: DataFrame, marks: list[tuple]) -> dict:
         from sonic_etl_spark.operators import similarity as sim_ops
 
         b = batch.select(
@@ -456,7 +461,7 @@ class IncrementalIvfIndex:
             "centroid_cos",
         )
         res = self.postings.merge(
-            rows, [(0, int(span["lo"]), int(span["hi"]))]
+            rows, [(0, int(span["lo"]), int(span["hi"])), *marks]
         )
         return {"status": res["status"], "n_vectors": int(span["n"])}
 
@@ -467,13 +472,13 @@ class IncrementalIvfIndex:
         vec_col: str = "embedding",
         offset_col: str = "last_offset",
     ) -> dict:
-        """Tail a source table's CDC-out stream (same frontier/redelivery
-        contract as IncrementalCurator.sync)."""
-        return _sync_frontier(src, self.path, lambda ch: self.apply(ch.select(
+        """Tail a source table's CDC-out stream (same frontier contract as
+        IncrementalCurator.sync; the frontier is a mark in ``postings``)."""
+        return _sync_frontier(src, self.postings, lambda ch, mark: self._apply(ch.select(
             F.col(id_col).alias("vec_id"),
             F.col(vec_col).alias("embedding"),
             F.col(offset_col).alias("off"),
-        )))
+        ), mark))
 
     def cells(self) -> DataFrame:
         """Current postings state: (vec_id, centroid_id, centroid_cos) —

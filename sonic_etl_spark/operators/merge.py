@@ -49,6 +49,10 @@ SOURCE_CODE_FIELDS: list[tuple[str, str]] = [
 KEY_COLS = ["repo", "path"]
 ORDER_COLS = ["last_offset", "last_partition_id", "commit"]
 
+# phase-1 reducers per key; map-side partial aggregation, not this count, is
+# what absorbs duplicate storms (BENCH.md skew section)
+SALT_BUCKETS = 16
+
 
 def salted_lww(
     df: DataFrame,
@@ -56,14 +60,13 @@ def salted_lww(
     order_cols: list[str],
     *,
     salt_col: str | None = None,
-    salt_buckets: int = 16,
 ) -> DataFrame:
     """One winning row per key under the total order — two-phase salted.
 
     The engine's core reduction (see :func:`reduce_batch` for the CDC-typed
     wrapper): phase 1 aggregates per (key, salt) with map-side partial
     combine so no reducer sees a hot key's full row set; phase 2 merges the
-    ≤``salt_buckets`` per-salt winners. max is associative/commutative, so
+    ≤``SALT_BUCKETS`` per-salt winners. max is associative/commutative, so
     the composition equals a single max for ANY salt assignment.
 
     ``salt_col`` defaults to the first order column (any value-bearing column
@@ -71,21 +74,21 @@ def salted_lww(
     """
     salted = df.withColumn(
         "_salt",
-        F.pmod(F.xxhash64(F.col(salt_col or order_cols[0])), F.lit(salt_buckets)),
+        F.pmod(F.xxhash64(F.col(salt_col or order_cols[0])), F.lit(SALT_BUCKETS)),
     )
     phase1 = _lww_reduce(salted, key_cols + ["_salt"], order_cols).drop("_salt")
     return _lww_reduce(phase1, key_cols, order_cols)
 
 
-def reduce_batch(typed: DataFrame, *, salt_buckets: int = 16) -> DataFrame:
+def reduce_batch(typed: DataFrame) -> DataFrame:
     """Typed decoded events → one winning row per (repo, path).
 
     Phase 0: project to the table schema (offset → last_offset etc.).
     Phase 1: salted partial LWW — groupBy(key, salt(commit)) so a hot key's
-             rows split across ``salt_buckets`` reducers. This also IS the
+             rows split across ``SALT_BUCKETS`` reducers. This also IS the
              dedup on (repo, path, commit): identical redeliveries land in
              the same salt bucket and collapse to one row.
-    Phase 2: final LWW per key over ≤salt_buckets candidates.
+    Phase 2: final LWW per key over ≤SALT_BUCKETS candidates.
     """
     projected = typed.select(
         F.col("repo"),
@@ -103,9 +106,7 @@ def reduce_batch(typed: DataFrame, *, salt_buckets: int = 16) -> DataFrame:
         F.col("offset").alias("last_offset"),
         F.col("partition_id").alias("last_partition_id"),
     )
-    return salted_lww(
-        projected, KEY_COLS, ORDER_COLS, salt_col="commit", salt_buckets=salt_buckets
-    )
+    return salted_lww(projected, KEY_COLS, ORDER_COLS, salt_col="commit")
 
 
 def observe_decode_errors(typed: DataFrame):

@@ -306,6 +306,14 @@ class _TableSetCore:
             return set()
         return {tuple(m) for m in snap["manifests"] if len(m) == 3}
 
+    def committed_marks(self) -> set[tuple]:
+        """Non-range idempotency entries (len != 3): retry tags, a CDC
+        consumer's ("src", snapshot_id) frontier marks."""
+        snap = self.latest()
+        if snap is None:
+            return set()
+        return {tuple(m) for m in snap["manifests"] if len(m) != 3}
+
     # ----------------------------------------------------------------- reads
     def _scan(self, tbl: dict, bucket_ids: list[str]) -> DataFrame:
         """Raw (pre-LWW) rows of the given buckets projected to the current
@@ -372,7 +380,9 @@ class _TableSetCore:
         ``schema_id`` as :meth:`_scan` does; the candidates resolve by
         ``_lww_reduce``'s order (ascending struct order, NULLs first) and a
         tombstone winner reads as absent (:func:`_live`). The result is an
-        Arrow-backed local relation, so collecting it runs no job either.
+        Arrow-backed local relation: ``collect()`` on it runs no job, but
+        ``count()`` and ``first()`` still launch Spark jobs, so zero-job
+        callers collect.
         Files are never pruned by zone-map stats here (a pruned delta file
         can hide the LWW winner). A NULL key part matches nothing. Key
         types other than int, bigint and string take the Spark path,
@@ -950,13 +960,6 @@ class TransactionalTableSet(_TableSetCore):
 
     def create(self, tables: dict[str, TableSpec]) -> dict:
         return self._create(tables)
-
-    def committed_marks(self) -> set[tuple]:
-        """Non-range idempotency entries (len != 3), e.g. retry tags."""
-        snap = self.latest()
-        if snap is None:
-            return set()
-        return {tuple(m) for m in snap["manifests"] if len(m) != 3}
 
     def table_names(self) -> list[str]:
         snap = self.latest()

@@ -123,7 +123,9 @@ class TransactionalParquetTable(_TableSetCore):
         ``lookup(repo="r", path="p")``. Served on the driver with no Spark
         job: reads only the key's bucket with pyarrow and returns a local
         relation (int/bigint/string keys; other key types take the Spark
-        path). See ``_TableSetCore._lookup``."""
+        path). ``collect()`` it for the zero-job path: ``count()`` and
+        ``first()`` on the relation still launch jobs. See
+        ``_TableSetCore._lookup``."""
         return self._lookup(MEMBER, key)
 
     def read_for_keys(self, keys: DataFrame) -> DataFrame:

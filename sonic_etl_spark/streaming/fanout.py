@@ -111,7 +111,7 @@ FANOUT_SPECS: dict[str, TableSpec] = {
 }
 
 
-def project_file_versions(typed: DataFrame, salt_buckets: int = 16) -> DataFrame:
+def project_file_versions(typed: DataFrame) -> DataFrame:
     """Decoded batch → one row per (repo, path, commit) version."""
     projected = typed.select(
         "repo",
@@ -130,7 +130,6 @@ def project_file_versions(typed: DataFrame, salt_buckets: int = 16) -> DataFrame
         ["repo", "path", "commit"],
         ["last_offset", "last_partition_id"],
         salt_col="last_offset",
-        salt_buckets=salt_buckets,
     )
 
 
@@ -150,12 +149,12 @@ def project_quarantine(typed: DataFrame) -> DataFrame:
     )
 
 
-def _fanout_updates(clean: DataFrame, quarantine: DataFrame, salt_buckets: int) -> dict:
+def _fanout_updates(clean: DataFrame, quarantine: DataFrame) -> dict:
     """The three-table updates dict: converged state and version history
     from the decodable rows, plus the given quarantine rows."""
     return {
-        "source_code": reduce_batch(clean, salt_buckets=salt_buckets),
-        "file_versions": project_file_versions(clean, salt_buckets),
+        "source_code": reduce_batch(clean),
+        "file_versions": project_file_versions(clean),
         "quarantine": quarantine,
     }
 
@@ -167,7 +166,6 @@ def merge_fanout_batch(
     metrics: dict,
     *,
     on_error: str,
-    salt_buckets: int = 16,
 ) -> dict:
     """One fan-out batch: decode → on_error split → three projections →
     one atomic ``merge_all`` under ``manifest``."""
@@ -188,7 +186,7 @@ def merge_fanout_batch(
         clean = typed.filter(F.col("decode_error").isNull())
         quarantined = project_quarantine(typed)
     return tables.merge_all(
-        _fanout_updates(clean, quarantined, salt_buckets),
+        _fanout_updates(clean, quarantined),
         manifest,
         metrics=metrics,
         pre_commit_check=check,
@@ -200,7 +198,6 @@ def retry_quarantine(
     tables: TransactionalTableSet,
     *,
     tag: int = 1,
-    salt_buckets: int = 16,
 ) -> dict:
     """Dead-letter REPLAY: re-decode the currently-quarantined offsets
     against ``change_log`` (after a decoder/catalog fix or an upstream
@@ -239,7 +236,7 @@ def retry_quarantine(
         F.lit(tag).alias("attempt"),
     )
     return tables.merge_all(
-        _fanout_updates(clean, tombstones, salt_buckets),
+        _fanout_updates(clean, tombstones),
         [("retry", tag)],
         metrics={"retry_tag": tag},
     )
@@ -253,7 +250,6 @@ def stream_fanout(
     checkpoint_dir: str,
     max_files_per_trigger: int = 8,
     on_error: str = "quarantine",
-    salt_buckets: int = 16,
     compact_threshold: int | None = 16,
     available_now: bool = True,
 ):
@@ -267,8 +263,7 @@ def stream_fanout(
     tables.create(FANOUT_SPECS)
 
     def commit(batch: DataFrame, manifest: Manifest, metrics: dict) -> dict:
-        return merge_fanout_batch(tables, batch, manifest, metrics,
-                                  on_error=on_error, salt_buckets=salt_buckets)
+        return merge_fanout_batch(tables, batch, manifest, metrics, on_error=on_error)
 
     return stream_batches(
         spark, log_dir, commit, tables, checkpoint_dir=checkpoint_dir,
@@ -284,9 +279,7 @@ def replay_fanout(
     chunk_size: int = 100_000,
     max_batches: int | None = None,
     on_error: str = "fail",
-    salt_buckets: int = 16,
     stop_requested: Callable[[], bool] | None = None,
-    crash_after_batches: int | None = None,
     compact_threshold: int | None = 16,
     expire_keep: int | None = None,
     monitor=None,
@@ -300,9 +293,9 @@ def replay_fanout(
     escapes the manifest's exactly-once accounting.
 
     The batch loop, its hooks and maintenance are ``replay()``'s
-    (``stop_requested``, ``crash_after_batches``, ``compact_threshold``,
-    ``monitor``); ``expire_keep`` is one call per committed batch that
-    covers every table of the set (shared snapshot log).
+    (``stop_requested``, ``compact_threshold``, ``monitor``);
+    ``expire_keep`` is one call per committed batch that covers every table
+    of the set (shared snapshot log).
     """
     if on_error not in ("fail", "quarantine"):
         raise ValueError(f"on_error must be 'fail' or 'quarantine', got {on_error!r}")
@@ -311,12 +304,10 @@ def replay_fanout(
 
     def commit(manifest: Manifest, bm: dict) -> dict:
         raw = filter_to_manifests(change_log, manifest)
-        return merge_fanout_batch(tables, raw, manifest, bm,
-                                  on_error=on_error, salt_buckets=salt_buckets)
+        return merge_fanout_batch(tables, raw, manifest, bm, on_error=on_error)
 
     return _run_batches(
         batches[:max_batches], commit, tables, stop_requested=stop_requested,
-        crash_after_batches=crash_after_batches,
         compact_threshold=compact_threshold, expire_keep=expire_keep,
         monitor=monitor,
     )

@@ -9,8 +9,8 @@ leaves either a fully-applied batch or an untouched table. Resumption
 scan, src/main.rs:187-241) is just: plan ranges not in the committed set.
 
 Like the reference, which drives every output table from that one loop, the
-per-batch lifecycle lives once, in :func:`_run_batches`: stop check, crash
-hook, commit, batch metrics, monitor push, compaction/expiry on commit and
+per-batch lifecycle lives once, in :func:`_run_batches`: stop check,
+commit, batch metrics, monitor push, compaction/expiry on commit and
 ``ReplayResult`` accounting. :func:`replay` and :func:`repair_gaps` (this
 module) and ``streaming.fanout.replay_fanout`` only plan their manifests and
 hand the loop a per-target commit: :func:`merge_batch` here for the single
@@ -67,8 +67,6 @@ def merge_batch(
     raw: DataFrame,
     manifest: Manifest,
     metrics: dict,
-    *,
-    salt_buckets: int = 16,
 ) -> dict:
     """One single-table batch: decode → validate → reduce → merge.
 
@@ -76,15 +74,15 @@ def merge_batch(
     counts are observed during the merge's own write job, checked after the
     files land but before the snapshot commit."""
     typed, check = observe_decode_errors(decode_change_events(raw))
-    updates = reduce_batch(typed, salt_buckets=salt_buckets)
+    updates = reduce_batch(typed)
     return table.merge(updates, manifest, metrics=metrics, pre_commit_check=check)
 
 
-def _table_commit(change_log: DataFrame, table: TransactionalParquetTable,
-                  salt_buckets: int) -> Callable[[Manifest, dict], dict]:
+def _table_commit(change_log: DataFrame,
+                  table: TransactionalParquetTable) -> Callable[[Manifest, dict], dict]:
     def commit(manifest: Manifest, bm: dict) -> dict:
         raw = filter_to_manifests(change_log, manifest)
-        return merge_batch(table, raw, manifest, bm, salt_buckets=salt_buckets)
+        return merge_batch(table, raw, manifest, bm)
 
     return commit
 
@@ -109,21 +107,19 @@ def _run_batches(
     *,
     repair: bool = False,
     stop_requested: Callable[[], bool] | None = None,
-    crash_after_batches: int | None = None,
     compact_threshold: int | None = None,
     expire_keep: int | None = None,
     monitor=None,
 ) -> ReplayResult:
     """The batch loop shared by every replay driver. ``commit(manifest,
     metrics)`` applies one batch to ``target`` and returns its merge status;
-    ``stop_requested`` runs exactly once before each batch."""
+    ``stop_requested`` runs exactly once before each batch; an exception it
+    raises propagates with nothing of that batch written."""
     res = ReplayResult()
     t0 = time.time()
     for i, manifest in enumerate(manifests):
         if stop_requested is not None and stop_requested():
             break
-        if crash_after_batches is not None and res.batches_applied >= crash_after_batches:
-            raise RuntimeError("injected crash (test hook)")
         bt0 = time.time()
         n_rows = sum(e - s + 1 for (_p, s, e) in manifest)  # dense log
         bm = {"repair": True} if repair else {"batch_index": i}
@@ -152,9 +148,7 @@ def replay(
     chunk_size: int = 100_000,
     max_batches: int | None = None,
     validate: bool = True,
-    salt_buckets: int = 16,
     stop_requested: Callable[[], bool] | None = None,
-    crash_after_batches: int | None = None,
     compact_threshold: int | None = 16,
     expire_keep: int | None = None,
     monitor=None,
@@ -170,8 +164,9 @@ def replay(
     tail and refreshes its /healthz liveness (ST6; ref main.rs:317-355's
     health+metrics servers beside the worker loop).
 
-    ``crash_after_batches`` is a test hook: raise mid-replay to prove
-    resumability (the crash/restart pytest required by SURVEY.md §7.1 M2).
+    ``stop_requested`` runs once before each batch: True stops cleanly
+    between batches; raising aborts the replay there, as a crash would
+    (the crash/restart pytest of SURVEY.md §7.1 M2 drives it so).
 
     ``compact_threshold``: merge-on-read maintenance — after each committed
     batch, buckets whose delta chain exceeds this many files are folded back
@@ -189,12 +184,10 @@ def replay(
         raise ValueError("replay always validates decode errors; validate=False is not supported")
     table.create(SOURCE_CODE_FIELDS, KEY_COLS, ORDER_COLS)
     batches = plan_batches(log_heads(change_log), table.committed_ranges(), chunk_size)
-    commit = _table_commit(change_log, table, salt_buckets)
     return _run_batches(
-        batches[:max_batches], commit, table, stop_requested=stop_requested,
-        crash_after_batches=crash_after_batches,
-        compact_threshold=compact_threshold, expire_keep=expire_keep,
-        monitor=monitor,
+        batches[:max_batches], _table_commit(change_log, table), table,
+        stop_requested=stop_requested, compact_threshold=compact_threshold,
+        expire_keep=expire_keep, monitor=monitor,
     )
 
 
@@ -203,7 +196,6 @@ def repair_gaps(
     table: TransactionalParquetTable,
     *,
     chunk_size: int = 100_000,
-    salt_buckets: int = 16,
     compact_threshold: int | None = 16,
 ) -> ReplayResult:
     """Backfill offset gaps inside the committed manifest set (ST5 analog of
@@ -219,6 +211,5 @@ def repair_gaps(
     gaps = manifest_gap_audit(None, table.committed_ranges())
     batches = [[(pid, s, e)] for pid, lo, hi in gaps
                for s, e in chunk_range(lo, hi, chunk_size)]
-    commit = _table_commit(change_log, table, salt_buckets)
-    return _run_batches(batches, commit, table, repair=True,
-                        compact_threshold=compact_threshold)
+    return _run_batches(batches, _table_commit(change_log, table), table,
+                        repair=True, compact_threshold=compact_threshold)

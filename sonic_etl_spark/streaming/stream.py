@@ -141,7 +141,6 @@ def stream_replay(
     *,
     checkpoint_dir: str,
     max_files_per_trigger: int = 8,
-    salt_buckets: int = 16,
     compact_threshold: int | None = 16,
     available_now: bool = True,
 ) -> StreamingQuery:
@@ -172,12 +171,12 @@ def stream_replay(
         table.create(SOURCE_CODE_FIELDS, KEY_COLS, ORDER_COLS)
 
         def commit(batch: DataFrame, manifests: Manifest, metrics: dict) -> dict:
-            return merge_batch(table, batch, manifests, metrics, salt_buckets=salt_buckets)
+            return merge_batch(table, batch, manifests, metrics)
     else:
         compact_threshold = None  # a transport sink has no delta chains
 
         def commit(batch: DataFrame, manifests: Manifest, metrics: dict) -> dict:
-            updates = reduce_batch(decode_change_events(batch), salt_buckets=salt_buckets)
+            updates = reduce_batch(decode_change_events(batch))
             return table.publish_batch(updates, manifests, metrics)
 
     return stream_batches(

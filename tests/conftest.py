@@ -1,3 +1,5 @@
+import itertools
+
 import pytest
 
 from sonic_etl_spark.session import get_spark
@@ -30,6 +32,25 @@ def spark_jobs(spark):
         return out, list(sc.statusTracker().getJobIdsForGroup(group))
 
     return run
+
+
+@pytest.fixture
+def crash_after():
+    """``crash_after(n)`` is a replay ``stop_requested`` hook that lets n
+    batches run, then raises ``RuntimeError("injected crash")`` before the
+    next one, as a process dying between batches would."""
+
+    def make(n: int):
+        calls = itertools.count(1)
+
+        def stop() -> bool:
+            if next(calls) > n:
+                raise RuntimeError("injected crash")
+            return False
+
+        return stop
+
+    return make
 
 
 @pytest.fixture

@@ -77,7 +77,7 @@ def test_salted_lww_equals_max_per_key(spark, rows):
     df = spark.createDataFrame(data, "k long, ord long, payload long")
     got = {
         r["k"]: (r["ord"], r["payload"])
-        for r in salted_lww(df, ["k"], ["ord"], salt_buckets=4).collect()
+        for r in salted_lww(df, ["k"], ["ord"]).collect()
     }
     expected = {}
     for k, o, p in data:

@@ -91,14 +91,17 @@ def test_fail_mode_keeps_reference_semantics(spark, tmp_path, log_df):
         replay_fanout(log_df, ts, chunk_size=500, on_error="explode")
 
 
-def test_crash_leaves_tables_mutually_consistent(spark, tmp_path, log_df, oracle_hashes):
+def test_crash_leaves_tables_mutually_consistent(
+    spark, tmp_path, log_df, oracle_hashes, crash_after
+):
     """Cross-table atomicity: a crash mid-replay leaves ALL tables at the
     same committed manifest frontier (no partially-published fan-out), and
     resume converges to the one-shot state."""
     ts = TransactionalTableSet(spark, str(tmp_path / "f4"), n_buckets=8)
     with pytest.raises(RuntimeError, match="injected crash"):
         replay_fanout(
-            log_df, ts, chunk_size=200, on_error="quarantine", crash_after_batches=2
+            log_df, ts, chunk_size=200, on_error="quarantine",
+            stop_requested=crash_after(2),
         )
     snap = ts.latest()
     committed = {tuple(m) for m in snap["manifests"]}

@@ -207,6 +207,53 @@ def test_sync_curates_latest_version_in_window(spark, tmp_path):
     }
 
 
+def test_sync_after_state_rollback_reapplies_undone_rows(spark, tmp_path):
+    """The sync frontier commits with the consumer's state, so rolling the
+    state back rolls the frontier back too: the next sync re-applies the
+    undone rows (curator and IVF). An empty delta commits the frontier
+    alone, so the sync after it is a noop."""
+    from sonic_etl_spark.operators.incremental import IncrementalIvfIndex
+    from sonic_etl_spark.sources.table import TransactionalParquetTable
+
+    src = TransactionalParquetTable(spark, str(tmp_path / "src"), n_buckets=2)
+    src.create(
+        [("doc_id", "bigint"), ("text", "string"), ("embedding", "array<double>"),
+         ("last_offset", "bigint")],
+        key_cols=["doc_id"],
+        order_cols=["last_offset"],
+    )
+    ddl = "doc_id long, text string, embedding array<double>, last_offset long"
+    cur = IncrementalCurator(spark, str(tmp_path / "cur"), n_buckets=2).create()
+    idx = IncrementalIvfIndex(spark, str(tmp_path / "ivf"), n_buckets=2).create(
+        spark.createDataFrame(
+            [(0, [1.0, 0.0]), (1, [0.0, 1.0])], "centroid_id long, cv array<double>"
+        )
+    )
+    consumers = [(cur.state, lambda: cur.sync(src)),
+                 (idx.postings, lambda: idx.sync(src, id_col="doc_id"))]
+
+    def statuses():
+        return [sync()["status"] for _state, sync in consumers]
+
+    src.merge(spark.createDataFrame([(1, f"{BASE} variant 1", [1.0, 0.1], 10)], ddl),
+              [(0, 10, 10)])
+    assert statuses() == ["committed", "committed"]
+    after_doc1 = [state.latest()["snapshot_id"] for state, _sync in consumers]
+    other = "completely unique text with many plain words here ok"
+    src.merge(spark.createDataFrame([(2, other, [0.1, 1.0], 20)], ddl), [(0, 20, 20)])
+    assert statuses() == ["committed", "committed"]
+    for (state, _sync), sid in zip(consumers, after_doc1):
+        state.rollback(sid)
+    assert statuses() == ["committed", "committed"]
+    assert _verdict_map(cur.verdicts.read()) == {
+        1: (10, True, "kept"), 2: (20, True, "kept")
+    }
+    assert {r["vec_id"]: r["centroid_id"] for r in idx.cells().collect()} == {1: 0, 2: 1}
+    src.evolve(add=[("note", "string")])  # a source snapshot with no new rows
+    assert statuses() == ["no_data", "no_data"]
+    assert statuses() == ["noop", "noop"]
+
+
 def test_apply_empty_batch_and_all_quality_fail(spark, tmp_path):
     cur = IncrementalCurator(spark, str(tmp_path / "c5"), n_buckets=2).create()
     empty = spark.createDataFrame([], "doc_id long, text string, off long")

@@ -55,10 +55,11 @@ def test_batch_size_invariance(spark, tmp_path, log_df, oracle_hash):
     assert _state_hash(tab.read()) == oracle_hash
 
 
-def test_crash_restart_resumes_exactly_once(spark, tmp_path, log_df, oracle_hash):
+def test_crash_restart_resumes_exactly_once(spark, tmp_path, log_df, oracle_hash,
+                                           crash_after):
     tab = TransactionalParquetTable(spark, str(tmp_path / "t3"), n_buckets=8)
     with pytest.raises(RuntimeError, match="injected crash"):
-        replay(log_df, tab, chunk_size=200, crash_after_batches=2)
+        replay(log_df, tab, chunk_size=200, stop_requested=crash_after(2))
     committed_mid = len(tab.committed_ranges())
     assert committed_mid > 0
     res = replay(log_df, tab, chunk_size=200)  # resume
@@ -122,7 +123,7 @@ def test_inline_validation_fails_batch_without_committing(spark, tmp_path):
 
 
 def test_replay_with_inline_retention_converges_and_resumes(
-    spark, tmp_path, log_df, oracle_hash
+    spark, tmp_path, log_df, oracle_hash, crash_after
 ):
     """expire_keep bounds snapshot-log growth during long replays without
     touching convergence or crash-resume exactly-once (the latest snapshot
@@ -131,7 +132,7 @@ def test_replay_with_inline_retention_converges_and_resumes(
 
     tab = TransactionalParquetTable(spark, str(tmp_path / "t7"), n_buckets=8)
     with pytest.raises(RuntimeError, match="injected crash"):
-        replay(log_df, tab, chunk_size=200, crash_after_batches=2,
+        replay(log_df, tab, chunk_size=200, stop_requested=crash_after(2),
                expire_keep=2, compact_threshold=4)
     replay(log_df, tab, chunk_size=200, expire_keep=2, compact_threshold=4)
     assert _state_hash(tab.read()) == oracle_hash
@@ -142,6 +143,33 @@ def test_replay_with_inline_retention_converges_and_resumes(
     # and a fresh re-replay still no-ops
     res = replay(log_df, tab, chunk_size=200, expire_keep=2)
     assert res.batches_applied == 0
+
+
+def test_replay_job_cli(spark, tmp_path, monkeypatch, log_df, oracle_hash):
+    """jobs/replay_job.py: an existing --stop-file applies no batch; a
+    single-table run with --expire-keep 2 and a --fanout run both converge
+    to the one-shot LWW, and retention leaves at most 2 snapshot files."""
+    import os
+
+    from jobs.replay_job import main
+
+    # the job's get_spark would otherwise reset the shared session's setting
+    monkeypatch.setenv("SPARK_GRAFT_SHUFFLE_PARTITIONS",
+                       spark.conf.get("spark.sql.shuffle.partitions"))
+    log = str(tmp_path / "log")
+    log_df.write.parquet(log)
+    stop = tmp_path / "stop"
+    stop.touch()
+    base = ["--log", log, "--chunk-size", "200", "--n-buckets", "8"]
+    single = str(tmp_path / "single")
+    assert main([*base, "--table", single, "--stop-file", str(stop)])["batches_applied"] == 0
+    res = main([*base, "--table", single, "--expire-keep", "2"])
+    assert res["batches_applied"] > 1 and res["rows_seen"] == N
+    assert _state_hash(TransactionalParquetTable(spark, single).read()) == oracle_hash
+    assert len(os.listdir(os.path.join(single, "_snapshots"))) <= 2
+    fan = str(tmp_path / "fan")
+    assert main([*base, "--table", fan, "--fanout"])["rows_seen"] == N
+    assert _state_hash(TransactionalTableSet(spark, fan).read("source_code")) == oracle_hash
 
 
 def test_long_chain_compaction_bounds_files_per_bucket(

@@ -94,7 +94,7 @@ def main() -> None:
     # the same SortAggregate plan and identical wall time (9.9s vs 9.9s on
     # 2M rows @16 cores), so max_by stays. The decode projections ARE
     # whole-stage-codegen'd (simple-mode "*(" markers).
-    red = reduce_batch(decode_change_events(batch), salt_buckets=8)
+    red = reduce_batch(decode_change_events(batch))
     p = fmt(red)
     buf = io.StringIO()
     with redirect_stdout(buf):
