@@ -118,6 +118,16 @@ def _uint256_hex_to_decimal_dual(hex_vals: pd.Series) -> pd.DataFrame:
     )
 
 
+# The conversion is deterministic; the flag is an optimizer barrier. Spark
+# pushes a filter through a projection only when every expression in it is
+# deterministic, so a ``decode_error`` predicate over the decoded frame (the
+# fan-out's clean/quarantine split) stays above the Arrow stage. Without it,
+# the predicate is inlined below that stage with every JSON parse and UDF
+# call it depends on: one more ArrowEvalPython node and ~30 from_json calls
+# per row in the split's plan.
+_uint256_hex_to_decimal_dual = _uint256_hex_to_decimal_dual.asNondeterministic()
+
+
 def numeric_checked(col: Column) -> Column:
     """Decimal-string → NUMERIC with the reference's 28-digit range CHECK.
 
@@ -150,26 +160,43 @@ def decode_change_events(raw: DataFrame) -> DataFrame:
     any field failed its check; apply() treats that as fail-the-batch.
 
     Performance shape: each expensive expression (from_json, the
-    unbase64-decode chain) is referenced from exactly ONE projection per
-    stage, so whole-stage-codegen subexpression elimination evaluates it
-    once per row. The earlier withColumn-chain formulation inlined the JSON
-    parse into every downstream reference across the ArrowEvalPython stage
-    boundary (~10× re-evaluation — measured 85s → 13s on 2M rows,
-    local[32]).
+    unbase64-decode chain) is evaluated once per row in every plan over the
+    result. The JSON parse is bound as one struct column in a projection of
+    its own, because ``OptimizeJsonExprs`` turns field reads of one
+    ``from_json`` in a single projection into one parse per field (stage 1).
+    The nondeterministic uint256 UDF keeps a ``decode_error`` filter over
+    this frame (the fan-out split) above the Arrow stage instead of inlined
+    below it with every parse it depends on. The earlier withColumn-chain
+    formulation inlined the JSON parse into every downstream reference
+    across the ArrowEvalPython stage boundary (~10× re-evaluation —
+    measured 85s → 13s on 2M rows, local[32]).
     """
     passthrough = [c for c in raw.columns if c != "content_raw"]
 
-    # stage 1: parse JSON once; extract raw string fields (CSE dedups the
-    # shared from_json across the four field extractions).
-    p = F.from_json(F.col("content_raw"), RAW_PAYLOAD_SCHEMA)
+    # stage 1: parse JSON once into a struct column, then expand its
+    # fields in a separate projection. Taking the four fields of one
+    # from_json in a single projection is NOT deduplicated: the optimizer
+    # (OptimizeJsonExprs) turns each p[f] into its own single-field
+    # from_json, i.e. four parses per row. Bound to `_p` and read four times
+    # from the projection above, the parse is non-cheap and multiply
+    # referenced, so CollapseProject keeps it in its own projection.
     st1 = raw.select(
         *passthrough,
-        p["content_b64"].alias("_b64"),
-        p["size"].alias("_size_hex"),
-        p["value"].alias("_value_hex"),
-        p["mode"].alias("_mode_hex"),
+        F.from_json(F.col("content_raw"), RAW_PAYLOAD_SCHEMA).alias("_p"),
+    ).select(
+        *passthrough,
+        F.col("_p.content_b64").alias("_b64"),
+        F.col("_p.size").alias("_size_hex"),
+        F.col("_p.value").alias("_value_hex"),
+        F.col("_p.mode").alias("_mode_hex"),
     )
+    return _decode_fields(st1, passthrough)
 
+
+def _decode_fields(st1: DataFrame, passthrough: list[str]) -> DataFrame:
+    """Stages 2-4 of :func:`decode_change_events`: the ``passthrough``
+    columns plus the payload's raw strings ``_b64``, ``_size_hex``,
+    ``_value_hex`` and ``_mode_hex`` → the typed row with ``decode_error``."""
     # stage 2: vectorized uint256 dual. Fast path: values with ≤16 hex
     # digits fit unsigned 64-bit and convert JVM-side via conv() — the
     # Arrow/Python stage only receives the masked-long values (~25% of rows

@@ -139,3 +139,100 @@ def test_numeric_checked_range_and_validity(spark):
     df = spark.createDataFrame([(s,) for s, _ in cases], "s string")
     got = [r["v"] for r in df.select(numeric_checked(F.col("s")).alias("v")).collect()]
     assert [None if g is None else int(g) for g in got] == [e for _, e in cases]
+
+
+# Payloads that stress the JSON parse: malformed, wrong top-level type,
+# wrong field types, duplicate/extra/missing keys — plus the classic bad
+# cases (`{not json`, bad base64, bad hex) and a few clean rows.
+_ADVERSARIAL_PAYLOADS = [
+    '{"content_b64": "eA==", "size": "0x1", "val',  # truncated
+    "{}",
+    "null",
+    "[]",
+    "",
+    None,
+    '{"content_b64": "eA==", "size": 1, "value": 2.5, "mode": 493}',
+    '{"content_b64": {"a": 1}, "size": [1, 2], "value": "0x1", "mode": "0x1"}',
+    '{"content_b64": "eA==", "size": "0x1", "value": true, "mode": null}',
+    '{"content_b64": "eA==", "size": "0x1", "size": "0x2", "value": "0x1", "mode": "0x1"}',
+    '{"content_b64": "eA==", "size": "0x1", "value": "0x1", "mode": "0x1",'
+    ' "extra": "x", "nested": {"size": "0x9"}}',
+    '{"content_b64": "eA==", "size": "0x1", "value": "0x1"}',  # no mode
+    '[{"content_b64": "eA==", "size": "0x1", "value": "0x1", "mode": "0x1"}]',
+    '{"content_b64": "eA\\u003d\\u003d", "size": "0x1", "value": "0x1", "mode": "0x1"}',
+    "{not json",
+    # unbase64 skips non-alphabet characters: decodes to b"", caught by size
+    '{"content_b64": "%%%", "size": "0x1", "value": "0x1", "mode": "0x1"}',
+    '{"size": "0x1", "value": "0x1", "mode": "0x1"}',  # no content_b64
+    '{"content_b64": "eA==", "size": "0x1", "value": "0xzz", "mode": "0x1"}',
+    _raw_row("fine", value="0x" + "f" * 64),
+    _raw_row("also fine"),
+]
+
+
+def _payload_log(spark, tmp_path):
+    """The payloads above as a parquet-backed raw log, scanned as replay
+    scans its log."""
+    df = spark.createDataFrame(
+        [
+            (i, 0, i, "r", f"p{i}", "c" * 40, "py", payload, "upsert")
+            for i, payload in enumerate(_ADVERSARIAL_PAYLOADS)
+        ],
+        "event_id long, partition_id int, offset long, repo string, path string,"
+        " commit string, lang string, content_raw string, op string",
+    ).withColumn("ts", F.timestamp_seconds(F.lit(1_700_000_000)))
+    path = str(tmp_path / "raw")
+    df.write.parquet(path)
+    return spark.read.parquet(path)
+
+
+def _from_json_calls(df) -> int:
+    return df._jdf.queryExecution().executedPlan().toString().count("from_json(")
+
+
+def test_content_raw_parsed_once_in_every_plan(spark, tmp_path):
+    """Each plan over the decode parses content_raw once: the plain decode,
+    the fan-out's clean split (its decode_error filter must not be inlined
+    below the Arrow stage) and the quarantine projection."""
+    from sonic_etl_spark.streaming.fanout import project_quarantine
+
+    typed = decode_change_events(_payload_log(spark, tmp_path))
+    assert _from_json_calls(typed) == 1
+    assert _from_json_calls(typed.filter(F.col("decode_error").isNull())) == 1
+    assert _from_json_calls(project_quarantine(typed)) == 1
+
+
+def test_single_parse_matches_per_field_parses(spark, tmp_path):
+    """The single struct parse decodes every adversarial payload exactly as
+    four separate single-field from_json extractions do (the plan Spark
+    builds when the fields are taken from one from_json in one
+    projection), row for row, decode_error included."""
+    from pyspark.sql.types import StringType, StructField, StructType
+
+    from sonic_etl_spark.functions.codec import _decode_fields
+
+    raw = _payload_log(spark, tmp_path)
+    passthrough = [c for c in raw.columns if c != "content_raw"]
+    fields = {"content_b64": "_b64", "size": "_size_hex", "value": "_value_hex",
+              "mode": "_mode_hex"}
+    per_field = raw.select(
+        *passthrough,
+        *(
+            F.from_json("content_raw", StructType([StructField(f, StringType())]))[f]
+            .alias(alias)
+            for f, alias in fields.items()
+        ),
+    )
+    reference = _decode_fields(per_field, passthrough)
+    assert _from_json_calls(reference) == 4
+
+    got = decode_change_events(raw).orderBy("event_id").collect()
+    want = reference.orderBy("event_id").collect()
+    assert got == want
+    errors = {r["decode_error"] for r in got}
+    assert {None, "payload: malformed json", "content_b64: bad base64",
+            "value: bad hex", "size: mismatch vs content"} <= errors
+    by_id = {r["event_id"]: r for r in got}
+    assert by_id[_ADVERSARIAL_PAYLOADS.index("{not json")]["decode_error"] == (
+        "payload: malformed json"
+    )

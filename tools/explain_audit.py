@@ -9,7 +9,8 @@ asserts the physical-plan properties the scale story depends on:
    sort-merge shuffle for them.
 3. decode+reduce — whole-stage codegen spans cover the non-UDF pipeline;
    exactly one ArrowEvalPython stage (the uint256 UDF), partial aggregation
-   present (map-side combine before the shuffle).
+   present (map-side combine before the shuffle), and content_raw parsed
+   by exactly one from_json (so too in the fan-out's two plans).
 
 Writes EXPLAIN.md with the evidence. Usage: python tools/explain_audit.py
 """
@@ -45,9 +46,16 @@ def mask_ids(plan: str) -> str:
     return re.sub(r"plan_id=\d+", "plan_id=N", re.sub(r"#\d+", "#N", plan))
 
 
-def check(name: str, plan: str, must: list[str], must_not: list[str] = ()) -> list[str]:
-    """PASS/FAIL lines for the patterns, matched against the raw plan, then
-    the plan with its ids masked."""
+def check(
+    name: str,
+    plan: str,
+    must: list[str],
+    must_not: list[str] = (),
+    counts: dict[str, int] | None = None,
+) -> list[str]:
+    """PASS/FAIL lines for the patterns (``counts`` maps a pattern to the
+    exact number of matches it needs), matched against the raw plan, then
+    the whole plan with its ids masked."""
     lines = [f"## {name}\n"]
     ok = True
     for pat in must:
@@ -58,7 +66,11 @@ def check(name: str, plan: str, must: list[str], must_not: list[str] = ()) -> li
         hit = re.search(pat, plan) is not None
         ok &= not hit
         lines.append(f"- {'PASS' if not hit else 'FAIL'} forbids `{pat}`")
-    lines.append("\n```\n" + mask_ids(plan)[:4000] + "\n```\n")
+    for pat, want in (counts or {}).items():
+        n = len(re.findall(pat, plan))
+        ok &= n == want
+        lines.append(f"- {'PASS' if n == want else 'FAIL'} `{pat}` occurs {n}× (expected {want})")
+    lines.append("\n```\n" + mask_ids(plan) + "\n```\n")
     print(f"{'OK ' if ok else 'BAD'} {name}")
     return lines
 
@@ -86,6 +98,11 @@ def main() -> None:
         must_not=[r"ReadSchema[^\n]*content_raw"],
     )
 
+    # content_raw parsed once: one from_json in the executed plan (taking
+    # several fields of one from_json in one projection plans one parse per
+    # field; a decode_error filter inlined below the Arrow stage copies them)
+    parsed_once = {r"from_json\(": 1}
+
     # 2. decode+reduce: codegen + single Arrow python stage + partial agg.
     # Plan-shape facts (verified empirically, 2026-08-17): max_by over a
     # struct payload cannot use HashAggregate (var-length buffer), so the LWW
@@ -110,6 +127,7 @@ def main() -> None:
             r"partial_max_by",  # map-side combine before the shuffle
         ],
         must_not=[r"BatchEvalPythonExec"],  # no row-at-a-time Python, ever
+        counts=parsed_once,
     )
     codegen_ok = "*(" in simple
     out.append(f"- {'PASS' if codegen_ok else 'WARN'} whole-stage codegen markers in simple mode\n")
@@ -143,6 +161,7 @@ def main() -> None:
         p_fv,
         must=[r"ArrowEvalPython", r"partial_max_by"],
         must_not=[r"BatchEvalPythonExec"],
+        counts=parsed_once,
     )
     p_q = fmt(project_quarantine(typed))
     nodes_q = len(re.findall(r"^\s*\(\d+\) ArrowEvalPython", p_q, re.M))
@@ -151,8 +170,10 @@ def main() -> None:
         p_q,
         must=[r"PushedFilters"],
         must_not=[r"Exchange"],
+        counts=parsed_once,
     )
-    out.append(f"- quarantine ArrowEvalPython nodes: {nodes_q} (shares the decode stage)\n")
+    out.append(f"- quarantine ArrowEvalPython nodes: {nodes_q} (expected 1: the decode stage)\n")
+    print(("OK " if nodes_q == 1 else "BAD") + " quarantine single Arrow stage")
 
     # 5. KMV distinct sketch: pure column plan — no Python eval anywhere,
     # dedupe aggregate partial (map-side combine), windows bounded by the
