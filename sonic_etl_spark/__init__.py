@@ -15,8 +15,10 @@ This package re-expresses those capabilities Spark-first:
 - ``functions``  vectorized raw→typed decode (hex quantities, checked i64
                  narrowing, capped+lossless numeric duals, catalog decode)
 - ``plans``      offset-range batch planner + checkpoint/manifest protocol
+                 and the one offset-span algebra (plan = log − committed)
 - ``sources``    transactional parquet table (snapshot log, atomic commits,
-                 bucket-level copy-on-write MERGE) — Iceberg-shaped fallback
+                 merge-on-read delta buckets + compaction) — Iceberg-shaped
+                 fallback
 - ``operators``  dedup/LWW, merge-apply with salting, gap audit, count
                  invariants, plus training-data ops (dedup families,
                  similarity search, text analysis, multimodal plumbing)

@@ -23,6 +23,8 @@ row-at-a-time Python) — the input_hint's vectorized-only constraint.
 
 from __future__ import annotations
 
+import re
+
 import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
@@ -46,6 +48,13 @@ BIGNUMERIC_CAP = "9" * 38
 # MAX_NUMERIC = ±9999999999999999999999999999 (28 nines) in
 # transformation/bq/numeric.rs:71/88, so every 29-digit value is TooBig.
 NUMERIC_MAX_DIGITS = 28
+
+# A hex quantity is `0x` + hex digits, either case, and nothing else: no bare
+# digits (a JSON number reaches a string field as its digits), underscores or
+# whitespace, all of which Spark's conv and Python's int(h, 16) accept.
+# Java's `$` also matches before a final line terminator, hence `\z`.
+_HEX_DIGITS = "0[xX][0-9a-fA-F]+"
+_HEX_QUANTITY = "^" + _HEX_DIGITS + r"\z"
 
 TYPED_COLUMNS = [
     "partition_id",
@@ -74,16 +83,15 @@ def hex_to_long_checked(col: Column) -> Column:
     The reference's ``TryIntoInteger`` errors with ``AboveMax`` past i64::MAX
     (bq/integer.rs:83-152). Spark's ``conv`` wraps silently at 2^64, so the
     guard is explicit: >16 hex digits, or 16 digits with a high first nibble,
-    is an overflow → NULL here; callers pair this with an error flag.
-    Stays entirely in whole-stage codegen.
+    is an overflow → NULL here; so is anything but a `_HEX_QUANTITY`.
+    Callers pair this with an error flag. Stays entirely in whole-stage
+    codegen.
     """
-    digits = F.regexp_replace(F.lower(col), "^0x", "")
+    digits = col.substr(F.lit(3), F.length(col))  # after the `0x` the regex checks
     overflow = (F.length(digits) > 16) | (
         (F.length(digits) == 16) & (F.substring(digits, 1, 1) > F.lit("7"))
     )
-    return F.when(col.isNull() | overflow, F.lit(None)).otherwise(
-        F.conv(digits, 16, 10).cast("long")
-    )
+    return F.when(col.rlike(_HEX_QUANTITY) & ~overflow, F.conv(digits, 16, 10).cast("long"))
 
 
 @pandas_udf(
@@ -101,14 +109,12 @@ def _uint256_hex_to_decimal_dual(hex_vals: pd.Series) -> pd.DataFrame:
     radix conversion. Mirrors common.rs:148-160 (cap) + :211-213 (dual).
     """
     cap = int(BIGNUMERIC_CAP)
+    quantity = re.compile(_HEX_DIGITS).fullmatch
 
     def conv(h):
-        if h is None:
+        if h is None or not quantity(h):
             return (None, None)
-        try:
-            v = int(h, 16)
-        except ValueError:
-            return (None, None)
+        v = int(h, 16)
         s = str(v)
         return (s if v <= cap else BIGNUMERIC_CAP, s)
 
@@ -203,7 +209,7 @@ def _decode_fields(st1: DataFrame, passthrough: list[str]) -> DataFrame:
     # under the synthesized distribution), plus anything malformed (the UDF
     # is also the validator for the slow path). No row-at-a-time Python
     # either way.
-    fast = F.col("_value_hex").rlike("^0x[0-9a-f]{1,16}$")
+    fast = F.col("_value_hex").rlike(r"^0x[0-9a-f]{1,16}\z")
     st2 = st1.withColumn("_value_fast", fast).withColumn(
         "_vd",
         _uint256_hex_to_decimal_dual(
@@ -221,7 +227,7 @@ def _decode_fields(st1: DataFrame, passthrough: list[str]) -> DataFrame:
     mode = hex_to_long_checked(F.col("_mode_hex"))
     # fast-path u64 decimal: exact for ≤16 hex digits (< 2^64 < 10^20,
     # never near the 38-nines cap, so value == value_lossless)
-    fast_dec = F.conv(F.regexp_replace(F.col("_value_hex"), "^0x", ""), 16, 10)
+    fast_dec = F.conv(F.expr("substring(_value_hex, 3)"), 16, 10)
     st3 = st2.select(
         *passthrough,
         F.decode(raw_bytes, "utf-8").alias("content"),
@@ -243,7 +249,14 @@ def _decode_fields(st1: DataFrame, passthrough: list[str]) -> DataFrame:
 
     # stage 4: sha256 + error derivation; every expensive input is already a
     # plain column. Integrity check mirrors validate_transformation
-    # (test.rs:174-221): declared size must equal decoded byte length.
+    # (test.rs:174-221): declared size must equal decoded byte length. A
+    # quantity that failed to parse is AboveMax if well-formed, else bad hex
+    # (the regex runs only on failed rows).
+    def quantity_error(field: str) -> Column:
+        return F.when(
+            F.col(f"_{field}_hex").rlike(_HEX_QUANTITY), F.lit(f"{field}: AboveMax")
+        ).otherwise(F.lit(f"{field}: bad hex"))
+
     err = (
         F.when(
             F.col("_b64").isNull()
@@ -255,11 +268,11 @@ def _decode_fields(st1: DataFrame, passthrough: list[str]) -> DataFrame:
         .when(F.col("content").isNull(), F.lit("content_b64: bad base64"))
         .when(
             F.col("_size_hex").isNotNull() & F.col("size_bytes").isNull(),
-            F.lit("size: AboveMax"),
+            quantity_error("size"),
         )
         .when(
             F.col("_mode_hex").isNotNull() & F.col("mode").isNull(),
-            F.lit("mode: AboveMax"),
+            quantity_error("mode"),
         )
         .when(
             F.col("_value_hex").isNotNull() & F.col("value").isNull(),

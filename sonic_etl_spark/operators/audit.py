@@ -24,6 +24,8 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.window import Window
 
+from sonic_etl_spark.plans.planner import subtract_covered
+
 
 def missing_ids(
     spark: SparkSession, present: DataFrame, id_col: str,
@@ -125,27 +127,20 @@ def parent_child_count_check(
     return joined
 
 
-def manifest_gap_audit(
-    spark: SparkSession, committed: set[tuple[int, int, int]]
-) -> list[tuple[int, int, int]]:
-    """Offset gaps inside each partition's committed manifest ranges.
+def manifest_gap_audit(committed: set[tuple[int, int, int]]) -> list[tuple[int, int, int]]:
+    """Offset gaps inside each partition's committed manifest ranges: the
+    partition's hull minus the committed set.
 
     Returns (partition_id, gap_start, gap_end) runs — the analog of the
-    backfill DAG's republished ranges. Driver-side because manifests are
-    tiny control-plane metadata (≤ thousands), never data rows.
+    backfill DAG's republished ranges, which ``replay`` plans by itself.
+    Driver-side because manifests are tiny control-plane metadata (≤
+    thousands), never data rows.
     """
-    by_pid: dict[int, list[tuple[int, int]]] = {}
+    hulls: dict[int, tuple[int, int]] = {}
     for pid, s, e in committed:
-        by_pid.setdefault(pid, []).append((s, e))
-    gaps: list[tuple[int, int, int]] = []
-    for pid, ranges in sorted(by_pid.items()):
-        ranges.sort()
-        cur = ranges[0][1]
-        for s, e in ranges[1:]:
-            if s > cur + 1:
-                gaps.append((pid, cur + 1, s - 1))
-            cur = max(cur, e)
-    return gaps
+        lo, hi = hulls.get(pid, (s, e))
+        hulls[pid] = (min(lo, s), max(hi, e))
+    return subtract_covered(((pid, lo, hi) for pid, (lo, hi) in hulls.items()), committed)
 
 
 def liveness(events: DataFrame, ts_col: str, now_epoch: int, max_lag_sec: int) -> dict:

@@ -961,10 +961,6 @@ class TransactionalTableSet(_TableSetCore):
     def create(self, tables: dict[str, TableSpec]) -> dict:
         return self._create(tables)
 
-    def table_names(self) -> list[str]:
-        snap = self.latest()
-        return sorted(snap["tables"]) if snap else []
-
     def read(
         self, name: str, include_tombstones: bool = False, snap: dict | None = None
     ) -> DataFrame:

@@ -18,6 +18,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from sonic_etl_spark.plans.planner import merge_spans, subtract_covered
+
 
 def write_time_bucketed_jsonl(
     df: DataFrame,
@@ -101,9 +103,11 @@ class SpanLedger:
     Sinks without a transactional manifest (files, HTTP, brokers) get their
     exactly-once from this: every committed batch's dense offset spans are
     appended (atomic tmp+rename), and an incoming manifest is reduced to its
-    UNCOVERED remainder before anything is sent. Requires manifests that
-    assert only offsets actually present (streaming.stream.observed_manifests
-    emits exact dense runs for this reason).
+    UNCOVERED remainder before anything is sent (``plans.planner.
+    subtract_covered``, the batch planner's own span algebra). Requires
+    manifests that assert only offsets actually present
+    (streaming.stream.observed_manifests emits exact dense runs for this
+    reason).
 
     Concurrency contract: ``advance()`` holds an exclusive ``flock`` on a
     sidecar lock file across its read-merge-write, so two processes sharing
@@ -135,51 +139,11 @@ class SpanLedger:
 
         with open(self.path + ".lock", "w") as lock:
             fcntl.flock(lock, fcntl.LOCK_EX)
-            merged = self.merge_spans(self.read() + list(new_spans))
+            merged = merge_spans(self.read() + list(new_spans))
             tmp = self.path + ".tmp"
             with open(tmp, "w") as f:
                 json.dump(sorted([list(s) for s in merged]), f)
             os.replace(tmp, self.path)  # atomic on POSIX
-
-    @staticmethod
-    def subtract_covered(
-        entries, covered: list[tuple[int, int, int]]
-    ) -> list[tuple[int, int, int]]:
-        """Incoming (p, lo, hi) entries minus already-published intervals.
-
-        Output is NORMALIZED (sorted, disjoint, adjacent runs merged) even
-        if the incoming entries overlap or repeat — so batch-dir names and
-        row filters built from it never double-claim an offset."""
-        by_part: dict[int, list[tuple[int, int]]] = {}
-        for p, lo, hi in covered:
-            by_part.setdefault(p, []).append((lo, hi))
-        out = []
-        for p, lo, hi in (tuple(m) for m in entries):
-            pieces = [(lo, hi)]
-            for clo, chi in sorted(by_part.get(p, [])):
-                nxt = []
-                for plo, phi in pieces:
-                    if chi < plo or clo > phi:  # disjoint
-                        nxt.append((plo, phi))
-                        continue
-                    if plo < clo:
-                        nxt.append((plo, clo - 1))
-                    if phi > chi:
-                        nxt.append((chi + 1, phi))
-                pieces = nxt
-            out.extend((p, s, e) for s, e in pieces)
-        return SpanLedger.merge_spans(out)
-
-    @staticmethod
-    def merge_spans(spans: list[tuple[int, int, int]]) -> list[tuple[int, int, int]]:
-        merged: list[tuple[int, int, int]] = []
-        for p, lo, hi in sorted(spans):
-            if merged and merged[-1][0] == p and lo <= merged[-1][2] + 1:
-                lp, llo, lhi = merged[-1]
-                merged[-1] = (lp, llo, max(lhi, hi))
-            else:
-                merged.append((p, lo, hi))
-        return merged
 
 
 def filter_to_spans(
@@ -253,7 +217,7 @@ class JsonlChunkSink:
         import os
 
         covered = self.ledger.read()
-        todo = SpanLedger.subtract_covered(manifest_entries, covered)
+        todo = subtract_covered(manifest_entries, covered)
         if not todo:
             return {"status": "skipped", "path": None}
         out = os.path.join(self.path, self._batch_dir(todo))
@@ -313,7 +277,7 @@ class HttpPostSink:
 
     def publish_batch(self, updates: DataFrame, manifest_entries, metrics=None) -> dict:
         covered = self.ledger.read()
-        todo = SpanLedger.subtract_covered(manifest_entries, covered)
+        todo = subtract_covered(manifest_entries, covered)
         if not todo:
             return {"status": "skipped", "chunks": 0, "records": 0}
         updates = filter_to_spans(updates, manifest_entries, todo, covered)

@@ -284,7 +284,8 @@ def replay_fanout(
     expire_keep: int | None = None,
     monitor=None,
 ) -> ReplayResult:
-    """Replay all uncommitted ranges into the fan-out table set.
+    """Replay all uncommitted ranges (holes in the committed set included,
+    as in ``replay()``) into the fan-out table set.
 
     ``on_error``: 'fail' aborts the batch on any decode error (the
     reference's fail-the-batch, err.rs:1-31); 'quarantine' routes bad rows

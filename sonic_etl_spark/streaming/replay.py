@@ -6,14 +6,17 @@ pull a range, extract+transform every offset, publish, ack — except that here
 table state and the (partition, offset-range) manifest, so a crash anywhere
 leaves either a fully-applied batch or an untouched table. Resumption
 (pick_up_from_previous_run, publish_ranges.py:148-203; ./indexed_blocks/
-scan, src/main.rs:187-241) is just: plan ranges not in the committed set.
+scan, src/main.rs:187-241) is just: plan offsets not in the committed set.
+That also repairs gaps: a hole anywhere in the committed set is planned
+like the tail, so the reference's separate backfill DAG
+(daily_backfill_mainnet.py:102-160) needs no driver of its own here.
 
 Like the reference, which drives every output table from that one loop, the
 per-batch lifecycle lives once, in :func:`_run_batches`: stop check,
 commit, batch metrics, monitor push, compaction/expiry on commit and
-``ReplayResult`` accounting. :func:`replay` and :func:`repair_gaps` (this
-module) and ``streaming.fanout.replay_fanout`` only plan their manifests and
-hand the loop a per-target commit: :func:`merge_batch` here for the single
+``ReplayResult`` accounting. :func:`replay` (this module) and
+``streaming.fanout.replay_fanout`` only plan their manifests and hand the
+loop a per-target commit: :func:`merge_batch` here for the single
 table, ``streaming.fanout.merge_fanout_batch`` for the table set. The
 Structured-Streaming twins (streaming/stream.py) call the same two batch
 functions from foreachBatch.
@@ -38,7 +41,6 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 
 from sonic_etl_spark.functions.codec import decode_change_events
-from sonic_etl_spark.operators.audit import manifest_gap_audit
 from sonic_etl_spark.operators.merge import (
     KEY_COLS,
     ORDER_COLS,
@@ -46,7 +48,7 @@ from sonic_etl_spark.operators.merge import (
     observe_decode_errors,
     reduce_batch,
 )
-from sonic_etl_spark.plans.planner import chunk_range, filter_to_manifests, log_heads, plan_batches
+from sonic_etl_spark.plans.planner import filter_to_manifests, log_heads, plan_batches
 from sonic_etl_spark.sources.table import TransactionalParquetTable
 
 Manifest = list[tuple[int, int, int]]
@@ -105,7 +107,6 @@ def _run_batches(
     commit: Callable[[Manifest, dict], dict],
     target,
     *,
-    repair: bool = False,
     stop_requested: Callable[[], bool] | None = None,
     compact_threshold: int | None = None,
     expire_keep: int | None = None,
@@ -122,8 +123,7 @@ def _run_batches(
             break
         bt0 = time.time()
         n_rows = sum(e - s + 1 for (_p, s, e) in manifest)  # dense log
-        bm = {"repair": True} if repair else {"batch_index": i}
-        bm.update(manifest=[list(m) for m in manifest], rows=n_rows)
+        bm = {"batch_index": i, "manifest": [list(m) for m in manifest], "rows": n_rows}
         status = commit(manifest, bm)
         bm["elapsed_sec"] = round(time.time() - bt0, 3)
         bm["events_per_sec"] = round(n_rows / max(bm["elapsed_sec"], 1e-9), 1)
@@ -153,7 +153,9 @@ def replay(
     expire_keep: int | None = None,
     monitor=None,
 ) -> ReplayResult:
-    """Replay all uncommitted offset ranges of ``change_log`` into ``table``.
+    """Replay all uncommitted offset ranges of ``change_log`` into ``table``:
+    per partition, ``[0, head]`` minus the committed set, so holes in that
+    set (gap repair) are planned along with the tail.
 
     Every batch is validated: a row that fails to decode fails its batch
     before the snapshot commit (:func:`merge_batch`). ``validate`` is kept
@@ -190,26 +192,3 @@ def replay(
         expire_keep=expire_keep, monitor=monitor,
     )
 
-
-def repair_gaps(
-    change_log: DataFrame,
-    table: TransactionalParquetTable,
-    *,
-    chunk_size: int = 100_000,
-    compact_threshold: int | None = 16,
-) -> ReplayResult:
-    """Backfill offset gaps inside the committed manifest set (ST5 analog of
-    the daily backfill DAG, daily_backfill_mainnet.py:102-160).
-
-    The forward planner can't leave gaps by construction, but operational
-    reality can (manual manifest surgery, a retired partition re-appearing,
-    replaying a pruned table). Each gap run becomes its own micro-batch
-    through the same batch loop and merge as :func:`replay` (so the same
-    merge-on-read compaction and status/elapsed batch metrics); LWW
-    max-merge makes re-application of any overlapping rows harmless.
-    """
-    gaps = manifest_gap_audit(None, table.committed_ranges())
-    batches = [[(pid, s, e)] for pid, lo, hi in gaps
-               for s, e in chunk_range(lo, hi, chunk_size)]
-    return _run_batches(batches, _table_commit(change_log, table), table,
-                        repair=True, compact_threshold=compact_threshold)

@@ -25,10 +25,12 @@ re-expressed as Spark Structured Streaming:
 
 Note on manifest identity: replay() manifests are planner-chunked dense
 ranges; streaming manifests are observed spans. Both are just (partition,
-lo, hi) entries in the same snapshot set, and LWW max-merge makes overlap
-harmless — but don't interleave both drivers on one table expecting
-span-level dedup across them; pick one ingest mode per table (or rely on
-the LWW idempotence, which holds regardless).
+lo, hi) entries in the same snapshot set. replay() plans ``[0, head]``
+minus every committed span, so a replay after a stream applies exactly the
+offsets the stream has not committed, its holes included. The manifest
+guard is exact-entry, though: a stream after a replay re-applies a batch
+whose observed span differs from the planner's chunks (harmless, LWW
+max-merge is idempotent) and records its span.
 
 Scale: the stream never collects data rows; the only driver-side values are
 the per-partition min/max offsets (one tiny aggregate per batch).

@@ -52,7 +52,7 @@ def test_parent_child_counts_and_violations(spark):
 
 def test_manifest_gap_audit():
     committed = {(0, 0, 99), (0, 200, 299), (1, 0, 49), (1, 50, 99)}
-    gaps = audit_ops.manifest_gap_audit(None, committed)
+    gaps = audit_ops.manifest_gap_audit(committed)
     assert gaps == [(0, 100, 199)]
 
 

@@ -9,6 +9,7 @@ import pyspark.sql.functions as F
 
 from sonic_etl_spark.functions.codec import (
     BIGNUMERIC_CAP,
+    _uint256_hex_to_decimal_dual,
     decode_change_events,
     hex_to_long_checked,
 )
@@ -28,6 +29,44 @@ def test_hex_to_long_checked(spark):
     df = spark.createDataFrame([(h,) for h, _ in rows], "h string")
     got = df.select(hex_to_long_checked(F.col("h")).alias("v")).collect()
     assert [r["v"] for r in got] == [exp for _, exp in rows]
+
+
+def test_hex_quantities_need_0x_prefix(spark):
+    """A quantity is `0x` + hex digits (either case) and nothing else: no
+    bare digits, no JSON number, no underscore or surrounding whitespace
+    (all of which Python's int(h, 16) and Spark's conv take)."""
+    bad = ["597", "1f", "0x", "0x_1", " 0x1f ", "0x1f\n", "0x1g", "-0x1"]
+    df = spark.createDataFrame([(h,) for h in bad + ["0X1F", "0x1f"]], "h string")
+    got = df.select(
+        hex_to_long_checked(F.col("h")).alias("v"),
+        _uint256_hex_to_decimal_dual(F.col("h")).alias("d"),
+    ).collect()
+    assert [r["v"] for r in got] == [None] * len(bad) + [31, 31]
+    assert [r["d"]["value_lossless"] for r in got] == [None] * len(bad) + ["31", "31"]
+
+    import base64
+
+    def payload(**over):
+        fields = {"content_b64": base64.b64encode(b"x").decode(),
+                  "size": "0x1", "value": "0x1", "mode": "0x1"}
+        return json.dumps({**fields, **over})
+
+    cases = [
+        (payload(mode=493), "mode: bad hex"),
+        (payload(mode="1ed"), "mode: bad hex"),
+        (payload(size="1"), "size: bad hex"),
+        (payload(size=" 0x1 "), "size: bad hex"),
+        (payload(value=255), "value: bad hex"),
+        (payload(value="597"), "value: bad hex"),
+        (payload(value="0x_1"), "value: bad hex"),
+        (payload(value="0x" + "f" * 17), None),
+        (payload(mode="0X1ED"), None),
+    ]
+    events = _event(spark, cases[0][0])
+    for i, (raw, _want) in enumerate(cases[1:], start=1):
+        events = events.union(_event(spark, raw).withColumn("event_id", F.lit(i).cast("long")))
+    rows = decode_change_events(events).orderBy("event_id").collect()
+    assert [(c[0], r["decode_error"]) for c, r in zip(cases, rows)] == cases
 
 
 def _raw_row(content: str, size: int | None = None, value: str = "0x1", mode: str = "0x1ed"):

@@ -1,6 +1,6 @@
 """Property-based planner invariants (hypothesis): chunking is a disjoint
-dense cover; resumption never re-plans committed work; batches round-robin
-all partitions."""
+dense cover; resumption never re-plans committed work; holes anywhere in the
+committed set are planned exactly; batches round-robin all partitions."""
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
@@ -64,3 +64,30 @@ def test_batches_group_one_chunk_per_partition():
     heads = {0: 999, 1: 999, 2: 499}
     batches = plan_batches(heads, set(), 500)
     assert [sorted(p for p, _s, _e in b) for b in batches] == [[0, 1, 2], [0, 1]]
+
+
+span = st.tuples(st.integers(0, 3), st.integers(0, 400), st.integers(0, 400)).map(
+    lambda t: (t[0], min(t[1], t[2]), max(t[1], t[2]))
+)
+
+
+@given(
+    heads=st.dictionaries(st.integers(0, 3), st.integers(0, 400), max_size=4),
+    committed=st.lists(span, max_size=10),
+    chunk=st.integers(1, 120),
+)
+@settings(max_examples=300, deadline=None)
+def test_plan_batches_plans_exactly_the_uncommitted_offsets(heads, committed, chunk):
+    """Committed sets with holes and overlaps: the plan is [0, head] minus
+    the committed offsets, in disjoint chunks of at most ``chunk`` offsets,
+    at most one chunk per partition per batch."""
+    batches = plan_batches(heads, set(committed), chunk)
+    planned = [(p, o) for batch in batches for p, s, e in batch for o in range(s, e + 1)]
+    assert len(planned) == len(set(planned))
+    want = {(p, o) for p, head in heads.items() for o in range(head + 1)}
+    want -= {(p, o) for p, lo, hi in committed for o in range(lo, hi + 1)}
+    assert set(planned) == want
+    for batch in batches:
+        pids = [p for p, _s, _e in batch]
+        assert len(pids) == len(set(pids))
+        assert all(s <= e and e - s + 1 <= chunk for _p, s, e in batch)

@@ -1,5 +1,5 @@
-"""Gap repair (ST5 backfill analog) + time-bucketed JSONL sink (S10) +
-schema evolution applied mid-replay (M3)."""
+"""Gap repair (ST5 backfill analog: replay plans the committed set's holes)
++ time-bucketed JSONL sink (S10) + schema evolution applied mid-replay (M3)."""
 
 import pyspark.sql.functions as F
 
@@ -11,7 +11,6 @@ from sonic_etl_spark.sources.sinks import (
     write_time_bucketed_jsonl,
 )
 from sonic_etl_spark.streaming import replay
-from sonic_etl_spark.streaming.replay import repair_gaps
 
 
 def _hash(df):
@@ -46,7 +45,7 @@ def test_repair_gaps_backfills_missing_range(spark, tmp_path):
     tab._commit_snapshot(snap, expected_parent=snap["parent_id"])
     assert _hash(tab.read()) != want
 
-    res = repair_gaps(log, tab, chunk_size=50)
+    res = replay(log, tab, chunk_size=50)  # plans the hole itself
     assert res.batches_applied == 1
     assert _hash(tab.read()) == want
     log.unpersist()

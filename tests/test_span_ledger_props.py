@@ -1,4 +1,5 @@
-"""Property tests for the SpanLedger interval algebra (sources/sinks.py).
+"""Property tests for the offset-span algebra (plans/planner.py) that the
+SpanLedger (sources/sinks.py) and the batch planner share.
 
 The ledger is the exactly-once backbone of every non-transactional sink —
 an off-by-one in subtract/merge silently duplicates or drops offsets, so
@@ -7,6 +8,7 @@ the algebra is checked against a brute-force offset-set model."""
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from sonic_etl_spark.plans.planner import merge_spans, subtract_covered
 from sonic_etl_spark.sources.sinks import SpanLedger
 
 span = st.tuples(
@@ -25,7 +27,7 @@ def offsets(sps):
 @settings(max_examples=300, deadline=None)
 @given(entries=spans, covered=spans)
 def test_subtract_is_exact_set_difference(entries, covered):
-    todo = SpanLedger.subtract_covered(entries, covered)
+    todo = subtract_covered(entries, covered)
     assert offsets(todo) == offsets(entries) - offsets(covered)
     # result spans never overlap each other
     seen = set()
@@ -38,7 +40,7 @@ def test_subtract_is_exact_set_difference(entries, covered):
 @settings(max_examples=300, deadline=None)
 @given(sps=spans)
 def test_merge_preserves_coverage_and_normalizes(sps):
-    merged = SpanLedger.merge_spans(sps)
+    merged = merge_spans(sps)
     assert offsets(merged) == offsets(sps)
     # normalized: sorted, non-overlapping, non-adjacent per partition
     for (p1, _l1, h1), (p2, l2, _h2) in zip(merged, merged[1:]):
@@ -50,9 +52,9 @@ def test_merge_preserves_coverage_and_normalizes(sps):
 @given(entries=spans, covered=spans)
 def test_subtract_after_advance_is_empty(entries, covered):
     """Publishing todo then advancing the ledger makes redelivery a no-op."""
-    todo = SpanLedger.subtract_covered(entries, covered)
-    new_covered = SpanLedger.merge_spans(covered + todo)
-    assert SpanLedger.subtract_covered(entries, new_covered) == []
+    todo = subtract_covered(entries, covered)
+    new_covered = merge_spans(covered + todo)
+    assert subtract_covered(entries, new_covered) == []
 
 
 def test_concurrent_advance_loses_no_spans(tmp_path):
@@ -77,6 +79,6 @@ def test_concurrent_advance_loses_no_spans(tmp_path):
     covered = ledger.read()
     # every span committed by either writer is fully covered
     for part in (0, 1):
-        assert SpanLedger.subtract_covered(
+        assert subtract_covered(
             [(part, 0, n_each * 10 - 1)], covered
         ) == []
