@@ -84,7 +84,8 @@ def q_lww_converge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Drives the engine's OWN reduction, ``operators.merge.salted_lww`` — the
     exact two-phase salted max_by the replay merge-apply stage runs
-    (reduce_batch is the CDC-typed wrapper over it) — keyed here on the
+    (reduce_batch is its CDC-typed phase 1; the bucket write runs phase 2
+    with the same ``_lww_reduce``) — keyed here on the
     driver's events table: one winner per user_id under (ts, event_id).
     """
     ev = _t(spark, sf_dir, "events").select(

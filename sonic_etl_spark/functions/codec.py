@@ -82,14 +82,16 @@ def hex_to_long_checked(col: Column) -> Column:
 
     The reference's ``TryIntoInteger`` errors with ``AboveMax`` past i64::MAX
     (bq/integer.rs:83-152). Spark's ``conv`` wraps silently at 2^64, so the
-    guard is explicit: >16 hex digits, or 16 digits with a high first nibble,
-    is an overflow → NULL here; so is anything but a `_HEX_QUANTITY`.
-    Callers pair this with an error flag. Stays entirely in whole-stage
-    codegen.
+    guard is explicit: >16 significant hex digits, or 16 with a high first
+    nibble, is an overflow → NULL here; so is anything but a
+    `_HEX_QUANTITY`. Leading zeros are not significant (``0x0…01`` is 1;
+    all zeros is 0). Callers pair this with an error flag. Stays entirely
+    in whole-stage codegen.
     """
     digits = col.substr(F.lit(3), F.length(col))  # after the `0x` the regex checks
-    overflow = (F.length(digits) > 16) | (
-        (F.length(digits) == 16) & (F.substring(digits, 1, 1) > F.lit("7"))
+    significant = F.ltrim(digits, F.lit("0"))
+    overflow = (F.length(significant) > 16) | (
+        (F.length(significant) == 16) & (F.substring(significant, 1, 1) > F.lit("7"))
     )
     return F.when(col.rlike(_HEX_QUANTITY) & ~overflow, F.conv(digits, 16, 10).cast("long"))
 

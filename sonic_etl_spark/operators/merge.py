@@ -15,6 +15,10 @@ Reference behavior being re-expressed:
   composition equals a single max — but no single reducer ever sees a hot
   key's full row set. This matters when one (repo, path) receives millions of
   duplicate deliveries in one batch at 10^10 scale.
+- in a replay batch, phase 2 is the table's bucket write: :func:`reduce_batch`
+  is phase 1 only (≤``SALT_BUCKETS`` rows per key), and
+  ``sources.multitable._TableSetCore._write`` keeps each key's winner inside
+  its bucket shuffle — two shuffles per batch, not three.
 
 All plain DataFrame ops; Catalyst keeps partial aggregation map-side and AQE
 re-splits skewed shuffle partitions at runtime.
@@ -63,32 +67,44 @@ def salted_lww(
 ) -> DataFrame:
     """One winning row per key under the total order — two-phase salted.
 
-    The engine's core reduction (see :func:`reduce_batch` for the CDC-typed
-    wrapper): phase 1 aggregates per (key, salt) with map-side partial
-    combine so no reducer sees a hot key's full row set; phase 2 merges the
-    ≤``SALT_BUCKETS`` per-salt winners. max is associative/commutative, so
+    The engine's core reduction (:func:`reduce_batch` is its CDC-typed
+    phase 1, finished by the table's bucket write): phase 1 aggregates per
+    (key, salt) with map-side partial combine so no reducer sees a hot
+    key's full row set; phase 2 merges the ≤``SALT_BUCKETS`` per-salt
+    winners. max is associative/commutative, so
     the composition equals a single max for ANY salt assignment.
 
     ``salt_col`` defaults to the first order column (any value-bearing column
     works; a constant would just degrade to unsalted).
     """
-    salted = df.withColumn(
-        "_salt",
-        F.pmod(F.xxhash64(F.col(salt_col or order_cols[0])), F.lit(SALT_BUCKETS)),
-    )
-    phase1 = _lww_reduce(salted, key_cols + ["_salt"], order_cols).drop("_salt")
+    phase1 = _salted_phase1(df, key_cols, order_cols, salt_col or order_cols[0])
     return _lww_reduce(phase1, key_cols, order_cols)
 
 
+def _salted_phase1(
+    df: DataFrame, key_cols: list[str], order_cols: list[str], salt_col: str
+) -> DataFrame:
+    """LWW per (key, salt(``salt_col``)): ≤``SALT_BUCKETS`` rows per key."""
+    salted = df.withColumn(
+        "_salt", F.pmod(F.xxhash64(F.col(salt_col)), F.lit(SALT_BUCKETS))
+    )
+    return _lww_reduce(salted, key_cols + ["_salt"], order_cols).drop("_salt")
+
+
 def reduce_batch(typed: DataFrame) -> DataFrame:
-    """Typed decoded events → one winning row per (repo, path).
+    """Typed decoded events → the salted pre-reduction: at most
+    ``SALT_BUCKETS`` rows per (repo, path), in the table schema.
 
     Phase 0: project to the table schema (offset → last_offset etc.).
     Phase 1: salted partial LWW — groupBy(key, salt(commit)) so a hot key's
-             rows split across ``SALT_BUCKETS`` reducers. This also IS the
-             dedup on (repo, path, commit): identical redeliveries land in
-             the same salt bucket and collapse to one row.
-    Phase 2: final LWW per key over ≤SALT_BUCKETS candidates.
+             rows split across ``SALT_BUCKETS`` reducers, with map-side
+             partial combine before the shuffle. This also IS the dedup on
+             (repo, path, commit): identical redeliveries land in the same
+             salt bucket and collapse to one row.
+
+    Phase 2, the final LWW per key, is the table's bucket write
+    (``_TableSetCore._write``). A caller without a table finishes it with
+    ``_lww_reduce(reduce_batch(t), KEY_COLS, ORDER_COLS)``.
     """
     projected = typed.select(
         F.col("repo"),
@@ -106,10 +122,10 @@ def reduce_batch(typed: DataFrame) -> DataFrame:
         F.col("offset").alias("last_offset"),
         F.col("partition_id").alias("last_partition_id"),
     )
-    return salted_lww(projected, KEY_COLS, ORDER_COLS, salt_col="commit")
+    return _salted_phase1(projected, KEY_COLS, ORDER_COLS, "commit")
 
 
-def observe_decode_errors(typed: DataFrame):
+def observe_decode_errors(typed: DataFrame, manifest: list[tuple[int, int, int]]):
     """Fail-the-batch semantics (transformation/err.rs:1-31) at zero cost:
     any row with a decode error aborts the batch (which is then retried
     upstream), instead of silently dropping or merging rows.
@@ -121,6 +137,11 @@ def observe_decode_errors(typed: DataFrame):
     write and before the snapshot commit: on failure the written files stay
     orphaned and the table state is untouched (same crash-safety as any
     abort).
+
+    ``check()`` also raises unless the batch held exactly one row per
+    offset its ``manifest`` of ``(partition, start, end)`` spans claims: a
+    log missing offsets (a file not landed yet) must not get them
+    committed, or the planner never plans them again.
     """
     from pyspark.sql import Observation
 
@@ -138,6 +159,12 @@ def observe_decode_errors(typed: DataFrame):
             raise ValueError(
                 f"decode failed for {m['bad']}/{m['n']} rows in batch; "
                 f"first error: {m['example']}"
+            )
+        claimed = sum(e - s + 1 for (_p, s, e) in manifest)
+        if m["n"] != claimed:
+            raise ValueError(
+                f"batch held {m['n']} rows but its manifest claims {claimed} "
+                f"offsets {manifest}; not committing offsets the log lacks"
             )
         return m["n"]
 

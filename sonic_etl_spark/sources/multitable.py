@@ -122,9 +122,10 @@ def _driver_bucket(
 
 def _lww_reduce(df: DataFrame, key_cols: list[str], order_cols: list[str]) -> DataFrame:
     """One winning row per key: max_by over the total order (map-side partial
-    aggregation; no row_number/full-sort shuffle). Read-time resolution and
-    the batch reduce (``operators.merge.salted_lww``, both phases) share
-    this one definition, so both pick the same winner."""
+    aggregation; no row_number/full-sort shuffle). Read-time resolution,
+    the bucket write's final phase (``_TableSetCore._write``) and the batch
+    reduce (``operators.merge.salted_lww``, both phases) share this one
+    definition, so all pick the same winner."""
     payload = [c for c in df.columns if c not in key_cols]
     return (
         df.groupBy(*key_cols)
@@ -578,16 +579,20 @@ class _TableSetCore:
 
     # ---------------------------------------------------------------- writes
     def _write(
-        self,
-        tbl: dict,
-        n_buckets: int,
-        snap_id: int,
-        name: str,
-        df: DataFrame,
-        n_partitions: int,
+        self, tbl: dict, n_buckets: int, snap_id: int, name: str, df: DataFrame
     ) -> dict[str, dict]:
         """Write ``df`` for one member under ``data/snap-N/<member>``,
-        bucket-partitioned; return each written bucket's file entry.
+        bucket-partitioned and LWW-reduced; return each written bucket's
+        file entry.
+
+        The bucket shuffle is the final LWW phase: ``repartitionById`` sends
+        bucket ``b``'s rows to task ``b`` (one task per bucket, no hash
+        collisions), and within it ``_lww_reduce`` over ``(_pb, key)`` keeps
+        each key's winner. Its SortAggregate leaves rows ordered by
+        ``(_pb, key)``, which satisfies the writer's ``_pb`` ordering, so the
+        write adds neither an exchange nor a sort. ``df`` may hold any
+        number of rows per key (raw scans, or the salted pre-reduction of
+        ``operators.merge.reduce_batch``).
 
         Writer projection by FIELD ID: producer columns route to the current
         names, historical (pre-rename) names are accepted and columns the
@@ -610,10 +615,14 @@ class _TableSetCore:
             proj.append(col.cast(f["type"]).alias(f["name"]))
         rel = os.path.join(DATA_DIR, f"snap-{snap_id}", name)
         out_dir = os.path.join(self.path, rel)
-        (
+        routed = (
             df.select(*proj)
             .withColumn("_pb", _bucket_expr(n_buckets, tbl["bucket_cols"]))
-            .repartition(max(n_partitions, 1), F.col("_pb"))
+            .repartitionById(n_buckets, "_pb")
+        )
+        (
+            _lww_reduce(routed, ["_pb"] + tbl["key_cols"], tbl["order_cols"])
+            .select(*[f["name"] for f in cur["fields"]], "_pb")
             .write.partitionBy("_pb")
             .mode("overwrite")
             .parquet(out_dir)
@@ -645,14 +654,15 @@ class _TableSetCore:
         """MERGE INTO every member in ``updates`` with LWW ordering under one
         idempotent manifest commit.
 
-        Each ``updates[name]`` must already be one-row-per-key for its
-        member (in-batch reduced by the caller; see
-        operators.merge.reduce_batch). Merge-on-read: appends one delta file
-        per affected bucket — O(batch) writes; the reader resolves LWW
-        across files. Skips (no-op) if every manifest entry is already
-        committed — the exactly-once guard (ST3 upgrade, SURVEY.md §2.8); on
-        partial overlap the whole batch re-applies (max-merge is
-        idempotent) and only the fresh entries are recorded. All members'
+        ``updates[name]`` may hold several rows per key: the bucket write
+        keeps each key's LWW winner (:meth:`_write`), so callers pass raw
+        rows or a partial reduction (operators.merge.reduce_batch).
+        Merge-on-read: appends one delta file per affected bucket — O(batch)
+        writes; the reader resolves LWW across files. Skips (no-op) if every
+        manifest entry is already committed — the exactly-once guard (ST3
+        upgrade, SURVEY.md §2.8); on partial overlap the whole batch
+        re-applies (max-merge is idempotent) and only the fresh entries are
+        recorded. All members'
         files land first (crash ⇒ orphan files, no state change), then ONE
         pointer flip records every member's new files AND the entries.
 
@@ -675,7 +685,7 @@ class _TableSetCore:
         written = {}
         for name, df in updates.items():
             tbl = tables[name]
-            entries = self._write(tbl, n_buckets, new_id, name, df, n_buckets)
+            entries = self._write(tbl, n_buckets, new_id, name, df)
             buckets = dict(tbl["buckets"])
             for b, fent in entries.items():
                 buckets[b] = {"files": buckets.get(b, {"files": []})["files"] + [fent]}
@@ -806,8 +816,7 @@ class _TableSetCore:
             if not victims:
                 continue
             entries = self._write(
-                tbl, parent["n_buckets"], new_id, name,
-                self._state(tbl, victims), n_partitions=len(victims),
+                tbl, parent["n_buckets"], new_id, name, self._scan(tbl, victims)
             )
             stray = set(entries) - set(victims)
             if stray:
@@ -846,8 +855,8 @@ class _TableSetCore:
         new_id = parent["snapshot_id"] + 1
         tables = {}
         for name, tbl in parent["tables"].items():
-            state = self._state(tbl, list(tbl["buckets"]))
-            entries = self._write(tbl, n_buckets, new_id, name, state, n_partitions=n_buckets)
+            rows = self._scan(tbl, list(tbl["buckets"]))
+            entries = self._write(tbl, n_buckets, new_id, name, rows)
             buckets = {b: {"files": [fent]} for b, fent in entries.items()}
             tables[name] = {**tbl, "buckets": buckets}
         rebucket = {

@@ -160,9 +160,9 @@ class TransactionalParquetTable(_TableSetCore):
         pre_commit_check=None,
     ) -> dict:
         """MERGE INTO with LWW ordering and an idempotent manifest commit
-        (contract: ``_TableSetCore._merge_all``). ``updates`` must be
-        one-row-per-key; returns a status dict whose ``buckets_written`` is
-        this table's count."""
+        (contract: ``_TableSetCore._merge_all``). ``updates`` may hold
+        several rows per key (the write keeps each key's winner); returns a
+        status dict whose ``buckets_written`` is this table's count."""
         res = self._merge_all({MEMBER: updates}, manifest_entries, metrics, pre_commit_check)
         if "buckets_written" in res:
             res["buckets_written"] = res["buckets_written"][MEMBER]

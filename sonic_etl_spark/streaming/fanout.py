@@ -175,7 +175,7 @@ def merge_fanout_batch(
         # fail-the-batch without an extra decode pass: the error counts
         # ride the source_code write job and abort the multi-table
         # commit before the pointer flip
-        typed, check = observe_decode_errors(typed)
+        typed, check = observe_decode_errors(typed, manifest)
         clean = typed
         # fresh empty frame, NOT typed.limit(0): an empty action over the
         # observed lineage could satisfy the Observation with zero counts

@@ -25,11 +25,13 @@ Graceful shutdown (mod.rs:70-98 SIGTERM flag checked between messages) maps to
 ``stop_requested()`` checked between micro-batches; state is always resumable
 because there is no un-checkpointed progress by construction.
 
-Scale: each micro-batch is one declarative plan — range-predicate scan
-(pushed down) → vectorized decode (one pandas UDF, rest codegen) → salted
-two-phase LWW shuffle → bucket-partitioned delta append (merge-on-read:
-O(batch) writes, read-time LWW, periodic compaction). No driver-side loops
-over rows, no collect of data (only per-batch counters).
+Scale: each micro-batch is one declarative plan with two shuffles —
+range-predicate scan (pushed down) → vectorized decode (one pandas UDF, rest
+codegen) → salted phase-1 LWW shuffle on ``(repo, path, salt)`` → bucket
+shuffle (``repartitionById``: one task per bucket) that keeps each key's
+final winner and appends the bucket's delta file (merge-on-read: O(batch)
+writes, read-time LWW, periodic compaction). No driver-side loops over
+rows, no collect of data (only per-batch counters).
 """
 
 from __future__ import annotations
@@ -70,12 +72,14 @@ def merge_batch(
     manifest: Manifest,
     metrics: dict,
 ) -> dict:
-    """One single-table batch: decode → validate → reduce → merge.
+    """One single-table batch: decode → validate → pre-reduce → merge (the
+    merge's bucket write finishes the LWW).
 
-    Validation fails the batch WITHOUT a second decode pass: the error
-    counts are observed during the merge's own write job, checked after the
-    files land but before the snapshot commit."""
-    typed, check = observe_decode_errors(decode_change_events(raw))
+    Validation fails the batch WITHOUT a second decode pass: the error and
+    row counts are observed during the merge's own write job, checked after
+    the files land but before the snapshot commit. A batch whose rows do
+    not cover every offset of ``manifest`` fails the same way."""
+    typed, check = observe_decode_errors(decode_change_events(raw), manifest)
     updates = reduce_batch(typed)
     return table.merge(updates, manifest, metrics=metrics, pre_commit_check=check)
 
@@ -122,7 +126,8 @@ def _run_batches(
         if stop_requested is not None and stop_requested():
             break
         bt0 = time.time()
-        n_rows = sum(e - s + 1 for (_p, s, e) in manifest)  # dense log
+        # offsets claimed; a validated commit raises if the log held fewer rows
+        n_rows = sum(e - s + 1 for (_p, s, e) in manifest)
         bm = {"batch_index": i, "manifest": [list(m) for m in manifest], "rows": n_rows}
         status = commit(manifest, bm)
         bm["elapsed_sec"] = round(time.time() - bt0, 3)

@@ -52,6 +52,7 @@ from sonic_etl_spark.operators.merge import (
     SOURCE_CODE_FIELDS,
     reduce_batch,
 )
+from sonic_etl_spark.sources.multitable import _lww_reduce
 from sonic_etl_spark.sources.table import TransactionalParquetTable
 from sonic_etl_spark.streaming.replay import Manifest, maintain_after_commit, merge_batch
 
@@ -178,7 +179,10 @@ def stream_replay(
         compact_threshold = None  # a transport sink has no delta chains
 
         def commit(batch: DataFrame, manifests: Manifest, metrics: dict) -> dict:
-            updates = reduce_batch(decode_change_events(batch))
+            # no bucket write to finish the LWW: finish it here
+            updates = _lww_reduce(
+                reduce_batch(decode_change_events(batch)), KEY_COLS, ORDER_COLS
+            )
             return table.publish_batch(updates, manifests, metrics)
 
     return stream_batches(

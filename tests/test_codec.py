@@ -143,17 +143,24 @@ def test_field_attributed_errors(spark):
 
 def test_fail_the_batch(spark):
     """The observed check counts rows during the action that consumes the
-    batch and raises fail-the-batch on any decode error."""
+    batch and raises fail-the-batch on any decode error, or when the batch
+    holds fewer rows than its manifest claims offsets."""
     from sonic_etl_spark.operators.merge import observe_decode_errors
     import pytest
 
     ok, check = observe_decode_errors(
-        decode_change_events(_event(spark, _raw_row("fine")))
+        decode_change_events(_event(spark, _raw_row("fine"))), [(0, 0, 0)]
     )
     ok.collect()
     assert check() == 1
+    short, check = observe_decode_errors(
+        decode_change_events(_event(spark, _raw_row("fine"))), [(0, 0, 1)]
+    )
+    short.collect()
+    with pytest.raises(ValueError, match=r"batch held 1 rows but its manifest claims 2"):
+        check()
     bad, check = observe_decode_errors(
-        decode_change_events(_event(spark, "{not json"))
+        decode_change_events(_event(spark, "{not json")), [(0, 0, 0)]
     )
     bad.collect()
     with pytest.raises(ValueError, match=r"decode failed for 1/1 rows.*malformed json"):

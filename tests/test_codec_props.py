@@ -19,11 +19,21 @@ I64_MAX = (1 << 63) - 1
 
 
 @settings(max_examples=8, deadline=None)
-@given(st.lists(st.integers(min_value=0, max_value=1 << 70), min_size=1, max_size=50))
+@given(
+    st.lists(
+        st.tuples(st.integers(min_value=0, max_value=1 << 70), st.integers(0, 24)),
+        min_size=1,
+        max_size=50,
+    )
+)
 def test_hex_to_long_checked_matches_python(spark, values):
-    df = spark.createDataFrame([(hex(v),) for v in values], "h string")
+    """Zero padding (up to 24 leading zeros) does not change the value:
+    only significant digits count toward the 64-bit overflow guard."""
+    hexes = [hex(v)[:2] + "0" * pad + hex(v)[2:] for v, pad in values]
+    hexes += ["0x00000000000000001", "0x" + "0" * 20]
+    df = spark.createDataFrame([(h,) for h in hexes], "h string")
     got = [r["v"] for r in df.select(hex_to_long_checked(F.col("h")).alias("v")).collect()]
-    expected = [v if v <= I64_MAX else None for v in values]
+    expected = [v if v <= I64_MAX else None for v, _pad in values] + [1, 0]
     assert got == expected
 
 

@@ -9,7 +9,8 @@ import pytest
 from sonic_etl_spark.functions import decode_change_events
 from sonic_etl_spark.log import synthesize_change_events
 from sonic_etl_spark.operators import reduce_batch
-from sonic_etl_spark.sources.multitable import TransactionalTableSet
+from sonic_etl_spark.operators.merge import KEY_COLS, ORDER_COLS
+from sonic_etl_spark.sources.multitable import TransactionalTableSet, _lww_reduce
 from sonic_etl_spark.streaming.fanout import (
     project_file_versions,
     replay_fanout,
@@ -44,7 +45,9 @@ def oracle_hashes(log_df):
     typed = decode_change_events(log_df)
     clean = typed.filter(F.col("decode_error").isNull())
     return {
-        "source_code": _state_hash(reduce_batch(clean).filter("op != 'delete'")),
+        "source_code": _state_hash(
+            _lww_reduce(reduce_batch(clean), KEY_COLS, ORDER_COLS).filter("op != 'delete'")
+        ),
         "file_versions": _state_hash(
             project_file_versions(clean).filter("op != 'delete'")
         ),
@@ -229,7 +232,8 @@ def test_retry_quarantine_recovers_dead_letters(spark, tmp_path, log_df):
     clean_typed = decode_change_events(fixed_log)
     expected = {
         "source_code": _state_hash(
-            reduce_batch(clean_typed).filter("op != 'delete'")
+            _lww_reduce(reduce_batch(clean_typed), KEY_COLS, ORDER_COLS)
+            .filter("op != 'delete'")
         ),
         "file_versions": _state_hash(
             project_file_versions(clean_typed).filter("op != 'delete'")

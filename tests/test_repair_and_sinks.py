@@ -2,8 +2,11 @@
 + time-bucketed JSONL sink (S10) + schema evolution applied mid-replay (M3)."""
 
 import pyspark.sql.functions as F
+import pytest
 
 from sonic_etl_spark.log import synthesize_change_events
+from sonic_etl_spark.operators.merge import KEY_COLS, ORDER_COLS, SOURCE_CODE_FIELDS
+from sonic_etl_spark.plans.planner import log_heads, plan_batches
 from sonic_etl_spark.sources import TransactionalParquetTable
 from sonic_etl_spark.sources.sinks import (
     read_time_bucketed_jsonl,
@@ -11,6 +14,7 @@ from sonic_etl_spark.sources.sinks import (
     write_time_bucketed_jsonl,
 )
 from sonic_etl_spark.streaming import replay
+from sonic_etl_spark.streaming.replay import _run_batches, _table_commit
 
 
 def _hash(df):
@@ -32,21 +36,41 @@ def test_repair_gaps_backfills_missing_range(spark, tmp_path):
     replay(log, ref, chunk_size=50)
     want = _hash(ref.read())
 
-    # damaged table: replay only offsets outside [100, 149] per partition 0
+    # damaged table: every batch of the plan except p0 [100,149], as if
+    # that span had been committed — neither its rows nor its entry land
     tab = TransactionalParquetTable(spark, str(tmp_path / "t"), n_buckets=4)
-    replay(log.where(~((F.col("partition_id") == 0) & F.col("offset").between(100, 149))),
-           tab, chunk_size=50)
-    # forge the hole: drop the manifest covering p0 [100,149]
-    snap = tab.latest()
-    assert (0, 100, 149) in {tuple(m) for m in snap["manifests"]}
-    snap["manifests"] = [m for m in snap["manifests"] if tuple(m) != (0, 100, 149)]
-    snap["snapshot_id"] += 1
-    snap["parent_id"] = snap["snapshot_id"] - 1
-    tab._commit_snapshot(snap, expected_parent=snap["parent_id"])
+    tab.create(SOURCE_CODE_FIELDS, KEY_COLS, ORDER_COLS)
+    holed = plan_batches(log_heads(log), {(0, 100, 149)}, 50)
+    _run_batches(holed, _table_commit(log, tab), tab)
+    assert (0, 100, 149) not in tab.committed_ranges()
+    assert (0, 99, 150) not in tab.committed_ranges()
     assert _hash(tab.read()) != want
 
     res = replay(log, tab, chunk_size=50)  # plans the hole itself
     assert res.batches_applied == 1
+    assert _hash(tab.read()) == want
+    log.unpersist()
+
+
+def test_replay_refuses_offsets_missing_from_the_log(spark, tmp_path):
+    """A log missing p0 [100,149] (a file not landed yet): the batch that
+    claims those offsets raises before its commit, so they stay unplanned
+    rather than committed; once the rows land, replay converges."""
+    log = synthesize_change_events(spark, 2000).cache()
+    log.count()
+    ref = TransactionalParquetTable(spark, str(tmp_path / "ref"), n_buckets=4)
+    replay(log, ref, chunk_size=50)
+    want = _hash(ref.read())
+
+    tab = TransactionalParquetTable(spark, str(tmp_path / "t"), n_buckets=4)
+    partial = log.where(~((F.col("partition_id") == 0) & F.col("offset").between(100, 149)))
+    with pytest.raises(ValueError, match=r"batch held \d+ rows but its manifest claims"):
+        replay(partial, tab, chunk_size=50)
+    committed = tab.committed_ranges()
+    assert committed and (0, 100, 149) not in committed
+    assert max(e for _p, _s, e in committed) < 100  # the failed batch left nothing
+
+    replay(log, tab, chunk_size=50)
     assert _hash(tab.read()) == want
     log.unpersist()
 

@@ -55,6 +55,94 @@ def test_merge_lww_and_idempotency(spark, tmp_path):
     assert res["status"] == "skipped"
     assert _state(tab)[("r", "a")] == ("c3" * 20, "v2", 5)
 
+    # two versions of one key in one batch: the bucket write keeps only the
+    # LWW winner on disk (the read would hide a loser; the files must not)
+    u4 = _df(spark, [("r", "b", "c6" * 20, "w3", "upsert", 8, 0),
+                     ("r", "b", "c5" * 20, "w2", "upsert", 7, 0)])
+    assert tab.merge(u4, [(0, 30, 39)])["status"] == "committed"
+    root = tmp_path / "t" / "data" / f"snap-{tab.latest()['snapshot_id']}" / "t"
+    on_disk = spark.read.parquet(str(root)).where("repo = 'r' AND path = 'b'").collect()
+    assert [(r["content"], r["last_offset"]) for r in on_disk] == [("w3", 8)]
+    assert _state(tab)[("r", "b")] == ("c6" * 20, "w3", 8)
+
+
+def _part_tasks(root) -> dict[str, set[int]]:
+    """``_pb`` dir → the write-task indices of its ``part-NNNNN`` files."""
+    return {
+        d.name: {int(f.name.split("-")[1]) for f in d.iterdir() if f.name.startswith("part-")}
+        for d in root.iterdir()
+        if d.name.startswith("_pb=")
+    }
+
+
+def test_bucket_write_runs_one_task_per_bucket(spark, tmp_path):
+    """Every bucket's rows go to their own write task: no task index shows
+    up under two ``_pb`` dirs (a hash repartition of the bucket id sent 3
+    of 4 buckets to one task)."""
+    tab = TransactionalParquetTable(spark, str(tmp_path / "t"), n_buckets=4)
+    tab.create(FIELDS)
+    rows = [(f"r{i}", f"p{i}", ("c%038d" % i)[:40], "v", "upsert", i, 0) for i in range(64)]
+    tab.merge(_df(spark, rows), [(0, 0, 63)])
+    tasks = _part_tasks(tmp_path / "t" / "data" / f"snap-{tab.latest()['snapshot_id']}" / "t")
+    assert len(tasks) == 4
+    flat = [t for ts in tasks.values() for t in ts]
+    assert len(flat) == len(set(flat))
+    # compaction and rebucket write through the same bucket shuffle
+    tab.compact(force=True)
+    tab.rebucket(8)
+    tasks = _part_tasks(tmp_path / "t" / "data" / f"snap-{tab.latest()['snapshot_id']}" / "t")
+    flat = [t for ts in tasks.values() for t in ts]
+    assert len(tasks) == 8 and len(flat) == len(set(flat))
+    assert tab.read().count() == 64
+
+
+def test_replay_batch_write_plan_has_two_exchanges(spark, tmp_path):
+    """A replay batch is two shuffles: the salted pre-reduction's
+    ``hashpartitioning(repo, path, _salt)`` and the bucket write's
+    partition-id passthrough on ``_pb``, inside which the final LWW runs.
+    The SortAggregate's ``(_pb, key)`` order satisfies the writer, so no
+    ``_pb`` sort follows it. Read from the executed write's plan."""
+    import re
+
+    from sonic_etl_spark.log import synthesize_change_events
+    from sonic_etl_spark.streaming import replay
+
+    log = synthesize_change_events(spark, 400)
+    tab = TransactionalParquetTable(spark, str(tmp_path / "t"), n_buckets=4)
+    store = spark._jsparkSession.sharedState().statusStore()
+    convert = spark._jvm.scala.jdk.javaapi.CollectionConverters
+
+    def execs():
+        return list(convert.asJava(store.executionsList()))
+
+    seen = {e.executionId() for e in execs()}
+    assert replay(log, tab, chunk_size=1000, max_batches=1).batches_applied == 1
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()  # plan updates land
+    writes = [
+        e.physicalPlanDescription()
+        for e in execs()
+        if e.executionId() not in seen
+        and "InsertIntoHadoopFsRelationCommand" in e.physicalPlanDescription()
+    ]
+    assert len(writes) == 1
+
+    def mask(text):
+        return re.sub(r"plan_id=\d+", "plan_id=N", re.sub(r"#\d+", "#N", text))
+
+    def args(node):  # each ``node`` entry's Arguments line, ids masked
+        pat = rf"^\(\d+\) {node}(?: \[codegen id : \d+\])?\n(?:(?!\(\d+\) ).*\n)*?Arguments: (.*)$"
+        return [mask(a) for a in re.findall(pat, writes[0], re.M)]
+
+    exchanges = set(args("Exchange"))
+    assert len(exchanges) == 2, exchanges
+    assert any(x.startswith("hashpartitioning(repo#N, path#N, _salt#N") for x in exchanges)
+    assert any(
+        x.startswith("shufflepartitionidpassthrough(direct_shuffle_partition_id(_pb#N), 4)")
+        for x in exchanges
+    )
+    sorts = args("Sort")
+    assert sorts and not [s for s in sorts if s.startswith("[_pb#N ASC NULLS FIRST], ")]
+
 
 def test_tombstone_delete(spark, tmp_path):
     tab = TransactionalParquetTable(spark, str(tmp_path / "t"), n_buckets=4)

@@ -11,6 +11,10 @@ asserts the physical-plan properties the scale story depends on:
    exactly one ArrowEvalPython stage (the uint256 UDF), partial aggregation
    present (map-side combine before the shuffle), and content_raw parsed
    by exactly one from_json (so too in the fan-out's two plans).
+4. replay batch write — the executed write of one replay batch has two
+   exchanges: the salted pre-reduction's hashpartitioning(repo, path, _salt)
+   and the bucket write's partition-id passthrough on _pb, inside which the
+   final LWW runs; no _pb sort is added after it.
 
 Writes EXPLAIN.md with the evidence. Usage: python tools/explain_audit.py
 """
@@ -133,6 +137,40 @@ def main() -> None:
     out.append(f"- {'PASS' if codegen_ok else 'WARN'} whole-stage codegen markers in simple mode\n")
     out.append(f"- ArrowEvalPython plan nodes: {arrow_stages} (expected 1)\n")
     print(("OK " if arrow_stages == 1 else "BAD") + " single Arrow stage")
+
+    # 2b. replay batch write: the plan Spark executed for one replay batch's
+    # bucket write, read back from the SQL status store (a DataFrame's own
+    # explain never shows the writer). "Current Plan" lists each exchange
+    # once, under its ShuffleQueryStage.
+    import tempfile
+
+    from sonic_etl_spark.sources import TransactionalParquetTable
+    from sonic_etl_spark.streaming import replay
+
+    store = spark._jsparkSession.sharedState().statusStore()
+    convert = spark._jvm.scala.jdk.javaapi.CollectionConverters
+    seen = {e.executionId() for e in convert.asJava(store.executionsList())}
+    with tempfile.TemporaryDirectory() as tmp:
+        replay(log, TransactionalParquetTable(spark, tmp, n_buckets=4),
+               chunk_size=1000, max_batches=1)
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()  # plan updates land
+    p = next(
+        e.physicalPlanDescription()
+        for e in convert.asJava(store.executionsList())
+        if e.executionId() not in seen
+        and "InsertIntoHadoopFsRelationCommand" in e.physicalPlanDescription()
+    )
+    out += check(
+        "replay batch write: two exchanges, final LWW in the bucket shuffle",
+        p,
+        must=[
+            r"hashpartitioning\(repo#\d+, path#\d+, _salt#\d+",
+            r"shufflepartitionidpassthrough\(direct_shuffle_partition_id\(_pb#\d+\), 4\)",
+            r"Keys \[3\]: \[_pb#\d+, repo#\d+, path#\d+\]",  # final LWW per bucket
+        ],
+        must_not=[r"Arguments: \[_pb#\d+ ASC NULLS FIRST\], "],  # no writer sort
+        counts={r"ShuffleQueryStage \(\d+\)[^\n]*\n\s*\+- Exchange": 2},
+    )
 
     # 3. dim enrichment joins broadcast
     from sonic_etl_spark.driver_queries import q_seg_nation_revenue
