@@ -82,11 +82,10 @@ def _sql_money_cents_sum(col: str) -> str:
 def q_lww_converge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A7/O2/ST4: last-writer-wins convergence of the events change feed.
 
-    Drives the engine's OWN reduction, ``operators.merge.salted_lww`` — the
-    exact two-phase salted max_by the replay merge-apply stage runs
-    (reduce_batch is its CDC-typed phase 1; the bucket write runs phase 2
-    with the same ``_lww_reduce``) — keyed here on the
-    driver's events table: one winner per user_id under (ts, event_id).
+    Drives the engine's OWN reduction, ``operators.merge.salted_lww`` (the
+    two-phase salted max_by; a replay batch runs the same two phases as
+    reduce_batch and the bucket write), keyed here on the driver's events
+    table: one winner per user_id under (ts, event_id).
     """
     ev = _t(spark, sf_dir, "events").select(
         "user_id", "event_id", "event_type", "value", "ts"

@@ -312,6 +312,7 @@ class IncrementalCurator:
                 "verdicts": verdicts,
             },
             manifest,
+            one_row_per_key=True,  # groupBy outputs; verdicts: one per doc_id
         )
         return {
             "status": res["status"],

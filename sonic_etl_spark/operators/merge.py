@@ -18,7 +18,8 @@ Reference behavior being re-expressed:
 - in a replay batch, phase 2 is the table's bucket write: :func:`reduce_batch`
   is phase 1 only (≤``SALT_BUCKETS`` rows per key), and
   ``sources.multitable._TableSetCore._write`` keeps each key's winner inside
-  its bucket shuffle — two shuffles per batch, not three.
+  its bucket shuffle — two shuffles per batch, not three. A caller without a
+  table takes :func:`converged_rows` (phase 1 and the same final LWW).
 
 All plain DataFrame ops; Catalyst keeps partial aggregation map-side and AQE
 re-splits skewed shuffle partitions at runtime.
@@ -65,26 +66,25 @@ def salted_lww(
     *,
     salt_col: str | None = None,
 ) -> DataFrame:
-    """One winning row per key under the total order — two-phase salted.
-
-    The engine's core reduction (:func:`reduce_batch` is its CDC-typed
-    phase 1, finished by the table's bucket write): phase 1 aggregates per
-    (key, salt) with map-side partial combine so no reducer sees a hot
-    key's full row set; phase 2 merges the ≤``SALT_BUCKETS`` per-salt
-    winners. max is associative/commutative, so
-    the composition equals a single max for ANY salt assignment.
+    """One winning row per key under the total order — two-phase salted:
+    :func:`salted_partial_lww`, then the final LWW per key. max is
+    associative/commutative, so the composition equals a single max for
+    ANY salt assignment.
 
     ``salt_col`` defaults to the first order column (any value-bearing column
     works; a constant would just degrade to unsalted).
     """
-    phase1 = _salted_phase1(df, key_cols, order_cols, salt_col or order_cols[0])
+    phase1 = salted_partial_lww(df, key_cols, order_cols, salt_col or order_cols[0])
     return _lww_reduce(phase1, key_cols, order_cols)
 
 
-def _salted_phase1(
+def salted_partial_lww(
     df: DataFrame, key_cols: list[str], order_cols: list[str], salt_col: str
 ) -> DataFrame:
-    """LWW per (key, salt(``salt_col``)): ≤``SALT_BUCKETS`` rows per key."""
+    """Phase 1: LWW per (key, salt(``salt_col``)) with map-side partial
+    combine, so no reducer sees a hot key's full row set; ≤``SALT_BUCKETS``
+    rows per key. A table's bucket write finishes it (``_TableSetCore._write``
+    keeps each key's winner)."""
     salted = df.withColumn(
         "_salt", F.pmod(F.xxhash64(F.col(salt_col)), F.lit(SALT_BUCKETS))
     )
@@ -103,8 +103,7 @@ def reduce_batch(typed: DataFrame) -> DataFrame:
              salt bucket and collapse to one row.
 
     Phase 2, the final LWW per key, is the table's bucket write
-    (``_TableSetCore._write``). A caller without a table finishes it with
-    ``_lww_reduce(reduce_batch(t), KEY_COLS, ORDER_COLS)``.
+    (``_TableSetCore._write``); :func:`converged_rows` runs it without one.
     """
     projected = typed.select(
         F.col("repo"),
@@ -122,7 +121,14 @@ def reduce_batch(typed: DataFrame) -> DataFrame:
         F.col("offset").alias("last_offset"),
         F.col("partition_id").alias("last_partition_id"),
     )
-    return _salted_phase1(projected, KEY_COLS, ORDER_COLS, "commit")
+    return salted_partial_lww(projected, KEY_COLS, ORDER_COLS, "commit")
+
+
+def converged_rows(typed: DataFrame) -> DataFrame:
+    """Typed decoded events → one row per (repo, path): :func:`reduce_batch`
+    finished by the final LWW the bucket write runs. For callers with no
+    table to write through (transport sinks, one-shot references)."""
+    return _lww_reduce(reduce_batch(typed), KEY_COLS, ORDER_COLS)
 
 
 def observe_decode_errors(typed: DataFrame, manifest: list[tuple[int, int, int]]):

@@ -579,7 +579,13 @@ class _TableSetCore:
 
     # ---------------------------------------------------------------- writes
     def _write(
-        self, tbl: dict, n_buckets: int, snap_id: int, name: str, df: DataFrame
+        self,
+        tbl: dict,
+        n_buckets: int,
+        snap_id: int,
+        name: str,
+        df: DataFrame,
+        one_row_per_key: bool = False,
     ) -> dict[str, dict]:
         """Write ``df`` for one member under ``data/snap-N/<member>``,
         bucket-partitioned and LWW-reduced; return each written bucket's
@@ -592,7 +598,9 @@ class _TableSetCore:
         ``(_pb, key)``, which satisfies the writer's ``_pb`` ordering, so the
         write adds neither an exchange nor a sort. ``df`` may hold any
         number of rows per key (raw scans, or the salted pre-reduction of
-        ``operators.merge.reduce_batch``).
+        ``operators.merge.reduce_batch``). ``one_row_per_key`` skips the
+        aggregate for a ``df`` already at one row per key (the writer then
+        sorts by ``_pb`` alone); readers resolve LWW across rows either way.
 
         Writer projection by FIELD ID: producer columns route to the current
         names, historical (pre-rename) names are accepted and columns the
@@ -620,9 +628,10 @@ class _TableSetCore:
             .withColumn("_pb", _bucket_expr(n_buckets, tbl["bucket_cols"]))
             .repartitionById(n_buckets, "_pb")
         )
+        if not one_row_per_key:
+            routed = _lww_reduce(routed, ["_pb"] + tbl["key_cols"], tbl["order_cols"])
         (
-            _lww_reduce(routed, ["_pb"] + tbl["key_cols"], tbl["order_cols"])
-            .select(*[f["name"] for f in cur["fields"]], "_pb")
+            routed.select(*[f["name"] for f in cur["fields"]], "_pb")
             .write.partitionBy("_pb")
             .mode("overwrite")
             .parquet(out_dir)
@@ -650,13 +659,16 @@ class _TableSetCore:
         manifest_entries: list[tuple],
         metrics: dict | None = None,
         pre_commit_check=None,
+        one_row_per_key: bool = False,
     ) -> dict:
         """MERGE INTO every member in ``updates`` with LWW ordering under one
         idempotent manifest commit.
 
         ``updates[name]`` may hold several rows per key: the bucket write
         keeps each key's LWW winner (:meth:`_write`), so callers pass raw
-        rows or a partial reduction (operators.merge.reduce_batch).
+        rows or a partial reduction (operators.merge.reduce_batch). A caller
+        whose frames are already one row per key (the curator's groupBy
+        outputs) passes ``one_row_per_key=True`` to skip that aggregate.
         Merge-on-read: appends one delta file per affected bucket — O(batch)
         writes; the reader resolves LWW across files. Skips (no-op) if every
         manifest entry is already committed — the exactly-once guard (ST3
@@ -685,7 +697,7 @@ class _TableSetCore:
         written = {}
         for name, df in updates.items():
             tbl = tables[name]
-            entries = self._write(tbl, n_buckets, new_id, name, df)
+            entries = self._write(tbl, n_buckets, new_id, name, df, one_row_per_key)
             buckets = dict(tbl["buckets"])
             for b, fent in entries.items():
                 buckets[b] = {"files": buckets.get(b, {"files": []})["files"] + [fent]}
@@ -1007,10 +1019,13 @@ class TransactionalTableSet(_TableSetCore):
         manifest_entries: list[tuple[int, int, int]],
         metrics: dict | None = None,
         pre_commit_check=None,
+        one_row_per_key: bool = False,
     ) -> dict:
         """Apply one batch to every named table atomically under one
         manifest (``buckets_written`` per table in the result)."""
-        return self._merge_all(updates, manifest_entries, metrics, pre_commit_check)
+        return self._merge_all(
+            updates, manifest_entries, metrics, pre_commit_check, one_row_per_key
+        )
 
     def evolve(
         self,

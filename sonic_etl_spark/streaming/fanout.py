@@ -28,9 +28,11 @@ Fan-out tables:
   the field-attributed ``decode_error``.
 
 Scale shape per batch: one parquet scan with pushed-down range predicates,
-one Arrow decode stage, then three INDEPENDENT narrow projections + salted
-LWW shuffles (each shuffles only its own key set; the quarantine projection
-carries no content payload). Writes stay O(batch) via merge-on-read deltas.
+one Arrow decode stage, then three INDEPENDENT narrow projections; the two
+versioned ones take a salted pre-reduction shuffle each, and every member's
+bucket write finishes its LWW (each shuffles only its own key set; the
+quarantine projection carries no content payload). Writes stay O(batch) via
+merge-on-read deltas.
 
 One batch function, :func:`merge_fanout_batch`, applies a decoded batch to
 the set; :func:`replay_fanout` runs it in the shared batch loop of
@@ -53,7 +55,7 @@ from sonic_etl_spark.operators.merge import (
     SOURCE_CODE_FIELDS,
     observe_decode_errors,
     reduce_batch,
-    salted_lww,
+    salted_partial_lww,
 )
 from sonic_etl_spark.plans.planner import filter_to_manifests, log_heads, plan_batches
 from sonic_etl_spark.sources.multitable import TableSpec, TransactionalTableSet
@@ -112,7 +114,9 @@ FANOUT_SPECS: dict[str, TableSpec] = {
 
 
 def project_file_versions(typed: DataFrame) -> DataFrame:
-    """Decoded batch → one row per (repo, path, commit) version."""
+    """Decoded batch → its (repo, path, commit) versions, salted
+    pre-reduced (≤``SALT_BUCKETS`` rows per version); the bucket write keeps
+    one row per version, as it does for ``reduce_batch``."""
     projected = typed.select(
         "repo",
         "path",
@@ -125,12 +129,8 @@ def project_file_versions(typed: DataFrame) -> DataFrame:
         F.col("offset").alias("last_offset"),
         F.col("partition_id").alias("last_partition_id"),
     )
-    return salted_lww(
-        projected,
-        ["repo", "path", "commit"],
-        ["last_offset", "last_partition_id"],
-        salt_col="last_offset",
-    )
+    spec = FANOUT_SPECS["file_versions"]
+    return salted_partial_lww(projected, spec.key_cols, spec.order_cols, "last_offset")
 
 
 def project_quarantine(typed: DataFrame) -> DataFrame:

@@ -50,9 +50,8 @@ from sonic_etl_spark.operators.merge import (
     KEY_COLS,
     ORDER_COLS,
     SOURCE_CODE_FIELDS,
-    reduce_batch,
+    converged_rows,
 )
-from sonic_etl_spark.sources.multitable import _lww_reduce
 from sonic_etl_spark.sources.table import TransactionalParquetTable
 from sonic_etl_spark.streaming.replay import Manifest, maintain_after_commit, merge_batch
 
@@ -179,10 +178,7 @@ def stream_replay(
         compact_threshold = None  # a transport sink has no delta chains
 
         def commit(batch: DataFrame, manifests: Manifest, metrics: dict) -> dict:
-            # no bucket write to finish the LWW: finish it here
-            updates = _lww_reduce(
-                reduce_batch(decode_change_events(batch)), KEY_COLS, ORDER_COLS
-            )
+            updates = converged_rows(decode_change_events(batch))
             return table.publish_batch(updates, manifests, metrics)
 
     return stream_batches(

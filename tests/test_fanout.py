@@ -8,10 +8,10 @@ import pytest
 
 from sonic_etl_spark.functions import decode_change_events
 from sonic_etl_spark.log import synthesize_change_events
-from sonic_etl_spark.operators import reduce_batch
-from sonic_etl_spark.operators.merge import KEY_COLS, ORDER_COLS
-from sonic_etl_spark.sources.multitable import TransactionalTableSet, _lww_reduce
+from sonic_etl_spark.operators.merge import converged_rows, salted_lww
+from sonic_etl_spark.sources.multitable import TransactionalTableSet
 from sonic_etl_spark.streaming.fanout import (
+    FANOUT_SPECS,
     project_file_versions,
     replay_fanout,
 )
@@ -46,13 +46,18 @@ def oracle_hashes(log_df):
     clean = typed.filter(F.col("decode_error").isNull())
     return {
         "source_code": _state_hash(
-            _lww_reduce(reduce_batch(clean), KEY_COLS, ORDER_COLS).filter("op != 'delete'")
+            converged_rows(clean).filter("op != 'delete'")
         ),
-        "file_versions": _state_hash(
-            project_file_versions(clean).filter("op != 'delete'")
-        ),
+        "file_versions": _state_hash(_file_versions(clean).filter("op != 'delete'")),
         "n_poison": typed.filter(F.col("decode_error").isNotNull()).count(),
     }
+
+
+def _file_versions(typed):
+    """One row per (repo, path, commit) version: the fan-out's salted
+    pre-reduction, finished by the full LWW on the member's key."""
+    spec = FANOUT_SPECS["file_versions"]
+    return salted_lww(project_file_versions(typed), spec.key_cols, spec.order_cols)
 
 
 def _all_hashes(ts):
@@ -232,11 +237,10 @@ def test_retry_quarantine_recovers_dead_letters(spark, tmp_path, log_df):
     clean_typed = decode_change_events(fixed_log)
     expected = {
         "source_code": _state_hash(
-            _lww_reduce(reduce_batch(clean_typed), KEY_COLS, ORDER_COLS)
-            .filter("op != 'delete'")
+            converged_rows(clean_typed).filter("op != 'delete'")
         ),
         "file_versions": _state_hash(
-            project_file_versions(clean_typed).filter("op != 'delete'")
+            _file_versions(clean_typed).filter("op != 'delete'")
         ),
     }
     assert _all_hashes(ts) == expected

@@ -16,9 +16,8 @@ import pyspark.sql.functions as F
 
 from sonic_etl_spark.functions.codec import decode_change_events
 from sonic_etl_spark.log import synthesize_change_events
-from sonic_etl_spark.operators.merge import KEY_COLS, ORDER_COLS, reduce_batch
+from sonic_etl_spark.operators.merge import converged_rows
 from sonic_etl_spark.sources import TransactionalParquetTable
-from sonic_etl_spark.sources.multitable import _lww_reduce
 from sonic_etl_spark.streaming import replay
 
 GOLDEN_DIR = os.path.join(os.path.dirname(__file__), "goldens")
@@ -73,11 +72,7 @@ def test_converged_state_matches_golden_sha256(spark, tmp_path):
 def test_oneshot_lww_equals_golden(spark):
     """The no-table direct reduction agrees with the replayed golden too."""
     direct = (
-        _lww_reduce(
-            reduce_batch(decode_change_events(synthesize_change_events(spark, N))),
-            KEY_COLS,
-            ORDER_COLS,
-        )
+        converged_rows(decode_change_events(synthesize_change_events(spark, N)))
         .filter("op != 'delete'")
         .withColumn("ts", F.unix_timestamp("ts"))
     )

@@ -8,9 +8,9 @@ import pytest
 from sonic_etl_spark.functions import decode_change_events
 from sonic_etl_spark.log import synthesize_change_events
 from sonic_etl_spark.operators import reduce_batch
-from sonic_etl_spark.operators.merge import KEY_COLS, ORDER_COLS
+from sonic_etl_spark.operators.merge import converged_rows
 from sonic_etl_spark.sources import TransactionalParquetTable
-from sonic_etl_spark.sources.multitable import TransactionalTableSet, _lww_reduce
+from sonic_etl_spark.sources.multitable import TransactionalTableSet
 from sonic_etl_spark.streaming import replay
 from sonic_etl_spark.streaming.fanout import replay_fanout
 
@@ -38,11 +38,8 @@ def log_df(spark):
 
 @pytest.fixture(scope="module")
 def oracle_hash(log_df):
-    """One-shot LWW over the whole log — no batching, no table, no manifests
-    (reduce_batch is the salted pre-reduction; ``_lww_reduce`` finishes it)."""
-    direct = _lww_reduce(
-        reduce_batch(decode_change_events(log_df)), KEY_COLS, ORDER_COLS
-    ).filter("op != 'delete'")
+    """One-shot LWW over the whole log — no batching, no table, no manifests."""
+    direct = converged_rows(decode_change_events(log_df)).filter("op != 'delete'")
     return _state_hash(direct)
 
 
@@ -198,7 +195,7 @@ def test_table_is_a_set_of_one(spark, tmp_path, log_df, oracle_hash):
     state, file layout and manifests; the set's read_for_keys returns the
     LWW state of exactly the keys' buckets and reads no other bucket."""
     from sonic_etl_spark.plans.planner import filter_to_manifests, log_heads, plan_batches
-    from sonic_etl_spark.sources.multitable import TransactionalTableSet, _lww_reduce
+    from sonic_etl_spark.sources.multitable import TransactionalTableSet
     from sonic_etl_spark.streaming.fanout import FANOUT_SPECS
 
     tab = TransactionalParquetTable(spark, str(tmp_path / "one"), n_buckets=8)

@@ -6,10 +6,8 @@ import pytest
 
 from sonic_etl_spark.functions import decode_change_events
 from sonic_etl_spark.log import synthesize_change_events
-from sonic_etl_spark.operators import reduce_batch
-from sonic_etl_spark.operators.merge import KEY_COLS, ORDER_COLS
+from sonic_etl_spark.operators.merge import converged_rows
 from sonic_etl_spark.sources import TransactionalParquetTable
-from sonic_etl_spark.sources.multitable import _lww_reduce
 from sonic_etl_spark.streaming.stream import stream_replay
 
 N = 4000
@@ -35,11 +33,9 @@ def log_dir(spark, tmp_path_factory):
 
 def test_stream_converges_to_oracle(spark, tmp_path, log_dir):
     oracle = _state_hash(
-        _lww_reduce(
-            reduce_batch(decode_change_events(spark.read.parquet(log_dir))),
-            KEY_COLS,
-            ORDER_COLS,
-        ).filter("op != 'delete'")
+        converged_rows(decode_change_events(spark.read.parquet(log_dir))).filter(
+            "op != 'delete'"
+        )
     )
     tab = TransactionalParquetTable(spark, str(tmp_path / "t"), n_buckets=8)
     q = stream_replay(

@@ -96,19 +96,9 @@ def test_bucket_write_runs_one_task_per_bucket(spark, tmp_path):
     assert tab.read().count() == 64
 
 
-def test_replay_batch_write_plan_has_two_exchanges(spark, tmp_path):
-    """A replay batch is two shuffles: the salted pre-reduction's
-    ``hashpartitioning(repo, path, _salt)`` and the bucket write's
-    partition-id passthrough on ``_pb``, inside which the final LWW runs.
-    The SortAggregate's ``(_pb, key)`` order satisfies the writer, so no
-    ``_pb`` sort follows it. Read from the executed write's plan."""
-    import re
-
-    from sonic_etl_spark.log import synthesize_change_events
-    from sonic_etl_spark.streaming import replay
-
-    log = synthesize_change_events(spark, 400)
-    tab = TransactionalParquetTable(spark, str(tmp_path / "t"), n_buckets=4)
+def _write_plans(spark, run) -> list[str]:
+    """The executed physical plans of the file writes ``run()`` makes, read
+    from the SQL status store."""
     store = spark._jsparkSession.sharedState().statusStore()
     convert = spark._jvm.scala.jdk.javaapi.CollectionConverters
 
@@ -116,32 +106,77 @@ def test_replay_batch_write_plan_has_two_exchanges(spark, tmp_path):
         return list(convert.asJava(store.executionsList()))
 
     seen = {e.executionId() for e in execs()}
-    assert replay(log, tab, chunk_size=1000, max_batches=1).batches_applied == 1
+    run()
     spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()  # plan updates land
-    writes = [
+    return [
         e.physicalPlanDescription()
         for e in execs()
         if e.executionId() not in seen
         and "InsertIntoHadoopFsRelationCommand" in e.physicalPlanDescription()
     ]
+
+
+def _node_args(plan: str, node: str) -> list[str]:
+    """Each ``node`` entry's Arguments line in a formatted plan, ids masked."""
+    import re
+
+    pat = rf"^\(\d+\) {node}(?: \[codegen id : \d+\])?\n(?:(?!\(\d+\) ).*\n)*?Arguments: (.*)$"
+    return [
+        re.sub(r"plan_id=\d+", "plan_id=N", re.sub(r"#\d+", "#N", a))
+        for a in re.findall(pat, plan, re.M)
+    ]
+
+
+def test_replay_batch_write_plan_has_two_exchanges(spark, tmp_path):
+    """A replay batch is two shuffles: the salted pre-reduction's
+    ``hashpartitioning(repo, path, _salt)`` and the bucket write's
+    partition-id passthrough on ``_pb``, inside which the final LWW runs.
+    The SortAggregate's ``(_pb, key)`` order satisfies the writer, so no
+    ``_pb`` sort follows it. Read from the executed write's plan."""
+    from sonic_etl_spark.log import synthesize_change_events
+    from sonic_etl_spark.streaming import replay
+
+    log = synthesize_change_events(spark, 400)
+    tab = TransactionalParquetTable(spark, str(tmp_path / "t"), n_buckets=4)
+
+    def run():
+        assert replay(log, tab, chunk_size=1000, max_batches=1).batches_applied == 1
+
+    writes = _write_plans(spark, run)
     assert len(writes) == 1
-
-    def mask(text):
-        return re.sub(r"plan_id=\d+", "plan_id=N", re.sub(r"#\d+", "#N", text))
-
-    def args(node):  # each ``node`` entry's Arguments line, ids masked
-        pat = rf"^\(\d+\) {node}(?: \[codegen id : \d+\])?\n(?:(?!\(\d+\) ).*\n)*?Arguments: (.*)$"
-        return [mask(a) for a in re.findall(pat, writes[0], re.M)]
-
-    exchanges = set(args("Exchange"))
+    exchanges = set(_node_args(writes[0], "Exchange"))
     assert len(exchanges) == 2, exchanges
     assert any(x.startswith("hashpartitioning(repo#N, path#N, _salt#N") for x in exchanges)
     assert any(
         x.startswith("shufflepartitionidpassthrough(direct_shuffle_partition_id(_pb#N), 4)")
         for x in exchanges
     )
-    sorts = args("Sort")
+    sorts = _node_args(writes[0], "Sort")
     assert sorts and not [s for s in sorts if s.startswith("[_pb#N ASC NULLS FIRST], ")]
+
+
+def test_one_row_per_key_write_skips_the_final_lww(spark, tmp_path):
+    """``merge_all(one_row_per_key=True)`` (the curator's frames, already
+    one row per key) writes through the same bucket shuffle without the
+    final LWW aggregate: the writer sorts by ``_pb`` alone, and the stored
+    state is the same as through the aggregate."""
+    from sonic_etl_spark.sources.multitable import TableSpec, TransactionalTableSet
+
+    rows = [(f"r{i}", f"p{i}", ("c%038d" % i)[:40], "v", "upsert", i, 0) for i in range(64)]
+    states = []
+    for flag in (False, True):
+        ts = TransactionalTableSet(spark, str(tmp_path / f"s{flag}"), n_buckets=4)
+        ts.create({"t": TableSpec(FIELDS, ["repo", "path"], ["last_offset"])})
+
+        def run():
+            ts.merge_all({"t": _df(spark, rows)}, [(0, 0, 63)], one_row_per_key=flag)
+
+        (plan,) = _write_plans(spark, run)
+        assert ("max_by(" in plan) is not flag
+        (exchange,) = set(_node_args(plan, "Exchange"))  # final and initial plan
+        assert exchange.startswith("shufflepartitionidpassthrough")
+        states.append(sorted(tuple(r) for r in ts.read("t").collect()))
+    assert states[0] == states[1] and len(states[0]) == 64
 
 
 def test_tombstone_delete(spark, tmp_path):

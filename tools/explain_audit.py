@@ -45,8 +45,10 @@ def fmt(df) -> str:
 
 
 def mask_ids(plan: str) -> str:
-    """Plan text without Spark's per-session expression and plan ids, so a
-    regenerated EXPLAIN.md differs only where a plan did."""
+    """Plan text without Spark's per-session expression, plan and
+    observation ids, so a regenerated EXPLAIN.md differs only where a plan
+    did."""
+    plan = re.sub(r"[0-9a-f]{8}(?:-[0-9a-f]{4}){3}-[0-9a-f]{12}", "<uuid>", plan)
     return re.sub(r"plan_id=\d+", "plan_id=N", re.sub(r"#\d+", "#N", plan))
 
 
@@ -159,7 +161,7 @@ def main() -> None:
         for e in convert.asJava(store.executionsList())
         if e.executionId() not in seen
         and "InsertIntoHadoopFsRelationCommand" in e.physicalPlanDescription()
-    )
+    ).replace(tmp, "<table>")
     out += check(
         "replay batch write: two exchanges, final LWW in the bucket shuffle",
         p,

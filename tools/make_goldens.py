@@ -41,9 +41,8 @@ def df_to_jsonl(df, path: str) -> None:
 def main() -> None:
     from sonic_etl_spark.functions.codec import decode_change_events
     from sonic_etl_spark.log import synthesize_change_events
-    from sonic_etl_spark.operators.merge import KEY_COLS, ORDER_COLS, reduce_batch
+    from sonic_etl_spark.operators.merge import converged_rows
     from sonic_etl_spark.session import get_spark
-    from sonic_etl_spark.sources.multitable import _lww_reduce
 
     spark = get_spark("make-goldens", master="local[4]", shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
@@ -56,7 +55,7 @@ def main() -> None:
     )
 
     converged = (
-        _lww_reduce(reduce_batch(decode_change_events(log)), KEY_COLS, ORDER_COLS)
+        converged_rows(decode_change_events(log))
         .filter("op != 'delete'")
         .withColumn("ts", F.unix_timestamp("ts"))
     )
